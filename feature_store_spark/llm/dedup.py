@@ -147,14 +147,18 @@ def chunk_dedup(
     One tokenize pass lands (id, token-array) rows behind the
     standard collapse-barrier repartition on ``id_col``; the
     first-occurrence decision explodes only 16-byte chunk HASHES
-    (a struct of two independently-salted xxhash64s over each
-    ``chunk_tokens``-long slice of the token array — tokens are
+    (a struct of two differently-seeded xxhash64s over each
+    ``chunk_tokens``-long slice of the token array; the second hashes
+    a leading constant first, which acts as its seed — tokens are
     space-free ``[a-z0-9]+``, so slice equality ⇔ chunk-text
-    equality). The key is 128-bit because chunk_dedup REWRITES
+    equality). The key is paired because chunk_dedup REWRITES
     ``dedup_text``: a key collision silently drops real content, and
     at 100 TB chunk counts (~10¹¹–10¹²) a single 64-bit key's
     birthday bound (~n²/2⁶⁵) makes tens of thousands of such merges
-    EXPECTED — the paired key pushes that to ~n²/2¹²⁹, i.e. never
+    EXPECTED. A merge now needs both seeds to collide on the same
+    pair of chunks. The two hashes are one function under two seeds,
+    not independent hashes, so no 128-bit bound is claimed; the pair
+    only makes a collision far rarer than either hash alone
     (unlike dup_span_stats, where a collision only perturbs a
     statistic and the 64-bit trade stands). Costs +8 bytes per
     posting row on the one narrow shuffle;

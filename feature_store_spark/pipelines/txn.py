@@ -66,11 +66,12 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from feature_store_spark.operators.windows import latest_per_key
 
@@ -2376,22 +2377,6 @@ def compact_manifest(
     )
 
 
-def _dv_hits_for_leaf(spark, schema, phys, root, entry, cond) -> DataFrame:
-    """(__dv_file, __dv_pos) of the LIVE rows of one leaf matching the
-    delete predicate — rows already in the leaf's deletion vector are
-    invisible to the scan, so new hits are disjoint from the old DV
-    by construction (no double counting)."""
-    dv_abs = (
-        os.path.join(root, entry["dv"]["dir"]) if entry.get("dv") else None
-    )
-    scan = _scan_leaf_with_pos(
-        spark, schema, phys, _entry_dirs(root, entry), dv_abs
-    )
-    return scan.filter(F.coalesce(cond, F.lit(False))).select(
-        "__dv_file", "__dv_pos"
-    )
-
-
 def _write_leaf_dv(spark, root, entry, hits) -> str:
     """Publish a leaf's NEW deletion vector (old DV rows ∪ new hits)
     as a fresh immutable dir; returns the relative dir. The old DV dir
@@ -2406,297 +2391,402 @@ def _write_leaf_dv(spark, root, entry, hits) -> str:
     out.coalesce(1).write.parquet(os.path.join(root, new_rel))
     return new_rel
 
+class _StaleRead(Exception):
+    """Internal: a written row count disagrees with the accounting
+    pass — the tip moved between the reads; retry."""
 
-def _delete_where_dv(
-    spark, root, v, tip, schema, preds, cond, backend
-) -> dict | None:
-    """delete_where's merge-on-read arm: commit deletion vectors
-    instead of rewriting leaves — O(matched positions) of new data
-    per commit, the Delta DV / Iceberg positional-delete shape for
-    point deletes against huge partitions. Returns None on a version
-    race (caller retries)."""
+
+class _RowChange(NamedTuple):
+    """One DML verb's contribution to :func:`_change_rows`, rebuilt
+    from the tip manifest on every attempt."""
+
+    schema: StructType  # post-change logical schema
+    classify: Callable  # target rows -> classified scan
+    preds: list | None = None  # leaf pruning; None reads every leaf
+    assigned: frozenset = frozenset()  # columns a SET clause may move
+
+
+def _check_dml_mode(verb: str, mode: str, evolve: bool = False) -> None:
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(
+            f"{verb}: mode must be 'rewrite' or 'dv', got {mode!r}"
+        )
+    if mode == "dv" and evolve:
+        raise ValueError(
+            f"{verb}: mode='dv' cannot evolve the schema in the same "
+            "commit (appended dirs must match the pinned schema) — run "
+            "the evolving merge with mode='rewrite', or evolve first"
+        )
+
+
+def _pcol(m: dict) -> str | None:
+    return m["partition_col"] if _is_partitioned(m) else None
+
+
+def _read_leaves(spark, schema, phys, root, leaves: dict, with_pos: bool):
+    """Target rows of ``leaves`` (live rows only). ``with_pos`` keeps
+    each row's (__dv_file, __dv_pos) for the deletion-vector publish;
+    otherwise this is the plain DV-aware read."""
+    if not with_pos:
+        return _read_entries(spark, schema, phys, root, leaves.values())
+    out = None
+    for e in leaves.values():
+        dv_abs = os.path.join(root, e["dv"]["dir"]) if e.get("dv") else None
+        scan = _scan_leaf_with_pos(
+            spark, schema, phys, _entry_dirs(root, e), dv_abs
+        )
+        out = scan if out is None else out.unionByName(scan)
+    if out is None:
+        out = spark.createDataFrame([], schema).withColumns({
+            "__dv_file": F.lit(None).cast("string"),
+            "__dv_pos": F.lit(None).cast("bigint"),
+        })
+    return out
+
+
+def _write_leaves(root, phys, pcol, rows, pks, written) -> dict:
+    """Write ``rows`` (logical columns + ``__ptok``) to ONE fresh dir,
+    one ``__ptok`` subdir per partition (the unpartitioned leaf is the
+    dir itself), and return {pk: leaf dir}."""
+    rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
+    written.append(rel)
+    w = _write_physical(rows if pcol else rows.drop("__ptok"), phys).write
+    if pcol:
+        w = w.partitionBy("__ptok")
+    w.parquet(os.path.join(root, rel))
+    return {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
+
+
+def _require_dirs(verb: str, root: str, dirs: dict) -> None:
+    missing = sorted(
+        pk for pk, d in dirs.items()
+        if not os.path.isdir(os.path.join(root, d))
+    )
+    if missing:
+        raise RuntimeError(
+            f"{verb}: partitions {missing!r} produced no leaf — rows "
+            "would be lost; not committing"
+        )
+
+
+def _change_rows(
+    spark: SparkSession,
+    root: str,
+    verb: str,
+    plan_for: Callable,
+    mode: str,
+    max_retries: int,
+    backend: LocalLinkBackend | None,
+    txn: tuple[str, int] | None = None,
+) -> dict:
+    """The one row-level change plan behind ``delete_where``,
+    ``update_where`` and ``merge_into``.
+
+    Each attempt re-reads the tip and asks the verb for a
+    :class:`_RowChange`. An unpartitioned table is the one-leaf map
+    ``{"": flat entry}``. Leaves the verb's predicate may match (all
+    leaves when it has none) are read and classified: every row gets
+    a ``__cls`` of keep / upd / del / ins and its post-change column
+    values; ``__leaf`` is the post-change partition value, which is
+    the row's own leaf because the partition column can never be SET.
+    One grouped count gives the per-leaf accounting; zero changes
+    publish no version. Then ``mode`` picks the publish step:
+
+    - ``"rewrite"`` (copy-on-write): each touched leaf's surviving
+      and new rows go to a fresh leaf dir, deletion vectors and
+      appended dirs folded away. Untouched leaves carry forward
+      byte-identically. Written leaves are recounted against
+      ``rows - deleted + inserted`` (a mismatch retries; a leaf that
+      should exist but produced no dir raises), CHECK constraints
+      run on the written bytes, and the stats/bloom columns any
+      entry records are re-recorded. A partitioned leaf left empty
+      leaves the map; the flat leaf is rewritten even when empty.
+    - ``"dv"`` (merge-on-read, Delta deletion vectors / Iceberg
+      positional deletes): the old positions of deleted and updated
+      rows are unioned into each leaf's deletion-vector sidecar; the
+      updated images and inserts land in ONE appended dir (one
+      ``__ptok`` subdir per partition) joined to the leaf's
+      ``extra_dirs``. O(changed rows) written, base leaves untouched,
+      entry ``rows`` keeps counting live rows. CHECK constraints run
+      on the appended images only. Skipping metadata stays
+      conservative: a leaf receiving inserts drops all stats/bloom,
+      an updated leaf drops the SET columns'. A partitioned leaf
+      whose every live row is deleted with nothing appended leaves
+      the map; the flat leaf never does — its deletes land in the DV
+      even when they empty the table. The protocol guard stamps the
+      "deletion_vectors"/"extra_dirs" reader features; rewriting
+      verbs and ``purge_deletes`` fold the debt back into clean
+      leaves.
+
+    Dirs written by a losing attempt are removed before the retry; a
+    vanished leaf (concurrent vacuum) also retries. ``txn`` stamps
+    the idempotency watermark and skips replays at or below it.
+
+    Returns {version, rows_updated, rows_deleted, rows_inserted,
+    partitions_rewritten, partitions_removed, committed, txn_skipped};
+    each verb returns its documented subset."""
     from pyspark.errors import AnalysisException
 
-    no_change = {
-        "version": v, "rows_deleted": 0, "partitions_rewritten": 0,
-        "partitions_removed": 0, "committed": False,
-    }
-    phys = _phys_map(tip)
-    if not _is_partitioned(tip):
-        entry = _flat_entry(tip)
+    dv = mode == "dv"
+    for _ in range(max_retries):
+        v = latest_version(root)
+        if v == 0:
+            raise ValueError(f"{root!r} has no committed versions")
         try:
-            hits = _dv_hits_for_leaf(
-                spark, schema, phys, root, entry, cond
-            ).localCheckpoint(eager=False)
-            n = hits.count()
-            if n == 0:
-                return no_change
-            new_rel = _write_leaf_dv(spark, root, entry, hits)
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                return None
-            raise
-        prior = (entry.get("dv") or {}).get("deleted", 0)
-        manifest = {
-            "op": "delete",
-            "base_version": v,
-            "data_dir": tip["data_dir"],
-            "rows": tip["rows"] - n,
-            "dv": {"dir": new_rel, "deleted": prior + n},
-            "schema": tip["schema"],
-            **_carry_mapping(tip),
+            tip = read_manifest(root, v)
+        except FileNotFoundError:
+            continue  # concurrent vacuum; re-resolve
+        nothing = {
+            "version": v, "rows_updated": 0, "rows_deleted": 0,
+            "rows_inserted": 0, "partitions_rewritten": 0,
+            "partitions_removed": 0, "committed": False,
+            "txn_skipped": False,
         }
-        if tip.get("extra_dirs"):
-            manifest["extra_dirs"] = tip["extra_dirs"]
-        if _try_commit(root, v + 1, manifest, backend):
+        if _txn_already_applied(tip, txn):
+            return {**nothing, "txn_skipped": True}
+        plan = plan_for(tip)
+        pcol = _pcol(tip)
+        try:
+            leaves = (
+                resolve_partitions(root, v) if pcol
+                else {"": {**_flat_entry(tip), "rows": tip["rows"]}}
+            )
+        except FileNotFoundError:
+            continue
+        cand = {
+            pk: e for pk, e in leaves.items()
+            if plan.preds is None
+            or _entry_may_match(e, pk, plan.preds, pcol)
+        }
+        if not cand and plan.preds is not None:
+            return nothing
+        base = StructType.fromJson(tip["schema"])
+        phys = _phys_map(tip)
+        written: list[str] = []
+        try:
+            cs = plan.classify(
+                _read_leaves(spark, base, phys, root, cand, dv)
+            ).withColumn("__leaf", F.col(pcol) if pcol else F.lit(""))
+            if dv:
+                # pin ONE evaluation: accounting, the CHECK, the
+                # sidecars and the append write all replay these blocks
+                cs = cs.filter(F.col("__cls") != "keep").localCheckpoint(
+                    eager=False
+                )
+            counts: dict = {}
+            typed: dict = {}
+            for r in (
+                cs.filter(F.col("__cls") != "keep")
+                .groupBy("__leaf", "__cls").count().collect()
+            ):
+                if r["__leaf"] is None:
+                    if r["__cls"] == "ins":
+                        raise ValueError(
+                            f"{verb}: an inserted row carries a NULL "
+                            f"partition value ({pcol!r}) — partition-"
+                            "scoped tables require a concrete partition "
+                            "per row"
+                        )
+                    continue
+                pk = _pkey(r["__leaf"])
+                typed[pk] = r["__leaf"]
+                c = counts.setdefault(pk, {"upd": 0, "del": 0, "ins": 0})
+                c[r["__cls"]] += r["count"]
+            if not counts:
+                return nothing
+            total = {
+                k: sum(c[k] for c in counts.values())
+                for k in ("upd", "del", "ins")
+            }
+            checks = (
+                _effective_constraints(tip, None)
+                if total["upd"] or total["ins"] else []
+            )
+            leaf_type = plan.schema[pcol].dataType if pcol else StringType()
+            cs = cs.join(
+                F.broadcast(_ptok_mapping(
+                    spark, StructField("__leaf", leaf_type), typed
+                )),
+                "__leaf",
+            )
+            publish = _publish_dv if dv else _publish_rewrite
+            updates, removed = publish(
+                spark, root, verb, phys, pcol, plan, leaves, counts, cs,
+                checks, written,
+            )
+        except BaseException as exc:
+            for d in written:
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            if isinstance(exc, _StaleRead) or (
+                isinstance(exc, AnalysisException) and _is_path_not_found(exc)
+            ):
+                continue
+            raise
+        manifest = {
+            "op": verb.split("_")[0],
+            "base_version": v,
+            "schema": (
+                tip["schema"] if plan.schema == base
+                else plan.schema.jsonValue()
+            ),
+        }
+        if pcol:
+            parts = {pk: e for pk, e in leaves.items() if pk not in removed}
+            parts.update(updates)
+            manifest.update(
+                rows=sum(e["rows"] for e in parts.values()),
+                partition_col=pcol, updates=updates, removed=removed,
+            )
+        else:
+            flat = updates[""]
+            manifest.update(data_dir=flat["dir"], rows=flat["rows"])
+            manifest.update(
+                {k: flat[k] for k in ("dv", "extra_dirs") if flat.get(k)}
+            )
+        manifest.update(_carry_mapping(tip))
+        if _try_commit(root, v + 1, _txn_stamp(manifest, txn), backend):
+            if pcol:
+                _maybe_checkpoint(root, v + 1, parts, backend)
             return {
-                "version": v + 1, "rows_deleted": n,
-                "partitions_rewritten": 0, "partitions_removed": 0,
+                **nothing,
+                "version": v + 1,
+                "rows_updated": total["upd"],
+                "rows_deleted": total["del"],
+                "rows_inserted": total["ins"],
+                "partitions_rewritten": len(updates),
+                "partitions_removed": len(removed),
                 "committed": True,
             }
-        shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
-        return None
-
-    pcol = tip["partition_col"]
-    try:
-        parts = resolve_partitions(root, v)
-    except FileNotFoundError:
-        return None
-    candidates = {
-        pk: e
-        for pk, e in parts.items()
-        if _entry_may_match(e, pk, preds, pcol)
-    }
-    if not candidates:
-        return no_change
-    updates: dict = {}
-    removed: list = []
-    written: list[str] = []
-    deleted = 0
-    try:
-        for pk in sorted(candidates):
-            e = parts[pk]
-            hits = _dv_hits_for_leaf(
-                spark, schema, phys, root, e, cond
-            ).localCheckpoint(eager=False)
-            n = hits.count()
-            if n == 0:
-                continue
-            deleted += n
-            live = e["rows"] - n
-            if live == 0:
-                # every remaining row deleted: the partition leaves
-                # the map entirely (same as the rewrite arm)
-                removed.append(pk)
-                continue
-            new_rel = _write_leaf_dv(spark, root, e, hits)
-            written.append(new_rel)
-            prior = (e.get("dv") or {}).get("deleted", 0)
-            ne = dict(e)
-            ne["rows"] = live
-            ne["dv"] = {"dir": new_rel, "deleted": prior + n}
-            updates[pk] = ne
-    except AnalysisException as exc:
         for d in written:
             shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        if _is_path_not_found(exc):
-            return None
-        raise
-    if deleted == 0:
-        return no_change
-    new_parts = {
-        pk: e for pk, e in parts.items() if pk not in set(removed)
-    }
-    new_parts.update(updates)
-    manifest = {
-        "op": "delete",
-        "base_version": v,
-        "rows": sum(e["rows"] for e in new_parts.values()),
-        "schema": tip["schema"],
-        "partition_col": pcol,
-        "updates": updates,
-        "removed": removed,
-        **_carry_mapping(tip),
-    }
-    if _try_commit(root, v + 1, manifest, backend):
-        _maybe_checkpoint(root, v + 1, new_parts, backend)
-        return {
-            "version": v + 1, "rows_deleted": deleted,
-            "partitions_rewritten": len(updates),
-            "partitions_removed": len(removed),
-            "committed": True,
-        }
-    for d in written:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    return None
+    raise RuntimeError(
+        f"{verb}: gave up after {max_retries} version races at {root!r}"
+    )
 
 
-def _dv_update_leaf(
-    spark, root, tip, schema, entry, cond, set_values, fields, checks
+def _publish_rewrite(
+    spark, root, verb, phys, pcol, plan, leaves, counts, cs, checks,
+    written,
 ):
-    """One leaf's merge-on-read UPDATE pieces: append the changed
-    rows' new images to a fresh dir, fold their old positions into
-    the leaf's DV. Returns (n_matched, upd_rel | None, new_dv | None)
-    — (0, None, None) when nothing matches. Caller owns cleanup of
-    the written dirs on a failed commit."""
-    dv_abs = (
-        os.path.join(root, entry["dv"]["dir"]) if entry.get("dv") else None
+    """Copy-on-write publish step of :func:`_change_rows`; returns the
+    (updates, removed) leaf delta."""
+    names = [f.name for f in plan.schema.fields]
+    expected = {
+        pk: leaves.get(pk, {}).get("rows", 0) - c["del"] + c["ins"]
+        for pk, c in counts.items()
+    }
+    # a partitioned leaf left empty leaves the map; the flat leaf is
+    # rewritten even when empty
+    live = sorted(pk for pk in counts if expected[pk] or not pcol)
+    removed = sorted(pk for pk in counts if pk not in live and pk in leaves)
+    if not live:
+        return {}, removed
+    dirs = _write_leaves(
+        root, phys, pcol,
+        cs.filter(F.col("__cls") != "del").select(*names, "__ptok"),
+        live, written,
     )
-    matched = _scan_leaf_with_pos(
-        spark, schema, _phys_map(tip), _entry_dirs(root, entry), dv_abs
-    ).filter(F.coalesce(cond, F.lit(False))).localCheckpoint(eager=False)
-    n = matched.count()
-    if n == 0:
-        return 0, None, None
-    out = matched
-    for c, nv in set_values.items():
-        out = out.withColumn(c, F.lit(nv).cast(fields[c].dataType))
-    out = out.drop("__dv_file", "__dv_pos")
+    _require_dirs(verb, root, dirs)
+    readback = _read_data(
+        spark, plan.schema, phys, [os.path.join(root, d) for d in dirs.values()]
+    ).withColumn("__leaf", F.col(pcol) if pcol else F.lit(""))
     if checks:
-        # unchanged rows keep their (already-validated) values — only
-        # the new images can newly violate a CHECK constraint
-        _check_constraints(out, checks)
-    upd_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-    _write_physical(out, _phys_map(tip)).write.parquet(
-        os.path.join(root, upd_rel)
+        _check_constraints(readback, checks)
+
+    def recorded(k):
+        # the stats/bloom columns any of the table's entries carry
+        cols = {c for e in leaves.values() for c in e.get(k) or {}}
+        return [plan.schema[c] for c in sorted(cols & set(names))]
+
+    stat_f, bloom_f = recorded("stats"), recorded("bloom")
+    got = _leaf_stats(readback, "__leaf", stat_f)
+    blooms = _leaf_blooms(readback, "__leaf", bloom_f) if bloom_f else {}
+    updates = {}
+    for pk in live:
+        g = got.get(pk, {"rows": 0, "stats": {}})
+        if g["rows"] != expected[pk]:
+            raise _StaleRead()
+        e: dict = {"dir": dirs[pk], "rows": expected[pk]}
+        if stat_f:
+            e["stats"] = g["stats"]
+        if bloom_f:
+            e["bloom"] = blooms.get(pk, {})
+        updates[pk] = e
+    return updates, removed
+
+
+def _publish_dv(
+    spark, root, verb, phys, pcol, plan, leaves, counts, cs, checks,
+    written,
+):
+    """Merge-on-read publish step of :func:`_change_rows`; returns the
+    (updates, removed) leaf delta."""
+    names = [f.name for f in plan.schema.fields]
+    images = cs.filter(F.col("__cls").isin("upd", "ins"))
+    if checks:
+        _check_constraints(images.select(*names), checks)
+    removed = sorted(
+        pk for pk, c in counts.items()
+        if pcol and pk in leaves and c["del"] == leaves[pk]["rows"]
+        and not c["upd"] and not c["ins"]
     )
-    try:
-        new_dv_rel = _write_leaf_dv(
-            spark, root, entry, matched.select("__dv_file", "__dv_pos")
+    appended = {
+        pk: c["upd"] + c["ins"] for pk, c in counts.items()
+        if c["upd"] or c["ins"]
+    }
+    app_dirs: dict = {}
+    if appended:
+        obs = Observation()
+        app_dirs = _write_leaves(
+            root, phys, pcol,
+            images.select(*names, "__ptok").observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            ),
+            appended, written,
         )
-    except BaseException:
-        # a mid-leaf DV failure would otherwise leak the already-
-        # written update-images dir until the orphan-grace vacuum
-        # (the caller's `written` cleanup list never sees upd_rel)
-        shutil.rmtree(os.path.join(root, upd_rel), ignore_errors=True)
-        raise
-    prior = (entry.get("dv") or {}).get("deleted", 0)
-    return n, upd_rel, {"dir": new_dv_rel, "deleted": prior + n}
-
-
-def _update_where_dv(
-    spark, root, v, tip, schema, preds, cond, set_values, backend
-) -> dict | None:
-    """update_where's merge-on-read arm (Delta's DV-backed UPDATE):
-    the matched rows' old positions enter the leaf's deletion vector
-    and their new images land in an APPENDED extra dir — one commit,
-    O(changed rows) data written, the base leaf untouched. Live row
-    counts are unchanged (n deleted + n appended). Recorded
-    stats/bloom for the SET columns are dropped on touched leaves
-    (the appended images may fall outside the recorded window — a
-    stale window would mis-prune); other columns' stats still cover
-    the appended rows (their values are unchanged). Returns None on a
-    version race (caller retries)."""
-    from pyspark.errors import AnalysisException
-
-    no_change = {
-        "version": v, "rows_updated": 0,
-        "partitions_rewritten": 0, "committed": False,
-    }
-    fields = {f.name: f for f in schema.fields}
-    checks = _effective_constraints(tip, None)
-    if not _is_partitioned(tip):
-        entry = _flat_entry(tip)
-        try:
-            n, upd_rel, new_dv = _dv_update_leaf(
-                spark, root, tip, schema, entry, cond, set_values,
-                fields, checks,
+        if int(obs.get["rows"]) != sum(appended.values()):
+            raise _StaleRead()
+        _require_dirs(verb, root, app_dirs)
+    updates = {}
+    for pk, c in sorted(counts.items()):
+        old = leaves.get(pk)
+        if pk in removed:
+            continue
+        if old is None:
+            # brand-new partition: its append dir IS the base leaf
+            updates[pk] = {"dir": app_dirs[pk], "rows": c["ins"]}
+            continue
+        ne = dict(old)
+        ne["rows"] = old["rows"] - c["del"] + c["ins"]
+        hits = c["del"] + c["upd"]
+        if hits:
+            dv_rel = _write_leaf_dv(
+                spark, root, old,
+                cs.filter(
+                    F.col("__cls").isin("del", "upd")
+                    & (F.col("__ptok") == _ptoken(pk))
+                ).select("__dv_file", "__dv_pos"),
             )
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                return None
-            raise
-        if n == 0:
-            return no_change
-        manifest = {
-            "op": "update",
-            "base_version": v,
-            "data_dir": tip["data_dir"],
-            "extra_dirs": list(tip.get("extra_dirs") or []) + [upd_rel],
-            "rows": tip["rows"],
-            "dv": new_dv,
-            "schema": tip["schema"],
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            return {
-                "version": v + 1, "rows_updated": n,
-                "partitions_rewritten": 0, "committed": True,
-            }
-        for d in (upd_rel, new_dv["dir"]):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        return None
-
-    pcol = tip["partition_col"]
-    try:
-        parts = resolve_partitions(root, v)
-    except FileNotFoundError:
-        return None
-    candidates = {
-        pk: e
-        for pk, e in parts.items()
-        if _entry_may_match(e, pk, preds, pcol)
-    }
-    if not candidates:
-        return no_change
-    updates: dict = {}
-    written: list[str] = []
-    updated = 0
-    try:
-        for pk in sorted(candidates):
-            e = parts[pk]
-            n, upd_rel, new_dv = _dv_update_leaf(
-                spark, root, tip, schema, e, cond, set_values,
-                fields, checks,
-            )
-            if n == 0:
-                continue
-            updated += n
-            written.extend([upd_rel, new_dv["dir"]])
-            ne = dict(e)
-            ne["extra_dirs"] = list(e.get("extra_dirs") or []) + [upd_rel]
-            ne["dv"] = new_dv
-            # SET-column stats/bloom no longer bound the leaf's values
+            written.append(dv_rel)
+            prior = (old.get("dv") or {}).get("deleted", 0)
+            ne["dv"] = {"dir": dv_rel, "deleted": prior + hits}
+        if pk in app_dirs:
+            ne["extra_dirs"] = list(old.get("extra_dirs") or []) + [
+                app_dirs[pk]
+            ]
+            # an insert can land anywhere; an update moves only the
+            # SET columns — a stale window would mis-prune the images
             for k in ("stats", "bloom"):
-                if k in ne:
-                    kept = {
-                        c: s for c, s in ne[k].items()
-                        if c not in set_values
-                    }
-                    if kept:
-                        ne[k] = kept
-                    else:
-                        ne.pop(k)
-            updates[pk] = ne
-    except (AnalysisException, ValueError) as exc:
-        for d in written:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        if isinstance(exc, AnalysisException) and _is_path_not_found(exc):
-            return None
-        raise
-    if updated == 0:
-        return no_change
-    manifest = {
-        "op": "update",
-        "base_version": v,
-        "rows": tip["rows"],
-        "schema": tip["schema"],
-        "partition_col": pcol,
-        "updates": updates,
-        "removed": [],
-        **_carry_mapping(tip),
-    }
-    if _try_commit(root, v + 1, manifest, backend):
-        new_parts = dict(parts)
-        new_parts.update(updates)
-        _maybe_checkpoint(root, v + 1, new_parts, backend)
-        return {
-            "version": v + 1, "rows_updated": updated,
-            "partitions_rewritten": len(updates), "committed": True,
-        }
-    for d in written:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    return None
+                kept = {
+                    col: s for col, s in (ne.get(k) or {}).items()
+                    if not c["ins"] and col not in plan.assigned
+                }
+                if kept:
+                    ne[k] = kept
+                else:
+                    ne.pop(k, None)
+        updates[pk] = ne
+    return updates, removed
 
 
 def purge_deletes(
@@ -2740,273 +2830,55 @@ def delete_where(
     removed; FALSE **and NULL** rows survive (the filter is
     null-rejecting on the delete side, never on the keep side).
 
-    Data skipping is the cost model: on a partition-scoped table only
-    leaves whose recorded stats/bloom/partition-key say they MAY hold
-    matching rows are read and rewritten — a retention delete against
-    a clustered column touches the matching leaves, not the table.
-    Untouched partitions carry forward byte-identically (vacuum/CDC
-    invariants hold); fully-emptied partitions leave the map via the
-    delta format's ``removed`` list. Rewritten leaves re-record
-    whatever stats/bloom columns their old entries carried. A delete
-    matching zero rows publishes NO version. Unpartitioned tables
-    rewrite the snapshot (their commits are O(table) by design).
+    Data skipping is the cost model: only leaves whose recorded
+    stats/bloom/partition-key say they MAY hold matching rows are
+    read — a retention delete against a clustered column touches the
+    matching leaves, not the table. Untouched partitions carry
+    forward byte-identically (vacuum/CDC invariants hold); partitions
+    left empty leave the map via the delta format's ``removed`` list.
+    A delete matching zero rows publishes NO version. Unpartitioned
+    tables are one leaf (their rewrites are O(table) by design).
 
     ``mode="dv"`` commits DELETION VECTORS instead of rewriting
-    leaves (Delta DV / Iceberg positional deletes — merge-on-read):
-    the matched rows' file/position pairs are written as a tiny
-    per-leaf sidecar and every reader anti-joins them away, so a
-    point delete against a huge partition costs O(matched positions),
-    not a leaf rewrite. Entry row counts always track LIVE rows, any
-    rewriting verb (merge/update/compact/upsert) reads through the DV
-    and publishes clean leaves — compaction doubles as the DV purge —
-    and the protocol guard stamps reader feature "deletion_vectors"
-    so a pre-DV reader refuses instead of serving deleted rows.
-    Repeated DV deletes on one leaf union their sidecars; a leaf
-    whose last live row is deleted leaves the partition map exactly
-    like the rewrite arm. Time travel still works: old versions pin
-    their own (or no) DV.
+    leaves: a point delete against a huge partition costs O(matched
+    positions). Repeated DV deletes on one leaf union their sidecars;
+    time travel still works (old versions pin their own or no DV).
+    The mechanics of both modes, and of concurrency, live on
+    ``_change_rows``.
 
-    Concurrency: the optimistic loop re-reads the tip and recomputes
-    from scratch on every attempt (deletes are rare; no prepared-
-    commit reuse). Returns {version, rows_deleted,
-    partitions_rewritten, partitions_removed, committed}."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"delete_where: mode must be 'rewrite' or 'dv', got {mode!r}")
-    preds_probe = list(where)
-    if not preds_probe:
+    Returns {version, rows_deleted, partitions_rewritten,
+    partitions_removed, committed}."""
+    _check_dml_mode("delete_where", mode)
+    where = list(where)
+    if not where:
         raise ValueError(
             "delete_where: empty predicate would delete nothing — "
             "for full truncation use drop_partitions (partitioned) "
             "or commit an empty replace"
         )
-    from pyspark.errors import AnalysisException
 
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum; re-resolve
+    def plan(tip):
         schema = StructType.fromJson(tip["schema"])
-        preds = _validate_where(preds_probe, schema)
-        cond = _where_expr(preds)
-        keep = ~F.coalesce(cond, F.lit(False))
+        preds = _validate_where(where, schema)
+        cond = F.coalesce(_where_expr(preds), F.lit(False))
+        return _RowChange(
+            schema,
+            lambda t: t.withColumn(
+                "__cls", F.when(cond, F.lit("del")).otherwise(F.lit("keep"))
+            ),
+            preds,
+        )
 
-        if mode == "dv":
-            res = _delete_where_dv(
-                spark, root, v, tip, schema, preds, cond, backend
-            )
-            if res is None:
-                continue  # version race / vanished leaf; re-resolve
-            return res
-
-        if not _is_partitioned(tip):
-            data_dir = os.path.join(root, tip["data_dir"])
-            try:
-                snap = _read_entries(
-                    spark, schema, _phys_map(tip), root, [_flat_entry(tip)]
-                )
-                deleted = snap.filter(F.coalesce(cond, F.lit(False))).count()
-                if deleted == 0:
-                    return {
-                        "version": v, "rows_deleted": 0,
-                        "partitions_rewritten": 0, "partitions_removed": 0,
-                        "committed": False,
-                    }
-                new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-                obs = Observation()
-                _write_physical(
-                    snap.filter(keep).observe(
-                        obs, F.count(F.lit(1)).alias("rows")
-                    ),
-                    _phys_map(tip),
-                ).write.parquet(os.path.join(root, new_rel))
-                remaining = int(obs.get["rows"])
-            except AnalysisException as e:
-                if _is_path_not_found(e):
-                    continue
-                raise
-            if remaining + deleted != tip["rows"]:
-                shutil.rmtree(
-                    os.path.join(root, new_rel), ignore_errors=True
-                )
-                continue  # tip moved under us mid-read; recompute
-            manifest = {
-                "op": "delete",
-                "base_version": v,
-                "data_dir": new_rel,
-                "rows": remaining,
-                "schema": tip["schema"],
-                **_carry_mapping(tip),
-            }
-            if _try_commit(root, v + 1, manifest, backend):
-                return {
-                    "version": v + 1, "rows_deleted": deleted,
-                    "partitions_rewritten": 1, "partitions_removed": 0,
-                    "committed": True,
-                }
-            shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
-            continue
-
-        pcol = tip["partition_col"]
-        try:
-            parts = resolve_partitions(root, v)
-        except FileNotFoundError:
-            continue
-        candidates = {
-            pk: e
-            for pk, e in parts.items()
-            if _entry_may_match(e, pk, preds, pcol)
-        }
-        if not candidates:
-            return {
-                "version": v, "rows_deleted": 0,
-                "partitions_rewritten": 0, "partitions_removed": 0,
-                "committed": False,
-            }
-        try:
-            cand = _read_entries(
-                spark, schema, _phys_map(tip), root, candidates.values()
-            )
-            per_part_del = {
-                _pkey(r[0]): r[1]
-                for r in cand.filter(F.coalesce(cond, F.lit(False)))
-                .groupBy(pcol)
-                .count()
-                .collect()
-            }
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue  # vacuum race; re-resolve
-            raise
-        touched = {pk for pk, n in per_part_del.items() if n > 0}
-        if not touched:
-            return {
-                "version": v, "rows_deleted": 0,
-                "partitions_rewritten": 0, "partitions_removed": 0,
-                "committed": False,
-            }
-        deleted = sum(per_part_del[pk] for pk in touched)
-        # rewrite ONLY partitions that actually lose rows; typed
-        # partition values for the tok mapping come from the touched
-        # leaves themselves (same pattern as compact_manifest)
-        try:
-            tdf = _read_entries(
-                spark, schema, _phys_map(tip), root,
-                [parts[pk] for pk in sorted(touched)],
-            )
-            vals = [r[0] for r in tdf.select(pcol).distinct().collect()]
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        val_keys = {_pkey(x): x for x in vals if _pkey(x) in touched}
-        remaining_df = tdf.filter(keep)
-        # stats/bloom columns to re-record = what the old entries had
-        stat_names = sorted(
-            {
-                c
-                for pk in touched
-                for c in (parts[pk].get("stats") or {})
-                if c in {f.name for f in schema.fields}
-            }
-        )
-        bloom_names = sorted(
-            {
-                c
-                for pk in touched
-                for c in (parts[pk].get("bloom") or {})
-                if c in {f.name for f in schema.fields}
-            }
-        )
-        stats_fields = [schema[c] for c in stat_names]
-        bloom_fields = [schema[c] for c in bloom_names]
-        commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        tok_map = _ptok_mapping(spark, schema[pcol], val_keys)
-        _write_physical(
-            remaining_df.join(F.broadcast(tok_map), pcol), _phys_map(tip)
-        ).write.partitionBy("__ptok").parquet(os.path.join(root, commit_rel))
-        leaf = {
-            pk: f"{commit_rel}/__ptok={_ptoken(pk)}" for pk in touched
-        }
-        live_leaves = {
-            pk: d
-            for pk, d in leaf.items()
-            if os.path.isdir(os.path.join(root, d))
-        }
-        readback = (
-            _read_data(
-                spark,
-                schema,
-                _phys_map(tip),
-                [os.path.join(root, d) for d in live_leaves.values()],
-            )
-            if live_leaves
-            else None
-        )
-        per_part = (
-            _leaf_stats(readback, pcol, stats_fields) if readback else {}
-        )
-        blooms = (
-            _leaf_blooms(readback, pcol, bloom_fields)
-            if readback is not None and bloom_fields
-            else {}
-        )
-        updates = {}
-        removed = []
-        ok = True
-        for pk in sorted(touched):
-            expect = parts[pk]["rows"] - per_part_del[pk]
-            got = per_part.get(pk, {"rows": 0, "stats": {}})
-            if got["rows"] != expect:
-                ok = False
-                break
-            if expect == 0:
-                removed.append(pk)
-                continue
-            e: dict = {"dir": leaf[pk], "rows": expect}
-            if stat_names:
-                e["stats"] = got["stats"]
-            if bloom_names:
-                e["bloom"] = blooms.get(pk, {})
-            updates[pk] = e
-        if not ok:
-            # counts shifted under us (concurrent writer won a race
-            # between our read and recount) — drop and retry
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
-            continue
-        new_parts = {
-            pk: e for pk, e in parts.items() if pk not in set(removed)
-        }
-        new_parts.update(updates)
-        manifest = {
-            "op": "delete",
-            "base_version": v,
-            "rows": sum(e["rows"] for e in new_parts.values()),
-            "schema": tip["schema"],
-            "partition_col": pcol,
-            "updates": updates,
-            "removed": removed,
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {
-                "version": v + 1,
-                "rows_deleted": deleted,
-                "partitions_rewritten": len(updates),
-                "partitions_removed": len(removed),
-                "committed": True,
-            }
-        shutil.rmtree(os.path.join(root, commit_rel), ignore_errors=True)
-    raise RuntimeError(
-        f"delete_where: gave up after {max_retries} version races at "
-        f"{root!r}"
+    res = _change_rows(
+        spark, root, "delete_where", plan, mode, max_retries, backend
     )
+    return {
+        k: res[k]
+        for k in (
+            "version", "rows_deleted", "partitions_rewritten",
+            "partitions_removed", "committed",
+        )
+    }
 
 
 def update_where(
@@ -3021,10 +2893,7 @@ def update_where(
     """Row-level UPDATE for manifest tables — ``UPDATE t SET col =
     literal, ... WHERE <conjunction>`` with the same predicate grammar
     as ``read_table(where=...)``. Together with ``delete_where`` this
-    completes DML on the table layer. Partition-scoped tables rewrite
-    only the touched leaves (data skipping picks them); unpartitioned
-    tables rewrite the snapshot (their commits are O(table) by
-    design), purging any deletion vector in the same pass.
+    completes DML on the table layer.
 
     ``set_values`` maps column → NEW LITERAL value (cast to the
     column's pinned type; the partition column is refused — moving
@@ -3032,150 +2901,35 @@ def update_where(
     update). Rows where the predicate is TRUE take the new values;
     FALSE and NULL rows pass through untouched. Only leaves whose
     stats/bloom/partition-key say they MAY hold matching rows are
-    rewritten; untouched partitions carry forward byte-identically.
-    Rewritten leaves re-record their old entries' stats/bloom columns,
-    so a probe for the OLD value of an updated stats column prunes
-    correctly afterwards. Zero matches publish no version.
+    read; untouched partitions carry forward byte-identically.
+    Rewritten leaves re-record the table's stats/bloom columns, so a
+    probe for the OLD value of an updated stats column prunes
+    correctly afterwards; unpartitioned tables rewrite the snapshot,
+    purging any deletion vector in the same pass. CHECK constraints
+    hold across the update. Zero matches publish no version.
 
-    ``mode="dv"`` commits MERGE-ON-READ updates (Delta's DV-backed
-    UPDATE): the matched rows' old positions enter the leaf's deletion
-    vector and their new images land in an appended ``extra_dirs``
-    leaf member — one commit, O(changed rows) written, the (possibly
-    huge) base leaf untouched. Readers see base ∪ extras minus the DV
-    as one leaf; live row counts are unchanged. SET-column stats/bloom
-    are dropped on touched leaves (the new images may fall outside the
-    recorded window); ``purge_deletes`` / any rewriting verb folds the
-    debt back into clean single-dir leaves. The protocol guard stamps
-    reader features "deletion_vectors" + "extra_dirs" so a pre-
-    extension reader refuses instead of dropping the updated rows.
+    ``mode="dv"`` commits a MERGE-ON-READ update (Delta's DV-backed
+    UPDATE): one commit, O(changed rows) written, the (possibly huge)
+    base leaf untouched, live row counts unchanged. SET-column
+    stats/bloom are dropped on touched leaves (the new images may
+    fall outside the recorded window); ``purge_deletes`` / any
+    rewriting verb folds the debt back into clean single-dir leaves.
+    See ``_change_rows`` for the mechanics.
 
     Returns {version, rows_updated, partitions_rewritten, committed}.
     """
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(
-            f"update_where: mode must be 'rewrite' or 'dv', got {mode!r}"
-        )
-    if not list(where):
+    _check_dml_mode("update_where", mode)
+    where = list(where)
+    if not where:
         raise ValueError(
             "update_where: empty predicate — updating every row "
             "should be an explicit replace commit"
         )
     if not set_values:
         raise ValueError("update_where: set_values is empty")
-    from pyspark.errors import AnalysisException
 
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
-        if mode == "dv":
-            schema = StructType.fromJson(tip["schema"])
-            fields = {f.name: f for f in schema.fields}
-            for c in set_values:
-                if c not in fields:
-                    raise ValueError(
-                        f"update_where: SET column {c!r} is not in the "
-                        "table schema"
-                    )
-                if _is_partitioned(tip) and c == tip["partition_col"]:
-                    raise ValueError(
-                        f"update_where: SET on the partition column "
-                        f"{c!r} moves rows between partitions — delete "
-                        "+ upsert instead"
-                    )
-            preds = _validate_where(where, schema)
-            cond = F.coalesce(_where_expr(preds), F.lit(False))
-            res = _update_where_dv(
-                spark, root, v, tip, schema, preds, cond, set_values,
-                backend,
-            )
-            if res is None:
-                continue
-            return res
-        if not _is_partitioned(tip):
-            # unpartitioned arm: snapshot rewrite (flat commits are
-            # O(table) by design, same as delete_where's flat arm);
-            # deletion vectors are read through and purged
-            schema = StructType.fromJson(tip["schema"])
-            fields = {f.name: f for f in schema.fields}
-            for c in set_values:
-                if c not in fields:
-                    raise ValueError(
-                        f"update_where: SET column {c!r} is not in the "
-                        "table schema"
-                    )
-            preds = _validate_where(where, schema)
-            cond = F.coalesce(_where_expr(preds), F.lit(False))
-            try:
-                snap = _read_entries(
-                    spark, schema, _phys_map(tip), root, [_flat_entry(tip)]
-                )
-                updated = snap.filter(cond).count()
-                if updated == 0:
-                    return {
-                        "version": v, "rows_updated": 0,
-                        "partitions_rewritten": 0, "committed": False,
-                    }
-                out = snap
-                for c, nv in set_values.items():
-                    out = out.withColumn(
-                        c,
-                        F.when(
-                            cond, F.lit(nv).cast(fields[c].dataType)
-                        ).otherwise(F.col(c)),
-                    )
-                new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-                obs = Observation()
-                _write_physical(
-                    out.observe(obs, F.count(F.lit(1)).alias("rows")),
-                    _phys_map(tip),
-                ).write.parquet(os.path.join(root, new_rel))
-                n = int(obs.get["rows"])
-            except AnalysisException as e:
-                if _is_path_not_found(e):
-                    continue
-                raise
-            if n != tip["rows"]:
-                shutil.rmtree(
-                    os.path.join(root, new_rel), ignore_errors=True
-                )
-                continue  # tip moved between the two passes
-            checks = _effective_constraints(tip, None)
-            if checks:
-                try:
-                    _check_constraints(
-                        _read_data(
-                            spark, schema, _phys_map(tip),
-                            [os.path.join(root, new_rel)],
-                        ),
-                        checks,
-                    )
-                except ValueError:
-                    shutil.rmtree(
-                        os.path.join(root, new_rel), ignore_errors=True
-                    )
-                    raise
-            manifest = {
-                "op": "update",
-                "base_version": v,
-                "data_dir": new_rel,
-                "rows": n,
-                "schema": tip["schema"],
-                **_carry_mapping(tip),
-            }
-            if _try_commit(root, v + 1, manifest, backend):
-                return {
-                    "version": v + 1, "rows_updated": updated,
-                    "partitions_rewritten": 1, "committed": True,
-                }
-            shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
-            continue
+    def plan(tip):
         schema = StructType.fromJson(tip["schema"])
-        pcol = tip["partition_col"]
         fields = {f.name: f for f in schema.fields}
         for c in set_values:
             if c not in fields:
@@ -3183,7 +2937,7 @@ def update_where(
                     f"update_where: SET column {c!r} is not in the "
                     "table schema"
                 )
-            if c == pcol:
+            if c == _pcol(tip):
                 raise ValueError(
                     f"update_where: SET on the partition column {c!r} "
                     "moves rows between partitions — delete + upsert "
@@ -3191,160 +2945,29 @@ def update_where(
                 )
         preds = _validate_where(where, schema)
         cond = F.coalesce(_where_expr(preds), F.lit(False))
-        try:
-            parts = resolve_partitions(root, v)
-        except FileNotFoundError:
-            continue
-        candidates = {
-            pk: e
-            for pk, e in parts.items()
-            if _entry_may_match(e, pk, preds, pcol)
-        }
-        if not candidates:
-            return {
-                "version": v, "rows_updated": 0,
-                "partitions_rewritten": 0, "committed": False,
-            }
-        try:
-            cand = _read_entries(
-                spark, schema, _phys_map(tip), root, candidates.values()
+        upd = F.col("__cls") == "upd"
+
+        def classify(t):
+            t = t.withColumn(
+                "__cls", F.when(cond, F.lit("upd")).otherwise(F.lit("keep"))
             )
-            per_part_upd = {
-                _pkey(r[0]): r[1]
-                for r in cand.filter(cond).groupBy(pcol).count().collect()
-            }
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        touched = {pk for pk, n in per_part_upd.items() if n > 0}
-        if not touched:
-            return {
-                "version": v, "rows_updated": 0,
-                "partitions_rewritten": 0, "committed": False,
-            }
-        updated_n = sum(per_part_upd[pk] for pk in touched)
-        try:
-            tdf = _read_entries(
-                spark, schema, _phys_map(tip), root,
-                [parts[pk] for pk in sorted(touched)],
-            )
-            vals = [r[0] for r in tdf.select(pcol).distinct().collect()]
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        val_keys = {_pkey(x): x for x in vals if _pkey(x) in touched}
-        out = tdf
-        for c, nv in set_values.items():
-            out = out.withColumn(
-                c,
-                F.when(
-                    cond, F.lit(nv).cast(fields[c].dataType)
-                ).otherwise(F.col(c)),
-            )
-        stat_names = sorted(
-            {
-                c
-                for pk in touched
-                for c in (parts[pk].get("stats") or {})
-                if c in fields
-            }
-        )
-        bloom_names = sorted(
-            {
-                c
-                for pk in touched
-                for c in (parts[pk].get("bloom") or {})
-                if c in fields
-            }
-        )
-        commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        tok_map = _ptok_mapping(spark, schema[pcol], val_keys)
-        _write_physical(
-            out.join(F.broadcast(tok_map), pcol), _phys_map(tip)
-        ).write.partitionBy("__ptok").parquet(os.path.join(root, commit_rel))
-        leaf = {
-            pk: f"{commit_rel}/__ptok={_ptoken(pk)}" for pk in touched
-        }
-        missing = [
-            pk
-            for pk in touched
-            if not os.path.isdir(os.path.join(root, leaf[pk]))
-        ]
-        if missing:
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
-            raise RuntimeError(
-                f"update_where: partitions {sorted(missing)!r} produced "
-                "no leaf — rows would be lost; not committing"
-            )
-        readback = _read_data(
-            spark,
-            schema,
-            _phys_map(tip),
-            [os.path.join(root, d) for d in leaf.values()],
-        )
-        checks = _effective_constraints(tip, None)
-        if checks:
-            # table-level CHECK constraints hold across UPDATEs too
-            try:
-                _check_constraints(readback, checks)
-            except ValueError:
-                shutil.rmtree(
-                    os.path.join(root, commit_rel), ignore_errors=True
-                )
-                raise
-        per_part = _leaf_stats(
-            readback, pcol, [fields[c] for c in stat_names]
-        )
-        blooms = (
-            _leaf_blooms(readback, pcol, [fields[c] for c in bloom_names])
-            if bloom_names
-            else {}
-        )
-        updates = {}
-        ok = True
-        for pk in sorted(touched):
-            got = per_part.get(pk, {"rows": 0, "stats": {}})
-            if got["rows"] != parts[pk]["rows"]:
-                ok = False  # UPDATE never changes row counts
-                break
-            e: dict = {"dir": leaf[pk], "rows": got["rows"]}
-            if stat_names:
-                e["stats"] = got["stats"]
-            if bloom_names:
-                e["bloom"] = blooms.get(pk, {})
-            updates[pk] = e
-        if not ok:
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
-            continue  # tip moved mid-read; recompute
-        new_parts = {**parts, **updates}
-        manifest = {
-            "op": "update",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": tip["schema"],
-            "partition_col": pcol,
-            "updates": updates,
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {
-                "version": v + 1,
-                "rows_updated": updated_n,
-                "partitions_rewritten": len(updates),
-                "committed": True,
-            }
-        shutil.rmtree(os.path.join(root, commit_rel), ignore_errors=True)
-    raise RuntimeError(
-        f"update_where: gave up after {max_retries} version races at "
-        f"{root!r}"
+            return t.withColumns({
+                c: F.when(upd, F.lit(nv).cast(fields[c].dataType))
+                .otherwise(F.col(c))
+                for c, nv in set_values.items()
+            })
+
+        return _RowChange(schema, classify, preds, frozenset(set_values))
+
+    res = _change_rows(
+        spark, root, "update_where", plan, mode, max_retries, backend
     )
+    return {
+        k: res[k]
+        for k in (
+            "version", "rows_updated", "partitions_rewritten", "committed",
+        )
+    }
 
 
 def _merge_clause_list(clauses, what: str):
@@ -3464,319 +3087,6 @@ def _merge_actions(
     return action_df, out_cols, delete_tags
 
 
-def _merge_into_dv(
-    spark, root, v, tip, schema, source, on, matched, not_matched,
-    nbs, txn_w, backend,
-) -> dict | None:
-    """merge_into's merge-on-read arm: one position-carrying read of
-    the target, one `_merge_actions` join, then per class —
-    matched-update/delete positions fold into each leaf's deletion
-    vector, updated images and inserts land in ONE appended dir
-    (partition-token subdirs on partitioned tables) joined to the
-    touched entries' ``extra_dirs``. O(changed rows) written; base
-    leaves untouched; the same action semantics as the rewrite arm
-    (equality pinned in tests). Returns None on a version race
-    (caller retries)."""
-    from pyspark.errors import AnalysisException
-
-    no_change = {
-        "version": v, "rows_updated": 0, "rows_deleted": 0,
-        "rows_inserted": 0, "partitions_rewritten": 0,
-        "partitions_removed": 0, "committed": False,
-        "txn_skipped": False,
-    }
-    phys = _phys_map(tip)
-    partitioned = _is_partitioned(tip)
-    pcol = tip.get("partition_col")
-    if partitioned:
-        try:
-            entries = resolve_partitions(root, v)
-        except FileNotFoundError:
-            return None
-    else:
-        entries = {"": {**_flat_entry(tip), "rows": tip["rows"]}}
-
-    written: list[str] = []
-    try:
-        scans = []
-        for pk in sorted(entries):
-            e = entries[pk]
-            dv_abs = (
-                os.path.join(root, e["dv"]["dir"]) if e.get("dv") else None
-            )
-            scans.append(
-                _scan_leaf_with_pos(
-                    spark, schema, phys, _entry_dirs(root, e), dv_abs
-                ).withColumn("__leaf", F.lit(pk))
-            )
-        if scans:
-            tdf = scans[0]
-            for sc in scans[1:]:
-                tdf = tdf.unionByName(sc)
-        else:
-            tdf = (
-                spark.createDataFrame([], schema)
-                .withColumn("__dv_file", F.lit(None).cast("string"))
-                .withColumn("__dv_pos", F.lit(None).cast("bigint"))
-                .withColumn("__leaf", F.lit(None).cast("string"))
-            )
-        _merge_guard_dup_sources(tdf, source, on, matched)
-        action_df, out_cols, delete_tags = _merge_actions(
-            tdf, source, on, schema, matched, not_matched, nbs
-        )
-        is_del = (
-            F.col("__action").isin(*delete_tags)
-            if delete_tags
-            else F.lit(False)
-        )
-        cls = (
-            F.when(F.col("__action") == "ins", F.lit("ins"))
-            .when(is_del, F.lit("del"))
-            .when(F.col("__action").endswith(":u"), F.lit("upd"))
-            .otherwise(F.lit("keep"))
-        )
-        # pin ONE evaluation of the join: accounting, constraint
-        # check, per-leaf DV writes, and the append write all replay
-        # these blocks
-        proj = action_df.select(
-            cls.alias("__cls"),
-            F.col("t.__leaf").alias("__leaf"),
-            F.col("t.__dv_file").alias("__dv_file"),
-            F.col("t.__dv_pos").alias("__dv_pos"),
-            *(out_cols[f.name] for f in schema.fields),
-        ).filter(F.col("__cls") != "keep").localCheckpoint(eager=False)
-
-        # accounting per partition (updates/deletes keep their leaf's
-        # value; inserts take the projected partition value)
-        by_pk: dict = {}
-        typed_val: dict = {}
-        if partitioned:
-            per = proj.groupBy(F.col(pcol), "__cls").count().collect()
-            for r in per:
-                if r[pcol] is None:
-                    if r["__cls"] == "ins":
-                        raise ValueError(
-                            "merge_into: an inserted row carries a NULL "
-                            f"partition value ({pcol!r}) — partition-"
-                            "scoped tables require a concrete partition "
-                            "per row"
-                        )
-                    continue
-                pk = _pkey(r[pcol])
-                typed_val[pk] = r[pcol]
-                d = by_pk.setdefault(pk, {"upd": 0, "del": 0, "ins": 0})
-                d[r["__cls"]] += r["count"]
-        else:
-            for r in proj.groupBy("__cls").count().collect():
-                d = by_pk.setdefault("", {"upd": 0, "del": 0, "ins": 0})
-                d[r["__cls"]] += r["count"]
-            if by_pk.get("") == {"upd": 0, "del": 0, "ins": 0}:
-                by_pk = {}
-        touched = {
-            pk
-            for pk, d in by_pk.items()
-            if d["upd"] or d["del"] or d["ins"]
-        }
-        if not touched:
-            return {**no_change}
-        n_upd = sum(by_pk[pk]["upd"] for pk in touched)
-        n_del = sum(by_pk[pk]["del"] for pk in touched)
-        n_ins = sum(by_pk[pk]["ins"] for pk in touched)
-
-        appended = proj.filter(F.col("__cls").isin("upd", "ins")).select(
-            *[f.name for f in schema.fields]
-        )
-        checks = _effective_constraints(tip, None)
-        if checks:
-            # only the appended images can newly violate a CHECK
-            _check_constraints(appended, checks)
-
-        # PARTITIONED leaves whose every live row dies with nothing
-        # appended leave the map — no sidecar needed. A FLAT table's
-        # single leaf can never leave: its deletes must land in the
-        # DV even when they empty the table (caught by the stateful
-        # model: dv-update → rename → dv-merge-delete-all).
-        removed = [
-            pk
-            for pk in sorted(touched)
-            if partitioned
-            and pk in entries
-            and by_pk[pk]["del"] == entries[pk]["rows"]
-            and not by_pk[pk]["upd"]
-            and not by_pk[pk]["ins"]
-        ]
-        removed_set = set(removed)
-
-        # per-leaf DV sidecars for surviving leaves with hits
-        new_dvs: dict = {}
-        for pk in sorted(touched):
-            e = entries.get(pk)
-            if e is None or pk in removed_set:
-                continue
-            hit_n = by_pk[pk]["del"] + by_pk[pk]["upd"]
-            if hit_n == 0:
-                continue
-            hits = proj.filter(
-                F.col("__cls").isin("del", "upd")
-                & (F.col("__leaf") == pk)
-            ).select("__dv_file", "__dv_pos")
-            rel = _write_leaf_dv(spark, root, e, hits)
-            written.append(rel)
-            prior = (e.get("dv") or {}).get("deleted", 0)
-            new_dvs[pk] = {"dir": rel, "deleted": prior + hit_n}
-
-        # ONE append write for every updated image and insert
-        app_pks = sorted(
-            pk for pk in touched
-            if (by_pk[pk]["upd"] or by_pk[pk]["ins"])
-            and pk not in removed_set
-        )
-        app_rel = None
-        if app_pks:
-            n_expected = sum(
-                by_pk[pk]["upd"] + by_pk[pk]["ins"] for pk in app_pks
-            )
-            app_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            written.append(app_rel)
-            obs = Observation()
-            out = appended.observe(obs, F.count(F.lit(1)).alias("rows"))
-            if partitioned:
-                tok_map = _ptok_mapping(
-                    spark, schema[pcol],
-                    {pk: typed_val[pk] for pk in app_pks},
-                )
-                _write_physical(
-                    out.join(F.broadcast(tok_map), pcol), phys
-                ).write.partitionBy("__ptok").parquet(
-                    os.path.join(root, app_rel)
-                )
-            else:
-                _write_physical(out, phys).write.parquet(
-                    os.path.join(root, app_rel)
-                )
-            if int(obs.get["rows"]) != n_expected:
-                raise _StaleMergeRead()
-            if partitioned:
-                missing = [
-                    pk for pk in app_pks
-                    if not os.path.isdir(os.path.join(
-                        root, f"{app_rel}/__ptok={_ptoken(pk)}"
-                    ))
-                ]
-                if missing:
-                    raise RuntimeError(
-                        f"merge_into(dv): partitions {missing!r} "
-                        "produced no append dir — rows would be lost; "
-                        "not committing"
-                    )
-    except _StaleMergeRead:
-        for d in written:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        return None
-    except (AnalysisException, ValueError, RuntimeError) as exc:
-        for d in written:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        if isinstance(exc, AnalysisException) and _is_path_not_found(exc):
-            return None
-        raise
-
-    assigned = {
-        c
-        for _, a in list(matched) + list(nbs)
-        if isinstance(a, dict)
-        for c in a
-    }
-    def _entry_after(pk) -> dict:
-        old = entries.get(pk)
-        d = by_pk[pk]
-        tok_dir = f"{app_rel}/__ptok={_ptoken(pk)}" if partitioned else app_rel
-        if old is None:
-            # brand-new partition: its append dir IS the base leaf
-            return {"dir": tok_dir, "rows": d["ins"]}
-        ne = dict(old)
-        ne["rows"] = old["rows"] - d["del"] + d["ins"]
-        if pk in new_dvs:
-            ne["dv"] = new_dvs[pk]
-        if d["upd"] or d["ins"]:
-            ne["extra_dirs"] = list(old.get("extra_dirs") or []) + [tok_dir]
-        if d["ins"]:
-            # inserted values can fall anywhere: all skipping metadata
-            # on this leaf is stale
-            ne.pop("stats", None)
-            ne.pop("bloom", None)
-        elif d["upd"]:
-            for k in ("stats", "bloom"):
-                if k in ne:
-                    kept = {
-                        c: s for c, s in ne[k].items() if c not in assigned
-                    }
-                    if kept:
-                        ne[k] = kept
-                    else:
-                        ne.pop(k)
-        return ne
-
-    if partitioned:
-        updates = {
-            pk: _entry_after(pk)
-            for pk in sorted(touched)
-            if pk not in removed_set
-        }
-        new_parts = {
-            pk: e for pk, e in entries.items() if pk not in removed_set
-        }
-        new_parts.update(updates)
-        manifest = _txn_stamp(
-            {
-                "op": "merge",
-                "base_version": v,
-                "rows": tip["rows"] - n_del + n_ins,
-                "schema": tip["schema"],
-                "partition_col": pcol,
-                "updates": updates,
-                "removed": removed,
-                **_carry_mapping(tip),
-            },
-            txn_w,
-        )
-    else:
-        ne = _entry_after("")
-        manifest = _txn_stamp(
-            {
-                "op": "merge",
-                "base_version": v,
-                "data_dir": tip["data_dir"],
-                "rows": tip["rows"] - n_del + n_ins,
-                "schema": tip["schema"],
-                **_carry_mapping(tip),
-            },
-            txn_w,
-        )
-        if ne.get("dv"):
-            manifest["dv"] = ne["dv"]
-        if ne.get("extra_dirs"):
-            manifest["extra_dirs"] = ne["extra_dirs"]
-        new_parts = None
-    if _try_commit(root, v + 1, manifest, backend):
-        if new_parts is not None:
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-        return {
-            "version": v + 1, "rows_updated": n_upd,
-            "rows_deleted": n_del, "rows_inserted": n_ins,
-            "partitions_rewritten": len(touched) - len(removed),
-            "partitions_removed": len(removed),
-            "committed": True, "txn_skipped": False,
-        }
-    for d in written:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    return None
-
-
-class _StaleMergeRead(Exception):
-    """Internal: the append write observed a different row count than
-    the accounting pass — the tip moved between reads; retry."""
-
-
 def _merge_guard_dup_sources(tdf, source, on, matched):
     """Delta's ambiguous-merge guard: a target row matched by MORE
     than one source row has no well-defined UPDATE/DELETE outcome.
@@ -3841,14 +3151,14 @@ def merge_into(
       update or delete, Delta's third verb.
 
     Plan shape: ONE full-outer join target⟷source tagging every row
-    with its action, then (a) an accounting aggregate over the tags
-    and (b) the rewrite projecting each column as a CASE over the
-    tag — all JVM-side. The target scan is O(table) (same as Delta's
-    touched-file search); the REWRITE is O(touched partitions) on a
-    partition-scoped table: partitions where every row kept and no
-    insert landed carry forward byte-identically (so CDC's
-    byte-identity skip and vacuum invariants hold). A merge that
-    changes nothing publishes no version. Multiple source rows
+    with its action (``_merge_actions``), each column projected as a
+    CASE over the tag — all JVM-side — which is the classified scan
+    ``_change_rows`` publishes. The target scan is O(table) (same as
+    Delta's touched-file search); the publish is O(touched
+    partitions) on a partition-scoped table: partitions where every
+    row kept and no insert landed carry forward byte-identically (so
+    CDC's byte-identity skip and vacuum invariants hold). A merge
+    that changes nothing publishes no version. Multiple source rows
     matching one target row raise (Delta's ambiguity rule).
 
     ``allow_schema_evolution=True`` is Delta's MERGE ``autoMerge``:
@@ -3870,30 +3180,20 @@ def merge_into(
     sources (streaming foreachBatch, CDC redelivery after a crash
     between sink commit and cursor advance).
 
-    ``mode="dv"`` commits the MERGE merge-on-read (the same extension
-    as ``update_where(mode="dv")``): matched-update/delete positions
-    fold into each leaf's deletion vector, updated images and inserts
-    land in one appended ``extra_dirs`` dir per touched leaf — a
+    ``mode="dv"`` commits the MERGE merge-on-read (the same publish
+    step as ``update_where(mode="dv")``, see ``_change_rows``): a
     point-merge against a huge partition costs O(changed rows), not a
     leaf rewrite. Action semantics, accounting, constraints, and txn
-    watermarks are identical to the rewrite arm (equality pinned in
-    tests); ``allow_schema_evolution`` is refused under this mode
-    (evolve first, then merge). Rewriting verbs / ``purge_deletes``
-    fold the debt back into clean leaves.
+    watermarks are identical to the rewrite mode (equality pinned in
+    tests); inserts drop the receiving leaf's stats/bloom.
+    ``allow_schema_evolution`` is refused under this mode (evolve
+    first, then merge). Rewriting verbs / ``purge_deletes`` fold the
+    debt back into clean leaves.
 
     Returns {version, rows_updated, rows_deleted, rows_inserted,
     partitions_rewritten, partitions_removed, committed,
     txn_skipped}."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(
-            f"merge_into: mode must be 'rewrite' or 'dv', got {mode!r}"
-        )
-    if mode == "dv" and allow_schema_evolution:
-        raise ValueError(
-            "merge_into: mode='dv' cannot evolve the schema in the same "
-            "commit (appended dirs must match the pinned schema) — run "
-            "the evolving merge with mode='rewrite', or evolve first"
-        )
+    _check_dml_mode("merge_into", mode, evolve=allow_schema_evolution)
     txn_w = _txn_validate(txn)
     matched = _merge_clause_list(when_matched, "when_matched")
     nbs = _merge_clause_list(
@@ -3923,28 +3223,13 @@ def merge_into(
         # blocks. Opt out only for large sources whose plans are
         # provably deterministic.
         source = source.localCheckpoint(eager=False)
-    from pyspark.errors import AnalysisException
+    assigned = frozenset(
+        c for _, a in matched + nbs if isinstance(a, dict) for c in a
+    )
 
-    no_change = {
-        "version": None, "rows_updated": 0, "rows_deleted": 0,
-        "rows_inserted": 0, "partitions_rewritten": 0,
-        "partitions_removed": 0, "committed": False,
-        "txn_skipped": False,
-    }
-
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
-        if _txn_already_applied(tip, txn_w):
-            # idempotent replay: this (app_id, version) already landed
-            return {**no_change, "version": v, "txn_skipped": True}
+    def plan(tip):
         schema = StructType.fromJson(tip["schema"])
-        base_schema = schema
+        base_names = {f.name for f in schema.fields}
         widen_casts: dict = {}
         if allow_schema_evolution:
             # Delta autoMerge rule: the columns that EVOLVE the schema
@@ -3952,16 +3237,12 @@ def merge_into(
             # INSERT * (values=None), else exactly the assignment-
             # target names of the SET/INSERT dicts. A helper column
             # the clauses merely read never changes the table schema.
-            landing: set = set()
-            for _, a in matched + nbs:
-                if isinstance(a, dict):
-                    landing.update(a.keys())
+            landing = set(assigned)
             if not_matched is not None:
                 if not_matched[1] is None:
                     landing.update(source.columns)
                 else:
                     landing.update(not_matched[1].keys())
-            base_names = {f.name for f in schema.fields}
             src_fields = {f.name: f for f in source.schema.fields}
             evolved = list(schema.fields)
             for i, f in enumerate(evolved):
@@ -4002,24 +3283,18 @@ def merge_into(
                     schema, _phys_map(tip), _retired_physical(tip)
                 )
         fields = {f.name: f for f in schema.fields}
-        partitioned = _is_partitioned(tip)
-        pcol = tip.get("partition_col")
-        if partitioned:
-            for i, (_, a) in enumerate(matched + nbs):
-                if isinstance(a, dict) and pcol in a:
-                    raise ValueError(
-                        f"merge_into: SET on the partition column "
-                        f"{pcol!r} moves rows between partitions — "
-                        "delete + insert instead"
-                    )
-        for i, (_, a) in enumerate(matched + nbs):
-            if isinstance(a, dict):
-                for c in a:
-                    if c not in fields:
-                        raise ValueError(
-                            f"merge_into: SET column {c!r} not in the "
-                            "table schema"
-                        )
+        if _pcol(tip) in assigned:
+            raise ValueError(
+                f"merge_into: SET on the partition column "
+                f"{_pcol(tip)!r} moves rows between partitions — "
+                "delete + insert instead"
+            )
+        unknown = sorted(assigned - set(fields))
+        if unknown:
+            raise ValueError(
+                f"merge_into: SET column {unknown[0]!r} not in the "
+                "table schema"
+            )
         if not_matched and not_matched[1]:
             for c in not_matched[1]:
                 if c not in fields:
@@ -4028,308 +3303,43 @@ def merge_into(
                         "table schema"
                     )
 
-        if mode == "dv":
-            res = _merge_into_dv(
-                spark, root, v, tip, schema, source, on, matched,
-                not_matched, nbs, txn_w, backend,
-            )
-            if res is None:
-                continue
-            return res
-
-        try:
-            if partitioned:
-                parts = resolve_partitions(root, v)
-                tdf = _read_entries(
-                    spark, base_schema, _phys_map(tip), root, parts.values()
-                ) if parts else spark.createDataFrame([], base_schema)
-            else:
-                parts = None
-                tdf = _read_entries(
-                    spark, base_schema, _phys_map(tip), root,
-                    [_flat_entry(tip)],
-                )
-            if schema is not base_schema:
-                # evolution: pre-existing rows read the appended
-                # columns as typed NULLs; widened columns up-cast
-                base_names = {f.name for f in base_schema.fields}
-                for name, w in widen_casts.items():
-                    tdf = tdf.withColumn(name, F.col(name).cast(w))
-                for f in schema.fields:
-                    if f.name not in base_names:
-                        tdf = tdf.withColumn(
-                            f.name, F.lit(None).cast(f.dataType)
-                        )
+        def classify(tdf):
+            # evolution: pre-existing rows read the appended columns as
+            # typed NULLs; widened columns up-cast
+            evolve = {n: F.col(n).cast(w) for n, w in widen_casts.items()}
+            evolve.update({
+                f.name: F.lit(None).cast(f.dataType)
+                for f in schema.fields if f.name not in base_names
+            })
+            if evolve:
+                tdf = tdf.withColumns(evolve)
             _merge_guard_dup_sources(tdf, source, on, matched)
             action_df, out_cols, delete_tags = _merge_actions(
                 tdf, source, on, schema, matched, not_matched, nbs
             )
-            drop_tags = set(delete_tags) | {"drop"}
-            keep_rows = ~F.col("__action").isin(*sorted(drop_tags))
+            act = F.col("__action")
+            cls = (
+                F.when(act == "ins", F.lit("ins"))
+                .when(
+                    act.isin(*delete_tags) if delete_tags else F.lit(False),
+                    F.lit("del"),
+                )
+                .when(act.endswith(":u"), F.lit("upd"))
+                .otherwise(F.lit("keep"))
+            )
+            pos = [
+                F.col(f"t.{c}").alias(c)
+                for c in ("__dv_file", "__dv_pos") if c in tdf.columns
+            ]
+            # unmatched source rows no clause inserts belong to no leaf
+            return action_df.filter(act != "drop").select(
+                cls.alias("__cls"), *pos, *out_cols.values()
+            )
 
-            if not partitioned:
-                acts = {
-                    r["__action"]: r["count"]
-                    for r in action_df.groupBy("__action").count().collect()
-                }
-                n_upd = sum(
-                    n for a, n in acts.items() if a.endswith(":u")
-                )
-                n_del = sum(
-                    n for a, n in acts.items() if a in set(delete_tags)
-                )
-                n_ins = acts.get("ins", 0)
-                if n_upd + n_del + n_ins == 0:
-                    return {**no_change, "version": v}
-                new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-                obs = Observation()
-                _write_physical(
-                    action_df.filter(keep_rows)
-                    .select(*(out_cols[f.name] for f in schema.fields))
-                    .observe(obs, F.count(F.lit(1)).alias("rows")),
-                    _phys_map(tip),
-                ).write.parquet(os.path.join(root, new_rel))
-                n = int(obs.get["rows"])
-                if n != tip["rows"] - n_del + n_ins:
-                    shutil.rmtree(
-                        os.path.join(root, new_rel), ignore_errors=True
-                    )
-                    continue  # tip moved between the two passes
-                checks = _effective_constraints(tip, None)
-                if checks:
-                    # merged rows must still satisfy the table's CHECK
-                    # constraints — write-audit-publish
-                    try:
-                        _check_constraints(
-                            _read_data(
-                                spark,
-                                schema,
-                                _phys_map(tip),
-                                [os.path.join(root, new_rel)],
-                            ),
-                            checks,
-                        )
-                    except ValueError:
-                        shutil.rmtree(
-                            os.path.join(root, new_rel),
-                            ignore_errors=True,
-                        )
-                        raise
-                manifest = _txn_stamp(
-                    {
-                        "op": "merge",
-                        "base_version": v,
-                        "data_dir": new_rel,
-                        "rows": n,
-                        "schema": schema.jsonValue(),
-                        **_carry_mapping(tip),
-                    },
-                    txn_w,
-                )
-                if _try_commit(root, v + 1, manifest, backend):
-                    return {
-                        "version": v + 1, "rows_updated": n_upd,
-                        "rows_deleted": n_del, "rows_inserted": n_ins,
-                        "partitions_rewritten": 1, "partitions_removed": 0,
-                        "committed": True, "txn_skipped": False,
-                    }
-                shutil.rmtree(
-                    os.path.join(root, new_rel), ignore_errors=True
-                )
-                continue
+        return _RowChange(schema, classify, None, assigned)
 
-            # ---- partition-scoped: rewrite only touched partitions.
-            # The post-merge partition value: updates can't touch pcol
-            # and inserts take their projected value, so out_cols[pcol]
-            # is authoritative for every surviving row; for delete
-            # accounting the target side carries it.
-            pv = F.coalesce(F.col(f"t.{pcol}"), out_cols[pcol].cast(
-                fields[pcol].dataType
-            ))
-            per = (
-                action_df.withColumn("__pv", pv)
-                .groupBy("__pv", "__action")
-                .count()
-                .collect()
-            )
-            by_pk: dict = {}
-            typed_val: dict = {}
-            for r in per:
-                if r["__pv"] is None:
-                    if r["__action"] == "ins":
-                        raise ValueError(
-                            "merge_into: an inserted row carries a NULL "
-                            f"partition value ({pcol!r}) — partition-"
-                            "scoped tables require a concrete partition "
-                            "per row"
-                        )
-                    continue  # non-insert NULL pv: unmatched-drop rows
-                pk = _pkey(r["__pv"])
-                typed_val[pk] = r["__pv"]
-                d = by_pk.setdefault(
-                    pk, {"upd": 0, "del": 0, "ins": 0}
-                )
-                if r["__action"].endswith(":u"):
-                    d["upd"] += r["count"]
-                elif r["__action"] in set(delete_tags):
-                    d["del"] += r["count"]
-                elif r["__action"] == "ins":
-                    d["ins"] += r["count"]
-            touched = {
-                pk
-                for pk, d in by_pk.items()
-                if d["upd"] or d["del"] or d["ins"]
-            }
-            n_upd = sum(by_pk[pk]["upd"] for pk in touched)
-            n_del = sum(by_pk[pk]["del"] for pk in touched)
-            n_ins = sum(by_pk[pk]["ins"] for pk in touched)
-            if not touched:
-                return {**no_change, "version": v}
-            expected = {
-                pk: (parts[pk]["rows"] if pk in parts else 0)
-                - by_pk[pk]["del"]
-                + by_pk[pk]["ins"]
-                for pk in touched
-            }
-            stat_names = sorted(
-                {
-                    c
-                    for e in parts.values()
-                    for c in (e.get("stats") or {})
-                    if c in fields
-                }
-            )
-            bloom_names = sorted(
-                {
-                    c
-                    for e in parts.values()
-                    for c in (e.get("bloom") or {})
-                    if c in fields
-                }
-            )
-            live = {pk for pk in touched if expected[pk] > 0}
-            commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            leaf = {}
-            if live:
-                val_keys = {pk: typed_val[pk] for pk in live}
-                tok_map = _ptok_mapping(spark, schema[pcol], val_keys)
-                final = (
-                    action_df.filter(keep_rows)
-                    .select(*(out_cols[f.name] for f in schema.fields))
-                    .join(F.broadcast(tok_map), pcol)
-                )
-                _write_physical(final, _phys_map(tip)).write.partitionBy(
-                    "__ptok"
-                ).parquet(os.path.join(root, commit_rel))
-                leaf = {
-                    pk: f"{commit_rel}/__ptok={_ptoken(pk)}" for pk in live
-                }
-                missing = [
-                    pk
-                    for pk in live
-                    if not os.path.isdir(os.path.join(root, leaf[pk]))
-                ]
-                if missing:
-                    shutil.rmtree(
-                        os.path.join(root, commit_rel), ignore_errors=True
-                    )
-                    raise RuntimeError(
-                        f"merge_into: partitions {sorted(missing)!r} "
-                        "produced no leaf — rows would be lost; not "
-                        "committing"
-                    )
-                readback = _read_data(
-                    spark,
-                    schema,
-                    _phys_map(tip),
-                    [os.path.join(root, d) for d in leaf.values()],
-                )
-                checks = _effective_constraints(tip, None)
-                if checks:
-                    # rewritten + inserted rows must still satisfy the
-                    # table's CHECK constraints — write-audit-publish
-                    try:
-                        _check_constraints(readback, checks)
-                    except ValueError:
-                        shutil.rmtree(
-                            os.path.join(root, commit_rel),
-                            ignore_errors=True,
-                        )
-                        raise
-                per_part = _leaf_stats(
-                    readback, pcol, [fields[c] for c in stat_names]
-                )
-                blooms = (
-                    _leaf_blooms(
-                        readback, pcol, [fields[c] for c in bloom_names]
-                    )
-                    if bloom_names
-                    else {}
-                )
-            else:
-                per_part, blooms = {}, {}
-            updates = {}
-            removed = []
-            ok = True
-            for pk in sorted(touched):
-                if expected[pk] == 0:
-                    if pk in parts:
-                        removed.append(pk)
-                    continue
-                got = per_part.get(pk, {"rows": 0, "stats": {}})
-                if got["rows"] != expected[pk]:
-                    ok = False
-                    break
-                e: dict = {"dir": leaf[pk], "rows": expected[pk]}
-                if stat_names:
-                    e["stats"] = got["stats"]
-                if bloom_names:
-                    e["bloom"] = blooms.get(pk, {})
-                updates[pk] = e
-            if not ok:
-                shutil.rmtree(
-                    os.path.join(root, commit_rel), ignore_errors=True
-                )
-                continue  # tip moved between the two passes
-            new_parts = {
-                pk: e for pk, e in parts.items() if pk not in set(removed)
-            }
-            new_parts.update(updates)
-            manifest = _txn_stamp(
-                {
-                    "op": "merge",
-                    "base_version": v,
-                    "rows": sum(e["rows"] for e in new_parts.values()),
-                    "schema": schema.jsonValue(),
-                    "partition_col": pcol,
-                    "updates": updates,
-                    "removed": removed,
-                    **_carry_mapping(tip),
-                },
-                txn_w,
-            )
-            if _try_commit(root, v + 1, manifest, backend):
-                _maybe_checkpoint(root, v + 1, new_parts, backend)
-                return {
-                    "version": v + 1,
-                    "rows_updated": n_upd,
-                    "rows_deleted": n_del,
-                    "rows_inserted": n_ins,
-                    "partitions_rewritten": len(updates),
-                    "partitions_removed": len(removed),
-                    "committed": True,
-                    "txn_skipped": False,
-                }
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue  # concurrent vacuum; re-resolve the tip
-            raise
-    raise RuntimeError(
-        f"merge_into: gave up after {max_retries} version races at "
-        f"{root!r}"
+    return _change_rows(
+        spark, root, "merge_into", plan, mode, max_retries, backend, txn_w
     )
 
 

@@ -1320,11 +1320,6 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: s.fn for name, s in SPECS.items()}
 
 
-def all_oracle_sql() -> dict[str, str]:
-    _load_extensions()
-    return {name: s.sql for name, s in SPECS.items() if s.sql is not None}
-
-
 def driver_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The curated ≤50-entry registry `__spark_entry__` exposes to the
     round driver: one row per operator family (family composites +

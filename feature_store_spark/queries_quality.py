@@ -43,10 +43,15 @@ _CHECKPOINT_MIN_INPUT_BYTES = 256 * 1024 * 1024
 def _input_bytes(sf_dir: str, name: str) -> int:
     """On-disk bytes of fixture table ``name`` (file or directory) —
     a plan-time-cheap proxy for scan cost; 0 when unreadable (callers
-    then keep the no-checkpoint fast path, the safe small default)."""
+    then keep the no-checkpoint fast path, the safe small default).
+    Probes the same paths as ``tables.load_flat_table``: the
+    ``<sf_dir>/<name>`` partitioned-table directory first, then the
+    flat ``<name>.parquet`` file."""
     import os
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = os.path.join(sf_dir, name)
+    if not os.path.isdir(path):
+        path = f"{path}.parquet"
     try:
         if os.path.isdir(path):
             return sum(

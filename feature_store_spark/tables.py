@@ -110,10 +110,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return cache[key]
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
 # ---------------------------------------------------------------------------
 # Date-partitioned layout support
 # ---------------------------------------------------------------------------
@@ -184,9 +180,3 @@ def write_month_partitioned(
         .partitionBy(part)
         .parquet(path)
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for n in TABLE_NAMES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -779,3 +779,19 @@ def test_gap_fill_zero_is_typed_and_rejects_non_numeric(spark):
     ff = {r["day"].isoformat(): r["v"]
           for r in gap_fill(txt, "k", "day", ["v"], fill="ffill").collect()}
     assert ff == {"2024-01-01": "a", "2024-01-02": "a", "2024-01-03": "b"}
+
+
+def test_input_bytes_probes_partitioned_dir_before_flat_file(tmp_path):
+    """The adaptive-checkpoint size probe must see a `<sf_dir>/<name>`
+    partitioned table root (the layout load_flat_table reads first),
+    not only the flat `<name>.parquet` file."""
+    from feature_store_spark.queries_quality import _input_bytes
+
+    part = tmp_path / "orders" / "o_month=2024-01"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"x" * 300)
+    (tmp_path / "orders.parquet").write_bytes(b"y" * 7)
+    assert _input_bytes(str(tmp_path), "orders") == 300
+    (tmp_path / "lineitem.parquet").write_bytes(b"z" * 11)
+    assert _input_bytes(str(tmp_path), "lineitem") == 11
+    assert _input_bytes(str(tmp_path), "missing") == 0

@@ -19,13 +19,37 @@ ROWS_ONLY_NAMES = sorted(n for n, s in SPECS.items() if s.sql is None)
 # jobs while building — paying that twice per query cost the suite
 # ~3 min of its 33 (round 11, VERDICT r10 item 6). DataFrames are
 # immutable plans; reuse cannot leak state between the two checks.
-_DF_CACHE: dict[str, object] = {}
+# Keyed by session and fixture dir too: a frame is bound to the
+# session and the data it was planned against.
+_DF_CACHE: dict[tuple, object] = {}
 
 
 def _df(spark, sf_dir, name):
-    if name not in _DF_CACHE:
-        _DF_CACHE[name] = SPECS[name].fn(spark, sf_dir)
-    return _DF_CACHE[name]
+    key = (id(spark), sf_dir, name)
+    if key not in _DF_CACHE:
+        _DF_CACHE[key] = SPECS[name].fn(spark, sf_dir)
+    return _DF_CACHE[key]
+
+
+def test_df_cache_keys_on_session_and_fixture_dir(monkeypatch):
+    """A cached frame is reused only for the same (session, sf_dir,
+    name); another fixture dir or session plans its own frame."""
+    from types import SimpleNamespace
+
+    calls = []
+
+    def fn(spark, sf_dir):
+        calls.append((spark, sf_dir))
+        return object()
+
+    monkeypatch.setitem(SPECS, "__cache_probe", SimpleNamespace(fn=fn))
+    monkeypatch.setattr(f"{__name__}._DF_CACHE", {})
+    s1, s2 = object(), object()
+    a = _df(s1, "/sf_a", "__cache_probe")
+    assert _df(s1, "/sf_a", "__cache_probe") is a
+    assert _df(s1, "/sf_b", "__cache_probe") is not a
+    assert _df(s2, "/sf_a", "__cache_probe") is not a
+    assert calls == [(s1, "/sf_a"), (s1, "/sf_b"), (s2, "/sf_a")]
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)

@@ -61,6 +61,8 @@ def test_dv_delete_flat_roundtrip_and_time_travel(spark, tmp_path):
     _flat(spark, root)
     res = delete_where(spark, root, [("user_id", "<", 3)], mode="dv")
     assert res["committed"] and res["rows_deleted"] == 3
+    # the flat table's one leaf was re-published (as in rewrite mode)
+    assert res["partitions_rewritten"] == 1
     assert _ids(spark, root) == list(range(3, 10))
     m = read_manifest(root, 2)
     assert m["rows"] == 7 and m["dv"]["deleted"] == 3
@@ -815,3 +817,72 @@ def test_dv_merge_delete_everything_in_partition(spark, tmp_path):
     parts = txn.resolve_partitions(root, txn.latest_version(root))
     assert set(parts) == {txn._pkey(D2)}
     assert _ids(spark, root) == list(range(100, 105))
+
+
+# ---------------------------------------------------------------------------
+# rewrite ≡ merge-on-read, per verb and layout
+# ---------------------------------------------------------------------------
+
+
+def _layout(spark, root, layout):
+    """The _part rows, partitioned by p or as one flat leaf."""
+    if layout == "partitioned":
+        _part(spark, root)
+        return
+    rows = [(i, float(i), 1, D1) for i in range(5)] + [
+        (i, float(i), 1, D2) for i in range(100, 105)
+    ]
+    upsert_manifest(
+        spark.createDataFrame(
+            rows, "user_id bigint, score double, ts bigint, p date"
+        ),
+        root, ["user_id"], "ts",
+    )
+
+
+def _change(spark, root, verb, mode):
+    if verb == "delete":
+        # empties D1 (a partitioned leaf leaves the map), trims D2
+        return delete_where(
+            spark, root, [("user_id", "in", [0, 1, 2, 3, 4, 101])],
+            mode=mode,
+        )
+    if verb == "update":
+        return txn.update_where(
+            spark, root, [("user_id", "in", [1, 102])], {"score": 9.5},
+            mode=mode,
+        )
+    src = spark.createDataFrame(
+        [(2, 22.0, D1), (3, 33.0, D1), (102, 7.0, D2), (200, 1.0, D2),
+         (300, 3.0, datetime.date(2024, 1, 3))],
+        "user_id bigint, val double, p date",
+    )
+    return merge_into(
+        spark, root, src, ["user_id"], mode=mode,
+        when_matched=[("s.user_id = 3", "delete"),
+                      (None, {"score": "s.val"})],
+        when_not_matched=(None, {
+            "user_id": "s.user_id", "score": "s.val", "ts": "9",
+            "p": "s.p",
+        }),
+        when_not_matched_by_source=[("t.user_id = 104", "delete")],
+    )
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+@pytest.mark.parametrize("verb", ["delete", "update", "merge"])
+def test_dv_matches_rewrite(spark, tmp_path, verb, layout):
+    """Both publish steps of one change plan agree: the same rows read
+    back and the same accounting, whichever verb and layout."""
+    a, b = str(tmp_path / "dv"), str(tmp_path / "rw")
+    _layout(spark, a, layout)
+    _layout(spark, b, layout)
+    r_dv = _change(spark, a, verb, "dv")
+    r_rw = _change(spark, b, verb, "rewrite")
+    assert r_dv["committed"]
+    assert r_dv == r_rw
+    got_dv, _ = read_table(spark, a)
+    got_rw, _ = read_table(spark, b)
+    assert sorted(got_dv.collect()) == sorted(got_rw.collect())
+    m = read_manifest(a, 2)
+    assert "deletion_vectors" in m["protocol"]["reader"]
