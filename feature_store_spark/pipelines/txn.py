@@ -35,28 +35,20 @@ identical). ``vacuum`` reclaims data directories referenced only by
 pruned manifests, plus — behind an explicit grace window —
 crash-orphaned dirs no manifest ever referenced.
 
-The full table-format surface as of round 6:
+Two private pieces carry every committing verb:
 
-- **Writes**: ``upsert_manifest`` (full snapshot) /
-  ``upsert_manifest_partitioned`` (O(touched partitions); merge or
-  replace; schema evolution with a type-widening matrix; optional
-  ``stats_cols``/``bloom_cols`` data-skipping metadata; optional
-  commit-time CHECK ``constraints`` — write-audit-publish).
-- **DML**: ``delete_where`` / ``update_where`` (SQL NULL semantics,
-  only may-match leaves rewritten) and ``drop_partitions``
-  (zero-data-work partition expiration).
-- **Reads**: ``read_table`` with version pinning, ``timestamp_as_of``
-  time travel, manifest-level partition pruning, and ``where=`` data
-  skipping (ranges, equality, IN-lists; leaf stats + Bloom filters;
-  the predicate also applies as a real filter, so pruning can only
-  save work).
-- **Maintenance**: ``compact_manifest`` (OPTIMIZE, auto-compaction
-  ``min_files``, ``zorder_cols`` re-clustering), ``vacuum`` (with
-  ``dry_run``), checkpoint rollups + ``_last_checkpoint`` tip hint
-  (listing-free resolution), ``migrate_to_manifest``.
-- **Metadata**: ``table_history`` (DESCRIBE HISTORY),
-  ``table_files`` (files view), ``schema_changes`` (schema lineage),
-  ``table_changes`` (CDC with byte-identity partition skipping).
+- **The leaf-map codec** (``_leaves`` / ``_encode``) is the only code
+  that knows the three manifest formats (FORMAT.md §3). ``_leaves``
+  decodes any version into ``{pkey: entry}``; an unpartitioned table
+  is the one-leaf map ``{"": entry}``. ``_encode`` turns the tip's map
+  plus a verb's ``(updates, removed)`` back into a format-1 snapshot,
+  a format-2 full map or a format-3 delta.
+- **The commit loop** (``_commit``) owns the optimistic retry: it
+  resolves the tip (retrying vacuum races), gates it on the writer
+  protocol, skips and stamps ``txn`` watermarks, carries the
+  table-level fields forward, publishes, rolls up checkpoints,
+  removes a losing attempt's dirs and gives up after ``max_retries``
+  races. Each verb supplies only its attempt body.
 """
 
 from __future__ import annotations
@@ -269,10 +261,65 @@ def read_manifest(root: str, version: int) -> dict:
         )
 
 
+# ---------------------------------------------------------------------------
+# Leaf-map codec: the only code that knows the three manifest formats
+# ---------------------------------------------------------------------------
+
+
 def _is_partitioned(m: dict) -> bool:
     """Partition-scoped layout in either encoding: format 2 (full
     ``partitions`` map) or format 3 (delta ``updates``)."""
     return "partitions" in m or "updates" in m
+
+
+def _pcol(m: dict | None) -> str | None:
+    return m["partition_col"] if m is not None and _is_partitioned(m) else None
+
+
+def _leaves(root: str, version: int, m: dict | None) -> dict:
+    """``{pkey: entry}`` of ``version`` (manifest ``m``) in every
+    format. Format 1 is the one-leaf map ``{"": entry}`` (the
+    manifest's ``rows``, ``dv`` and ``extra_dirs`` folded into the
+    entry); format 2 carries the map; format 3 resolves through the
+    checkpoint chain. No manifest (empty table) is no leaves."""
+    if m is None:
+        return {}
+    if "data_dir" in m:
+        e = {"dir": m["data_dir"], "rows": m.get("rows")}
+        e.update({k: m[k] for k in ("dv", "extra_dirs") if m.get(k)})
+        return {"": e}
+    if "partitions" in m:
+        return dict(m["partitions"])
+    return resolve_partitions(root, version)
+
+
+def _encode(
+    leaves: dict, pcol: str | None, updates: dict, removed
+) -> tuple[dict, dict]:
+    """(manifest body, new leaf map) for a commit that takes the tip's
+    ``leaves``, drops ``removed`` and adds ``updates`` — or, with
+    ``removed`` None, republishes ``updates`` as the whole map. An
+    unpartitioned table (``pcol`` None) writes format 1; a full
+    republish writes a format-2 map; anything else a format-3 delta
+    carrying only what changed."""
+    if removed is None:
+        parts = dict(updates)
+    else:
+        parts = {pk: e for pk, e in leaves.items() if pk not in removed}
+        parts.update(updates)
+    if pcol is None:
+        (e,) = parts.values()
+        body = {"data_dir": e["dir"]}
+        body.update({k: e[k] for k in ("dv", "extra_dirs") if e.get(k)})
+    elif removed is None:
+        body = {"partition_col": pcol, "partitions": parts}
+    else:
+        body = {
+            "partition_col": pcol,
+            "updates": updates,
+            "removed": sorted(removed),
+        }
+    return body, parts
 
 
 def resolve_partitions(root: str, version: int) -> dict:
@@ -338,16 +385,7 @@ def _version_dirs(
     dirs — the retention/orphan view (vacuum); readers use the default
     data-only view."""
     m = read_manifest(root, version) if manifest is None else manifest
-    if "data_dir" in m:
-        out = [m["data_dir"]] + list(m.get("extra_dirs") or [])
-        if include_dv and m.get("dv"):
-            out.append(m["dv"]["dir"])
-        return out
-    entries = (
-        list(m["partitions"].values())
-        if "partitions" in m
-        else list(resolve_partitions(root, version).values())
-    )
+    entries = list(_leaves(root, version, m).values())
     out = []
     for e in entries:
         out.append(e["dir"])
@@ -687,16 +725,6 @@ def _read_entries(
     return out
 
 
-def _flat_entry(m: dict) -> dict:
-    """The unpartitioned manifest's single leaf as an entry dict."""
-    e = {"dir": m["data_dir"]}
-    if m.get("dv"):
-        e["dv"] = m["dv"]
-    if m.get("extra_dirs"):
-        e["extra_dirs"] = m["extra_dirs"]
-    return e
-
-
 def read_table(
     spark: SparkSession,
     root: str,
@@ -761,37 +789,20 @@ def read_table(
             f"{root!r} is not a partition-scoped manifest table; "
             "partition_values needs the partitioned layout"
         )
-    if partition_values is not None or (
-        preds is not None and _is_partitioned(m)
-    ):
-        pmap = resolve_partitions(root, v)
-        if partition_values is not None:
-            wanted = {_pkey(pv) for pv in partition_values}
-            pmap = {pk: e for pk, e in pmap.items() if pk in wanted}
-        if preds is not None:
-            pcol = m["partition_col"]
-            pmap = {
-                pk: e
-                for pk, e in pmap.items()
-                if _entry_may_match(e, pk, preds, pcol)
-            }
-        df = _read_entries(spark, schema, _phys_map(m), root, pmap.values())
-        if preds is not None:
-            df = df.filter(_where_expr(preds))
-        return df, v
-    # format 1 manifests reference one snapshot dir; formats 2/3
-    # (partitioned) one immutable leaf dir per live partition (deltas
-    # resolve through the checkpoint chain) — either way the read is a
-    # union of entries (deletion vectors applied per leaf) under the
-    # version's pinned schema (older leaves with narrower/missing
-    # columns widen/null-fill natively in the parquet reader)
-    if "data_dir" in m:
-        entries = [_flat_entry(m)]
-    elif "partitions" in m:
-        entries = list(m["partitions"].values())
-    else:
-        entries = list(resolve_partitions(root, v).values())
-    df = _read_entries(spark, schema, _phys_map(m), root, entries)
+    # the read is a union of leaves (deletion vectors applied per leaf)
+    # under the version's pinned schema (older leaves with narrower/
+    # missing columns widen/null-fill natively in the parquet reader)
+    leaves = _leaves(root, v, m)
+    if partition_values is not None:
+        wanted = {_pkey(pv) for pv in partition_values}
+        leaves = {pk: e for pk, e in leaves.items() if pk in wanted}
+    if preds is not None:
+        leaves = {
+            pk: e
+            for pk, e in leaves.items()
+            if _entry_may_match(e, pk, preds, _pcol(m))
+        }
+    df = _read_entries(spark, schema, _phys_map(m), root, leaves.values())
     if preds is not None:
         df = df.filter(_where_expr(preds))
     return df, v
@@ -860,9 +871,10 @@ class LocalLinkBackend:
     protocol needs exactly one primitive, ``put_if_absent(path,
     payload) -> bool`` — True iff this call created the object. On S3
     that is a conditional put with ``If-None-Match: *`` (412 → False);
-    on GCS ``x-goog-if-generation-match: 0``. The optimistic loop in
-    :func:`upsert_manifest` is proven against a lossy backend in
-    ``tests/test_txn.py`` (fault-injection fake failing N puts)."""
+    on GCS ``x-goog-if-generation-match: 0``. The optimistic loop
+    (:func:`_commit`) is proven against a lossy backend for every
+    committing verb in ``tests/test_txn.py`` (fault-injection fake
+    failing N puts)."""
 
     def put_if_absent(self, target: str, payload: str) -> bool:
         os.makedirs(os.path.dirname(target), exist_ok=True)
@@ -910,6 +922,166 @@ def _try_commit(
     if ok:
         _write_pointer(root, version)
     return ok
+
+
+# ---------------------------------------------------------------------------
+# The optimistic commit loop every committing verb runs on
+# ---------------------------------------------------------------------------
+
+
+class _StaleRead(Exception):
+    """Internal: a written row count disagrees with the accounting
+    pass — the tip moved between the reads; retry."""
+
+
+class _Commit(NamedTuple):
+    """One attempt's publishable change (see :func:`_commit`)."""
+
+    meta: dict  # "op" + table-level fields it sets; None drops a carried one
+    pcol: str | None  # the new version's partition column; None = flat
+    updates: dict  # {pkey: entry} written or re-pointed ("" = flat leaf)
+    removed: list | None  # pkeys dropped; None = updates is the full map
+    done: Callable  # (new version, rows) -> the verb's return value
+    reuse: bool = False  # the written dirs stay valid on a newer tip
+
+
+def _discard(root: str, written: list) -> None:
+    for d in written:
+        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    written.clear()
+
+
+def _commit(
+    root: str,
+    verb: str,
+    attempt: Callable,
+    max_retries: int,
+    backend: LocalLinkBackend | None,
+    txn: tuple[str, int] | None = None,
+    skipped: Callable | None = None,
+    empty_ok: bool = False,
+):
+    """Run ``attempt`` until its change lands as the next version.
+
+    Each round resolves the tip (an empty table raises unless
+    ``empty_ok``), passes it through the write-protocol gate
+    (``_carry_mapping``), returns ``skipped(v, tip)`` for a ``txn``
+    replay at or below the recorded watermark, and calls
+    ``attempt(v, tip, leaves, written)`` with the tip's leaf map. The
+    attempt appends every dir it writes to ``written`` and returns a
+    :class:`_Commit` — or any other value, which is returned without
+    committing. The loop encodes the manifest (``_encode``), carries
+    the tip's table-level fields under the attempt's ``meta``, stamps
+    ``txn``, publishes with ``_try_commit`` and rolls up a checkpoint
+    on partitioned tables. A lost race discards ``written`` unless the
+    commit is ``reuse``; a vacuum race (a manifest or data dir gone:
+    FileNotFoundError, PATH_NOT_FOUND) or a stale recount discards it
+    too and retries; any other error discards it and propagates."""
+    from pyspark.errors import AnalysisException
+
+    written: list[str] = []
+    for _ in range(max_retries):
+        v = latest_version(root)
+        if v == 0 and not empty_ok:
+            raise ValueError(f"{root!r} has no committed versions")
+        try:
+            tip = read_manifest(root, v) if v else None
+            carry = _carry_mapping(tip)
+            if _txn_already_applied(tip, txn):
+                return skipped(v, tip)
+            leaves = _leaves(root, v, tip)
+            c = attempt(v, tip, leaves, written)
+        except BaseException as exc:
+            _discard(root, written)
+            if isinstance(exc, (FileNotFoundError, _StaleRead)) or (
+                isinstance(exc, AnalysisException) and _is_path_not_found(exc)
+            ):
+                continue
+            raise
+        if not isinstance(c, _Commit):
+            return c
+        body, parts = _encode(leaves, c.pcol, c.updates, c.removed)
+        rows = sum(e["rows"] for e in parts.values())
+        manifest = {
+            "base_version": v,
+            "rows": rows,
+            "schema": tip["schema"] if tip else None,
+            **body,
+            **carry,
+            **c.meta,
+        }
+        manifest = {k: x for k, x in manifest.items() if x is not None}
+        if _try_commit(root, v + 1, _txn_stamp(manifest, txn), backend):
+            if c.pcol is not None:
+                _maybe_checkpoint(root, v + 1, parts, backend)
+            return c.done(v + 1, rows)
+        if not c.reuse:
+            _discard(root, written)
+    _discard(root, written)
+    hint = (
+        " — contention this hot needs a coordinator or a real lake format"
+        if verb.startswith("upsert")
+        else ""
+    )
+    raise RuntimeError(
+        f"{verb}: gave up after {max_retries} version races at {root!r}"
+        + hint
+    )
+
+
+def _merge_rows(base, updates, keys, order_col: str, evolve: bool):
+    """Last-writer-wins merge of ``updates`` into ``base`` per ``keys``
+    on ``order_col``, an update beating the store on ties; ``keys``
+    None appends every update row. ``base`` None (no table yet) dedupes
+    the updates alone; otherwise both sides are reconciled to one
+    schema first (``_reconcile_schemas``)."""
+    if base is None:
+        return updates if keys is None else latest_per_key(
+            updates, keys, order_col
+        )
+    base, updates = _reconcile_schemas(base, updates, evolve)
+    if keys is None:
+        return base.unionByName(updates, allowMissingColumns=evolve)
+    return latest_per_key(
+        base.withColumn("__src", F.lit(0)).unionByName(
+            updates.withColumn("__src", F.lit(1)),
+            allowMissingColumns=evolve,
+        ),
+        keys,
+        order_col,
+        tiebreak_col="__src",
+    ).drop("__src")
+
+
+def _write_leaves(root, phys, pcol, rows, pks, written) -> dict:
+    """Write ``rows`` (logical columns + ``__ptok``) to ONE fresh dir,
+    one ``__ptok`` subdir per partition (the unpartitioned leaf is the
+    dir itself), and return {pk: leaf dir}."""
+    rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
+    written.append(rel)
+    w = _write_physical(rows if pcol else rows.drop("__ptok"), phys).write
+    if pcol:
+        w = w.partitionBy("__ptok")
+    w.parquet(os.path.join(root, rel))
+    return {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
+
+
+def _leaf_entries(readback, col: str, dirs: dict, stats_fields, bloom_fields):
+    """{pk: entry} for freshly written leaf ``dirs``: live row counts
+    plus the requested stats/bloom columns, off the columnar
+    ``readback`` grouped by ``col``."""
+    got = _leaf_stats(readback, col, stats_fields)
+    blooms = _leaf_blooms(readback, col, bloom_fields) if bloom_fields else {}
+    out = {}
+    for pk, d in dirs.items():
+        g = got.get(pk, {"rows": 0, "stats": {}})
+        e: dict = {"dir": d, "rows": g["rows"]}
+        if stats_fields:
+            e["stats"] = g["stats"]
+        if bloom_fields:
+            e["bloom"] = blooms.get(pk, {})
+        out[pk] = e
+    return out
 
 
 _INTEGRAL_RANK = {"byte": 1, "short": 2, "integer": 3, "long": 4}
@@ -1097,90 +1269,54 @@ def upsert_manifest(
     txn_w = _txn_validate(txn)
     if latest_version(root) == 0:
         _guard_foreign_store(root)
-    from pyspark.errors import AnalysisException
 
-    for _ in range(max_retries):
-        try:
-            base, v = read_table(spark, root)
-            tip_manifest = read_manifest(root, v) if v else None
-        except FileNotFoundError:
-            # a concurrent vacuum pruned the version between
-            # latest_version and the manifest read — the tip moved;
-            # loop to re-resolve it (the optimistic-retry recovery)
-            continue
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue  # vacuum deleted the version's data dirs
-            raise
-        if tip_manifest is not None and _is_partitioned(tip_manifest):
+    def attempt(v, tip, leaves, written):
+        if tip is not None and _is_partitioned(tip):
             raise ValueError(
                 f"{root!r} is a PARTITION-SCOPED manifest table; a "
                 "full-snapshot commit on top would collapse its layout "
                 "— use upsert_manifest_partitioned"
             )
-        if _txn_already_applied(tip_manifest, txn_w):
-            # idempotent replay: this (app_id, version) already landed
-            return int(tip_manifest.get("rows") or 0)
-        if base is not None:
-            base2, upd2 = _reconcile_schemas(
-                base, updates, allow_schema_evolution
-            )
-            merged = latest_per_key(
-                base2.withColumn("__src", F.lit(0)).unionByName(
-                    upd2.withColumn("__src", F.lit(1)),
-                    allowMissingColumns=allow_schema_evolution,
-                ),
-                list(key_cols),
-                order_col,
-                tiebreak_col="__src",
-            ).drop("__src")
-        else:
-            merged = latest_per_key(updates, list(key_cols), order_col)
-        phys = _phys_map(tip_manifest)
-        _validate_mapping(
-            merged.schema, phys, _retired_physical(tip_manifest)
+        phys = _phys_map(tip)
+        base = None if tip is None else _read_entries(
+            spark, StructType.fromJson(tip["schema"]), phys, root,
+            leaves.values(),
         )
-        data_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        data_path = os.path.join(root, data_rel)
+        merged = _merge_rows(
+            base, updates, list(key_cols), order_col, allow_schema_evolution
+        )
+        _validate_mapping(merged.schema, phys, _retired_physical(tip))
         obs = Observation()
-        _write_physical(
-            merged.observe(obs, F.count(F.lit(1)).alias("rows")), phys
-        ).write.parquet(data_path)
+        dirs = _write_leaves(
+            root, phys, None,
+            merged.observe(obs, F.count(F.lit(1)).alias("rows")), [""],
+            written,
+        )
         n = int(obs.get["rows"])
-        checks = _effective_constraints(tip_manifest, constraints)
+        checks = _effective_constraints(tip, constraints)
         if checks:
             # validate the WRITTEN snapshot (columnar re-scan, no
             # recomputation of the merge) against table-level +
             # per-call constraints; a violation aborts before the
             # manifest ever publishes — write-audit-publish
-            try:
-                _check_constraints(
-                    _read_data(spark, merged.schema, phys, [data_path]),
-                    checks,
-                )
-            except ValueError:
-                shutil.rmtree(data_path, ignore_errors=True)
-                raise
-        manifest = _txn_stamp(
-            {
-                "op": "upsert",
-                "base_version": v,
-                "data_dir": data_rel,
-                "rows": n,
-                "schema": merged.schema.jsonValue(),
-                **_carry_mapping(tip_manifest),
-            },
-            txn_w,
+            _check_constraints(
+                _read_data(
+                    spark, merged.schema, phys,
+                    [os.path.join(root, dirs[""])],
+                ),
+                checks,
+            )
+        return _Commit(
+            {"op": "upsert", "schema": merged.schema.jsonValue()},
+            None, {"": {"dir": dirs[""], "rows": n}}, None,
+            lambda _v, rows: rows,
         )
-        if _try_commit(root, v + 1, manifest, backend):
-            return n
-        # another writer published v+1 first: our snapshot is stale.
-        # Drop the orphan data dir and re-merge against the new tip.
-        shutil.rmtree(data_path, ignore_errors=True)
-    raise RuntimeError(
-        f"upsert_manifest: gave up after {max_retries} version races "
-        f"at {root!r} — contention this hot needs a coordinator or a "
-        "real lake format"
+
+    # an idempotent replay of an applied (app_id, version) returns the
+    # tip's row count unchanged
+    return _commit(
+        root, "upsert_manifest", attempt, max_retries, backend, txn_w,
+        lambda _v, tip: int(tip.get("rows") or 0), empty_ok=True,
     )
 
 
@@ -1769,15 +1905,9 @@ def upsert_manifest_partitioned(
         )
     keys = {_pkey(t): t for t in touched}
     tok_map = _ptok_mapping(spark, updates.schema[partition_col], keys)
-    written: dict | None = None  # reusable commit from a lost race
-    for _ in range(max_retries):
-        v = latest_version(root)
-        try:
-            tip = read_manifest(root, v) if v else None
-        except FileNotFoundError:
-            # concurrent vacuum pruned v between the listing and the
-            # read — the tip moved; re-resolve and retry
-            continue
+    prepared: dict = {}  # the written commit, reusable across lost races
+
+    def attempt(v, tip, leaves, written):
         if tip is not None:
             if not _is_partitioned(tip):
                 raise ValueError(
@@ -1790,39 +1920,29 @@ def upsert_manifest_partitioned(
                     f"table is partitioned by {tip['partition_col']!r}, "
                     f"not {partition_col!r}"
                 )
-        try:
-            tip_parts: dict = resolve_partitions(root, v) if tip else {}
-        except FileNotFoundError:
-            # a concurrent vacuum pruned part of the tip's resolution
-            # chain between our reads — the tip has moved; re-resolve
-            continue
         tip_touched = {
-            pk: (tip_parts[pk]["dir"] if pk in tip_parts else None)
-            for pk in keys
+            pk: (leaves[pk]["dir"] if pk in leaves else None) for pk in keys
         }
-        if written is not None and (
+        tip_schema_json = tip["schema"] if tip else None
+        if prepared and (
+            # the loop discarded the dirs (a vacuum race or an error)
+            not written
             # replace-mode output is independent of base partition
             # CONTENTS, so a winner touching the same partitions does
             # not stale the prepared commit — only a schema change
             # does; merge-mode output depends on both
-            (mode == "merge" and written["base_touched"] != tip_touched)
+            or (mode == "merge" and prepared["base_touched"] != tip_touched)
             # a schema CHANGE by the race winner also invalidates the
             # prepared commit: re-publishing our pre-evolution schema
             # would silently drop the winner's new/widened columns
             # from the table schema
-            or written["base_schema"] != (tip["schema"] if tip else None)
+            or prepared["base_schema"] != tip_schema_json
         ):
-            # the race winner touched one of OUR partitions (or the
-            # schema) — the prepared commit is stale; drop it and
-            # re-merge below
-            shutil.rmtree(
-                os.path.join(root, written["commit_rel"]), ignore_errors=True
-            )
-            written = None
-        if written is None:
-            base_entries = [
-                tip_parts[pk] for pk in keys if pk in tip_parts
-            ]
+            _discard(root, written)
+            prepared.clear()
+        if not prepared:
+            phys = _phys_map(tip)
+            existing = None
             if tip is not None:
                 # reconcile against the TABLE schema even when every
                 # touched partition is new (or mode="replace" never
@@ -1830,51 +1950,20 @@ def upsert_manifest_partitioned(
                 # covers the untouched partitions too, so an updates
                 # frame with missing/narrower columns must widen (or
                 # fail) exactly as if rows overlapped
-                from pyspark.errors import AnalysisException
-
                 tip_schema = StructType.fromJson(tip["schema"])
-                try:
-                    existing = (
-                        _read_entries(
-                            spark, tip_schema, _phys_map(tip), root,
-                            base_entries,
-                        )
-                        if base_entries and mode == "merge"
-                        else spark.createDataFrame([], tip_schema)
-                    )
-                except AnalysisException as e:
-                    if _is_path_not_found(e):
-                        # concurrent vacuum deleted the resolved
-                        # version's data dirs (it removes dirs BEFORE
-                        # the manifest) — re-resolve the tip and retry
-                        continue
-                    raise
-                base2, upd2 = _reconcile_schemas(
-                    existing, updates, allow_schema_evolution
+                base_entries = [leaves[pk] for pk in keys if pk in leaves]
+                existing = (
+                    _read_entries(spark, tip_schema, phys, root, base_entries)
+                    if base_entries and mode == "merge"
+                    else spark.createDataFrame([], tip_schema)
                 )
-                if key_cols is None:
-                    # no-dedupe passthrough (replace mode): the union
-                    # with the empty reconciled base just widens the
-                    # updates to the evolved table schema
-                    merged = base2.unionByName(
-                        upd2, allowMissingColumns=allow_schema_evolution
-                    )
-                else:
-                    merged = latest_per_key(
-                        base2.withColumn("__src", F.lit(0)).unionByName(
-                            upd2.withColumn("__src", F.lit(1)),
-                            allowMissingColumns=allow_schema_evolution,
-                        ),
-                        [*key_cols, partition_col],
-                        order_col,
-                        tiebreak_col="__src",
-                    ).drop("__src")
-            elif key_cols is None:
-                merged = updates
-            else:
-                merged = latest_per_key(
-                    updates, [*key_cols, partition_col], order_col
-                )
+            merged = _merge_rows(
+                existing,
+                updates,
+                None if key_cols is None else [*key_cols, partition_col],
+                order_col,
+                allow_schema_evolution,
+            )
             stats_fields = (
                 _resolve_stats_fields(merged.schema, stats_cols, partition_col)
                 if stats_cols
@@ -1885,21 +1974,12 @@ def upsert_manifest_partitioned(
                 if bloom_cols
                 else []
             )
-            phys = _phys_map(tip)
             _validate_mapping(merged.schema, phys, _retired_physical(tip))
-            commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            _write_physical(
-                merged.join(F.broadcast(tok_map), partition_col), phys
-            ).write.partitionBy("__ptok").parquet(
-                os.path.join(root, commit_rel)
+            leaf = _write_leaves(
+                root, phys, partition_col,
+                merged.join(F.broadcast(tok_map), partition_col), keys,
+                written,
             )
-            # per-partition row counts off the freshly written leaves
-            # (columnar scan of ONE column; merged itself is not
-            # recomputed) — they make every version's total composable
-            # from its map without touching untouched partitions
-            leaf = {
-                pk: f"{commit_rel}/__ptok={_ptoken(pk)}" for pk in keys
-            }
             missing = [
                 pk
                 for pk, d in leaf.items()
@@ -1911,15 +1991,16 @@ def upsert_manifest_partitioned(
                 # rows into the null-token leaf instead of its own —
                 # surface it as the modeling error it is rather than a
                 # bare PATH_NOT_FOUND from the counts read-back
-                shutil.rmtree(
-                    os.path.join(root, commit_rel), ignore_errors=True
-                )
                 raise ValueError(
                     f"partition values {sorted(missing)!r} produced no "
                     f"leaf directory — {partition_col!r} values must "
                     "compare equal to themselves (floats with NaN and "
                     "other non-reflexive values cannot key partitions)"
                 )
+            # per-partition row counts off the freshly written leaves
+            # (columnar scan of ONE column; merged itself is not
+            # recomputed) — they make every version's total composable
+            # from its map without touching untouched partitions
             readback = _read_data(
                 spark,
                 merged.schema,
@@ -1932,61 +2013,30 @@ def upsert_manifest_partitioned(
                 # touched partitions' final rows (untouched partitions
                 # were validated by their own commits); violation
                 # aborts pre-publish
-                try:
-                    _check_constraints(readback, checks)
-                except ValueError:
-                    shutil.rmtree(
-                        os.path.join(root, commit_rel), ignore_errors=True
-                    )
-                    raise
-            per_part = _leaf_stats(readback, partition_col, stats_fields)
-            blooms = (
-                _leaf_blooms(readback, partition_col, bloom_fields)
-                if bloom_fields
-                else {}
+                _check_constraints(readback, checks)
+            prepared.update(
+                base_touched=tip_touched,
+                base_schema=tip_schema_json,
+                schema=merged.schema.jsonValue(),
+                entries=_leaf_entries(
+                    readback, partition_col, leaf, stats_fields, bloom_fields
+                ),
             )
-            entries = {}
-            for pk, d in leaf.items():
-                got = per_part.get(pk, {"rows": 0, "stats": {}})
-                e: dict = {"dir": d, "rows": got["rows"]}
-                if stats_fields:
-                    e["stats"] = got["stats"]
-                if bloom_fields:
-                    e["bloom"] = blooms.get(pk, {})
-                entries[pk] = e
-            written = {
-                "base_touched": tip_touched,
-                "base_schema": tip["schema"] if tip else None,
-                "commit_rel": commit_rel,
-                "schema": merged.schema.jsonValue(),
-                "entries": entries,
-            }
-        new_parts = {**tip_parts, **written["entries"]}
-        total = sum(e["rows"] for e in new_parts.values())
         # format 3: the manifest carries only the TOUCHED entries —
         # commit payload is O(updated partitions), flat in table
         # partition count; readers resolve through the checkpoint
-        # chain (rolled up every CHECKPOINT_INTERVAL commits below)
-        manifest = {
-            "op": mode,  # "merge" or "replace"
-            "base_version": v,
-            "rows": total,
-            "schema": written["schema"],
-            "partition_col": partition_col,
-            "updates": written["entries"],
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return total
-    if written is not None:  # don't leave the last attempt as an orphan
-        shutil.rmtree(
-            os.path.join(root, written["commit_rel"]), ignore_errors=True
+        # chain. A lost race keeps the written leaves for the next
+        # attempt, which re-publishes them with zero Spark work unless
+        # the winner staled them (above).
+        return _Commit(
+            {"op": mode, "schema": prepared["schema"]},  # merge / replace
+            partition_col, prepared["entries"], [],
+            lambda _v, rows: rows, reuse=True,
         )
-    raise RuntimeError(
-        f"upsert_manifest_partitioned: gave up after {max_retries} "
-        f"version races at {root!r} — contention this hot needs a "
-        "coordinator or a real lake format"
+
+    return _commit(
+        root, "upsert_manifest_partitioned", attempt, max_retries, backend,
+        empty_ok=True,
     )
 
 
@@ -2063,25 +2113,12 @@ def compact_manifest(
     unchanged.) ``zorder_bits`` defaults to the layout module's
     DEFAULT_BITS — pass the same value to any later re-keying or the
     coarser cells interleave under the finer key."""
-    def _zsorted_flat(df, n_files):
-        """Range-partition + sort by the Z-key (flat snapshots)."""
-        from feature_store_spark.operators.layout import (
-            DEFAULT_BITS,
-            zorder_key,
-        )
+    from feature_store_spark.operators.layout import DEFAULT_BITS, zorder_key
 
-        keyed = zorder_key(df, list(zorder_cols),
-                           bits=zorder_bits or DEFAULT_BITS,
-                           key_name="__zkey")
-        return (
-            keyed.repartitionByRange(int(n_files), "__zkey")
-            .sortWithinPartitions("__zkey")
-            .drop("__zkey")
-        )
-
-    def _validate_zorder(schema):
-        for c in zorder_cols:
-            names = {f.name: f for f in schema.fields}
+    def attempt(v, tip, leaves, written):
+        schema = StructType.fromJson(tip["schema"])
+        names = {f.name: f for f in schema.fields}
+        for c in zorder_cols or ():
             if c not in names:
                 raise ValueError(
                     f"zorder_cols column {c!r} is not in the table schema"
@@ -2092,157 +2129,63 @@ def compact_manifest(
                     "(cast dates/doubles to epoch/cents upstream, the "
                     "layout module's exact-arithmetic rule)"
                 )
-
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum; re-resolve the tip
-        schema = StructType.fromJson(tip["schema"])
-        if zorder_cols:
-            _validate_zorder(schema)
-        from pyspark.errors import AnalysisException
-
-        if not _is_partitioned(tip):
-            if only_dv and not (tip.get("dv") or tip.get("extra_dirs")):
-                return {"version": v, "files_before": 0,
-                        "files_after": 0, "rows": tip["rows"],
-                        "committed": False}
-            data_dir = os.path.join(root, tip["data_dir"])
-            if min_files is not None and not os.path.isdir(data_dir):
-                # stale tip: a concurrent vacuum pruned v's data dir
-                # after we read its manifest — without this check the
-                # 0-file count would read as 'below threshold' and
-                # silently skip compacting the REAL tip (the
-                # min_files=None path hits PATH_NOT_FOUND and retries)
-                continue
-            # size/count over base + appended extra dirs: a leaf whose
-            # merge-on-read debt lives in extra_dirs would otherwise
-            # under-count and evade min_files-triggered compaction
-            leaf_dirs = _entry_dirs(root, _flat_entry(tip))
-            before = sum(_leaf_file_count(d) for d in leaf_dirs)
-            if min_files is not None and before < min_files:
-                return {"version": v, "files_before": before,
-                        "files_after": before, "rows": tip["rows"],
-                        "committed": False}
-            n_files = max(
-                1,
-                -(-sum(_dir_bytes(d) for d in leaf_dirs)
-                  // target_file_bytes),
-            )
-            new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            try:
-                snap = _read_entries(
-                    spark, schema, _phys_map(tip), root, [_flat_entry(tip)]
-                )
-                laid = (
-                    _zsorted_flat(snap, n_files)
-                    if zorder_cols
-                    else snap.repartition(n_files)
-                )
-                _write_physical(laid, _phys_map(tip)).write.parquet(
-                    os.path.join(root, new_rel)
-                )
-            except AnalysisException as e:
-                if _is_path_not_found(e):
-                    continue
-                raise
-            manifest = {
-                "op": "compact",
-                "base_version": v,
-                "data_dir": new_rel,
-                "rows": tip["rows"],
-                "schema": tip["schema"],
-                **_carry_mapping(tip),
-            }
-            if _try_commit(root, v + 1, manifest, backend):
-                return {
-                    "version": v + 1,
-                    "files_before": before,
-                    "files_after": _leaf_file_count(
-                        os.path.join(root, new_rel)
-                    ),
-                    "rows": tip["rows"],
-                    "committed": True,
-                }
-            shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
-            continue
-
-        try:
-            parts = resolve_partitions(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum pruned the chain; re-resolve
-        if partition_values is None:
-            selected = list(parts)
+        pcol = _pcol(tip)
+        if partition_values is None or pcol is None:
+            selected = list(leaves)
         else:
             selected = [_pkey(p) for p in partition_values]
-            unknown = sorted(set(selected) - set(parts))
+            unknown = sorted(set(selected) - set(leaves))
             if unknown:
                 raise ValueError(
                     f"partitions {unknown!r} not in the table"
                 )
-        if min_files is not None:
-            fresh, stale = [], False
-            for pk in selected:
-                d = os.path.join(root, parts[pk]["dir"])
-                if not os.path.isdir(d):
-                    # vanished leaf == stale tip (concurrent vacuum);
-                    # a 0-file count would silently filter it out and
-                    # leave the real tip uncompacted — retry instead
-                    stale = True
-                    break
-                if sum(
-                    _leaf_file_count(x)
-                    for x in _entry_dirs(root, parts[pk])
-                ) >= min_files:
-                    fresh.append(pk)
-            if stale:
-                continue
-            selected = fresh
         if only_dv:
             # merge-on-read debt = a DV or an appended extra dir
             selected = [
                 pk
                 for pk in selected
-                if parts[pk].get("dv") or parts[pk].get("extra_dirs")
+                if leaves[pk].get("dv") or leaves[pk].get("extra_dirs")
             ]
+        if min_files is not None and any(
+            not os.path.isdir(os.path.join(root, leaves[pk]["dir"]))
+            for pk in selected
+        ):
+            # vanished leaf == stale tip (concurrent vacuum); a 0-file
+            # count would silently read as 'below threshold' and leave
+            # the real tip uncompacted — retry instead
+            raise FileNotFoundError(root)
+        # size/count over base + appended extra dirs: a leaf whose
+        # merge-on-read debt lives in extra_dirs would otherwise
+        # under-count and evade min_files-triggered compaction
+        sel_dirs = {pk: _entry_dirs(root, leaves[pk]) for pk in selected}
+        files = {
+            pk: sum(_leaf_file_count(d) for d in ds)
+            for pk, ds in sel_dirs.items()
+        }
+        if min_files is not None:
+            selected = [pk for pk in selected if files[pk] >= min_files]
         if not selected:
             return {"version": v, "files_before": 0, "files_after": 0,
                     "rows": tip["rows"], "committed": False}
-        sel_dirs = {
-            pk: _entry_dirs(root, parts[pk]) for pk in selected
-        }
-        before = sum(
-            _leaf_file_count(d) for ds in sel_dirs.values() for d in ds
-        )
+        before = sum(files[pk] for pk in selected)
         total_bytes = sum(
-            _dir_bytes(d) for ds in sel_dirs.values() for d in ds
+            _dir_bytes(d) for pk in selected for d in sel_dirs[pk]
         )
-        n_files = max(
-            len(selected), -(-total_bytes // target_file_bytes)
+        n_files = int(
+            max(len(selected), -(-total_bytes // target_file_bytes))
         )
-        commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        # one job: union the selected leaves, re-key each row to its
-        # leaf token via the shared typed mapping (`_ptok_mapping` —
-        # the upsert uses the same one). The typed values come from
-        # the leaves themselves (one distinct per selected partition,
-        # the same O(selected) collect the upsert pays for
-        # `touched`). Hash-cluster by partition so each partition's
-        # rows coalesce into its own task(s); a single partition
-        # larger than target_file_bytes stays one file (hash
-        # clustering cannot split within a key).
-        token_map = {pk: _ptoken(pk) for pk in selected}
-        pcol = tip["partition_col"]
-        try:
-            df = _read_entries(
-                spark, schema, _phys_map(tip), root,
-                [parts[pk] for pk in selected],
-            )
+        phys = _phys_map(tip)
+        df = _read_entries(
+            spark, schema, phys, root, [leaves[pk] for pk in selected]
+        )
+        if pcol is not None:
+            # re-key each row to its leaf token via the shared typed
+            # mapping (`_ptok_mapping` — the upsert uses the same one).
+            # The typed values come from the leaves themselves (one
+            # distinct per selected partition, the same O(selected)
+            # collect the upsert pays for `touched`).
             vals = [r[0] for r in df.select(pcol).distinct().collect()]
-            val_keys = {_pkey(v): v for v in vals}
+            val_keys = {_pkey(x): x for x in vals}
             stray = sorted(set(val_keys) - set(selected))
             if stray:
                 raise RuntimeError(
@@ -2250,131 +2193,97 @@ def compact_manifest(
                     f"contain rows of foreign partitions {stray!r} — "
                     f"the manifest at {root!r} is corrupt; not committing"
                 )
-            mapping = _ptok_mapping(spark, schema[pcol], val_keys)
-            clustered = df.join(F.broadcast(mapping), pcol).repartition(
-                int(n_files), F.col(pcol)
+            df = df.join(
+                F.broadcast(_ptok_mapping(spark, schema[pcol], val_keys)), pcol
             )
-            if zorder_cols:
-                from feature_store_spark.operators.layout import (
-                    DEFAULT_BITS,
-                    zorder_key,
-                )
-
-                clustered = (
-                    zorder_key(
-                        clustered, list(zorder_cols),
-                        bits=zorder_bits or DEFAULT_BITS,
-                        key_name="__zkey",
-                    )
-                    # leaf membership (pcol) leads the sort so each
-                    # leaf's rows are contiguous AND z-ordered within
-                    .sortWithinPartitions(F.col(pcol), F.col("__zkey"))
-                    .drop("__zkey")
-                )
-            _write_physical(clustered, _phys_map(tip)).write.partitionBy(
-                "__ptok"
-            ).parquet(os.path.join(root, commit_rel))
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        new_parts = dict(parts)
-        for pk in selected:
-            e = {
-                "dir": f"{commit_rel}/__ptok={token_map[pk]}",
-                "rows": parts[pk]["rows"],
-            }
-            # compaction re-lays the SAME rows, so recorded
-            # data-skipping stats and Bloom filters stay exact —
-            # carry them forward
-            if "stats" in parts[pk]:
-                e["stats"] = parts[pk]["stats"]
-            if "bloom" in parts[pk]:
-                e["bloom"] = parts[pk]["bloom"]
-            new_parts[pk] = e
+        if zorder_cols:
+            df = zorder_key(
+                df, list(zorder_cols), bits=zorder_bits or DEFAULT_BITS,
+                key_name="__zkey",
+            )
+        if pcol is not None:
+            # hash-cluster by partition so each partition's rows
+            # coalesce into its own task(s); a single partition larger
+            # than target_file_bytes stays one file (hash clustering
+            # cannot split within a key)
+            df = df.repartition(n_files, F.col(pcol))
+        elif zorder_cols:
+            df = df.repartitionByRange(n_files, "__zkey")
+        else:
+            df = df.repartition(n_files)
+        if zorder_cols:
+            # leaf membership (pcol) leads the sort so each leaf's rows
+            # are contiguous AND z-ordered within
+            df = df.sortWithinPartitions(
+                *[F.col(c) for c in (pcol,) if c], F.col("__zkey")
+            ).drop("__zkey")
+        dirs = _write_leaves(root, phys, pcol, df, selected, written)
         # guard before publishing: every selected partition that holds
         # rows must have produced its leaf, and the rewritten leaves
         # must carry exactly the row counts the manifest records — a
         # mapping bug (or a non-reflexive partition value) must surface
         # here as an error, never as a silently thinner tip. Costs one
-        # columnar scan of the freshly written leaves.
-        live = [pk for pk in selected if parts[pk]["rows"] > 0]
+        # columnar scan of the freshly written partition leaves.
+        live = [pk for pk in selected if leaves[pk]["rows"] > 0]
         missing = [
-            pk
-            for pk in live
-            if not os.path.isdir(
-                os.path.join(root, new_parts[pk]["dir"])
-            )
+            pk for pk in live
+            if not os.path.isdir(os.path.join(root, dirs[pk]))
         ]
         if missing:
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
             raise RuntimeError(
                 f"compact_manifest: partitions {sorted(missing)!r} "
                 "produced no leaf directory — rows would be lost; "
                 "not committing"
             )
-        if live:
+        if pcol is not None and live:
             recounts = {
                 _pkey(r[0]): r[1]
                 for r in _read_data(
-                    spark,
-                    schema,
-                    _phys_map(tip),
-                    [
-                        os.path.join(root, new_parts[pk]["dir"])
-                        for pk in live
-                    ],
+                    spark, schema, phys,
+                    [os.path.join(root, dirs[pk]) for pk in live],
                 )
                 .groupBy(pcol)
                 .count()
                 .collect()
             }
             short = {
-                pk: (parts[pk]["rows"], recounts.get(pk, 0))
+                pk: (leaves[pk]["rows"], recounts.get(pk, 0))
                 for pk in live
-                if recounts.get(pk, 0) != parts[pk]["rows"]
+                if recounts.get(pk, 0) != leaves[pk]["rows"]
             }
             if short:
-                shutil.rmtree(
-                    os.path.join(root, commit_rel), ignore_errors=True
-                )
                 raise RuntimeError(
                     "compact_manifest: rewritten row counts disagree "
                     f"with the manifest (partition: (expected, got)) "
                     f"{short!r} — not committing"
                 )
-        manifest = {
-            "op": "compact",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": tip["schema"],
-            "partition_col": tip["partition_col"],
-            # format-3 delta: only the re-laid leaves; untouched
-            # entries carry forward through resolution
-            "updates": {pk: new_parts[pk] for pk in selected},
-            **_carry_mapping(tip),
+        # compaction re-lays the SAME rows, so recorded data-skipping
+        # stats and Bloom filters stay exact — carry them forward;
+        # untouched entries carry forward through resolution
+        updates = {
+            pk: {
+                "dir": dirs[pk],
+                "rows": leaves[pk]["rows"],
+                **{k: leaves[pk][k] for k in ("stats", "bloom")
+                   if k in leaves[pk]},
+            }
+            for pk in selected
         }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {
-                "version": v + 1,
+        return _Commit(
+            {"op": "compact"}, pcol, updates, [],
+            lambda nv, _rows: {
+                "version": nv,
                 "files_before": before,
                 "files_after": sum(
-                    _leaf_file_count(
-                        os.path.join(root, new_parts[pk]["dir"])
-                    )
-                    for pk in selected
+                    _leaf_file_count(os.path.join(root, d))
+                    for d in dirs.values()
                 ),
                 "rows": tip["rows"],
                 "committed": True,
-            }
-        shutil.rmtree(os.path.join(root, commit_rel), ignore_errors=True)
-    raise RuntimeError(
-        f"compact_manifest: gave up after {max_retries} version races "
-        f"at {root!r}"
-    )
+            },
+        )
+
+    return _commit(root, "compact_manifest", attempt, max_retries, backend)
 
 
 def _write_leaf_dv(spark, root, entry, hits) -> str:
@@ -2390,11 +2299,6 @@ def _write_leaf_dv(spark, root, entry, hits) -> str:
         out = out.unionByName(old)
     out.coalesce(1).write.parquet(os.path.join(root, new_rel))
     return new_rel
-
-class _StaleRead(Exception):
-    """Internal: a written row count disagrees with the accounting
-    pass — the tip moved between the reads; retry."""
-
 
 class _RowChange(NamedTuple):
     """One DML verb's contribution to :func:`_change_rows`, rebuilt
@@ -2419,10 +2323,6 @@ def _check_dml_mode(verb: str, mode: str, evolve: bool = False) -> None:
         )
 
 
-def _pcol(m: dict) -> str | None:
-    return m["partition_col"] if _is_partitioned(m) else None
-
-
 def _read_leaves(spark, schema, phys, root, leaves: dict, with_pos: bool):
     """Target rows of ``leaves`` (live rows only). ``with_pos`` keeps
     each row's (__dv_file, __dv_pos) for the deletion-vector publish;
@@ -2442,19 +2342,6 @@ def _read_leaves(spark, schema, phys, root, leaves: dict, with_pos: bool):
             "__dv_pos": F.lit(None).cast("bigint"),
         })
     return out
-
-
-def _write_leaves(root, phys, pcol, rows, pks, written) -> dict:
-    """Write ``rows`` (logical columns + ``__ptok``) to ONE fresh dir,
-    one ``__ptok`` subdir per partition (the unpartitioned leaf is the
-    dir itself), and return {pk: leaf dir}."""
-    rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-    written.append(rel)
-    w = _write_physical(rows if pcol else rows.drop("__ptok"), phys).write
-    if pcol:
-        w = w.partitionBy("__ptok")
-    w.parquet(os.path.join(root, rel))
-    return {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
 
 
 def _require_dirs(verb: str, root: str, dirs: dict) -> None:
@@ -2525,142 +2412,97 @@ def _change_rows(
     Returns {version, rows_updated, rows_deleted, rows_inserted,
     partitions_rewritten, partitions_removed, committed, txn_skipped};
     each verb returns its documented subset."""
-    from pyspark.errors import AnalysisException
-
     dv = mode == "dv"
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum; re-resolve
-        nothing = {
+
+    def nothing(v):
+        return {
             "version": v, "rows_updated": 0, "rows_deleted": 0,
             "rows_inserted": 0, "partitions_rewritten": 0,
             "partitions_removed": 0, "committed": False,
             "txn_skipped": False,
         }
-        if _txn_already_applied(tip, txn):
-            return {**nothing, "txn_skipped": True}
+
+    def attempt(v, tip, leaves, written):
         plan = plan_for(tip)
         pcol = _pcol(tip)
-        try:
-            leaves = (
-                resolve_partitions(root, v) if pcol
-                else {"": {**_flat_entry(tip), "rows": tip["rows"]}}
-            )
-        except FileNotFoundError:
-            continue
         cand = {
             pk: e for pk, e in leaves.items()
             if plan.preds is None
             or _entry_may_match(e, pk, plan.preds, pcol)
         }
         if not cand and plan.preds is not None:
-            return nothing
+            return nothing(v)
         base = StructType.fromJson(tip["schema"])
         phys = _phys_map(tip)
-        written: list[str] = []
-        try:
-            cs = plan.classify(
-                _read_leaves(spark, base, phys, root, cand, dv)
-            ).withColumn("__leaf", F.col(pcol) if pcol else F.lit(""))
-            if dv:
-                # pin ONE evaluation: accounting, the CHECK, the
-                # sidecars and the append write all replay these blocks
-                cs = cs.filter(F.col("__cls") != "keep").localCheckpoint(
-                    eager=False
-                )
-            counts: dict = {}
-            typed: dict = {}
-            for r in (
-                cs.filter(F.col("__cls") != "keep")
-                .groupBy("__leaf", "__cls").count().collect()
-            ):
-                if r["__leaf"] is None:
-                    if r["__cls"] == "ins":
-                        raise ValueError(
-                            f"{verb}: an inserted row carries a NULL "
-                            f"partition value ({pcol!r}) — partition-"
-                            "scoped tables require a concrete partition "
-                            "per row"
-                        )
-                    continue
-                pk = _pkey(r["__leaf"])
-                typed[pk] = r["__leaf"]
-                c = counts.setdefault(pk, {"upd": 0, "del": 0, "ins": 0})
-                c[r["__cls"]] += r["count"]
-            if not counts:
-                return nothing
-            total = {
-                k: sum(c[k] for c in counts.values())
-                for k in ("upd", "del", "ins")
-            }
-            checks = (
-                _effective_constraints(tip, None)
-                if total["upd"] or total["ins"] else []
+        cs = plan.classify(
+            _read_leaves(spark, base, phys, root, cand, dv)
+        ).withColumn("__leaf", F.col(pcol) if pcol else F.lit(""))
+        if dv:
+            # pin ONE evaluation: accounting, the CHECK, the sidecars
+            # and the append write all replay these blocks
+            cs = cs.filter(F.col("__cls") != "keep").localCheckpoint(
+                eager=False
             )
-            leaf_type = plan.schema[pcol].dataType if pcol else StringType()
-            cs = cs.join(
-                F.broadcast(_ptok_mapping(
-                    spark, StructField("__leaf", leaf_type), typed
-                )),
-                "__leaf",
-            )
-            publish = _publish_dv if dv else _publish_rewrite
-            updates, removed = publish(
-                spark, root, verb, phys, pcol, plan, leaves, counts, cs,
-                checks, written,
-            )
-        except BaseException as exc:
-            for d in written:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-            if isinstance(exc, _StaleRead) or (
-                isinstance(exc, AnalysisException) and _is_path_not_found(exc)
-            ):
+        counts: dict = {}
+        typed: dict = {}
+        for r in (
+            cs.filter(F.col("__cls") != "keep")
+            .groupBy("__leaf", "__cls").count().collect()
+        ):
+            if r["__leaf"] is None:
+                if r["__cls"] == "ins":
+                    raise ValueError(
+                        f"{verb}: an inserted row carries a NULL "
+                        f"partition value ({pcol!r}) — partition-"
+                        "scoped tables require a concrete partition "
+                        "per row"
+                    )
                 continue
-            raise
-        manifest = {
-            "op": verb.split("_")[0],
-            "base_version": v,
-            "schema": (
-                tip["schema"] if plan.schema == base
-                else plan.schema.jsonValue()
-            ),
+            pk = _pkey(r["__leaf"])
+            typed[pk] = r["__leaf"]
+            c = counts.setdefault(pk, {"upd": 0, "del": 0, "ins": 0})
+            c[r["__cls"]] += r["count"]
+        if not counts:
+            return nothing(v)
+        total = {
+            k: sum(c[k] for c in counts.values())
+            for k in ("upd", "del", "ins")
         }
-        if pcol:
-            parts = {pk: e for pk, e in leaves.items() if pk not in removed}
-            parts.update(updates)
-            manifest.update(
-                rows=sum(e["rows"] for e in parts.values()),
-                partition_col=pcol, updates=updates, removed=removed,
-            )
-        else:
-            flat = updates[""]
-            manifest.update(data_dir=flat["dir"], rows=flat["rows"])
-            manifest.update(
-                {k: flat[k] for k in ("dv", "extra_dirs") if flat.get(k)}
-            )
-        manifest.update(_carry_mapping(tip))
-        if _try_commit(root, v + 1, _txn_stamp(manifest, txn), backend):
-            if pcol:
-                _maybe_checkpoint(root, v + 1, parts, backend)
-            return {
-                **nothing,
-                "version": v + 1,
+        checks = (
+            _effective_constraints(tip, None)
+            if total["upd"] or total["ins"] else []
+        )
+        leaf_type = plan.schema[pcol].dataType if pcol else StringType()
+        cs = cs.join(
+            F.broadcast(_ptok_mapping(
+                spark, StructField("__leaf", leaf_type), typed
+            )),
+            "__leaf",
+        )
+        publish = _publish_dv if dv else _publish_rewrite
+        updates, removed = publish(
+            spark, root, verb, phys, pcol, plan, leaves, counts, cs,
+            checks, written,
+        )
+        meta = {"op": verb.split("_")[0]}
+        if plan.schema != base:
+            meta["schema"] = plan.schema.jsonValue()
+        return _Commit(
+            meta, pcol, updates, removed,
+            lambda nv, _rows: {
+                **nothing(nv),
                 "rows_updated": total["upd"],
                 "rows_deleted": total["del"],
                 "rows_inserted": total["ins"],
                 "partitions_rewritten": len(updates),
                 "partitions_removed": len(removed),
                 "committed": True,
-            }
-        for d in written:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-    raise RuntimeError(
-        f"{verb}: gave up after {max_retries} version races at {root!r}"
+            },
+        )
+
+    return _commit(
+        root, verb, attempt, max_retries, backend, txn,
+        lambda v, _tip: {**nothing(v), "txn_skipped": True},
     )
 
 
@@ -2698,20 +2540,11 @@ def _publish_rewrite(
         cols = {c for e in leaves.values() for c in e.get(k) or {}}
         return [plan.schema[c] for c in sorted(cols & set(names))]
 
-    stat_f, bloom_f = recorded("stats"), recorded("bloom")
-    got = _leaf_stats(readback, "__leaf", stat_f)
-    blooms = _leaf_blooms(readback, "__leaf", bloom_f) if bloom_f else {}
-    updates = {}
-    for pk in live:
-        g = got.get(pk, {"rows": 0, "stats": {}})
-        if g["rows"] != expected[pk]:
-            raise _StaleRead()
-        e: dict = {"dir": dirs[pk], "rows": expected[pk]}
-        if stat_f:
-            e["stats"] = g["stats"]
-        if bloom_f:
-            e["bloom"] = blooms.get(pk, {})
-        updates[pk] = e
+    updates = _leaf_entries(
+        readback, "__leaf", dirs, recorded("stats"), recorded("bloom")
+    )
+    if any(e["rows"] != expected[pk] for pk, e in updates.items()):
+        raise _StaleRead()
     return updates, removed
 
 
@@ -3387,25 +3220,10 @@ def restore(
             f"{latest_version(root)}"
         )
     target = read_manifest(root, version)  # FileNotFoundError if pruned
-    if _is_partitioned(target):
-        parts = resolve_partitions(root, version)
-        rows = sum(e["rows"] for e in parts.values())
-        body = {
-            "partition_col": target["partition_col"],
-            "partitions": parts,
-        }
-    else:
-        parts = None
-        rows = target["rows"]
-        body = {"data_dir": target["data_dir"]}
-        if target.get("dv"):
-            body["dv"] = target["dv"]
-        if target.get("extra_dirs"):
-            body["extra_dirs"] = target["extra_dirs"]
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
+    target_leaves = _leaves(root, version, target)
+    rows = sum(e["rows"] for e in target_leaves.values())
+
+    def attempt(v, tip, leaves, written):
         if version > v:
             raise ValueError(
                 f"restore: version {version} is beyond the tip {v}"
@@ -3415,27 +3233,25 @@ def restore(
                 "version": v, "restored_version": version,
                 "rows": rows, "committed": False,
             }
-        manifest = {
-            "op": "restore",
-            "base_version": v,
-            "restored_version": version,
-            "rows": rows,
-            "schema": target["schema"],
-            # the restored snapshot's leaves live under the TARGET's
-            # physical names — its mapping travels with its schema
-            **_carry_mapping(target),
-            **body,
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            if parts is not None:
-                _maybe_checkpoint(root, v + 1, parts, backend)
-            return {
-                "version": v + 1, "restored_version": version,
+        return _Commit(
+            {
+                "op": "restore",
+                "restored_version": version,
+                "schema": target["schema"],
+                # the restored snapshot's leaves live under the
+                # TARGET's physical names — its table-level fields
+                # travel with its schema, replacing the tip's
+                **dict.fromkeys(_carry_mapping(tip)),
+                **_carry_mapping(target),
+            },
+            _pcol(target), target_leaves, None,
+            lambda nv, _rows: {
+                "version": nv, "restored_version": version,
                 "rows": rows, "committed": True,
-            }
-    raise RuntimeError(
-        f"restore: gave up after {max_retries} version races at {root!r}"
-    )
+            },
+        )
+
+    return _commit(root, "restore", attempt, max_retries, backend)
 
 
 def clone_table(
@@ -3479,10 +3295,36 @@ def clone_table(
     m = read_manifest(src_root, v)  # raises if vacuumed
     _guard_foreign_store(dst_root)
     os.makedirs(dst_root, exist_ok=True)
+    pcol = _pcol(m)
+    commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
 
-    def src_abs(d: str) -> str:
-        return os.path.abspath(os.path.join(src_root, d))
+    def move(d: str, rel: str | None = None) -> str:
+        """A leaf's dir in the clone: shallow clones re-point it
+        absolutely, deep clones copy it under the new root."""
+        src = os.path.abspath(os.path.join(src_root, d))
+        if not deep:
+            return src
+        rel = rel or f"{DATA_DIR}/{uuid.uuid4().hex}"
+        shutil.copytree(src, os.path.join(dst_root, rel))
+        return rel
 
+    # deletion vectors and merge-on-read appended dirs travel WITH
+    # their leaves, under the same rule as the data dirs (a dropped DV
+    # would resurrect deleted rows, dropped extras lose updates)
+    leaves = {}
+    for pk, e in _leaves(src_root, v, m).items():
+        ne = {
+            **e,
+            "dir": move(
+                e["dir"],
+                f"{commit_rel}/__ptok={_ptoken(pk)}" if pcol else commit_rel,
+            ),
+        }
+        if e.get("dv"):
+            ne["dv"] = {**e["dv"], "dir": move(e["dv"]["dir"])}
+        if e.get("extra_dirs"):
+            ne["extra_dirs"] = [move(d) for d in e["extra_dirs"]]
+        leaves[pk] = ne
     manifest: dict = {
         "op": "clone",
         "base_version": 0,
@@ -3491,83 +3333,8 @@ def clone_table(
         "rows": m["rows"],
         "schema": m["schema"],
         **_carry_mapping(m),
+        **_encode({}, pcol, leaves, None)[0],
     }
-    def clone_dv(dv: dict | None, copy_to: str | None) -> dict | None:
-        """Deletion vectors travel WITH their leaves: shallow clones
-        re-point them absolutely (same rule as the data dirs — a
-        dropped DV would resurrect deleted rows); deep clones copy
-        the DV dir under the new root."""
-        if not dv:
-            return None
-        if copy_to is None:
-            return {**dv, "dir": src_abs(dv["dir"])}
-        shutil.copytree(src_abs(dv["dir"]), os.path.join(dst_root, copy_to))
-        return {**dv, "dir": copy_to}
-
-    def clone_extras(extras: list | None, deep_copy: bool) -> list | None:
-        """Merge-on-read appended dirs travel with their leaf, same
-        rule as the DV: shallow re-points absolutely, deep copies."""
-        if not extras:
-            return None
-        if not deep_copy:
-            return [src_abs(d) for d in extras]
-        out = []
-        for d in extras:
-            rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            shutil.copytree(src_abs(d), os.path.join(dst_root, rel))
-            out.append(rel)
-        return out
-
-    parts = None
-    if _is_partitioned(m):
-        parts = resolve_partitions(src_root, v)
-        new_parts = {}
-        if deep:
-            commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            for pk, e in parts.items():
-                leaf_rel = f"{commit_rel}/__ptok={_ptoken(pk)}"
-                shutil.copytree(
-                    src_abs(e["dir"]), os.path.join(dst_root, leaf_rel)
-                )
-                ne = {**e, "dir": leaf_rel}
-                if e.get("dv"):
-                    ne["dv"] = clone_dv(
-                        e["dv"], f"{DATA_DIR}/{uuid.uuid4().hex}"
-                    )
-                if e.get("extra_dirs"):
-                    ne["extra_dirs"] = clone_extras(e["extra_dirs"], True)
-                new_parts[pk] = ne
-        else:
-            new_parts = {}
-            for pk, e in parts.items():
-                ne = {**e, "dir": src_abs(e["dir"])}
-                if e.get("dv"):
-                    ne["dv"] = clone_dv(e["dv"], None)
-                if e.get("extra_dirs"):
-                    ne["extra_dirs"] = clone_extras(e["extra_dirs"], False)
-                new_parts[pk] = ne
-        manifest["partition_col"] = m["partition_col"]
-        manifest["partitions"] = new_parts
-        parts = new_parts
-    else:
-        if deep:
-            new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-            shutil.copytree(
-                src_abs(m["data_dir"]), os.path.join(dst_root, new_rel)
-            )
-            manifest["data_dir"] = new_rel
-            if m.get("dv"):
-                manifest["dv"] = clone_dv(
-                    m["dv"], f"{DATA_DIR}/{uuid.uuid4().hex}"
-                )
-            if m.get("extra_dirs"):
-                manifest["extra_dirs"] = clone_extras(m["extra_dirs"], True)
-        else:
-            manifest["data_dir"] = src_abs(m["data_dir"])
-            if m.get("dv"):
-                manifest["dv"] = clone_dv(m["dv"], None)
-            if m.get("extra_dirs"):
-                manifest["extra_dirs"] = clone_extras(m["extra_dirs"], False)
     if not deep:
         # shallow-clone leaves live OUTSIDE this root as absolute
         # paths — a reader that resolves every dir relative to the
@@ -3581,8 +3348,6 @@ def clone_table(
         raise RuntimeError(
             f"clone_table: {dst_root!r} gained a v1 concurrently"
         )
-    if parts is not None:
-        _maybe_checkpoint(dst_root, 1, parts, backend, force=False)
     return {
         "version": 1,
         "rows": m["rows"],
@@ -3629,14 +3394,8 @@ def rename_column(
     {version, renamed: {old: new}, committed}."""
     if old == new:
         raise ValueError("rename_column: old and new are the same name")
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+
+    def attempt(v, tip, leaves, written):
         schema = StructType.fromJson(tip["schema"])
         names = {f.name for f in schema.fields}
         if old not in names:
@@ -3662,12 +3421,6 @@ def rename_column(
             ]
         )
         _validate_mapping(new_schema, phys, _retired_physical(tip))
-
-        def rekey(d: dict | None) -> dict | None:
-            if not d:
-                return d
-            return {(new if c == old else c): s for c, s in d.items()}
-
         cpat = re.compile(rf"\b{re.escape(old)}\b")
         bound = [c[0] for c in _table_constraints(tip) if cpat.search(c[1])]
         if bound:
@@ -3676,80 +3429,34 @@ def rename_column(
                 f"constraint(s) {bound!r} — drop them first and re-add "
                 f"against the new name"
             )
-        manifest: dict = {
-            "op": "rename_column",
-            "base_version": v,
-            "renames": {old: new},
-            "rows": tip["rows"],
-            "schema": new_schema.jsonValue(),
-            # carry everything a commit must inherit (txn watermarks,
-            # constraints, retired physicals, protocol) EXCEPT the
-            # column map, rebuilt above; _carry_mapping also runs the
-            # write-side protocol gate
-            **{
-                k: val
-                for k, val in _carry_mapping(tip).items()
-                if k != "physical"
-            },
-        }
-        if phys:
-            manifest["physical"] = phys
-        if _is_partitioned(tip):
-            try:
-                parts = resolve_partitions(root, v)
-            except FileNotFoundError:
-                continue
-            new_parts = {}
-            for pk, e in parts.items():
-                e2 = dict(e)
-                if "stats" in e2:
-                    e2["stats"] = rekey(e2["stats"])
-                if "bloom" in e2:
-                    e2["bloom"] = rekey(e2["bloom"])
-                new_parts[pk] = e2
-            pcol = tip["partition_col"]
-            manifest["partition_col"] = new if pcol == old else pcol
-            # full format-2 map: the stats/bloom re-key must reach
-            # every entry, not just touched ones
-            manifest["partitions"] = new_parts
-        else:
-            new_parts = None
-            manifest["data_dir"] = tip["data_dir"]
-            if tip.get("dv"):
-                manifest["dv"] = tip["dv"]
-            if tip.get("extra_dirs"):
-                manifest["extra_dirs"] = tip["extra_dirs"]
-        if _try_commit(root, v + 1, manifest, backend):
-            if new_parts is not None:
-                _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {
-                "version": v + 1,
-                "renamed": {old: new},
-                "committed": True,
+        # the stats/bloom re-key must reach every entry, so partitioned
+        # tables republish the full map
+        rekeyed = {
+            pk: {
+                **e,
+                **{
+                    k: {(new if c == old else c): s for c, s in e[k].items()}
+                    for k in ("stats", "bloom")
+                    if e.get(k)
+                },
             }
-    raise RuntimeError(
-        f"rename_column: gave up after {max_retries} version races at "
-        f"{root!r}"
-    )
-
-
-def _passthrough_body(tip: dict) -> dict:
-    """Manifest body for a metadata-only commit that leaves every
-    data reference untouched: unpartitioned tables re-point the same
-    snapshot dir; partitioned tables publish an EMPTY delta (all
-    entries carry forward through resolution) — O(1) payload."""
-    if _is_partitioned(tip):
-        return {
-            "partition_col": tip["partition_col"],
-            "updates": {},
-            "removed": [],
+            for pk, e in leaves.items()
         }
-    body = {"data_dir": tip["data_dir"]}
-    if tip.get("dv"):
-        body["dv"] = tip["dv"]
-    if tip.get("extra_dirs"):
-        body["extra_dirs"] = tip["extra_dirs"]
-    return body
+        pcol = _pcol(tip)
+        return _Commit(
+            {
+                "op": "rename_column",
+                "renames": {old: new},
+                "schema": new_schema.jsonValue(),
+                "physical": phys or None,  # rebuilt above
+            },
+            new if pcol == old else pcol, rekeyed, None,
+            lambda nv, _rows: {
+                "version": nv, "renamed": {old: new}, "committed": True,
+            },
+        )
+
+    return _commit(root, "rename_column", attempt, max_retries, backend)
 
 
 def add_constraint(
@@ -3767,36 +3474,28 @@ def add_constraint(
     then enforces it automatically under write-audit-publish, with
     SQL CHECK NULL-passes semantics. The commit itself is
     metadata-only. Returns {version, name, committed}."""
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+
+    def attempt(v, tip, leaves, written):
         cons = _table_constraints(tip)
         if name in {c[0] for c in cons}:
             raise ValueError(
                 f"add_constraint: {name!r} already exists on {root!r}"
             )
-        df, _v = read_table(spark, root, v)
+        df = _read_entries(
+            spark, StructType.fromJson(tip["schema"]), _phys_map(tip),
+            root, leaves.values(),
+        )
         _check_constraints(df, [(name, predicate)])  # raises on violation
-        manifest = {
-            "op": "add_constraint",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": tip["schema"],
-            **_carry_mapping(tip),
-            "constraints": cons + [[name, predicate]],
-            **_passthrough_body(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            return {"version": v + 1, "name": name, "committed": True}
-    raise RuntimeError(
-        f"add_constraint: gave up after {max_retries} version races at "
-        f"{root!r}"
-    )
+        return _Commit(
+            {
+                "op": "add_constraint",
+                "constraints": cons + [[name, predicate]],
+            },
+            _pcol(tip), {}, [],
+            lambda nv, _rows: {"version": nv, "name": name, "committed": True},
+        )
+
+    return _commit(root, "add_constraint", attempt, max_retries, backend)
 
 
 def drop_constraint(
@@ -3807,14 +3506,8 @@ def drop_constraint(
 ) -> dict:
     """``ALTER TABLE DROP CONSTRAINT`` — metadata-only removal of a
     persisted CHECK constraint. Raises if the name is unknown."""
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+
+    def attempt(v, tip, leaves, written):
         cons = _table_constraints(tip)
         if name not in {c[0] for c in cons}:
             raise ValueError(
@@ -3822,25 +3515,13 @@ def drop_constraint(
                 f"{root!r}"
             )
         remaining = [c for c in cons if c[0] != name]
-        manifest = {
-            "op": "drop_constraint",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": tip["schema"],
-            **{
-                k: val
-                for k, val in _carry_mapping(tip).items()
-                if k != "constraints"
-            },
-            **({"constraints": remaining} if remaining else {}),
-            **_passthrough_body(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            return {"version": v + 1, "name": name, "committed": True}
-    raise RuntimeError(
-        f"drop_constraint: gave up after {max_retries} version races at "
-        f"{root!r}"
-    )
+        return _Commit(
+            {"op": "drop_constraint", "constraints": remaining or None},
+            _pcol(tip), {}, [],
+            lambda nv, _rows: {"version": nv, "name": name, "committed": True},
+        )
+
+    return _commit(root, "drop_constraint", attempt, max_retries, backend)
 
 
 def add_column(
@@ -3859,14 +3540,8 @@ def add_column(
     left behind is refused (`_validate_mapping`)."""
     if isinstance(dtype, str):
         dtype = StructType.fromDDL(f"__x {dtype}")[0].dataType
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+
+    def attempt(v, tip, leaves, written):
         schema = StructType.fromJson(tip["schema"])
         if name in {f.name for f in schema.fields}:
             raise ValueError(
@@ -3878,20 +3553,15 @@ def add_column(
         _validate_mapping(
             new_schema, _phys_map(tip), _retired_physical(tip)
         )
-        manifest = {
-            "op": "add_column",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": new_schema.jsonValue(),
-            **_carry_mapping(tip),
-            **_passthrough_body(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            return {"version": v + 1, "column": name, "committed": True}
-    raise RuntimeError(
-        f"add_column: gave up after {max_retries} version races at "
-        f"{root!r}"
-    )
+        return _Commit(
+            {"op": "add_column", "schema": new_schema.jsonValue()},
+            _pcol(tip), {}, [],
+            lambda nv, _rows: {
+                "version": nv, "column": name, "committed": True,
+            },
+        )
+
+    return _commit(root, "add_column", attempt, max_retries, backend)
 
 
 def drop_column(
@@ -3907,14 +3577,8 @@ def drop_column(
     column-mapping entry are removed in the same commit. Refused for
     the partition column, the last remaining column, or a column a
     persisted CHECK constraint references."""
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+
+    def attempt(v, tip, leaves, written):
         schema = StructType.fromJson(tip["schema"])
         names = [f.name for f in schema.fields]
         if name not in names:
@@ -3923,7 +3587,7 @@ def drop_column(
             )
         if len(names) == 1:
             raise ValueError("drop_column: cannot drop the last column")
-        if _is_partitioned(tip) and tip["partition_col"] == name:
+        if name == _pcol(tip):
             raise ValueError(
                 f"drop_column: {name!r} is the partition column"
             )
@@ -3940,57 +3604,36 @@ def drop_column(
         phys = {
             k: val for k, val in _phys_map(tip).items() if k != name
         }
-        manifest: dict = {
-            "op": "drop_column",
-            "base_version": v,
-            "rows": tip["rows"],
-            "schema": new_schema.jsonValue(),
-            **{
-                k: val
-                for k, val in _carry_mapping(tip).items()
-                if k not in ("physical", "retired_physical")
-            },
-            # the dropped column's bytes live on in old leaves under
-            # its physical name — retire it so nothing re-binds it
-            "retired_physical": _retired_physical(tip)
-            + [_phys_map(tip).get(name, name)],
+        # the stats/bloom drop must reach every entry, so partitioned
+        # tables republish the full map
+        pruned = {
+            pk: {
+                **e,
+                **{
+                    k: {c: s for c, s in e[k].items() if c != name}
+                    for k in ("stats", "bloom")
+                    if k in e
+                },
+            }
+            for pk, e in leaves.items()
         }
-        if phys:
-            manifest["physical"] = phys
-        if _is_partitioned(tip):
-            try:
-                parts = resolve_partitions(root, v)
-            except FileNotFoundError:
-                continue
-            new_parts = {}
-            for pk, e in parts.items():
-                e2 = dict(e)
-                if "stats" in e2:
-                    e2["stats"] = {
-                        c: s for c, s in e2["stats"].items() if c != name
-                    }
-                if "bloom" in e2:
-                    e2["bloom"] = {
-                        c: b for c, b in e2["bloom"].items() if c != name
-                    }
-                new_parts[pk] = e2
-            manifest["partition_col"] = tip["partition_col"]
-            manifest["partitions"] = new_parts
-        else:
-            new_parts = None
-            manifest["data_dir"] = tip["data_dir"]
-            if tip.get("dv"):
-                manifest["dv"] = tip["dv"]
-            if tip.get("extra_dirs"):
-                manifest["extra_dirs"] = tip["extra_dirs"]
-        if _try_commit(root, v + 1, manifest, backend):
-            if new_parts is not None:
-                _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {"version": v + 1, "column": name, "committed": True}
-    raise RuntimeError(
-        f"drop_column: gave up after {max_retries} version races at "
-        f"{root!r}"
-    )
+        return _Commit(
+            {
+                "op": "drop_column",
+                "schema": new_schema.jsonValue(),
+                "physical": phys or None,
+                # the dropped column's bytes live on in old leaves under
+                # its physical name — retire it so nothing re-binds it
+                "retired_physical": _retired_physical(tip)
+                + [_phys_map(tip).get(name, name)],
+            },
+            _pcol(tip), pruned, None,
+            lambda nv, _rows: {
+                "version": nv, "column": name, "committed": True,
+            },
+        )
+
+    return _commit(root, "drop_column", attempt, max_retries, backend)
 
 
 def drop_partitions(
@@ -4013,42 +3656,25 @@ def drop_partitions(
     requested = {_pkey(v) for v in partition_values}
     if not requested:
         return 0
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
+
+    def attempt(v, tip, leaves, written):
+        if tip is None:
             return 0  # nothing committed, nothing to drop
-        try:
-            tip = read_manifest(root, v)
-            if not _is_partitioned(tip):
-                raise ValueError(
-                    f"{root!r} is an UNPARTITIONED manifest table; "
-                    "drop_partitions needs the partition-scoped layout"
-                )
-            parts = resolve_partitions(root, v)
-        except FileNotFoundError:
-            continue  # concurrent vacuum moved the tip; re-resolve
-        dropping = sorted(requested & set(parts))
+        if not _is_partitioned(tip):
+            raise ValueError(
+                f"{root!r} is an UNPARTITIONED manifest table; "
+                "drop_partitions needs the partition-scoped layout"
+            )
+        dropping = sorted(requested & set(leaves))
         if not dropping:
             return 0
-        remaining = {
-            pk: e for pk, e in parts.items() if pk not in requested
-        }
-        manifest = {
-            "op": "drop_partitions",
-            "base_version": v,
-            "rows": sum(e["rows"] for e in remaining.values()),
-            "schema": tip["schema"],
-            "partition_col": tip["partition_col"],
-            "updates": {},
-            "removed": dropping,
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, remaining, backend)
-            return len(dropping)
-    raise RuntimeError(
-        f"drop_partitions: gave up after {max_retries} version races "
-        f"at {root!r}"
+        return _Commit(
+            {"op": "drop_partitions"}, tip["partition_col"], {}, dropping,
+            lambda _v, _rows: len(dropping),
+        )
+
+    return _commit(
+        root, "drop_partitions", attempt, max_retries, backend, empty_ok=True
     )
 
 
@@ -4383,6 +4009,7 @@ def engine_metrics(
                 raise FileNotFoundError(root)
             m = read_manifest(root, v)
             dirs = _version_dirs(root, v, m)
+            entries = list(_leaves(root, v, m).values())
         except (FileNotFoundError, ValueError, OSError):
             rows.append((name, "readable", 0.0))
             continue
@@ -4398,19 +4025,9 @@ def engine_metrics(
         rows.append(
             (name, "avg_file_bytes", nbytes / nfiles if nfiles else 0.0)
         )
-        if _is_partitioned(m):
-            try:
-                entries = list(resolve_partitions(root, v).values())
-            except FileNotFoundError:
-                entries = []
-        else:
-            entries = [_flat_entry(m)]
         # entry count, not dir count: merge-on-read appended dirs
         # would otherwise inflate the partition gauge
-        rows.append(
-            (name, "partitions",
-             float(len(entries) if _is_partitioned(m) else 1))
-        )
+        rows.append((name, "partitions", float(len(entries))))
         # merge-on-read debt gauges: soft-deleted positions and
         # appended update/merge dirs awaiting a purge/compaction
         # rewrite — what a purge_deletes trigger watches
@@ -4475,16 +4092,8 @@ def repartition_table(
     rewrite; column mapping / constraints / protocol carry.
     ``stats_cols`` / ``bloom_cols`` record data-skipping metadata on
     the new leaves. Returns {version, partitions, rows, committed}."""
-    from pyspark.errors import AnalysisException
 
-    for _ in range(max_retries):
-        v = latest_version(root)
-        if v == 0:
-            raise ValueError(f"{root!r} has no committed versions")
-        try:
-            tip = read_manifest(root, v)
-        except FileNotFoundError:
-            continue
+    def attempt(v, tip, leaves, written):
         schema = StructType.fromJson(tip["schema"])
         fields = {f.name: f for f in schema.fields}
         if partition_col is not None and partition_col not in fields:
@@ -4492,129 +4101,62 @@ def repartition_table(
                 f"repartition_table: partition column {partition_col!r} "
                 "is not in the table schema"
             )
-        try:
-            df, _v = read_table(spark, root, v)
-        except FileNotFoundError:
-            continue
         phys = _phys_map(tip)
+        df = _read_entries(spark, schema, phys, root, leaves.values())
         if partition_col is None:
             # → flat snapshot (format 1)
-            new_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
             obs = Observation()
-            try:
-                _write_physical(
-                    df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                    phys,
-                ).write.parquet(os.path.join(root, new_rel))
-            except AnalysisException as e:
-                if _is_path_not_found(e):
-                    continue
-                raise
-            n = int(obs.get["rows"])
-            if n != tip["rows"]:
-                shutil.rmtree(
-                    os.path.join(root, new_rel), ignore_errors=True
-                )
-                continue  # tip moved between the two passes
-            manifest = {
-                "op": "repartition",
-                "base_version": v,
-                "data_dir": new_rel,
-                "rows": n,
-                "schema": tip["schema"],
-                **_carry_mapping(tip),
-            }
-            if _try_commit(root, v + 1, manifest, backend):
-                return {
-                    "version": v + 1, "partitions": 1, "rows": n,
-                    "committed": True,
-                }
-            shutil.rmtree(os.path.join(root, new_rel), ignore_errors=True)
-            continue
-
-        stats_fields = (
-            _resolve_stats_fields(schema, stats_cols, partition_col)
-            if stats_cols
-            else []
-        )
-        bloom_fields = (
-            _resolve_bloom_fields(schema, bloom_cols, partition_col)
-            if bloom_cols
-            else []
-        )
-        try:
+            dirs = _write_leaves(
+                root, phys, None,
+                df.observe(obs, F.count(F.lit(1)).alias("rows")), [""],
+                written,
+            )
+            new_leaves = {"": {"dir": dirs[""], "rows": int(obs.get["rows"])}}
+        else:
+            stats_fields = (
+                _resolve_stats_fields(schema, stats_cols, partition_col)
+                if stats_cols
+                else []
+            )
+            bloom_fields = (
+                _resolve_bloom_fields(schema, bloom_cols, partition_col)
+                if bloom_cols
+                else []
+            )
             vals = [
                 r[0]
                 for r in df.select(partition_col).distinct().collect()
             ]
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        if any(x is None for x in vals):
-            raise ValueError(
-                f"repartition_table: NULL {partition_col!r} values "
-                "cannot key partitions — fill or drop them first"
+            if any(x is None for x in vals):
+                raise ValueError(
+                    f"repartition_table: NULL {partition_col!r} values "
+                    "cannot key partitions — fill or drop them first"
+                )
+            val_keys = {_pkey(x): x for x in vals}
+            tok_map = _ptok_mapping(spark, schema[partition_col], val_keys)
+            dirs = _write_leaves(
+                root, phys, partition_col,
+                df.join(F.broadcast(tok_map), partition_col),
+                sorted(val_keys), written,
             )
-        val_keys = {_pkey(x): x for x in vals}
-        tok_map = _ptok_mapping(spark, schema[partition_col], val_keys)
-        commit_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        try:
-            _write_physical(
-                df.join(F.broadcast(tok_map), partition_col), phys
-            ).write.partitionBy("__ptok").parquet(
-                os.path.join(root, commit_rel)
+            readback = _read_data(
+                spark, schema, phys,
+                [os.path.join(root, d) for d in dirs.values()],
             )
-        except AnalysisException as e:
-            if _is_path_not_found(e):
-                continue
-            raise
-        leaf = {pk: f"{commit_rel}/__ptok={_ptoken(pk)}" for pk in val_keys}
-        readback = _read_data(
-            spark, schema, phys,
-            [os.path.join(root, d) for d in leaf.values()],
+            new_leaves = _leaf_entries(
+                readback, partition_col, dirs, stats_fields, bloom_fields
+            )
+        if sum(e["rows"] for e in new_leaves.values()) != tip["rows"]:
+            raise _StaleRead()  # tip moved between the two passes
+        return _Commit(
+            {"op": "repartition"}, partition_col, new_leaves, None,
+            lambda nv, rows: {
+                "version": nv, "partitions": len(new_leaves),
+                "rows": rows, "committed": True,
+            },
         )
-        per_part = _leaf_stats(readback, partition_col, stats_fields)
-        blooms = (
-            _leaf_blooms(readback, partition_col, bloom_fields)
-            if bloom_fields
-            else {}
-        )
-        new_parts: dict = {}
-        for pk in sorted(val_keys):
-            got = per_part.get(pk, {"rows": 0, "stats": {}})
-            e: dict = {"dir": leaf[pk], "rows": got["rows"]}
-            if stats_fields:
-                e["stats"] = got["stats"]
-            if bloom_fields:
-                e["bloom"] = blooms.get(pk, {})
-            new_parts[pk] = e
-        total = sum(e["rows"] for e in new_parts.values())
-        if total != tip["rows"]:
-            shutil.rmtree(
-                os.path.join(root, commit_rel), ignore_errors=True
-            )
-            continue  # tip moved between the two passes
-        manifest = {
-            "op": "repartition",
-            "base_version": v,
-            "rows": total,
-            "schema": tip["schema"],
-            "partition_col": partition_col,
-            "partitions": new_parts,
-            **_carry_mapping(tip),
-        }
-        if _try_commit(root, v + 1, manifest, backend):
-            _maybe_checkpoint(root, v + 1, new_parts, backend)
-            return {
-                "version": v + 1, "partitions": len(new_parts),
-                "rows": total, "committed": True,
-            }
-        shutil.rmtree(os.path.join(root, commit_rel), ignore_errors=True)
-    raise RuntimeError(
-        f"repartition_table: gave up after {max_retries} version races "
-        f"at {root!r}"
-    )
+
+    return _commit(root, "repartition_table", attempt, max_retries, backend)
 
 
 def register_tables(
@@ -4656,8 +4198,9 @@ def table_history(spark: SparkSession, root: str) -> DataFrame:
     manifest JSONs (no data files, no resolution chain), so it is
     O(retained versions) metadata work; vacuumed versions are absent,
     exactly like Delta after log cleanup. ``op`` is the commit-time
-    operation tag (upsert/merge/replace/compact/drop_partitions);
-    pre-round-6 manifests without a tag report NULL op/committed_at.
+    operation tag (the vocabulary is FORMAT.md §2's op list);
+    manifests written before ops were tagged report NULL
+    op/committed_at.
     """
     rows = []
     for v in _list_versions(root):
@@ -4815,7 +4358,7 @@ def vacuum(
             ok = min(keep_versions)
             try:
                 m_ok = read_manifest(root, ok)
-                if _is_partitioned(m_ok) and not os.path.exists(
+                if _pcol(m_ok) and not os.path.exists(
                     _ckpt_path(root, ok)
                 ):
                     _maybe_checkpoint(
@@ -4938,7 +4481,7 @@ def table_files(
     m = read_manifest(root, v)
     rows = []
 
-    def leaf_row(pk, e, has_stats, has_bloom):
+    def leaf_row(pk, e):
         dirs = _entry_dirs(root, e)
         return (
             pk,
@@ -4946,21 +4489,15 @@ def table_files(
             e.get("rows"),
             sum(_leaf_file_count(d) for d in dirs),
             sum(_dir_bytes(d) for d in dirs),
-            has_stats,
-            has_bloom,
+            bool(e.get("stats")),
+            bool(e.get("bloom")),
             (e.get("dv") or {}).get("deleted"),
             len(e.get("extra_dirs") or []),
         )
 
-    if _is_partitioned(m):
-        for pk, e in sorted(resolve_partitions(root, v).items()):
-            rows.append(
-                leaf_row(pk, e, bool(e.get("stats")), bool(e.get("bloom")))
-            )
-    else:
-        e = _flat_entry(m)
-        e["rows"] = m.get("rows")
-        rows.append(leaf_row(None, e, False, False))
+    pcol = _pcol(m)
+    for pk, e in sorted(_leaves(root, v, m).items()):
+        rows.append(leaf_row(pk if pcol else None, e))
     return spark.createDataFrame(
         rows,
         "partition string, dir string, rows bigint, n_files int, "

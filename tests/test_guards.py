@@ -795,3 +795,29 @@ def test_input_bytes_probes_partitioned_dir_before_flat_file(tmp_path):
     (tmp_path / "lineitem.parquet").write_bytes(b"z" * 11)
     assert _input_bytes(str(tmp_path), "lineitem") == 11
     assert _input_bytes(str(tmp_path), "missing") == 0
+
+
+def test_benchmark_trace_targets_resolve():
+    """Every (module, attribute) the benchmark's ``--trace 1`` run
+    patches must exist: a refactor that renames or removes a traced
+    engine function fails here instead of crashing the traced run."""
+    import importlib
+    import os
+    import sys
+
+    bench_dir = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "perfbench"
+    )
+    sys.path.insert(0, bench_dir)
+    try:
+        layers = importlib.import_module("layers")
+        targets = layers.targets()
+    finally:
+        sys.path.remove(bench_dir)
+    assert targets
+    for mod_name, attr, *_ in targets:
+        owner = importlib.import_module(mod_name)
+        for part in attr.split("."):
+            assert hasattr(owner, part), f"{mod_name}.{attr} is gone"
+            owner = getattr(owner, part)
+        assert callable(owner), f"{mod_name}.{attr} is not callable"

@@ -332,6 +332,166 @@ def test_commit_survives_lossy_conditional_put(spark, tmp_path):
     assert latest_version(root) == 2  # nothing half-published
 
 
+def _lost_race_cases():
+    """verb id -> (partitioned, prepare, call, expected rows). Every
+    case starts from v1 {1: a/p1, 2: b/p2} + v2 {3: c/p1}."""
+    from feature_store_spark.pipelines import txn
+
+    def src(spark, rows):
+        return spark.createDataFrame(rows, "user_id bigint, v string")
+
+    def merge(mode):
+        return lambda spark, root, **kw: txn.merge_into(
+            spark, root, src(spark, [(3, "m")]), ["user_id"],
+            when_matched=[(None, {"v": "s.v"})], mode=mode, **kw,
+        )
+
+    def delete(mode):
+        return lambda spark, root, **kw: txn.delete_where(
+            spark, root, [("user_id", "=", 1)], mode=mode, **kw
+        )
+
+    def update(mode):
+        return lambda spark, root, **kw: txn.update_where(
+            spark, root, [("user_id", "=", 2)], {"v": "z"}, mode=mode, **kw
+        )
+
+    base = {1: "a", 2: "b", 3: "c"}
+    new_row = [(4, "d", 3, "p2")]
+    cases = {
+        "upsert_manifest": (
+            False, None,
+            lambda spark, root, **kw: txn.upsert_manifest(
+                _pdf(spark, new_row), root, ["user_id"], "ts", **kw
+            ),
+            {**base, 4: "d"},
+        ),
+        "upsert_manifest_partitioned": (
+            True, None,
+            lambda spark, root, **kw: txn.upsert_manifest_partitioned(
+                _pdf(spark, new_row), root, ["user_id"], "ts", "p", **kw
+            ),
+            {**base, 4: "d"},
+        ),
+        "compact_manifest": (
+            True, None,
+            lambda spark, root, **kw: txn.compact_manifest(spark, root, **kw),
+            base,
+        ),
+        "restore": (
+            True, None,
+            lambda spark, root, **kw: txn.restore(root, version=1, **kw),
+            {1: "a", 2: "b"},
+        ),
+        "rename_column": (
+            True, None,
+            lambda spark, root, **kw: txn.rename_column(root, "v", "w", **kw),
+            base,
+        ),
+        "add_column": (
+            True, None,
+            lambda spark, root, **kw: txn.add_column(root, "x", "int", **kw),
+            base,
+        ),
+        "drop_column": (
+            True, None,
+            lambda spark, root, **kw: txn.drop_column(root, "ts", **kw),
+            base,
+        ),
+        "add_constraint": (
+            True, None,
+            lambda spark, root, **kw: txn.add_constraint(
+                spark, root, "pos", "ts > 0", **kw
+            ),
+            base,
+        ),
+        "drop_constraint": (
+            True,
+            lambda spark, root: txn.add_constraint(
+                spark, root, "pos", "ts > 0"
+            ),
+            lambda spark, root, **kw: txn.drop_constraint(root, "pos", **kw),
+            base,
+        ),
+        "drop_partitions": (
+            True, None,
+            lambda spark, root, **kw: txn.drop_partitions(root, ["p2"], **kw),
+            {1: "a", 3: "c"},
+        ),
+        "repartition_table": (
+            True, None,
+            lambda spark, root, **kw: txn.repartition_table(
+                spark, root, None, **kw
+            ),
+            base,
+        ),
+    }
+    for mode in ("rewrite", "dv"):
+        cases[f"delete_where-{mode}"] = (
+            True, None, delete(mode), {2: "b", 3: "c"}
+        )
+        cases[f"update_where-{mode}"] = (
+            True, None, update(mode), {**base, 2: "z"}
+        )
+        cases[f"merge_into-{mode}"] = (
+            True, None, merge(mode), {**base, 3: "m"}
+        )
+    return cases
+
+
+def _pdf(spark, rows):
+    return spark.createDataFrame(
+        rows, "user_id bigint, v string, ts bigint, p string"
+    )
+
+
+@pytest.mark.parametrize("verb", sorted(_lost_race_cases()))
+def test_every_committing_verb_survives_lost_races(spark, tmp_path, verb):
+    """Every verb runs on the one commit loop: two lost conditional
+    puts still land exactly one new version with the verb's rows, and
+    a backend that never succeeds gives up after exactly max_retries
+    puts with the tip unchanged and no written dir left behind."""
+    from feature_store_spark.pipelines import txn
+
+    partitioned, prepare, call, expected = _lost_race_cases()[verb]
+
+    def fresh(name):
+        root = str(tmp_path / name)
+        for rows in ([(1, "a", 1, "p1"), (2, "b", 1, "p2")],
+                     [(3, "c", 2, "p1")]):
+            if partitioned:
+                txn.upsert_manifest_partitioned(
+                    _pdf(spark, rows), root, ["user_id"], "ts", "p"
+                )
+            else:
+                txn.upsert_manifest(_pdf(spark, rows), root, ["user_id"], "ts")
+        if prepare is not None:
+            prepare(spark, root)
+        return root
+
+    def data_dirs(root):
+        return set(os.listdir(os.path.join(root, "data")))
+
+    root = fresh("flaky")
+    v0 = latest_version(root)
+    flaky = FlakyBackend(fail_puts=2)
+    call(spark, root, backend=flaky)
+    assert flaky.attempts == 3
+    assert latest_version(root) == v0 + 1
+    got, _ = read_table(spark, root)
+    key, val = got.columns[:2]
+    assert {r[key]: r[val] for r in got.collect()} == expected
+
+    root = fresh("dead")
+    v0, before = latest_version(root), data_dirs(root)
+    dead = FlakyBackend(fail_puts=10**9)
+    with pytest.raises(RuntimeError, match="gave up"):
+        call(spark, root, backend=dead, max_retries=3)
+    assert dead.attempts == 3
+    assert latest_version(root) == v0
+    assert data_dirs(root) == before
+
+
 def test_schema_evolution_type_widening(spark, tmp_path):
     """Widening matrix: int->long, float->double, decimal precision
     growth all merge under allow_schema_evolution with both sides cast

@@ -21,6 +21,7 @@ from feature_store_spark.pipelines.txn import (
     read_manifest,
     read_table,
     rename_column,
+    restore,
     table_history,
     upsert_manifest,
 )
@@ -64,17 +65,24 @@ def test_unknown_reader_feature_refuses_read(spark, tmp_path):
 def test_unknown_writer_feature_reads_but_refuses_write(spark, tmp_path):
     root = str(tmp_path / "t")
     _commit(spark, root)
-    _doctor(root, 1, writer=["row_tracking_v9"])
+    _commit(spark, root, [(3, 3.0, 2)])
+    _doctor(root, 2, writer=["row_tracking_v9"])
     got, v = read_table(spark, root)
-    assert got.count() == 2 and v == 1  # still readable
+    assert got.count() == 3 and v == 2  # still readable
     with pytest.raises(ValueError, match="cannot WRITE.*row_tracking_v9"):
-        _commit(spark, root, [(3, 3.0, 2)])
+        _commit(spark, root, [(4, 4.0, 3)])
     with pytest.raises(ValueError, match="cannot WRITE"):
         merge_into(
             spark, root,
             spark.createDataFrame([(1,)], "user_id bigint"),
             ["user_id"], when_matched=[(None, {"score": "0.0"})],
         )
+    # restoring an OLDER snapshot still commits on top of the tip, so
+    # the tip's unknown writer feature refuses it too (it must not be
+    # dropped from the protocol by re-publishing v1's manifest fields)
+    with pytest.raises(ValueError, match="cannot WRITE.*row_tracking_v9"):
+        restore(root, version=1)
+    assert latest_version(root) == 2
 
 
 def test_features_auto_stamped_and_carried(spark, tmp_path):
