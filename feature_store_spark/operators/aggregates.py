@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_store_spark.session import local_frame
+
 
 def mode_deterministic(
     df: DataFrame,
@@ -544,7 +546,8 @@ def evaluate_alerts(metrics: DataFrame, rules: Sequence[dict]) -> DataFrame:
             f"got {bad!r}" if bad else "evaluate_alerts: no rules"
         )
     spark = metrics.sparkSession
-    rules_df = spark.createDataFrame(
+    rules_df = local_frame(
+        spark,
         [
             (r["rule"], r["metric"], r["op"],
              float(r["threshold"]), r["severity"])

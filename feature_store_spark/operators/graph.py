@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from feature_store_spark.session import local_frame
 
 PR_SCALE_BITS = 45
 PR_SCALE = 1 << PR_SCALE_BITS
@@ -73,12 +76,9 @@ def pagerank(
             raise ValueError("seeds must be non-empty when given")
         if len(set(seed_list)) != len(seed_list):
             raise ValueError("seeds contains duplicates")
-        node_type = e.schema["src"].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        seed_df = spark.createDataFrame(
-            [(s,) for s in seed_list],
-            StructType([StructField("node", node_type, False)]),
+        seed_field = StructField("node", e.schema["src"].dataType, False)
+        seed_df = local_frame(
+            spark, [(s,) for s in seed_list], StructType([seed_field])
         )
         nodes = nodes.union(seed_df.select("node"))
     nodes = nodes.distinct().localCheckpoint(eager=True)
@@ -98,8 +98,12 @@ def pagerank(
         base = PR_SCALE // len(seed_list)
         withseed = nodes.join(
             F.broadcast(
-                spark.createDataFrame(
-                    [(s, 1) for s in seed_list], ["node", "__seed"]
+                local_frame(
+                    spark,
+                    [(s, 1) for s in seed_list],
+                    StructType(
+                        [seed_field, StructField("__seed", LongType(), False)]
+                    ),
                 )
             ),
             "node",

@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from feature_store_spark.operators.windows import latest_per_key
+from feature_store_spark.session import local_frame
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
@@ -704,7 +705,7 @@ def _read_entries(
     dvd = [e for e in entries if e.get("dv")]
     if not dvd:
         if not plain:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return _read_data(spark, schema, phys, plain)
     parts = []
     if plain:
@@ -1067,19 +1068,51 @@ def _write_leaves(root, phys, pcol, rows, pks, written) -> dict:
 
 
 def _leaf_entries(readback, col: str, dirs: dict, stats_fields, bloom_fields):
-    """{pk: entry} for freshly written leaf ``dirs``: live row counts
-    plus the requested stats/bloom columns, off the columnar
-    ``readback`` grouped by ``col``."""
-    got = _leaf_stats(readback, col, stats_fields)
-    blooms = _leaf_blooms(readback, col, bloom_fields) if bloom_fields else {}
+    """{pk: entry} for freshly written leaf ``dirs`` off ONE aggregate
+    of the columnar ``readback`` grouped by ``col``: live row counts,
+    min/max/null-count per ``stats_fields`` column and a Bloom bitmap
+    per ``bloom_fields`` column — the union of one ``collect_set`` per
+    probe position, each bounded by the bitmap size, so the collect is
+    O(leaves × m) metadata, never row data. A leaf whose bloom column
+    is all NULL records no bitmap for it."""
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for i, f in enumerate(stats_fields):
+        aggs += [
+            F.min(f.name).alias(f"__mn{i}"),
+            F.max(f.name).alias(f"__mx{i}"),
+            F.count(F.when(F.col(f.name).isNull(), 1)).alias(f"__nl{i}"),
+        ]
+    for i, f in enumerate(bloom_fields):
+        # the guard matters: the canonical form maps a NULL boolean
+        # to "False"
+        aggs += [
+            F.collect_set(F.when(F.col(f.name).isNotNull(), p)).alias(
+                f"__bl{i}_{j}"
+            )
+            for j, p in enumerate(_bloom_pos_exprs(f))
+        ]
+    got = {}
+    for r in readback.groupBy(col).agg(*aggs).collect():
+        stats, bloom = {}, {}
+        for i, f in enumerate(stats_fields):
+            mn = _stat_encode(r[f"__mn{i}"])
+            mx = _stat_encode(r[f"__mx{i}"])
+            if (mn is None) != (mx is None):
+                continue  # a non-finite float endpoint — unusable
+            stats[f.name] = {"min": mn, "max": mx, "nulls": int(r[f"__nl{i}"])}
+        for i, f in enumerate(bloom_fields):
+            pos = set().union(*(r[f"__bl{i}_{j}"] for j in range(BLOOM_K)))
+            if pos:
+                bloom[f.name] = _bloom_encode(pos)
+        got[_pkey(r[0])] = (int(r["__rows"]), stats, bloom)
     out = {}
     for pk, d in dirs.items():
-        g = got.get(pk, {"rows": 0, "stats": {}})
-        e: dict = {"dir": d, "rows": g["rows"]}
+        rows, stats, bloom = got.get(pk, (0, {}, {}))
+        e: dict = {"dir": d, "rows": rows}
         if stats_fields:
-            e["stats"] = g["stats"]
+            e["stats"] = stats
         if bloom_fields:
-            e["bloom"] = blooms.get(pk, {})
+            e["bloom"] = bloom
         out[pk] = e
     return out
 
@@ -1351,10 +1384,12 @@ def _ptok_mapping(spark: SparkSession, pcol_field, pk_to_val: dict):
     join silently drops rows wherever Python's _pkey and Spark's
     cast disagree (boolean 'True' vs 'true', timestamps '…00.500000'
     vs '…00.5'). Built as a tiny frame, not a CASE chain — flat plan
-    depth at any partition count."""
-    from pyspark.sql.types import StringType, StructField
-
-    return spark.createDataFrame(
+    depth at any partition count — and as a ``local_frame``: a
+    ``LocalRelation`` the broadcast collects inside the JVM, where a
+    ``createDataFrame(<list>)`` frame would fork Python workers on
+    every partitioned upsert, compaction and DML."""
+    return local_frame(
+        spark,
         [(val, _ptoken(pk)) for pk, val in pk_to_val.items()],
         StructType(
             [pcol_field, StructField("__ptok", StringType(), False)]
@@ -1612,31 +1647,6 @@ def _entry_may_match(entry: dict, pk: str, preds, pcol: str) -> bool:
     return True
 
 
-def _leaf_stats(readback_df, pcol: str, stats_fields) -> dict:
-    """Per-partition {pkey: {"rows": n, "stats": {...}}} off ONE
-    columnar scan of freshly written leaves (the same read that
-    produces the commit's row counts)."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for i, f in enumerate(stats_fields):
-        aggs += [
-            F.min(f.name).alias(f"__mn{i}"),
-            F.max(f.name).alias(f"__mx{i}"),
-            F.count(F.when(F.col(f.name).isNull(), 1)).alias(f"__nl{i}"),
-        ]
-    out = {}
-    for r in readback_df.groupBy(pcol).agg(*aggs).collect():
-        stats = {}
-        for i, f in enumerate(stats_fields):
-            mn = _stat_encode(r[f"__mn{i}"])
-            mx = _stat_encode(r[f"__mx{i}"])
-            nulls = int(r[f"__nl{i}"])
-            if (mn is None) != (mx is None):
-                continue  # a non-finite float endpoint — unusable
-            stats[f.name] = {"min": mn, "max": mx, "nulls": nulls}
-        out[_pkey(r[0])] = {"rows": int(r["__rows"]), "stats": stats}
-    return out
-
-
 # --- per-leaf Bloom filters (point-lookup file skipping) ---
 #
 # min/max stats prune RANGE probes on clustered columns; a point
@@ -1733,29 +1743,6 @@ def _bloom_may_contain(encoded: str, key: str) -> bool:
     return all(
         buf[p >> 3] & (1 << (p & 7)) for p in _bloom_positions(key)
     )
-
-
-def _leaf_blooms(readback_df, pcol: str, bloom_fields) -> dict:
-    """{pkey: {col: base64 bitmap}} — one distinct+collect per bloom
-    column over the freshly written leaves (opt-in commit cost;
-    positions per leaf are bounded by the bitmap size, so the collect
-    is O(leaves × m) metadata, never row data)."""
-    out: dict = {}
-    for f in bloom_fields:
-        poss = F.array(*_bloom_pos_exprs(f))
-        rows = (
-            readback_df.where(F.col(f.name).isNotNull())
-            .select(F.col(pcol), F.explode(poss).alias("__pos"))
-            .distinct()
-            .groupBy(pcol)
-            .agg(F.collect_set("__pos").alias("__ps"))
-            .collect()
-        )
-        for r in rows:
-            out.setdefault(_pkey(r[0]), {})[f.name] = _bloom_encode(
-                [int(p) for p in r["__ps"]]
-            )
-    return out
 
 
 def _resolve_bloom_fields(schema: StructType, bloom_cols, partition_col):
@@ -1875,8 +1862,8 @@ def upsert_manifest_partitioned(
     the named equality-canonical columns (see the bloom section above)
     — the point-lookup complement to min/max: an ``=`` predicate in
     ``read_table(where=...)`` skips leaves whose filter proves the key
-    absent. Costs one distinct+collect per bloom column over the
-    touched leaves at commit time (opt-in)."""
+    absent. Its bit positions ride on the same read-back aggregate
+    (one ``collect_set`` per probe position, opt-in)."""
     if mode not in ("merge", "replace"):
         raise ValueError(f"mode must be 'merge' or 'replace', got {mode!r}")
     if key_cols is None and mode != "replace":
@@ -1955,7 +1942,7 @@ def upsert_manifest_partitioned(
                 existing = (
                     _read_entries(spark, tip_schema, phys, root, base_entries)
                     if base_entries and mode == "merge"
-                    else spark.createDataFrame([], tip_schema)
+                    else local_frame(spark, [], tip_schema)
                 )
             merged = _merge_rows(
                 existing,
@@ -2337,7 +2324,7 @@ def _read_leaves(spark, schema, phys, root, leaves: dict, with_pos: bool):
         )
         out = scan if out is None else out.unionByName(scan)
     if out is None:
-        out = spark.createDataFrame([], schema).withColumns({
+        out = local_frame(spark, [], schema).withColumns({
             "__dv_file": F.lit(None).cast("string"),
             "__dv_pos": F.lit(None).cast("bigint"),
         })
@@ -3811,7 +3798,7 @@ def table_changes(
                 schema = StructType.fromJson(m["schema"])
                 entries = [pmap[pk] for pk in diff_pks if pk in pmap]
                 if not entries:
-                    return spark.createDataFrame([], schema)
+                    return local_frame(spark, [], schema)
                 return _read_entries(
                     spark, schema, _phys_map(m), root, entries
                 )
@@ -3984,8 +3971,9 @@ def engine_metrics(
 
     ``tables`` maps table name → manifest root. Metadata-only: every
     gauge derives from manifest JSONs plus directory stat calls — no
-    Spark job, no data read (the frame is createDataFrame'd from a
-    driver-side list of a dozen rows per table).
+    Spark job, no data read (the frame is a ``local_frame`` over a
+    driver-side list of a dozen rows per table, so a consumer's join
+    against it — ``evaluate_alerts`` — forks no Python worker).
 
     Gauges per table: ``readable`` (1/0 — the health check),
     ``version``, ``rows``, ``bytes``, ``files``, ``avg_file_bytes``
@@ -4062,8 +4050,8 @@ def engine_metrics(
                 (name, "commit_interval_max_seconds",
                  max(gaps) if gaps else 0.0)
             )
-    return spark.createDataFrame(
-        rows, "table string, metric string, value double"
+    return local_frame(
+        spark, rows, "table string, metric string, value double"
     )
 
 
@@ -4226,7 +4214,8 @@ def table_history(spark: SparkSession, root: str) -> DataFrame:
                 else None,
             )
         )
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "version int, op string, committed_at_epoch double, "
         "rows bigint, n_updated_partitions int, "
@@ -4498,7 +4487,8 @@ def table_files(
     pcol = _pcol(m)
     for pk, e in sorted(_leaves(root, v, m).items()):
         rows.append(leaf_row(pk if pcol else None, e))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "partition string, dir string, rows bigint, n_files int, "
         "bytes bigint, has_stats boolean, has_bloom boolean, "
@@ -4554,7 +4544,8 @@ def schema_changes(spark: SparkSession, root: str) -> DataFrame:
                 if cur[c] != prev_schema[c]:
                     rows.append((v, c, "retyped", prev_schema[c], cur[c]))
         prev_schema, prev_v = cur, v
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, column string, change string, "
         "from_type string, to_type string",

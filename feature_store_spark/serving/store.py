@@ -11,7 +11,10 @@ correct-and-batched).
 Batch lookups use a broadcast semi-join fetch (S3): one Spark job per
 miss-set, never one per key — the reference's chunked
 ``WHERE user_id = ANY($1)`` collapses into a single keys-DataFrame
-join.
+join. The keys frame is a ``session.local_frame`` (a ``LocalRelation``),
+so neither the broadcast nor the join forks a Python worker. CDC
+invalidation collects the changed keys and dedupes them driver-side,
+with no shuffle.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from feature_store_spark.session import local_frame
 
 FEATURE_TYPES = ("user", "transaction", "risk")
 
@@ -145,8 +150,8 @@ class FeatureStore:
             if missing:
                 df = self.feature_dfs[t]
                 spark = df.sparkSession
-                keys = spark.createDataFrame(
-                    [(int(u),) for u in missing], "user_id long"
+                keys = local_frame(
+                    spark, [(int(u),) for u in missing], "user_id long"
                 )
                 rows = df.join(F.broadcast(keys), "user_id").collect()
                 fetched[t] = {r["user_id"]: r.asDict() for r in rows}
@@ -199,8 +204,8 @@ class FeatureStore:
             df = self.feature_dfs[t]
             if user_ids is not None:
                 spark = df.sparkSession
-                keys = spark.createDataFrame(
-                    [(int(u),) for u in user_ids], "user_id long"
+                keys = local_frame(
+                    spark, [(int(u),) for u in user_ids], "user_id long"
                 )
                 df = df.join(F.broadcast(keys), "user_id")
             for r in df.collect():
@@ -316,11 +321,7 @@ def refresh_serving_from_changes(
         raise ValueError(f"unknown feature type {feature_type!r}")
 
     def apply(changes, version):
-        users = [
-            r[key_col]
-            for r in changes.select(key_col).distinct().collect()
-        ]
-        for u in users:
+        for u in {r[0] for r in changes.select(key_col).collect()}:
             store.invalidate(u)
         df, _v = read_table(spark, root)
         store.feature_dfs[feature_type] = df

@@ -9,13 +9,18 @@ At 100 TB the same code runs with ``master`` unset (cluster manager
 provides it) and ``spark.sql.shuffle.partitions`` sized to
 ~2-3x total executor cores; AQE coalescing makes the exact number
 less critical.
+
+Small driver-side frames (lookup keys, partition-token maps, metadata
+tables) are built with :func:`local_frame`, never with
+``createDataFrame(<list>)``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -61,3 +66,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of the driver-side ``rows`` under ``schema`` (a
+    ``StructType`` or a DDL string), planned as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans as a ``LogicalRDD`` over a
+    PythonRDD: every job that scans it (a broadcast build side runs
+    its own collect job) forks Python worker processes to re-serialize
+    the rows. An Arrow table crosses to the JVM once and scans as a
+    ``LocalTableScan`` inside the JVM, with no Python worker. Each
+    value goes through its field's ``DataType.toInternal`` first, the
+    conversion ``createDataFrame`` applies to a list, so the two give
+    the same rows (a naive ``datetime`` is still driver-local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*(schema.toInternal(r) for r in rows)))
+    table = pa.Table.from_arrays(
+        [
+            pa.array(cols[i] if cols else [], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

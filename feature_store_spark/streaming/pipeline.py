@@ -543,7 +543,7 @@ def run_streaming_upsert_manifest(
     versions}."""
     from feature_store_spark.pipelines.txn import (
         latest_version,
-        read_table,
+        read_manifest,
         upsert_manifest,
     )
 
@@ -554,11 +554,12 @@ def run_streaming_upsert_manifest(
     batches = _drain_valid_events(
         spark, events_dir, checkpoint_dir, _merge_batch
     )
-    store, _ = read_table(spark, table_root)
+    # the tip manifest records its live row count: no count job
+    v = latest_version(table_root)
     return {
         "batches": batches,
-        "upserted_users": 0 if store is None else store.count(),
-        "versions": latest_version(table_root),
+        "upserted_users": read_manifest(table_root, v)["rows"] if v else 0,
+        "versions": v,
     }
 
 
@@ -583,7 +584,7 @@ def run_streaming_warehouse_append(
     export. Returns {batches, rows, versions, partitions}."""
     from feature_store_spark.pipelines.txn import (
         latest_version,
-        read_table,
+        read_manifest,
         resolve_partitions,
         upsert_manifest_partitioned,
     )
@@ -603,14 +604,12 @@ def run_streaming_warehouse_append(
     batches = _drain_valid_events(
         spark, events_dir, checkpoint_dir, _merge_batch
     )
-    store, v = read_table(spark, table_root)
+    v = latest_version(table_root)
     return {
         "batches": batches,
-        "rows": 0 if store is None else store.count(),
-        "versions": latest_version(table_root),
-        "partitions": 0
-        if v == 0
-        else len(resolve_partitions(table_root, v)),
+        "rows": read_manifest(table_root, v)["rows"] if v else 0,
+        "versions": v,
+        "partitions": len(resolve_partitions(table_root, v)) if v else 0,
     }
 
 

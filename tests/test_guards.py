@@ -821,3 +821,28 @@ def test_benchmark_trace_targets_resolve():
             assert hasattr(owner, part), f"{mod_name}.{attr} is gone"
             owner = getattr(owner, part)
         assert callable(owner), f"{mod_name}.{attr} is not callable"
+
+
+def test_driver_side_frames_go_through_local_frame():
+    """``createDataFrame(<list>)`` plans as a Python RDD (every scan
+    forks Python workers); the engine builds its driver-side frames
+    with ``session.local_frame`` instead. No
+    module on the table, serving, operator or streaming paths may call
+    ``createDataFrame`` itself."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "feature_store_spark"
+    offenders = []
+    for sub in ("pipelines", "serving", "operators", "streaming"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    offenders.append(
+                        f"{path.relative_to(pkg)}:{node.lineno}"
+                    )
+    assert not offenders, offenders

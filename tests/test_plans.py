@@ -619,3 +619,56 @@ def test_behavior_entropy_single_user_shuffle_no_join(spark, sf_dir):
     plan = _plan(spark, sf_dir, "a30_behavior_entropy")
     assert "Join" not in plan
     assert plan.count("Exchange") <= 2
+
+
+def test_driver_side_frames_scan_local_tables(spark, tmp_path, monkeypatch):
+    """The serving batch lookup and a partitioned upsert broadcast
+    their driver-side frames (lookup keys, partition→token map) from a
+    LocalTableScan — never a Python RDD (``Scan ExistingRDD``), which
+    forks Python workers on every call."""
+    import datetime
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from feature_store_spark.pipelines import txn
+    from feature_store_spark.serving.store import FeatureStore
+    from feature_store_spark.session import local_frame
+
+    plans = []
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    collect = DataFrame.collect
+
+    def spy_collect(self):
+        plans.append(executed(self))
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    users = spark.range(50).selectExpr("id AS user_id", "id * 2 AS score")
+    store = FeatureStore({"user": users})
+    assert len(store.get_batch_features([3, 7, 99], ["user"])) == 3
+    (lookup,) = plans
+    assert "LocalTableScan" in lookup and "ExistingRDD" not in lookup, lookup
+
+    write_leaves = txn._write_leaves
+    written = []
+
+    def spy_write(root, phys, pcol, rows, pks, out):
+        written.append(executed(rows))
+        return write_leaves(root, phys, pcol, rows, pks, out)
+
+    monkeypatch.setattr(txn, "_write_leaves", spy_write)
+    d = datetime.date(2024, 1, 1)
+    updates = local_frame(
+        spark,
+        [(1, 1, d), (2, 1, d + datetime.timedelta(days=1))],
+        "user_id long, ts long, p date",
+    )
+    root = str(tmp_path / "t")
+    txn.upsert_manifest_partitioned(updates, root, ["user_id"], "ts", "p")
+    txn.upsert_manifest_partitioned(updates, root, ["user_id"], "ts", "p")
+    assert len(written) == 2
+    for plan in written:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -560,3 +560,38 @@ def test_streaming_sink_writes_organic_rollups(
     assert txn._read_pointer(root) == tip
     df, _ = read_table(spark, root)
     assert df.count() == stats["rows"] > 0
+
+
+def test_streaming_manifest_counts_track_dv_deletes(
+    spark, events_dir, tmp_path
+):
+    """Both transactional streaming sinks report their row count off
+    the tip manifest's ``rows``, not a count job. After a deletion-
+    vector DELETE on each table (the case where a leaf's files still
+    hold the deleted rows) a re-drain with nothing new to read must
+    still report exactly ``read_table(...)[0].count()``."""
+    from feature_store_spark.pipelines.txn import delete_where, read_table
+    from feature_store_spark.streaming.pipeline import (
+        run_streaming_upsert_manifest,
+        run_streaming_warehouse_append,
+    )
+
+    for run, key in (
+        (run_streaming_upsert_manifest, "upserted_users"),
+        (run_streaming_warehouse_append, "rows"),
+    ):
+        root = str(tmp_path / f"{run.__name__}_t")
+        ckpt = str(tmp_path / f"{run.__name__}_c")
+        first = run(spark, events_dir, root, ckpt)
+        df, _ = read_table(spark, root)
+        assert first[key] == df.count() > 0
+        victims = sorted({r[0] for r in df.select("user_id").collect()})[:3]
+        res = delete_where(
+            spark, root, [("user_id", "in", victims)], mode="dv"
+        )
+        assert res["rows_deleted"] > 0, res
+        again = run(spark, events_dir, root, ckpt)
+        assert again["batches"] == 0
+        assert again["versions"] == first["versions"] + 1
+        after, _ = read_table(spark, root)
+        assert again[key] == after.count() == first[key] - res["rows_deleted"]

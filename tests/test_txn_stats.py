@@ -542,3 +542,56 @@ def test_in_list_validation(spark, tmp_path):
         read_table(spark, root, where=[("user_id", "in", [1, None])])
     with pytest.raises(ValueError, match="list/tuple"):
         read_table(spark, root, where=[("name", "in", "abc")])
+
+
+def test_commit_bloom_bitmaps_equal_python_side_encoding(spark, tmp_path):
+    """The read-back aggregate's bitmaps (one collect_set per probe
+    position, unioned per leaf) are exactly ``_bloom_encode`` of the
+    Python-side positions of each leaf's non-NULL values. A NULL
+    boolean must not set the "False" bits, and a leaf whose bloom
+    column is all NULL records no bitmap for it."""
+    from pyspark.sql.types import BooleanType, StringType
+
+    from feature_store_spark.pipelines.txn import (
+        _bloom_encode,
+        _bloom_key,
+        _bloom_positions,
+        _pkey,
+        latest_version,
+        resolve_partitions,
+    )
+
+    rows = [
+        (1, "a", True, 1, D1),
+        (2, None, None, 1, D1),
+        (3, "héllo", True, 1, D1),
+        (4, None, None, 1, D2),  # every bloom value NULL in D2
+        (5, "b", False, 1, D3),
+        (6, "b", None, 1, D3),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id bigint, name string, flag boolean, ts bigint, p date"
+    )
+    root = str(tmp_path / "t")
+    upsert_manifest_partitioned(
+        df, root, ["user_id"], "ts", "p",
+        stats_cols=["name"], bloom_cols=["name", "flag"],
+    )
+    leaves = resolve_partitions(root, latest_version(root))
+    dtypes = {"name": StringType(), "flag": BooleanType()}
+    for p in (D1, D2, D3):
+        want = {}
+        for col, i in (("name", 1), ("flag", 2)):
+            vals = [r[i] for r in rows if r[4] == p and r[i] is not None]
+            if vals:
+                want[col] = _bloom_encode({
+                    pos
+                    for v in vals
+                    for pos in _bloom_positions(_bloom_key(v, dtypes[col]))
+                })
+        entry = leaves[_pkey(p)]
+        assert entry["bloom"] == want, p
+        assert entry["rows"] == sum(r[4] == p for r in rows)
+    assert leaves[_pkey(D2)]["stats"]["name"] == {
+        "min": None, "max": None, "nulls": 1
+    }
