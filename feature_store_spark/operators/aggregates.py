@@ -497,8 +497,8 @@ def update_algebraic_partials(
     100 TB rollup costs O(|batch| + |touched partials|), not O(raw).
 
     ``touched_only=True`` returns ONLY the keys the batch touches —
-    exactly the rows a dynamic-partition-overwrite sink
-    (`pipelines/sinks.py::upsert_parquet_partitioned`) must rewrite;
+    exactly the rows a partition-scoped merge
+    (`pipelines/txn.py::upsert_manifest_partitioned`) must rewrite;
     the semi-join probe side is the batch's distinct keys, which AQE
     broadcasts in every realistic cycle (a day's batch touches a few
     partitions of a years-deep store). With ``touched_only=False``

@@ -2,6 +2,7 @@
 data-quality report, and the migration validation suite — thin
 orchestration over the operator library, replacing the reference's
 Airflow DAGs (`dags/*.py`) with plain functions a scheduler calls.
+Every store they write is a manifest table (``pipelines/txn.py``).
 
 Every driver takes explicit anchors (ref_date / now) — no wall clock
 in any computation path (SURVEY §7.1 determinism rule).
@@ -25,7 +26,8 @@ from feature_store_spark.pipelines.features import (
     derive_transaction_features,
     derive_user_features,
 )
-from feature_store_spark.pipelines.sinks import export_warehouse, upsert_parquet
+from feature_store_spark.pipelines import txn
+from feature_store_spark.pipelines.sinks import export_warehouse
 from feature_store_spark.tables import EVENTS_NOW, REF_DATE, load_table
 
 
@@ -42,13 +44,15 @@ def run_daily_pipeline(
     sf_dir: str,
     out_dir: str,
     ref_date: str = REF_DATE,
-    transactional: bool = False,
+    transactional: bool = True,
     vacuum_keep_last: int | None = None,
 ) -> PipelineResult:
     """Daily batch feature derivation (reference
     `src/pipelines/batch_pipeline.py:63-125`): derive user →
-    transaction → risk features, upsert each into the offline store,
-    export the serving join to the warehouse layout.
+    transaction → risk features, upsert each into its manifest table
+    under ``out_dir`` (``txn.upsert_manifest``: atomic last-writer-wins
+    commits, safe when two schedulers race a repair run against the
+    daily run), export the serving join to the warehouse layout.
 
     The three derivations share the orders/lineitem scans only through
     the parquet cache — at 100 TB each stage is an independent job and
@@ -65,26 +69,21 @@ def run_daily_pipeline(
     are cached across upsert + export, so each derivation computes
     once.
 
-    ``transactional=True`` routes the three feature-store merges
-    through ``txn.upsert_manifest`` (atomic manifest commits) instead
-    of ``upsert_parquet`` — the multi-writer-safe posture when two
-    schedulers can race a repair run against the daily run. The merge
-    semantics match, but the ON-DISK LAYOUTS are incompatible: pick
-    one mode per ``out_dir`` and stay on it. Toggling the flag against
-    an existing store raises (txn ``_guard_foreign_store`` / sinks
-    ``_read_store``) rather than silently wiping keys; migrating means
-    reading the old store and upserting it into a fresh root.
+    ``vacuum_keep_last`` prunes each table's history to that many
+    versions after the run. ``transactional`` only accepts ``True``:
+    manifest tables are the one store format, and a plain parquet
+    store from before that is moved with ``txn.migrate_to_manifest``.
+    The keyword stays for callers that still pass it and goes with the
+    next benchmark revision.
     """
-    if transactional:
-        from feature_store_spark.pipelines.txn import upsert_manifest
+    if not transactional:
+        raise ValueError(
+            "run_daily_pipeline writes manifest tables only; move a "
+            "plain parquet store over with txn.migrate_to_manifest"
+        )
 
-        def _merge(df, path):
-            return upsert_manifest(df, path, ["user_id"], "updated_at")
-
-    else:
-
-        def _merge(df, path):
-            return upsert_parquet(df, path, ["user_id"], "updated_at")
+    def _merge(df, path):
+        return txn.upsert_manifest(df, path, ["user_id"], "updated_at")
 
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -115,32 +114,29 @@ def run_daily_pipeline(
     serving = uf.join(
         tf.drop("updated_at"), "user_id", "left"
     ).join(rf.drop("updated_at"), "user_id", "left")
+    # the warehouse history gets the PARTITION-SCOPED commit: each
+    # daily run touches one date, untouched history carries forward
     counts["warehouse_rows"] = export_warehouse(
         serving,
         f"{out_dir}/warehouse/serving_features",
         date_col="updated_at",
         cluster_col="user_id",
         ref_date=ref_date,
-        # the warehouse history gets the PARTITION-SCOPED commit: each
-        # daily run touches one date, untouched history carries forward
-        transactional=transactional,
     )
     for frame in (uf, tf, rf):
         frame.unpersist()
-    if transactional and vacuum_keep_last is not None:
-        # retention: a daily transactional run accretes one version
-        # per table per day forever without it; keep_last versions
-        # stay time-travelable, older data dirs are reclaimed (safe
-        # against the concurrent-writer races txn.vacuum documents)
-        from feature_store_spark.pipelines.txn import vacuum
-
+    if vacuum_keep_last is not None:
+        # retention: a daily run accretes one version per table per
+        # day forever without it; keep_last versions stay
+        # time-travelable, older data dirs are reclaimed (safe against
+        # the concurrent-writer races txn.vacuum documents)
         for kind in (
             "user_features",
             "transaction_features",
             "risk_features",
             "warehouse/serving_features",
         ):
-            vacuum(f"{out_dir}/{kind}", keep_last=vacuum_keep_last)
+            txn.vacuum(f"{out_dir}/{kind}", keep_last=vacuum_keep_last)
     status = (
         "SUCCESS"
         if all(v > 0 for v in counts.values())
@@ -156,23 +152,18 @@ def run_backfill(
     sf_dir: str,
     out_dir: str,
     ref_dates: list[str],
-    transactional: bool = False,
 ) -> list[PipelineResult]:
     """Historical backfill: run the daily pipeline once per date, in
     order (the reference's Airflow catchup over `batch_pipeline_dag`).
     Each run anchors every time window at ITS ref_date (forwarded into
     the derivations) and lands one dated snapshot in the warehouse —
-    dynamic partition overwrite (or, ``transactional=True``, a
-    partition-scoped manifest commit) means re-running a date replaces
-    only that date's partition, so backfills are idempotent per date
-    and never clobber neighboring snapshots; the transactional form is
-    additionally safe against a backfill racing the daily run. The
-    resulting snapshot history is exactly what
+    a partition-scoped manifest commit replaces only that date's
+    partition, so backfills are idempotent per date, never clobber
+    neighboring snapshots, and are safe against a backfill racing the
+    daily run. The resulting snapshot history is exactly what
     `serving/training.py::build_training_set` as-of joins against."""
     return [
-        run_daily_pipeline(
-            spark, sf_dir, out_dir, ref_date=d, transactional=transactional
-        )
+        run_daily_pipeline(spark, sf_dir, out_dir, ref_date=d)
         for d in ref_dates
     ]
 

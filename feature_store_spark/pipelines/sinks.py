@@ -1,258 +1,22 @@
-"""Sinks & sources: upsert merge (S6), warehouse export with
-partitioning/clustering (S7/S8), synthetic data generator (S11).
+"""Sinks & sources: warehouse export with partitioning/clustering
+(S7/S8) and the synthetic data generator (S11).
 
-Upsert strategy without Delta (SURVEY §7.4): read-modify-overwrite
-with last-writer-wins on the ordering column. The merge lands in a
-tmp path first, so a crash during the MERGE never touches the live
-store and the merged data always survives somewhere. The final
-tmp→store overwrite is still a non-atomic delete-then-write window
-(transactionless parquet); a crash there leaves the live path partial
-with the full merge recoverable from ``<path>__tmp``. On a
-Delta/Iceberg lake both writes collapse into an atomic ``MERGE INTO``
-— the call sites don't change.
-
-For MULTI-WRITER safety (two concurrent upserts must not lose each
-other's keys — the reference's ``INSERT … ON CONFLICT`` is atomic per
-statement), use ``pipelines/txn.upsert_manifest``: the same merge
-semantics behind an atomic manifest-commit protocol with optimistic
-retry, snapshot-isolated readers, and crash-invisible partial writes.
+The offline store is one manifest table per feature group
+(``pipelines/txn.py``): ``txn.upsert_manifest`` is the keyed
+last-writer-wins merge (S6, the reference's atomic
+``INSERT … ON CONFLICT (user_id) DO UPDATE``,
+`src/pipelines/batch_pipeline.py:221-310`), and the warehouse export
+below commits through the same protocol. Plain parquet stores from
+before the manifest format move over once, through
+``txn.migrate_to_manifest``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.errors import AnalysisException
-
-from feature_store_spark.operators.windows import latest_per_key
-
-
-def _local_fs_path(path: str) -> str | None:
-    """Local filesystem path for a store root, or None for remote
-    URIs. A path WITHOUT '://' is local verbatim — running it through
-    urlparse would mis-split '#' (fragment), '?' (query), and a
-    first-segment ':' (scheme) out of plain filenames, silently
-    skipping guards that must fire on those roots."""
-    if "://" not in path:
-        return path
-    from urllib.parse import urlparse
-
-    p = urlparse(path)
-    return p.path if p.scheme in ("", "file") else None
-
-
-def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
-    """Existing store, or None ONLY for first-write (path absent).
-    Any other read failure (permissions, corrupt footer) propagates —
-    treating it as 'no table' would make the subsequent overwrite
-    silently drop every previously upserted key. A root committed by
-    ``txn.upsert_manifest`` (has ``_manifests/``) is refused outright:
-    a recursive parquet read over its data/ dirs would union EVERY
-    retained version's snapshot, and the following overwrite would
-    destroy the manifest history — the reverse of txn.py's
-    ``_guard_foreign_store`` toggle trap."""
-    import os
-
-    local = _local_fs_path(path)
-    if local is not None and os.path.isdir(
-        os.path.join(local, "_manifests")
-    ):
-        raise ValueError(
-            f"{path!r} is a transactional (manifest-commit) table; "
-            "use txn.upsert_manifest / txn.read_table on it instead "
-            "of the plain parquet sink"
-        )
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        # match the structured error class, not the message text —
-        # message formats drift across Spark versions, and a missed
-        # match here re-enables the silent-store-wipe failure mode
-        condition = (
-            e.getCondition() if hasattr(e, "getCondition")
-            else e.getErrorClass() if hasattr(e, "getErrorClass")
-            else None
-        )
-        if condition == "PATH_NOT_FOUND" or (
-            condition is None and "PATH_NOT_FOUND" in str(e)
-        ):
-            return None
-        raise
-
-
-def _staged_overwrite(
-    spark: SparkSession,
-    merged: DataFrame,
-    path: str,
-    partition_col: str | None = None,
-    dynamic: bool = False,
-) -> int:
-    """Write merged rows via a tmp path (Spark refuses to overwrite a
-    path it reads, and the staging write is the failure barrier: a
-    crash during the MERGE never touches the live store), then
-    overwrite the store and drop the tmp copy. The final overwrite is
-    itself a non-atomic delete-then-write — a crash inside it leaves
-    the live path partial with the merge recoverable from the tmp copy
-    (see module docstring). The double write is the price of
-    transactionless parquet — on Delta/Iceberg both writes collapse
-    into one MERGE. Returns the merged row count, observed on the
-    final write (no extra counting pass)."""
-    tmp = path.rstrip("/") + "__tmp"
-    w = merged.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(tmp)
-    obs = Observation()
-    # read the stage back under the WRITER'S schema: schema/partition
-    # inference on the tmp read would silently re-type the partition
-    # column (string '2024-01-01' -> date; '00123' -> int 123, losing
-    # the zero-padded directory value in the live store) and cannot
-    # infer anything at all from an all-empty stage (no part files)
-    out = spark.read.schema(merged.schema).parquet(tmp).observe(
-        obs, F.count(F.lit(1)).alias("rows")
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        if dynamic:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        w2 = out.write.mode("overwrite")
-        if partition_col:
-            w2 = w2.partitionBy(partition_col)
-        w2.parquet(path)
-    finally:
-        if dynamic:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    n = int(obs.get["rows"])
-    # tmp served its purpose; leaving it doubles storage per table.
-    # The JVM handles (spark._jvm/_jsc) are absent under Spark
-    # Connect — fall back to a driver-side delete for local paths and
-    # warn (rather than fail the completed upsert) otherwise.
-    if hasattr(spark, "_jvm") and spark._jvm is not None:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    else:
-        import shutil
-
-        local_tmp = _local_fs_path(tmp)
-        if local_tmp is not None:
-            shutil.rmtree(local_tmp, ignore_errors=True)
-        else:
-            import warnings
-
-            warnings.warn(
-                f"staging path {tmp} left behind (no filesystem "
-                "handle on this session type); remove it to reclaim "
-                "storage",
-                stacklevel=2,
-            )
-    return n
-
-
-def upsert_parquet(
-    updates: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    order_col: str,
-) -> int:
-    """Merge ``updates`` into the parquet table at ``path``:
-    last-writer-wins per key on ``order_col`` (reference
-    ``INSERT ... ON CONFLICT (user_id) DO UPDATE``,
-    `src/pipelines/batch_pipeline.py:221-310`). Returns the merged row
-    count. Idempotent: re-running the same updates is a no-op.
-
-    Scale note: the merge is a unionByName + latest-per-key window —
-    one shuffle on the key. At 100 TB the store is partitioned and
-    only touched partitions are rewritten (dynamic partition
-    overwrite); with Delta this is a keyed MERGE and the window
-    disappears.
-    """
-    spark = updates.sparkSession
-    existing = _read_store(spark, path)
-    if existing is not None:
-        # __src tiebreak: when order_col ties (e.g. a same-ref_date
-        # re-run after an upstream fix), the UPDATE wins, not an
-        # arbitrary row — the documented last-writer semantics.
-        merged = latest_per_key(
-            existing.withColumn("__src", F.lit(0)).unionByName(
-                updates.withColumn("__src", F.lit(1))
-            ),
-            list(key_cols),
-            order_col,
-            tiebreak_col="__src",
-        ).drop("__src")
-    else:
-        merged = latest_per_key(updates, list(key_cols), order_col)
-    return _staged_overwrite(spark, merged, path)
-
-
-def upsert_parquet_partitioned(
-    updates: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    order_col: str,
-    partition_col: str,
-) -> int:
-    """Partition-scoped upsert: the 100 TB form of ``upsert_parquet``.
-    Merges ``updates`` into a ``partitionBy(partition_col)`` store and
-    rewrites ONLY the partitions the updates touch (dynamic partition
-    overwrite) — untouched partition files are never read or written,
-    so merge cost scales with the update footprint, not the store.
-
-    Keys are merged per partition (the window keys include
-    ``partition_col``): in the snapshot-history layout (one snapshot
-    per ``partition_date``, see `serving/training.py`) the same entity
-    key legitimately recurs across partitions. Returns the merged row
-    count across touched partitions.
-
-    Like ``upsert_parquet``, the merge lands in a tmp path first —
-    Spark refuses to overwrite a path it is reading, and the staging
-    write doubles as the failure barrier (a crashed merge never
-    half-deletes live partitions).
-    """
-    spark = updates.sparkSession
-    existing = _read_store(spark, path)
-    keys = [*key_cols, partition_col]
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        # a no-op batch (zero update rows) must be a harmless no-op,
-        # not an empty staged write
-        return 0
-    if any(t is None for t in touched):
-        # isin(touched) never matches the NULL partition, so a
-        # dynamic overwrite of __HIVE_DEFAULT_PARTITION__ would
-        # silently drop its previously stored keys — refuse. Checked
-        # on the FIRST write too: allowing the initial batch to seed a
-        # NULL partition would strand keys that every later merge then
-        # rejects (or worse, silently drops).
-        raise ValueError(
-            f"updates contain NULL {partition_col!r} values; "
-            "NULL partitions cannot be merged safely — fill or "
-            "drop them before upserting"
-        )
-    if existing is None:
-        merged = latest_per_key(updates, keys, order_col)
-    else:
-        relevant = existing.filter(F.col(partition_col).isin(touched))
-        merged = latest_per_key(
-            relevant.withColumn("__src", F.lit(0)).unionByName(
-                updates.withColumn("__src", F.lit(1))
-            ),
-            keys,
-            order_col,
-            tiebreak_col="__src",
-        ).drop("__src")
-    return _staged_overwrite(
-        spark, merged, path, partition_col=partition_col, dynamic=True
-    )
+from feature_store_spark.pipelines import txn
 
 
 def export_warehouse(
@@ -262,64 +26,43 @@ def export_warehouse(
     cluster_col: str = "user_id",
     retention_days: int | None = 730,
     ref_date: str | None = None,
-    transactional: bool = False,
 ) -> int:
     """Warehouse export mirroring the reference's BigQuery layout
-    (`sql/bigquery_schema.sql:18-26`): partitioned by the date of
-    ``date_col``, clustered by ``cluster_col`` (repartition +
-    sortWithinPartitions — co-locates keys for point lookups and merge
-    joins),
-    with a retention filter on incoming rows standing in for partition
-    expiration (the transactional path goes further: after its commit
-    it DROPS date partitions past retention atomically via
-    ``txn.drop_partitions`` — real expiration, like BigQuery's).
-    Returns the exported row count, observed during the write — never
-    a second pass over the warehouse.
+    (`sql/bigquery_schema.sql:18-26`): a manifest table partitioned by
+    the date of ``date_col`` (column ``partition_date``), clustered by
+    ``cluster_col`` (repartition + sortWithinPartitions — co-locates
+    keys for point lookups and merge joins). Returns THIS RUN's
+    exported row count, observed on the commit's own scan — never a
+    second pass over the warehouse, and never the table total (that
+    would mask a zero-row derivation day behind the merged history).
 
-    Partition pruning on read is free: any query filtering
-    ``partition_date`` skips files entirely.
+    The rows land through ``txn.upsert_manifest_partitioned(
+    mode="replace", key_cols=None)``: one atomic commit REPLACING only
+    this run's dates with EVERY input row (no per-key dedupe: a
+    multi-row-per-key-per-date export keeps all its rows; a repair
+    re-run that dropped keys actually drops them; untouched history
+    partitions carry forward untouched) — multi-writer safe when a
+    backfill races the daily run. Readers use ``txn.read_table``.
 
-    ``transactional=True`` lands the same partitions through
-    ``txn.upsert_manifest_partitioned(mode="replace",
-    key_cols=None)`` — one atomic manifest commit REPLACING only this
-    run's dates with EVERY input row, row-for-row identical to the
-    dynamic overwrite (no per-key dedupe: a multi-row-per-key-per-date
-    export keeps all its rows; a repair re-run that dropped keys
-    actually drops them; untouched history partitions carry forward
-    untouched) — multi-writer safe when a backfill races the daily
-    run. Readers use ``txn.read_table``; the same cluster
-    repartition+sort runs before the commit, so rows land key-sorted
-    within each date partition in both modes. The transactional commit
-    also records DATA-SKIPPING stats for ``cluster_col`` (per-leaf
-    min/max — tight ranges precisely BECAUSE the rows are
+    The commit records DATA-SKIPPING stats for ``cluster_col``
+    (per-leaf min/max — tight ranges precisely BECAUSE the rows are
     cluster-sorted) plus a per-leaf Bloom filter when the column's
     type supports a canonical equality form, so
     ``txn.read_table(path, where=[(cluster_col, "=", key)])`` point
     lookups skip non-matching date leaves outright — the engine-side
-    analogue of BigQuery clustering's block pruning. Returns THIS
-    RUN's exported row count either way. Layouts are incompatible —
-    the toggle raises in both directions instead of forking one root.
-    """
-    import os
+    analogue of BigQuery clustering's block pruning; a date read
+    (``partition_values=``) lists only its own leaf.
 
-    local = _local_fs_path(path)
-    if (
-        not transactional
-        and local is not None
-        and os.path.isdir(os.path.join(local, "_manifests"))
-    ):
-        # the write path never reads the store, so without this check a
-        # True->False toggle would silently write a parallel hive
-        # layout that txn.read_table readers never see
-        raise ValueError(
-            f"{path!r} is a transactional (manifest-commit) warehouse; "
-            "export with transactional=True or migrate to a fresh root"
-        )
+    Retention: incoming rows older than ``ref_date - retention_days``
+    are filtered out, and after the commit the date partitions past
+    retention are DROPPED atomically via ``txn.drop_partitions`` —
+    real expiration, like BigQuery's ``partition_expiration_days``.
+    """
     out = df.withColumn("partition_date", F.to_date(F.col(date_col)))
-    # same NULL-partition refusal as upsert_parquet_partitioned: a NULL
-    # (or unparseable) date would either vanish through the retention
-    # filter or land in __HIVE_DEFAULT_PARTITION__, which the next
-    # run's dynamic overwrite clobbers — silently losing history
+    # a NULL (or unparseable) date has no partition to land in: it
+    # would either vanish through the retention filter or be refused
+    # by the partitioned commit after the scan — refuse it up front
+    # with the column named
     if out.filter(F.col("partition_date").isNull()).limit(1).count() > 0:
         raise ValueError(
             f"export_warehouse: rows with NULL/unparseable {date_col!r} "
@@ -330,137 +73,41 @@ def export_warehouse(
             F.col("partition_date")
             >= F.date_sub(F.to_date(F.lit(ref_date)), retention_days)
         )
-    if transactional:
-        from feature_store_spark.pipelines.txn import (
-            upsert_manifest_partitioned,
-        )
-
-        from feature_store_spark.pipelines.txn import _BLOOM_TYPES
-
-        cluster_type = dict(
-            (f.name, f.dataType.typeName()) for f in out.schema.fields
-        )[cluster_col]
-        obs = Observation()
-        upsert_manifest_partitioned(
-            out.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .repartition(F.col(cluster_col))
-            .sortWithinPartitions(cluster_col),
-            path,
-            key_cols=None,  # passthrough: every input row lands
-            order_col=date_col,
-            partition_col="partition_date",
-            mode="replace",
-            stats_cols=[cluster_col],
-            bloom_cols=(
-                [cluster_col] if cluster_type in _BLOOM_TYPES else None
-            ),
-        )
-        if retention_days is not None and ref_date is not None:
-            # real partition EXPIRATION, not just an ingest filter:
-            # the reference's warehouse sets partition_expiration_days
-            # (`sql/bigquery_schema.sql:18-26`) and BigQuery drops the
-            # old partitions itself — here an atomic zero-data-work
-            # commit removes date partitions past retention (leaves
-            # reclaimed by the next vacuum; time travel still sees
-            # them). DATE partition keys are ISO strings, so the
-            # cutoff compare is lexicographic-safe.
-            import datetime
-
-            from feature_store_spark.pipelines.txn import (
-                drop_partitions,
-                latest_version,
-                resolve_partitions,
-            )
-
-            cutoff = (
-                datetime.date.fromisoformat(ref_date)
-                - datetime.timedelta(days=retention_days)
-            ).isoformat()
-            expired = [
-                pk
-                for pk in resolve_partitions(path, latest_version(path))
-                if pk < cutoff
-            ]
-            if expired:
-                drop_partitions(path, expired)
-        # this RUN's rows (observed on the commit's own scan), matching
-        # the non-transactional return — the table total would mask a
-        # zero-row derivation day behind the merged history
-        return int(obs.get["rows"])
+    cluster_type = out.schema[cluster_col].dataType.typeName()
     obs = Observation()
-    (
+    txn.upsert_manifest_partitioned(
         out.observe(obs, F.count(F.lit(1)).alias("rows"))
         .repartition(F.col(cluster_col))
-        .sortWithinPartitions(cluster_col)
-        # dynamic: only partitions present in this run are replaced —
-        # earlier snapshot partitions survive (the warehouse is the
-        # feature HISTORY the PIT training-set builder reads), and a
-        # daily run never rewrites 730 days of retained partitions
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_date")
-        .parquet(path)
+        .sortWithinPartitions(cluster_col),
+        path,
+        key_cols=None,  # passthrough: every input row lands
+        order_col=date_col,
+        partition_col="partition_date",
+        mode="replace",
+        stats_cols=[cluster_col],
+        bloom_cols=(
+            [cluster_col] if cluster_type in txn._BLOOM_TYPES else None
+        ),
     )
+    if retention_days is not None and ref_date is not None:
+        # a zero-data-work commit removes date partitions past
+        # retention (leaves reclaimed by the next vacuum; time travel
+        # still sees them). DATE partition keys are ISO strings, so
+        # the cutoff compare is lexicographic-safe.
+        import datetime
+
+        cutoff = (
+            datetime.date.fromisoformat(ref_date)
+            - datetime.timedelta(days=retention_days)
+        ).isoformat()
+        expired = [
+            pk
+            for pk in txn.resolve_partitions(path, txn.latest_version(path))
+            if pk < cutoff
+        ]
+        if expired:
+            txn.drop_partitions(path, expired)
     return int(obs.get["rows"])
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    zorder_cols: Sequence[str] | None = None,
-) -> dict:
-    """Small-file compaction — the other half of a lake's OPTIMIZE
-    (pair with ``operators.layout.cluster_by_zorder`` for the full
-    compact+cluster pass). Streaming upserts and per-partition dynamic
-    overwrites accrete files far below the scanner-efficient size;
-    at 100 TB the file *count* becomes the bottleneck (driver listing,
-    task-per-file scheduling, footer reads), independent of data size.
-
-    Reads the store, re-lays it into ``ceil(total_bytes /
-    target_file_bytes)`` files — plain round-robin ``repartition`` (even
-    sizes, no assumptions), or Z-order-clustered when ``zorder_cols``
-    is given (range partition on the Morton key, so compaction also
-    tightens row-group stats on those dimensions) — and rewrites it
-    through the same staged tmp-path protocol as the upserts (a crash
-    mid-compaction never corrupts the live store). Returns counts for
-    the caller's compaction log.
-
-    Sizes come from the filesystem handle (works for any Hadoop FS),
-    so the target is bytes-on-disk, not estimated in-memory size.
-    """
-    df = spark.read.parquet(path)  # absent path must raise, not create
-    files = df.inputFiles()
-    if hasattr(spark, "_jvm") and spark._jvm is not None:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        total = 0
-        for f in files:
-            jpath = jvm.org.apache.hadoop.fs.Path(f)
-            total += jpath.getFileSystem(conf).getFileStatus(jpath).getLen()
-    else:  # Spark Connect: no JVM handle — local paths only
-        import os
-        from urllib.parse import urlparse
-
-        total = sum(
-            os.path.getsize(urlparse(f).path or f) for f in files
-        )
-    n_target = max(1, -(-total // target_file_bytes))
-    if zorder_cols:
-        from feature_store_spark.operators.layout import cluster_by_zorder
-
-        laid = cluster_by_zorder(
-            df, list(zorder_cols), partitions=n_target
-        )
-    else:
-        laid = df.repartition(n_target)
-    rows = _staged_overwrite(spark, laid, path)
-    return {
-        "rows": rows,
-        "files_before": len(files),
-        "files_after": n_target,
-        "bytes_before": int(total),
-    }
 
 
 def _hash_uniform(id_col: str, seed: int, stream: int):

@@ -1,13 +1,14 @@
-"""Transactional multi-writer upsert: manifest-commit parquet tables.
+"""Manifest-commit parquet tables: the engine's one offline store.
 
-``upsert_parquet`` (pipelines/sinks.py) is crash-safe via its staged
-tmp-path rename, but two CONCURRENT writers can still interleave
-read-merge-overwrite and silently lose one writer's keys — the
+A plain read-merge-overwrite of a parquet directory lets two
+CONCURRENT writers interleave and silently lose one writer's keys,
+and a crash mid-overwrite leaves the directory partial — the
 reference never has this problem because its merge is an atomic
 per-statement ``INSERT … ON CONFLICT (user_id) DO UPDATE``
-(`src/pipelines/batch_pipeline.py:221-310`). This module closes the
-gap with the standard lake-format answer re-implemented minimally
-(the Delta/Iceberg commit protocol, public in both projects' specs):
+(`src/pipelines/batch_pipeline.py:221-310`). This module gives every
+feature table, warehouse and streaming state table that guarantee
+with the standard lake-format answer re-implemented minimally (the
+Delta/Iceberg commit protocol, public in both projects' specs):
 
 - **Immutable data, versioned manifests.** Every commit writes its
   full merged snapshot to a fresh ``data/<uuid>/`` directory, then
@@ -27,13 +28,13 @@ gap with the standard lake-format answer re-implemented minimally
   invisible, and concurrent commits never tear a read.
 
 Scale posture: the protocol adds no Spark-side work — one manifest
-file per commit, the same full-snapshot merge cost as
-``upsert_parquet`` (at 100 TB, pair it with the partition-scoped
-merge so each commit's data dir holds only touched partitions, or
-swap the whole module for Delta — the call-site contract is
-identical). ``vacuum`` reclaims data directories referenced only by
-pruned manifests, plus — behind an explicit grace window —
-crash-orphaned dirs no manifest ever referenced.
+file per commit on top of the merge itself (the flat upsert rewrites
+the full snapshot; at 100 TB use the partition-scoped merge so each
+commit's data dir holds only touched partitions, or swap the whole
+module for Delta — the call-site contract is identical). ``vacuum``
+reclaims data directories referenced only by pruned manifests, plus
+— behind an explicit grace window — crash-orphaned dirs no manifest
+ever referenced.
 
 Two private pieces carry every committing verb:
 
@@ -809,12 +810,11 @@ def read_table(
     return df, v
 
 
-def _is_path_not_found(e: Exception) -> bool:
-    """Spark surfaces a vanished data directory as AnalysisException
-    PATH_NOT_FOUND at read-analysis time — the vacuum-race signal for
-    the writer retry loops (vacuum deletes a pruned version's data
-    dirs BEFORE its manifest, so a writer can resolve a manifest and
-    then lose the dirs underneath it)."""
+def _error_is(e: Exception, *conditions: str) -> bool:
+    """Whether a Spark error carries one of the error ``conditions``
+    (e.g. ``PATH_NOT_FOUND``). Matches the structured condition, not
+    the message text — message formats drift across Spark versions;
+    only errors without a condition fall back to the message."""
     condition = (
         e.getCondition()
         if hasattr(e, "getCondition")
@@ -822,19 +822,19 @@ def _is_path_not_found(e: Exception) -> bool:
         if hasattr(e, "getErrorClass")
         else None
     )
-    return condition == "PATH_NOT_FOUND" or (
-        condition is None and "PATH_NOT_FOUND" in str(e)
-    )
+    if condition is not None:
+        return condition in conditions
+    return any(c in str(e) for c in conditions)
 
 
 def _guard_foreign_store(root: str) -> None:
-    """Refuse to treat a plain ``upsert_parquet`` store as an empty
-    transactional table. A root previously written by the non-txn sink
-    has part files directly under it but no ``_manifests/``; silently
-    committing a first manifest there would publish a snapshot that
-    drops every previously upserted key (and pollute the plain store
-    with data/ + _manifests/ subdirs for the reverse toggle). The
-    mirror guard lives in ``sinks.upsert_parquet``."""
+    """Refuse to treat a plain parquet store as an empty manifest
+    table. A root holding a plain store has part files (or hive
+    ``col=value`` dirs) directly under it but no ``_manifests/``;
+    silently committing a first manifest there would publish a
+    snapshot that drops every row the old store holds (and pollute it
+    with data/ + _manifests/ subdirs). ``migrate_to_manifest`` is the
+    way over."""
     if not os.path.isdir(root):
         return
     for e in os.listdir(root):
@@ -842,9 +842,9 @@ def _guard_foreign_store(root: str) -> None:
             e.startswith("part-")
             or e.endswith(".parquet")
             or e == "_SUCCESS"
-            # a hive-partitioned plain store (upsert_parquet_partitioned
-            # / export_warehouse) whose _SUCCESS marker is absent still
-            # announces itself through its col=value partition dirs
+            # a hive-partitioned plain store whose _SUCCESS marker is
+            # absent still announces itself through its col=value
+            # partition dirs
             or (
                 "=" in e
                 and not e.startswith(".")
@@ -854,9 +854,9 @@ def _guard_foreign_store(root: str) -> None:
             raise ValueError(
                 f"{root!r} holds a non-transactional parquet store "
                 f"(found {e!r}); committing a manifest on top would "
-                "silently drop its keys. Migrate explicitly: read the "
-                "old store, upsert_manifest it into a FRESH root, then "
-                "retire the old path"
+                "silently drop its keys. Migrate it with "
+                "txn.migrate_to_manifest into a FRESH root, then retire "
+                "the old path"
             )
 
 
@@ -995,7 +995,10 @@ def _commit(
         except BaseException as exc:
             _discard(root, written)
             if isinstance(exc, (FileNotFoundError, _StaleRead)) or (
-                isinstance(exc, AnalysisException) and _is_path_not_found(exc)
+                # a vacuum deleted a pruned version's data dirs between
+                # resolving its manifest and reading them
+                isinstance(exc, AnalysisException)
+                and _error_is(exc, "PATH_NOT_FOUND")
             ):
                 continue
             raise
@@ -1276,12 +1279,16 @@ def upsert_manifest(
     constraints: Sequence[tuple[str, str]] | None = None,
     txn: tuple[str, int] | None = None,
 ) -> int:
-    """``upsert_parquet`` semantics (last-writer-wins per key on
-    ``order_col``, update beats store on ties) with SERIALIZABLE
-    multi-writer safety: concurrent upserts cannot lose each other's
-    keys — the loser of a version race re-merges against the winner's
-    snapshot and commits on top (pytest: two interleaved writers, no
-    lost update; crash mid-write leaves the old snapshot readable).
+    """Keyed merge of ``updates`` into the table at ``root`` (reference
+    ``INSERT ... ON CONFLICT (user_id) DO UPDATE``,
+    `src/pipelines/batch_pipeline.py:221-310`): last-writer-wins per
+    key on ``order_col``, the update beats the stored row on ties (a
+    same-date re-run after an upstream fix lands; a replayed batch is
+    a no-op on contents), with SERIALIZABLE multi-writer safety:
+    concurrent upserts cannot lose each other's keys — the loser of a
+    version race re-merges against the winner's snapshot and commits
+    on top (pytest: two interleaved writers, no lost update; crash
+    mid-write leaves the old snapshot readable).
     Returns the committed snapshot's row count.
 
     ``allow_schema_evolution=True`` is the Delta ``mergeSchema``
@@ -1808,7 +1815,7 @@ def upsert_manifest_partitioned(
     constraints: Sequence[tuple[str, str]] | None = None,
 ) -> int:
     """Partition-scoped transactional upsert: ``upsert_manifest``'s
-    multi-writer safety at ``upsert_parquet_partitioned``'s cost.
+    semantics and multi-writer safety at O(touched partitions) cost.
     A commit READS and WRITES only the partitions the updates touch —
     the manifest maps partition → immutable leaf directory, and a new
     version's map carries every untouched partition's entry forward
@@ -1845,8 +1852,8 @@ def upsert_manifest_partitioned(
     last-writer-wins dedupe entirely: every update row lands verbatim,
     matching a plain dynamic partition overwrite row-for-row — the
     passthrough a multi-row-per-key-per-partition export needs
-    (``export_warehouse(transactional=True)`` uses it so both its
-    modes write identical row sets).
+    (``export_warehouse`` uses it, so an export keeps every row a
+    dynamic partition overwrite would).
 
     ``stats_cols`` records per-leaf min/max/null-count for the named
     (orderable, non-partition) columns in the manifest entry — the
@@ -2062,8 +2069,8 @@ def compact_manifest(
     """OPTIMIZE for manifest tables: rewrite the tip's data into
     ~``target_file_bytes`` files and publish the result as a NEW
     version with byte-identical rows — the compaction half of a lake's
-    OPTIMIZE for this layout (`compact_parquet` covers plain stores).
-    The streaming sinks (ST12/ST13) land one commit per micro-batch at
+    OPTIMIZE for this layout.
+    The streaming sinks (ST4/ST13) land one commit per micro-batch at
     the session's shuffle width, so every hot leaf carries
     width-many small files; at scale the file COUNT becomes the
     bottleneck (listing, task-per-file scheduling, footer reads).
@@ -3674,20 +3681,58 @@ def migrate_to_manifest(
     partition_col: str | None = None,
     backend: LocalLinkBackend | None = None,
 ) -> int:
-    """The migration the toggle guards point at: read a plain-parquet
-    store (``upsert_parquet`` / ``upsert_parquet_partitioned`` /
-    ``export_warehouse`` layout) and commit it as version 1 of a FRESH
-    manifest table — unpartitioned, or partition-scoped when
-    ``partition_col`` is given. Refuses a non-empty destination (a
-    migration must never merge into existing history) and leaves the
-    source untouched (cut over readers, then retire it). Returns the
-    committed row count."""
+    """The one-way door from a plain parquet store (a flat directory
+    or a hive ``partitionBy`` layout) to the manifest format: read it
+    and commit it as version 1 of a FRESH manifest table —
+    unpartitioned, or partition-scoped when ``partition_col`` is
+    given. Refuses a non-empty destination (a migration must never
+    merge into existing history) and leaves the source untouched (cut
+    over readers, then retire it). Returns the committed row count.
+
+    Hive partition columns keep the type Spark infers for them only
+    when every directory value reads back unchanged through that type
+    (``partition_date=2024-01-02`` stays a date); otherwise they
+    migrate as strings, so ``snap=00123`` stays ``"00123"`` instead of
+    becoming the int 123."""
     if latest_version(dest_root) != 0:
         raise ValueError(
             f"{dest_root!r} already has committed versions; migrate "
             "into a FRESH root"
         )
     src = spark.read.parquet(src_path)
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        # with inference off every hive partition column reads as its
+        # raw directory string; a column whose inferred type differs
+        # is a typed partition column to check
+        raw = spark.read.parquet(src_path)
+        inferred = {f.name: f.dataType for f in src.schema.fields}
+        typed = [
+            f.name for f in raw.schema.fields
+            if isinstance(f.dataType, StringType)
+            and not isinstance(inferred[f.name], StringType)
+        ]
+        lossy = set()
+        if typed:
+            row = raw.agg(*[
+                F.max(
+                    F.col(c).isNotNull()
+                    & ~F.col(c).cast(inferred[c]).cast("string")
+                    .eqNullSafe(F.col(c))
+                ).alias(c)
+                for c in typed
+            ]).collect()[0]
+            lossy = {c for c in typed if row[c]}
+    finally:
+        spark.conf.set(key, prev)
+    if lossy:
+        src = spark.read.schema(StructType([
+            StructField(f.name, StringType(), f.nullable)
+            if f.name in lossy else f
+            for f in src.schema.fields
+        ])).parquet(src_path)
     if partition_col is not None:
         return upsert_manifest_partitioned(
             src, dest_root, key_cols, order_col, partition_col,

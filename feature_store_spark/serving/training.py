@@ -14,8 +14,9 @@ computed after the label event (no target leakage).
 
 Scale: one shuffle on the entity key (the asof union-window); the
 observation side is typically tiny next to the warehouse and rides
-the same partitioning. Snapshot-date pruning happens before the join
-via partition filters when a date range is passed.
+the same partitioning. Snapshot-date pruning happens before the join:
+pass the frame ``txn.read_table(path, partition_values=[...])``
+returns, which lists only the named dates' leaves.
 """
 
 from __future__ import annotations

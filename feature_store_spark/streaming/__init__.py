@@ -6,7 +6,7 @@ from feature_store_spark.streaming.pipeline import (  # noqa: F401
     dispatch_events,
     read_event_stream,
     recompute_triggers,
-    run_streaming_upsert,
+    run_streaming_upsert_manifest,
     running_user_profile,
     session_windows_stream,
     velocity_windows_stream,

@@ -105,7 +105,8 @@ def kafka_publish(
         raise RuntimeError(
             "spark-sql-kafka connector not on classpath; add "
             "org.apache.spark:spark-sql-kafka-0-10_2.13 via spark.jars."
-            "packages (use foreachBatch + upsert_parquet as the sink)"
+            "packages (or land events as files and merge them with "
+            "streaming.run_streaming_upsert_manifest)"
         )
     payload = df.select(
         F.col(key_col).cast("string").alias("key"),

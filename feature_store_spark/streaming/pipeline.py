@@ -15,8 +15,9 @@ semantics are the built-ins of Structured Streaming:
 - velocity features (ST5): event-time sliding windows with a
   watermark bounding state, replacing the in-memory deque store;
 - upserts (ST4) and cache invalidation (ST2): ``foreachBatch`` merge
-  into the offline store — each micro-batch touches only the keys it
-  saw, which is exactly the reference's per-event cache delete +
+  into the offline store, one atomic manifest commit per micro-batch
+  (``txn.upsert_manifest``) — each micro-batch touches only the keys
+  it saw, which is exactly the reference's per-event cache delete +
   UPDATE, batched.
 
 Determinism for tests: ``trigger(availableNow=True)`` drains the
@@ -101,21 +102,12 @@ def read_event_stream(
             # any other analysis failure (e.g. an unreadable nanos
             # fixture on a session missing the nanosAsLong conf) must
             # surface HERE, not as a confusing mid-stream parquet
-            # conversion error later. Structured-condition match, like
-            # sinks._read_store.
-            condition = (
-                e.getCondition() if hasattr(e, "getCondition")
-                else e.getErrorClass() if hasattr(e, "getErrorClass")
-                else None
-            )
-            unknowable = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            if condition in unknowable or (
-                condition is None
-                and any(c in str(e) for c in unknowable)
-            ):
-                ts_is_nanos = False
-            else:
+            # conversion error later.
+            from feature_store_spark.pipelines.txn import _error_is
+
+            if not _error_is(e, "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 raise
+            ts_is_nanos = False
     reader = spark.readStream
     if max_files_per_trigger is not None:
         # bounds per-micro-batch work (and, with availableNow, splits
@@ -430,7 +422,7 @@ def _drain_valid_events(
     checkpoint_dir: str,
     merge_batch,
 ) -> int:
-    """Shared scaffold of the ST4/ST12/ST13 sinks: read → dispatch →
+    """Shared scaffold of the ST4/ST13 sinks: read → dispatch →
     filter(valid) → foreachBatch(merge_batch) → availableNow drain.
     Returns the executed-batch count, tallied in the foreachBatch body
     — ``len(q.recentProgress)`` is capped by
@@ -458,7 +450,7 @@ def _drain_valid_events(
 
 def _latest_purchase_scores(batch_df: DataFrame, with_date: bool) -> DataFrame:
     """Per-batch reduction shared by the streaming upsert sinks: one
-    row per user (ST4/ST12) or per (user, event-date) (ST13), carrying
+    row per user (ST4) or per (user, event-date) (ST13), carrying
     ``__seq = struct(ts, event_id)`` — a UNIQUE total order, so ties
     resolve identically whether two equal-ts purchases land in one
     micro-batch or are split across batches/replays (order-by-ts alone
@@ -481,66 +473,30 @@ def _latest_purchase_scores(batch_df: DataFrame, with_date: bool) -> DataFrame:
     ).drop("event_id")
 
 
-def run_streaming_upsert(
-    spark: SparkSession,
-    events_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> dict[str, int]:
-    """End-to-end streaming job, drained deterministically with
-    ``availableNow``: read → dispatch → (a) per-user latest risk score
-    upserted into a parquet state table via foreachBatch (ST4), (b)
-    invalidation keys collected per batch (ST2 — in production these
-    go to the serving cache; here they mark rows stale).
-
-    Returns counters {batches, upserted_users}. The foreachBatch body
-    reduces each micro-batch to one row per user BEFORE touching the
-    state table — merge cost scales with the batch's key set, the
-    Delta-MERGE shape. The merge itself IS ``sinks.upsert_parquet``:
-    its update-wins tie-break makes a checkpoint-replayed batch (same
-    __seq as the stored row) deterministic, and its staged write
-    cleans up after itself. The merge orders on ``__seq = struct(ts,
-    event_id)`` — a UNIQUE total order, so same-timestamp purchases
-    resolve identically whether they share a micro-batch or are split
-    across batches/replays (ordering on ts alone would let cross-batch
-    ties fall to arrival order, diverging from the batch twin).
-    Counters are derived from the executed-batch tally and the
-    materialized store — not from in-memory increments an
-    at-least-once batch retry would double-count (the
-    run_drift_monitor rule)."""
-    from feature_store_spark.pipelines.sinks import _read_store, upsert_parquet
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_purchase_scores(batch_df, with_date=False)
-        upsert_parquet(latest, state_dir, ["user_id"], "__seq")
-
-    batches = _drain_valid_events(
-        spark, events_dir, checkpoint_dir, _merge_batch
-    )
-    store = _read_store(spark, state_dir)
-    return {
-        "batches": batches,
-        "upserted_users": 0 if store is None else store.count(),
-    }
-
-
 def run_streaming_upsert_manifest(
     spark: SparkSession,
     events_dir: str,
     table_root: str,
     checkpoint_dir: str,
 ) -> dict[str, int]:
-    """``run_streaming_upsert`` with the TRANSACTIONAL state table:
-    each micro-batch's per-user latest risk scores land via
+    """ST4 end-to-end streaming job, drained deterministically with
+    ``availableNow``: read → dispatch → per-user latest risk score
+    upserted into the manifest table at ``table_root``. The
+    foreachBatch body reduces each micro-batch to one row per user
+    BEFORE touching the table (merge cost scales with the batch's key
+    set, the Delta-MERGE shape), then lands it via
     ``txn.upsert_manifest`` — an atomic manifest commit per batch, so
     a concurrent batch writer (or a second stream against the same
     table) cannot lose updates, readers are snapshot-isolated while
     batches land, and a crash mid-batch leaves the previous commit
-    readable. Replay safety is layered: the checkpoint makes batches
-    at-least-once, and the merge's update-wins-on-tie last-writer
-    semantics make a replayed batch converge to the same snapshot
-    (one extra version, same rows). Returns {batches, upserted_users,
-    versions}."""
+    readable. The merge orders on ``__seq = struct(ts, event_id)``, a
+    unique total order (see ``_latest_purchase_scores``). Replay
+    safety is layered: the checkpoint makes batches at-least-once, and
+    the merge's update-wins-on-tie last-writer semantics make a
+    replayed batch converge to the same snapshot (one extra version,
+    same rows). Returns {batches, upserted_users, versions}, read from
+    the executed-batch tally and the tip manifest — never from
+    in-memory increments a batch retry would double-count."""
     from feature_store_spark.pipelines.txn import (
         latest_version,
         read_manifest,
@@ -575,7 +531,7 @@ def run_streaming_warehouse_append(
     touches only the dates it carries (O(batch) commit cost — the
     partition-scoped posture the daily warehouse uses), is atomic
     against concurrent batch/backfill writers, and leaves readers
-    snapshot-isolated. Replay-convergent like ST12: a replayed batch
+    snapshot-isolated. Replay-convergent like ST4: a replayed batch
     recomputes the same per-key rows and the keyed merge lands them as
     one extra version with identical contents. Each commit records
     user_id data-skipping stats + bloom on its touched date leaves, so
@@ -679,14 +635,16 @@ def run_drift_monitor(
         .start()
     )
     q.awaitTermination()
-    from feature_store_spark.pipelines.sinks import _read_store
+    from feature_store_spark.pipelines.txn import _error_is
 
-    # _read_store: None ONLY for a missing path (zero micro-batches
-    # fired -> "no drift observed"); an unreadable EXISTING report
-    # propagates — this component's whole job is alerting, and its
-    # structured-condition matching survives Spark message rewording
-    report = _read_store(spark, report_dir)
-    if report is None:
+    # a missing report means zero micro-batches fired -> "no drift
+    # observed"; an unreadable EXISTING report propagates — this
+    # component's whole job is alerting
+    try:
+        report = spark.read.parquet(report_dir)
+    except AnalysisException as e:
+        if not _error_is(e, "PATH_NOT_FOUND"):
+            raise
         return {"batches": 0, "drifted_batches": 0}
     return {
         "batches": int(report.count()),
@@ -707,17 +665,18 @@ def run_streaming_cdc(
 ) -> dict[str, int]:
     """ST11: continuous CDC apply — a parquet change-log stream
     (Debezium-shaped rows: payload + ``seq`` + ``op`` in I/U/D) folded
-    into a keyed snapshot store, drained with ``availableNow``.
+    into a keyed snapshot, the manifest table at ``state_dir``,
+    drained with ``availableNow``.
 
     The state table keeps DELETE TOMBSTONES (``__deleted`` rows with
     their winning ``__seq``) rather than physically dropping keys:
-    cross-micro-batch ordering then comes from the seq-based
-    ``upsert_parquet`` merge, NOT from arrival order — a late update
-    (seq 3) arriving a batch after its key's delete (seq 5) correctly
-    loses to the tombstone, the case every last-batch-wins sink gets
-    wrong. Batch-internal ordering is the same latest-wins window the
-    batch operator uses (`operators/cdc.py::latest_changes`), so
-    stream output == one-shot ``apply_cdc`` over the full feed no
+    cross-micro-batch ordering then comes from the seq-ordered
+    ``txn.upsert_manifest`` merge, NOT from arrival order — a late
+    update (seq 3) arriving a batch after its key's delete (seq 5)
+    correctly loses to the tombstone, the case every last-batch-wins
+    sink gets wrong. Batch-internal ordering is the same latest-wins
+    window the batch operator uses (`operators/cdc.py::latest_changes`),
+    so stream output == one-shot ``apply_cdc`` over the full feed no
     matter how the files split into micro-batches. Replay-idempotent:
     a checkpoint-retried batch re-merges identical (key, seq) rows —
     the upsert's update-wins tie-break rewrites the same values.
@@ -728,14 +687,11 @@ def run_streaming_cdc(
     not this function's job.
 
     Returns {batches, live_keys, tombstones}, counted from the
-    materialized store (never from in-memory increments — the
+    committed table (never from in-memory increments — the
     at-least-once rule).
     """
     from feature_store_spark.operators.cdc import latest_changes
-    from feature_store_spark.pipelines.sinks import (
-        _read_store,
-        upsert_parquet,
-    )
+    from feature_store_spark.pipelines.txn import read_table, upsert_manifest
 
     # driver-side batch tally: len(q.recentProgress) is capped by
     # spark.sql.streaming.numRecentProgressUpdates (100) and would
@@ -751,7 +707,7 @@ def run_streaming_cdc(
             *[c for c in latest.columns if c != "__op"],
             (F.col("__op") == "D").alias("__deleted"),
         )
-        upsert_parquet(rows, state_dir, key_cols, "__seq")
+        upsert_manifest(rows, state_dir, key_cols, "__seq")
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -764,7 +720,7 @@ def run_streaming_cdc(
         .start()
     )
     q.awaitTermination()
-    store = _read_store(spark, state_dir)
+    store, _ = read_table(spark, state_dir)
     if store is None:
         return {"batches": len(executed), "live_keys": 0,
                 "tombstones": 0}
@@ -776,11 +732,11 @@ def run_streaming_cdc(
 
 
 def read_cdc_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The live snapshot a CDC state store serves: tombstones filtered,
-    merge metadata dropped."""
-    from feature_store_spark.pipelines.sinks import _read_store
+    """The live snapshot a CDC state table serves: tombstones
+    filtered, merge metadata dropped."""
+    from feature_store_spark.pipelines.txn import read_table
 
-    store = _read_store(spark, state_dir)
+    store, _ = read_table(spark, state_dir)
     if store is None:
         raise FileNotFoundError(f"no CDC state at {state_dir}")
     return store.filter(~F.col("__deleted")).drop("__seq", "__deleted")

@@ -18,6 +18,7 @@ from feature_store_spark.pipelines.features import (
     serving_features,
     serving_join,
 )
+from feature_store_spark.pipelines.txn import latest_version, read_table
 from feature_store_spark.tables import load_table
 
 
@@ -44,12 +45,14 @@ def test_daily_pipeline_end_to_end(spark, sf_dir, tmp_path):
     res = run_daily_pipeline(spark, sf_dir, out)
     assert res.status == "SUCCESS"
     assert res.counts["user_features"] > 0
-    uf = spark.read.parquet(f"{out}/user_features")
+    uf, _ = read_table(spark, f"{out}/user_features")
     assert uf.filter(F.col("updated_at").isNull()).count() == 0
     # idempotent: re-run changes nothing
     res2 = run_daily_pipeline(spark, sf_dir, out)
     assert res2.counts["user_features"] == res.counts["user_features"]
-    wh = spark.read.parquet(f"{out}/warehouse/serving_features")
+    assert sorted(map(tuple, read_table(spark, f"{out}/user_features")[0]
+                      .collect())) == sorted(map(tuple, uf.collect()))
+    wh, _ = read_table(spark, f"{out}/warehouse/serving_features")
     assert "partition_date" in wh.columns
     assert wh.count() == res.counts["warehouse_rows"]
 
@@ -65,7 +68,7 @@ def test_daily_pipeline_forwards_ref_date(spark, sf_dir, tmp_path):
     other = "2001-05-01"
     out = str(tmp_path / "backfill")
     run_daily_pipeline(spark, sf_dir, out, ref_date=other)
-    stored = spark.read.parquet(f"{out}/user_features").drop("updated_at")
+    stored = read_table(spark, f"{out}/user_features")[0].drop("updated_at")
     direct = derive_user_features(
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "orders"),
@@ -123,7 +126,7 @@ def test_point_in_time_training_set(spark, sf_dir, tmp_path):
     r1 = run_daily_pipeline(spark, sf_dir, out, ref_date="2001-08-01")
     r2 = run_daily_pipeline(spark, sf_dir, out, ref_date="2001-08-15")
     assert r1.status == r2.status == "SUCCESS"
-    warehouse = spark.read.parquet(f"{out}/warehouse/serving_features")
+    warehouse, _ = read_table(spark, f"{out}/warehouse/serving_features")
     assert {
         r["partition_date"].isoformat()
         for r in warehouse.select("partition_date").distinct().collect()
@@ -166,8 +169,8 @@ def test_point_in_time_training_set(spark, sf_dir, tmp_path):
 
 @pytest.mark.slow
 def test_backfill_accumulates_dated_snapshots(spark, sf_dir, tmp_path):
-    """Backfill over two dates leaves TWO warehouse snapshots (dynamic
-    partition overwrite — later runs don't clobber earlier dates), and
+    """Backfill over two dates leaves TWO warehouse snapshots (each
+    run's partition-scoped commit replaces only its own date), and
     re-running one date is idempotent."""
     from feature_store_spark.pipelines.drivers import run_backfill
 
@@ -175,7 +178,7 @@ def test_backfill_accumulates_dated_snapshots(spark, sf_dir, tmp_path):
     dates = ["2001-06-01", "2001-07-01"]
     results = run_backfill(spark, sf_dir, out, dates)
     assert [r.status for r in results] == ["SUCCESS", "SUCCESS"]
-    wh = spark.read.parquet(f"{out}/warehouse/serving_features")
+    wh, _ = read_table(spark, f"{out}/warehouse/serving_features")
     snaps = {
         r["partition_date"].isoformat()
         for r in wh.select("partition_date").distinct().collect()
@@ -184,7 +187,7 @@ def test_backfill_accumulates_dated_snapshots(spark, sf_dir, tmp_path):
     n_before = wh.count()
     # idempotent per date: re-run the first date, snapshot set unchanged
     run_backfill(spark, sf_dir, out, [dates[0]])
-    wh2 = spark.read.parquet(f"{out}/warehouse/serving_features")
+    wh2, _ = read_table(spark, f"{out}/warehouse/serving_features")
     assert wh2.count() == n_before
 
 
@@ -192,27 +195,31 @@ def test_backfill_accumulates_dated_snapshots(spark, sf_dir, tmp_path):
 def test_backfill_transactional_matches_parquet_history(
     spark, sf_dir, tmp_path
 ):
-    """transactional=True backfill: the warehouse history accretes
-    through partition-scoped manifest commits — same snapshot set and
-    rows as the dynamic-overwrite layout, one committed version per
-    daily run, idempotent per date."""
+    """Backfill history through partition-scoped manifest commits: one
+    committed version per daily run, each date's partition holding
+    exactly that date's user-feature keys, idempotent per date."""
     from feature_store_spark.pipelines.drivers import run_backfill
-    from feature_store_spark.pipelines.txn import latest_version, read_table
 
     out = str(tmp_path / "bftx")
     dates = ["2001-06-01", "2001-07-01"]
-    results = run_backfill(spark, sf_dir, out, dates, transactional=True)
+    results = run_backfill(spark, sf_dir, out, dates)
     assert [r.status for r in results] == ["SUCCESS", "SUCCESS"]
     wh_path = f"{out}/warehouse/serving_features"
     wh, v = read_table(spark, wh_path)
     assert v == 2  # one commit per run
-    snaps = {
-        r["partition_date"].isoformat()
-        for r in wh.select("partition_date").distinct().collect()
-    }
-    assert snaps == set(dates)
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    for d, r in zip(dates, results):
+        want = sorted(
+            row[0] for row in derive_user_features(
+                customer, orders, ref_date=d
+            ).select("user_id").collect()
+        )
+        day, _ = read_table(spark, wh_path, partition_values=[d])
+        assert sorted(row[0] for row in day.select("user_id").collect()) == want
+        assert r.counts["warehouse_rows"] == len(want)
     n_before = wh.count()
-    run_backfill(spark, sf_dir, out, [dates[0]], transactional=True)
+    run_backfill(spark, sf_dir, out, [dates[0]])
     wh2, _ = read_table(spark, wh_path)
     assert wh2.count() == n_before
     assert latest_version(wh_path) == 3
@@ -220,22 +227,19 @@ def test_backfill_transactional_matches_parquet_history(
 
 @pytest.mark.slow
 def test_daily_pipeline_vacuum_retention(spark, sf_dir, tmp_path):
-    """transactional + vacuum_keep_last: the daily run prunes each
+    """vacuum_keep_last: the daily run prunes each
     store's history to the retention window after committing — results
     identical, old versions unreadable, tip intact."""
     import pytest
 
-    from feature_store_spark.pipelines.drivers import run_daily_pipeline
-    from feature_store_spark.pipelines.txn import read_table
-
     out = str(tmp_path / "ret")
     run_daily_pipeline(
         spark, out_dir=out, sf_dir=sf_dir, ref_date="2001-06-01",
-        transactional=True, vacuum_keep_last=1,
+        vacuum_keep_last=1,
     )
     r = run_daily_pipeline(
         spark, out_dir=out, sf_dir=sf_dir, ref_date="2001-07-01",
-        transactional=True, vacuum_keep_last=1,
+        vacuum_keep_last=1,
     )
     assert r.status == "SUCCESS"
     for kind in ("user_features", "warehouse/serving_features"):

@@ -823,6 +823,75 @@ def test_benchmark_trace_targets_resolve():
         assert callable(owner), f"{mod_name}.{attr} is not callable"
 
 
+def test_benchmark_calls_bind_to_engine_signatures():
+    """Every call the benchmark's workloads make into the engine must
+    still bind: each keyword it passes (``transactional=True``,
+    ``ref_date=`` ...) is a parameter of the function it resolves to,
+    and no call passes too many positional arguments. An API deletion
+    then fails here instead of turning every benchmark operation into
+    a failure."""
+    import ast
+    import importlib
+    import inspect
+    import os
+
+    src = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "perfbench", "workloads.py"
+    )
+    tree = ast.parse(open(src).read())
+    # names bound by `from feature_store_spark... import x [as y]`:
+    # engine modules and engine functions alike
+    bound: dict[str, object] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+            node.module or ""
+        ).startswith("feature_store_spark"):
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                name = a.asname or a.name
+                bound[name] = (
+                    getattr(mod, a.name)
+                    if hasattr(mod, a.name)
+                    else importlib.import_module(f"{node.module}.{a.name}")
+                )
+    checked = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in bound:
+            target, label = bound[f.id], f.id
+        elif (
+            isinstance(f, ast.Attribute)
+            and isinstance(f.value, ast.Name)
+            and inspect.ismodule(bound.get(f.value.id))
+        ):
+            mod = bound[f.value.id]
+            label = f"{f.value.id}.{f.attr}"
+            assert hasattr(mod, f.attr), f"{label} is gone"
+            target = getattr(mod, f.attr)
+        else:
+            continue
+        if not callable(target) or any(
+            isinstance(a, ast.Starred) for a in node.args
+        ) or any(k.arg is None for k in node.keywords):
+            continue
+        sig = inspect.signature(target)
+        try:
+            sig.bind_partial(
+                *[None] * len(node.args),
+                **{k.arg: None for k in node.keywords},
+            )
+        except TypeError as e:
+            raise AssertionError(
+                f"workloads.py:{node.lineno} {label}(...) no longer "
+                f"binds: {e}"
+            ) from None
+        checked.append(label)
+    assert "drivers.run_daily_pipeline" in checked
+    assert "run_streaming_upsert_manifest" in checked
+
+
 def test_driver_side_frames_go_through_local_frame():
     """``createDataFrame(<list>)`` plans as a Python RDD (every scan
     forks Python workers); the engine builds its driver-side frames

@@ -269,10 +269,13 @@ def test_hll_merge_is_lossless(spark, sf_dir):
 def test_warehouse_join_uses_dynamic_partition_pruning(
     spark, sf_dir, tmp_path
 ):
-    """Joining the date-partitioned warehouse against a filtered dim
-    must inject a DynamicPruningExpression into the scan's partition
-    filters — at 100 TB this is the difference between reading one
-    day's files and reading every partition.
+    """Joining a hive date-partitioned fact (the warehouse's
+    ``partition_date`` layout as a plain ``partitionBy`` directory)
+    against a filtered dim must inject a DynamicPruningExpression into
+    the scan's partition filters — at 100 TB this is the difference
+    between reading one day's files and reading every partition. (The
+    engine's own warehouse is a manifest table and prunes date leaves
+    through ``read_table(partition_values=/where=)`` instead.)
 
     The dim filter must be a comparison predicate: the
     PartitionPruning rule only fires for build sides whose filter is
@@ -282,19 +285,14 @@ def test_warehouse_join_uses_dynamic_partition_pruning(
 
     from pyspark.sql import functions as F
 
-    from feature_store_spark.pipelines.sinks import export_warehouse
     from feature_store_spark.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").between("1995-01-01", "1995-03-01")
     )
-    export_warehouse(
-        orders,
-        str(tmp_path / "wh"),
-        date_col="o_orderdate",
-        cluster_col="o_custkey",
-        retention_days=None,
-    )
+    orders.withColumn(
+        "partition_date", F.to_date("o_orderdate")
+    ).write.partitionBy("partition_date").parquet(str(tmp_path / "wh"))
     fact = spark.read.parquet(str(tmp_path / "wh"))
     some_day = fact.select(F.min("partition_date")).collect()[0][0]
     dim = spark.createDataFrame(

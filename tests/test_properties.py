@@ -101,20 +101,20 @@ def test_weekend_mapping_known_dates(spark_prop):
 )
 @_settings
 def test_upsert_last_writer_wins(spark_prop, tmp_path_factory, updates):
-    from feature_store_spark.pipelines.sinks import upsert_parquet
+    from feature_store_spark.pipelines.txn import read_table, upsert_manifest
 
     path = str(tmp_path_factory.mktemp("prop") / "t")
     state: dict[int, tuple[int, int]] = {}
     for i in range(0, len(updates), 5):  # apply in batches of ≤5
         batch = updates[i : i + 5]
         df = spark_prop.createDataFrame(batch, "k int, ver int, payload int")
-        upsert_parquet(df, path, ["k"], "ver")
+        upsert_manifest(df, path, ["k"], "ver")
         for k, ver, payload in batch:
             if k not in state or ver >= state[k][0]:
                 state[k] = (ver, payload)
     got = {
         r["k"]: (r["ver"], r["payload"])
-        for r in spark_prop.read.parquet(path).collect()
+        for r in read_table(spark_prop, path)[0].collect()
     }
     assert got == state
 
@@ -261,11 +261,14 @@ def test_asof_join_null_keys_never_match(spark_prop):
 )
 def test_partitioned_upsert_matches_model(spark_prop, batches, tmp_path_factory):
     """Replaying random update batches through
-    upsert_parquet_partitioned must equal the sequential driver-side
+    upsert_manifest_partitioned must equal the sequential driver-side
     model: per (user, partition), highest version wins; on a version
     tie, the LATER batch wins (update-wins tie-break); partitions a
     batch doesn't touch are untouched."""
-    from feature_store_spark.pipelines.sinks import upsert_parquet_partitioned
+    from feature_store_spark.pipelines.txn import (
+        read_table,
+        upsert_manifest_partitioned,
+    )
 
     path = str(tmp_path_factory.mktemp("prop_upsert") / "store")
     model: dict[tuple[int, int], tuple[int, int]] = {}
@@ -274,7 +277,7 @@ def test_partitioned_upsert_matches_model(spark_prop, batches, tmp_path_factory)
             [(u, f"p{p}", v, x) for u, p, v, x in batch],
             "user_id int, part string, version int, payload int",
         )
-        upsert_parquet_partitioned(
+        upsert_manifest_partitioned(
             df, path, ["user_id"], "version", "part"
         )
         # model: within one batch the merge keeps max version per key
@@ -287,7 +290,7 @@ def test_partitioned_upsert_matches_model(spark_prop, batches, tmp_path_factory)
                 model[(u, p)] = (v, x)
     got = {
         (r["user_id"], int(r["part"][1:])): (r["version"], r["payload"])
-        for r in spark_prop.read.parquet(path).collect()
+        for r in read_table(spark_prop, path)[0].collect()
     }
     assert set(got) == set(model)
     for k in model:

@@ -1,5 +1,6 @@
-"""Tests for sinks (S6 upsert idempotency, S7 partitioned export,
-S11 generator determinism) and the serving layer (SV1-SV5)."""
+"""Tests for the offline store's keyed merge (S6 upsert idempotency),
+the warehouse export (S7 partitioned export), S11 generator
+determinism and the serving layer (SV1-SV5)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,12 @@ from feature_store_spark.pipelines.sinks import (
     export_warehouse,
     generate_synthetic_orders,
     generate_synthetic_users,
-    upsert_parquet,
+)
+from feature_store_spark.pipelines.txn import (
+    read_table,
+    resolve_partitions,
+    upsert_manifest,
+    upsert_manifest_partitioned,
 )
 from feature_store_spark.serving import FeatureStore
 from feature_store_spark.tables import load_table
@@ -28,16 +34,16 @@ def test_upsert_creates_then_merges(spark, tmp_path):
         [(1, 10.0, "2024-01-01"), (2, 20.0, "2024-01-01")],
         "user_id long, score double, updated_at string",
     )
-    assert upsert_parquet(v1, path, ["user_id"], "updated_at") == 2
+    assert upsert_manifest(v1, path, ["user_id"], "updated_at") == 2
     # update user 2, insert user 3
     v2 = spark.createDataFrame(
         [(2, 99.0, "2024-01-02"), (3, 30.0, "2024-01-02")],
         "user_id long, score double, updated_at string",
     )
-    assert upsert_parquet(v2, path, ["user_id"], "updated_at") == 3
+    assert upsert_manifest(v2, path, ["user_id"], "updated_at") == 3
     rows = {
         r["user_id"]: r["score"]
-        for r in spark.read.parquet(path).collect()
+        for r in read_table(spark, path)[0].collect()
     }
     assert rows == {1: 10.0, 2: 99.0, 3: 30.0}
 
@@ -47,16 +53,16 @@ def test_upsert_idempotent_and_last_writer_wins(spark, tmp_path):
     v2 = spark.createDataFrame(
         [(1, 1.0, "2024-01-02")], "user_id long, score double, updated_at string"
     )
-    upsert_parquet(v2, path, ["user_id"], "updated_at")
+    upsert_manifest(v2, path, ["user_id"], "updated_at")
     # replay the same batch → no change
-    assert upsert_parquet(v2, path, ["user_id"], "updated_at") == 1
+    assert upsert_manifest(v2, path, ["user_id"], "updated_at") == 1
     # older update must NOT overwrite newer state
     v1 = spark.createDataFrame(
         [(1, 777.0, "2024-01-01")],
         "user_id long, score double, updated_at string",
     )
-    upsert_parquet(v1, path, ["user_id"], "updated_at")
-    assert spark.read.parquet(path).collect()[0]["score"] == 1.0
+    upsert_manifest(v1, path, ["user_id"], "updated_at")
+    assert read_table(spark, path)[0].collect()[0]["score"] == 1.0
 
 
 # ---------------------------------------------------------------------------
@@ -70,14 +76,20 @@ def test_export_partitioned_and_pruned(spark, sf_dir, tmp_path):
         "event_id", "user_id", F.col("ts").alias("updated_at")
     )
     export_warehouse(ev, path, date_col="updated_at", cluster_col="user_id")
-    out = spark.read.parquet(path)
+    out, v = read_table(spark, path)
     assert out.count() == ev.count()
     assert "partition_date" in out.columns
-    # partition pruning: a date filter reads only matching partitions
-    one_day = out.select("partition_date").distinct().limit(1).collect()[0][0]
-    pruned = out.filter(F.col("partition_date") == F.lit(one_day))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or pruned.count() > 0
+    # partition pruning: a date read lists and scans only its own leaf
+    days = resolve_partitions(path, v)
+    assert len(days) > 1
+    one_day = sorted(days)[0]
+    pruned, _ = read_table(spark, path, partition_values=[one_day])
+    leaf = days[one_day]["dir"]
+    assert pruned.inputFiles()
+    assert all(leaf in f for f in pruned.inputFiles())
+    assert pruned.count() == out.filter(
+        F.col("partition_date") == F.lit(one_day)
+    ).count()
 
 
 def test_export_retention_filter(spark, tmp_path):
@@ -89,7 +101,7 @@ def test_export_retention_filter(spark, tmp_path):
     export_warehouse(
         df, path, retention_days=730, ref_date="2001-08-01"
     )
-    assert spark.read.parquet(path).count() == 1  # 1990 row expired
+    assert read_table(spark, path)[0].count() == 1  # 1990 row expired
 
 
 # ---------------------------------------------------------------------------
@@ -192,15 +204,11 @@ def test_invalidate_and_health(store):
 def test_partitioned_upsert_rewrites_only_touched_partitions(
     spark, tmp_path
 ):
-    """The 100 TB upsert: merging updates for one partition_date must
-    leave every other partition's files byte-identical on disk
-    (dynamic partition overwrite), while merging last-writer-wins
-    inside the touched partition."""
+    """The 100 TB upsert: merging updates for one snap_date must carry
+    every other partition's leaf forward unchanged (same directory,
+    files untouched on disk), while merging last-writer-wins inside
+    the touched partition."""
     import os
-
-    from feature_store_spark.pipelines.sinks import (
-        upsert_parquet_partitioned,
-    )
 
     path = str(tmp_path / "snap")
     v1 = spark.createDataFrame(
@@ -213,21 +221,22 @@ def test_partitioned_upsert_rewrites_only_touched_partitions(
         "user_id long, score double, v string, snap_date string",
     )
     assert (
-        upsert_parquet_partitioned(
+        upsert_manifest_partitioned(
             v1, path, ["user_id"], "v", "snap_date"
         )
         == 4
     )
+    leaf1 = resolve_partitions(path, 1)["2024-01-01"]
 
-    def files(day):
-        d = os.path.join(path, f"snap_date={day}")
+    def files(leaf):
+        d = os.path.join(path, leaf["dir"])
         return {
             f: os.path.getmtime(os.path.join(d, f))
             for f in sorted(os.listdir(d))
             if f.endswith(".parquet")
         }
 
-    before_day1 = files("2024-01-01")
+    before_day1 = files(leaf1)
     # update user 3, insert user 4 — only the 01-02 snapshot touched
     v2 = spark.createDataFrame(
         [
@@ -236,15 +245,16 @@ def test_partitioned_upsert_rewrites_only_touched_partitions(
         ],
         "user_id long, score double, v string, snap_date string",
     )
-    # merged count covers touched partitions only: users 1,3,4 on 01-02
+    # the committed table: users 1,2 on 01-01 and 1,3,4 on 01-02
     assert (
-        upsert_parquet_partitioned(
+        upsert_manifest_partitioned(
             v2, path, ["user_id"], "v", "snap_date"
         )
-        == 3
+        == 5
     )
-    assert files("2024-01-01") == before_day1  # untouched on disk
-    out = spark.read.parquet(path)
+    assert resolve_partitions(path, 2)["2024-01-01"] == leaf1
+    assert files(leaf1) == before_day1  # untouched on disk
+    out, _ = read_table(spark, path)
     assert out.count() == 5
     day2 = {
         r["user_id"]: r["score"]
@@ -285,18 +295,14 @@ def test_upsert_same_timestamp_update_wins(spark, tmp_path):
         [(u, 1.0, "2024-01-01") for u in range(50)],
         "user_id long, score double, updated_at string",
     )
-    upsert_parquet(v1, path, ["user_id"], "updated_at")
+    upsert_manifest(v1, path, ["user_id"], "updated_at")
     fixed = spark.createDataFrame(
         [(u, 2.0, "2024-01-01") for u in range(50)],
         "user_id long, score double, updated_at string",
     )
-    upsert_parquet(fixed, path, ["user_id"], "updated_at")
-    scores = {r["score"] for r in spark.read.parquet(path).collect()}
+    upsert_manifest(fixed, path, ["user_id"], "updated_at")
+    scores = {r["score"] for r in read_table(spark, path)[0].collect()}
     assert scores == {2.0}
-    # and no tmp copy is left behind
-    import os
-
-    assert not os.path.exists(path + "__tmp")
 
 
 def test_batch_lookups_counted_in_stats(spark, sf_dir):
@@ -329,27 +335,22 @@ def test_health_reports_broken_store(spark, tmp_path):
 
 
 def test_partitioned_upsert_rejects_null_partition(spark, tmp_path):
-    """NULL partition values would dynamic-overwrite
-    __HIVE_DEFAULT_PARTITION__ with only the update rows, silently
-    discarding previously stored NULL-partition keys — refused."""
-    import pytest
-
-    from feature_store_spark.pipelines.sinks import (
-        upsert_parquet_partitioned,
-    )
-
+    """A NULL partition value has no leaf to merge into — refused,
+    and the refused batch publishes nothing."""
     path = str(tmp_path / "snap")
     v1 = spark.createDataFrame(
         [(1, 10.0, "t1", "2024-01-01")],
         "user_id long, score double, v string, snap_date string",
     )
-    upsert_parquet_partitioned(v1, path, ["user_id"], "v", "snap_date")
+    upsert_manifest_partitioned(v1, path, ["user_id"], "v", "snap_date")
     v2 = spark.createDataFrame(
         [(2, 20.0, "t2", None)],
         "user_id long, score double, v string, snap_date string",
     )
     with pytest.raises(ValueError, match="NULL"):
-        upsert_parquet_partitioned(v2, path, ["user_id"], "v", "snap_date")
+        upsert_manifest_partitioned(v2, path, ["user_id"], "v", "snap_date")
+    assert set(resolve_partitions(path, 1)) == {"2024-01-01"}
+    assert read_table(spark, path)[1] == 1
 
 
 def test_stats_with_outliers_empty_input_counts_zero(spark):
@@ -405,31 +406,20 @@ def test_preload_keyset_only_loads_requested_keys(spark, sf_dir):
 
 
 def test_partitioned_upsert_preserves_string_partition_type(spark, tmp_path):
-    """The staged read-back must not let partition-type inference
-    re-type the partition column: a zero-padded string key like
-    '00123' would otherwise come back as int 123, permanently
-    corrupting the store's keys."""
+    """The partition column keeps the writer's type: a zero-padded
+    string key like '00123' must stay the string '00123' (as the
+    manifest's partition key and in the rows read back), never turn
+    into the int 123."""
     path = str(tmp_path / "store")
     v1 = spark.createDataFrame(
         [(1, 10.0, "2024-01-02", "00123"), (2, 20.0, "2024-01-02", "00456")],
         "user_id long, score double, updated_at string, snap string",
     )
-    from feature_store_spark.pipelines.sinks import upsert_parquet_partitioned
-
-    assert upsert_parquet_partitioned(
+    assert upsert_manifest_partitioned(
         v1, path, ["user_id"], "updated_at", "snap"
     ) == 2
-    # the sink controls what lands on disk: the zero-padded string
-    # values must survive as the partition directory names (the old
-    # staged read re-typed them to int 123/456 and wrote those dirs)
-    import os
-
-    dirs = {d for d in os.listdir(path) if d.startswith("snap=")}
-    assert dirs == {"snap=00123", "snap=00456"}
-    # a schema-aware reader gets the strings back verbatim (plain
-    # reads are subject to Spark's reader-side partition-type
-    # inference, which is the READER'S choice, not the sink's)
-    back = spark.read.schema(v1.schema).parquet(path)
+    assert set(resolve_partitions(path, 1)) == {"00123", "00456"}
+    back, _ = read_table(spark, path)
     assert dict(back.dtypes)["snap"] == "string"
     assert {r["snap"] for r in back.select("snap").collect()} == {
         "00123", "00456",
@@ -437,19 +427,18 @@ def test_partitioned_upsert_preserves_string_partition_type(spark, tmp_path):
 
 
 def test_partitioned_upsert_empty_updates_is_noop(spark, tmp_path):
-    from feature_store_spark.pipelines.sinks import upsert_parquet_partitioned
-
     path = str(tmp_path / "store")
     v1 = spark.createDataFrame(
         [(1, 10.0, "2024-01-02", "a")],
         "user_id long, score double, updated_at string, snap string",
     )
-    upsert_parquet_partitioned(v1, path, ["user_id"], "updated_at", "snap")
+    upsert_manifest_partitioned(v1, path, ["user_id"], "updated_at", "snap")
     empty = v1.limit(0)
-    assert upsert_parquet_partitioned(
+    assert upsert_manifest_partitioned(
         empty, path, ["user_id"], "updated_at", "snap"
     ) == 0
-    assert spark.read.parquet(path).count() == 1
+    df, v = read_table(spark, path)
+    assert v == 1 and df.count() == 1  # no commit for the empty batch
 
 
 def test_export_warehouse_refuses_null_dates(spark, tmp_path):
@@ -495,25 +484,42 @@ def test_cache_returns_fresh_copies_and_rejects_empty_type_list(spark, sf_dir):
         fs.get_batch_features([1, 2], [])
 
 
+def _fragmented_table(spark, root, df, key):
+    """Commit ``df`` as a flat manifest table written 32 files wide
+    (static shuffle width, no AQE coalescing, and a round-robin input
+    so the merge's key window really shuffles): a small-file table."""
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in confs]
+    spark.conf.set(confs[0], "false")
+    spark.conf.set(confs[1], "32")
+    try:
+        upsert_manifest(df.repartition(32), root, [key], key)
+    finally:
+        for k, v in zip(confs, prev):
+            spark.conf.set(k, v)
+
+
 def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    from feature_store_spark.pipelines.sinks import compact_parquet
+    """Compacting a small-file table into one target-size file keeps
+    every row and every exact sum."""
+    from feature_store_spark.pipelines.txn import compact_manifest
 
     path = str(tmp_path / "frag")
     df = spark.range(10_000).select(
         F.col("id"), (F.col("id") % 97).alias("k"),
         ((F.col("id") * 31) % 1000).alias("v"),
     )
-    df.repartition(64).write.parquet(path)  # 64 tiny files
-    before = spark.read.parquet(path)
-    n_before = len(before.inputFiles())
-    assert n_before >= 32
+    _fragmented_table(spark, path, df, "id")
+    n_before = len(read_table(spark, path)[0].inputFiles())
+    assert n_before >= 16
 
-    report = compact_parquet(spark, path, target_file_bytes=10**9)
+    report = compact_manifest(spark, path, target_file_bytes=10**9)
     assert report["files_before"] == n_before
     assert report["files_after"] == 1
     assert report["rows"] == 10_000
 
-    after = spark.read.parquet(path)
+    after, v = read_table(spark, path)
+    assert v == 2
     assert len(after.inputFiles()) == 1
     assert after.count() == 10_000
     # content identical (orderless)
@@ -524,28 +530,32 @@ def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
 
 
 def test_compact_parquet_zorder_layout(spark, tmp_path):
-    from feature_store_spark.pipelines.sinks import compact_parquet
+    """OPTIMIZE ZORDER: the rewrite sorts by the Z-order key but
+    stores no key column and no extra rows."""
+    from feature_store_spark.pipelines.txn import compact_manifest
 
     path = str(tmp_path / "fragz")
-    spark.range(5_000).select(
+    df = spark.range(5_000).select(
+        F.col("id"),
         ((F.col("id") * 37) % 500).alias("a"),
         ((F.col("id") * 911 + 13) % 9000).alias("b"),
-    ).repartition(16).write.parquet(path)
+    )
+    _fragmented_table(spark, path, df, "id")
 
-    report = compact_parquet(
+    report = compact_manifest(
         spark, path, target_file_bytes=10**9, zorder_cols=["a", "b"]
     )
     assert report["files_after"] == 1 and report["rows"] == 5_000
-    out = spark.read.parquet(path)
-    assert set(out.columns) == {"a", "b"}  # layout key dropped
+    out, _ = read_table(spark, path)
+    assert set(out.columns) == {"id", "a", "b"}  # layout key dropped
     assert out.count() == 5_000
 
 
 def test_compact_parquet_missing_path_raises(spark, tmp_path):
-    from feature_store_spark.pipelines.sinks import compact_parquet
+    from feature_store_spark.pipelines.txn import compact_manifest
 
-    with pytest.raises(Exception):
-        compact_parquet(spark, str(tmp_path / "absent"))
+    with pytest.raises(ValueError, match="no committed versions"):
+        compact_manifest(spark, str(tmp_path / "absent"))
 
 
 def test_cdc_driven_cache_invalidation(spark, tmp_path):

@@ -14,7 +14,7 @@ from feature_store_spark.streaming import (
     dispatch_events,
     read_event_stream,
     recompute_triggers,
-    run_streaming_upsert,
+    run_streaming_upsert_manifest,
     velocity_windows_stream,
 )
 from feature_store_spark.tables import load_table
@@ -103,11 +103,13 @@ def test_velocity_windows_match_batch(spark, sf_dir, events_dir):
 
 
 def test_streaming_upsert_state(spark, events_dir, tmp_path):
+    from feature_store_spark.pipelines.txn import read_table
+
     state = str(tmp_path / "risk_state")
     ckpt = str(tmp_path / "ckpt")
-    counters = run_streaming_upsert(spark, events_dir, state, ckpt)
+    counters = run_streaming_upsert_manifest(spark, events_dir, state, ckpt)
     assert counters["batches"] >= 1
-    final = spark.read.parquet(state)
+    final, _ = read_table(spark, state)
     # one row per user with >=1 purchase event
     assert final.groupBy("user_id").count().filter("count > 1").count() == 0
     assert final.count() == counters["upserted_users"]
@@ -115,29 +117,35 @@ def test_streaming_upsert_state(spark, events_dir, tmp_path):
 
 
 def test_streaming_upsert_manifest_matches_parquet_state(
-    spark, events_dir, tmp_path
+    spark, sf_dir, events_dir, tmp_path
 ):
-    """The transactional streaming sink commits one manifest version
-    per micro-batch and lands the SAME final state as the parquet
-    foreachBatch sink (identical merge semantics, atomic publish)."""
+    """The streaming sink commits one manifest version per micro-batch
+    and lands exactly the latest purchase per user — last (ts,
+    event_id) wins — folded in Python over the same events."""
     from feature_store_spark.pipelines.txn import read_table
-    from feature_store_spark.streaming.pipeline import (
-        run_streaming_upsert_manifest,
-    )
 
-    state = str(tmp_path / "risk_state_pq")
     root = str(tmp_path / "risk_state_txn")
-    a = run_streaming_upsert(spark, events_dir, state, str(tmp_path / "c1"))
     b = run_streaming_upsert_manifest(
         spark, events_dir, root, str(tmp_path / "c2")
     )
     assert b["versions"] >= b["batches"] >= 1
-    assert b["upserted_users"] == a["upserted_users"] > 0
-    txn_df, _ = read_table(spark, root)
-    pq = spark.read.parquet(state)
-    assert sorted(map(tuple, txn_df.collect())) == sorted(
-        map(tuple, pq.collect())
+    model: dict = {}
+    purchases = (
+        dispatch_events(load_table(spark, sf_dir, "events"))
+        .filter(F.col("valid") & (F.col("event_type") == "purchase"))
+        .select("user_id", "ts", "event_id", "value")
+        .collect()
     )
+    for u, ts, eid, value in purchases:
+        if u not in model or (ts, eid) > model[u][:2]:
+            model[u] = (ts, eid, value)
+    assert b["upserted_users"] == len(model) > 0
+    txn_df, _ = read_table(spark, root)
+    got = {
+        r["user_id"]: (r["ts"], r["__seq"]["event_id"], r["risk_score"])
+        for r in txn_df.collect()
+    }
+    assert got == model
 
 
 def test_streaming_warehouse_append_partition_scoped(

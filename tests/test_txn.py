@@ -1,6 +1,6 @@
 """Manifest-commit transactional upsert (pipelines/txn.py): the
-multi-writer and crash-safety contracts upsert_parquet cannot give
-(reference parity: atomic INSERT … ON CONFLICT,
+multi-writer and crash-safety contracts a plain parquet overwrite
+cannot give (reference parity: atomic INSERT … ON CONFLICT,
 `src/pipelines/batch_pipeline.py:221-310`)."""
 
 from __future__ import annotations
@@ -159,35 +159,63 @@ def test_upsert_manifest_schema_evolution(spark, tmp_path):
 
 
 def test_daily_pipeline_transactional_matches_parquet(spark, sf_dir, tmp_path):
-    """run_daily_pipeline(transactional=True) lands the same feature
-    stores through atomic manifest commits."""
+    """run_daily_pipeline lands each feature store as one atomic
+    manifest commit holding exactly the day's derived frames, and the
+    warehouse as one partition-scoped commit holding their serving
+    join; ``transactional=False`` is refused."""
     from feature_store_spark.pipelines.drivers import run_daily_pipeline
+    from feature_store_spark.pipelines.features import (
+        derive_risk_features,
+        derive_transaction_features,
+        derive_user_features,
+    )
     from feature_store_spark.pipelines.txn import latest_version, read_table
+    from feature_store_spark.tables import REF_DATE, load_table
 
-    pq_out = str(tmp_path / "pq")
-    tx_out = str(tmp_path / "tx")
-    a = run_daily_pipeline(spark, sf_dir, pq_out)
-    b = run_daily_pipeline(spark, sf_dir, tx_out, transactional=True)
-    assert a.status == b.status == "SUCCESS"
-    assert a.counts == b.counts
-    for kind in ("user_features", "transaction_features", "risk_features"):
-        tx_df, _ = read_table(spark, f"{tx_out}/{kind}")
-        pq_df = spark.read.parquet(f"{pq_out}/{kind}")
-        assert sorted(map(tuple, tx_df.collect())) == sorted(
-            map(tuple, pq_df.collect())
-        ), kind
-        assert latest_version(f"{tx_out}/{kind}") == 1
+    out = str(tmp_path / "tx")
+    res = run_daily_pipeline(spark, sf_dir, out)
+    assert res.status == "SUCCESS"
+    customer, orders, lineitem, events = (
+        load_table(spark, sf_dir, t)
+        for t in ("customer", "orders", "lineitem", "events")
+    )
+    stamp = F.to_timestamp(F.lit(f"{REF_DATE} 00:00:00"))
+    want = {
+        "user_features": derive_user_features(customer, orders),
+        "transaction_features": derive_transaction_features(
+            orders, lineitem
+        ),
+        "risk_features": derive_risk_features(
+            customer, orders, lineitem, events
+        ),
+    }
+    want = {k: df.withColumn("updated_at", stamp) for k, df in want.items()}
+    for kind, frame in want.items():
+        got, v = read_table(spark, f"{out}/{kind}")
+        assert v == 1, kind
+        assert got.columns == frame.columns, kind
+        rows = sorted(map(tuple, frame.collect()))
+        assert sorted(map(tuple, got.collect())) == rows, kind
+        assert res.counts[kind] == len(rows), kind
     # the warehouse history lands through the PARTITION-SCOPED commit
-    # and carries the same rows as the dynamic-overwrite layout
-    wh = "warehouse/serving_features"
-    tx_wh, _ = read_table(spark, f"{tx_out}/{wh}")
-    pq_wh = spark.read.parquet(f"{pq_out}/{wh}")
-    assert sorted(tx_wh.columns) == sorted(pq_wh.columns)
-    cols = sorted(tx_wh.columns)
+    # and carries the serving join of the same frames, dated ref_date
+    wh = f"{out}/warehouse/serving_features"
+    serving = (
+        want["user_features"]
+        .join(want["transaction_features"].drop("updated_at"), "user_id", "left")
+        .join(want["risk_features"].drop("updated_at"), "user_id", "left")
+        .withColumn("partition_date", F.to_date("updated_at"))
+    )
+    got_wh, _ = read_table(spark, wh)
+    cols = sorted(serving.columns)
+    assert sorted(got_wh.columns) == cols
     assert sorted(
-        map(tuple, tx_wh.select(*cols).collect())
-    ) == sorted(map(tuple, pq_wh.select(*cols).collect()))
-    assert latest_version(f"{tx_out}/{wh}") == 1
+        map(tuple, got_wh.select(*cols).collect())
+    ) == sorted(map(tuple, serving.select(*cols).collect()))
+    assert latest_version(wh) == 1
+    with pytest.raises(ValueError, match="migrate_to_manifest"):
+        run_daily_pipeline(spark, sf_dir, out, transactional=False)
+    assert latest_version(wh) == 1
 
 
 def test_table_changes_between_versions(spark, tmp_path):
@@ -595,28 +623,18 @@ def test_manifest_versions_beyond_8_digits_stay_visible(tmp_path):
 
 
 def test_mode_toggle_raises_instead_of_wiping(spark, tmp_path):
-    """ADVICE r4 (medium): flipping run_daily_pipeline/upsert between
-    plain-parquet and transactional modes on an EXISTING store must
-    raise with a migration hint, not silently commit a snapshot that
-    drops every previously upserted key."""
-    from feature_store_spark.pipelines.sinks import upsert_parquet
-
-    # plain store first, then a transactional upsert at the same root
+    """ADVICE r4 (medium): a manifest upsert onto an EXISTING plain
+    parquet store must raise with a migration hint, not silently
+    commit a snapshot that drops every previously stored key."""
     plain = str(tmp_path / "plain")
-    upsert_parquet(_df(spark, [(1, "a", 1)]), plain, ["user_id"], "ts")
-    with pytest.raises(ValueError, match="non-transactional"):
+    _df(spark, [(1, "a", 1)]).write.parquet(plain)
+    with pytest.raises(ValueError, match="non-transactional.*migrate_to_manifest"):
         upsert_manifest(_df(spark, [(2, "b", 2)]), plain, ["user_id"], "ts")
     # the plain store is untouched by the refused commit
     assert {
         r["user_id"] for r in spark.read.parquet(plain).collect()
     } == {1}
-
-    # transactional store first, then a plain upsert at the same root
-    tx = str(tmp_path / "tx")
-    upsert_manifest(_df(spark, [(1, "a", 1)]), tx, ["user_id"], "ts")
-    with pytest.raises(ValueError, match="transactional"):
-        upsert_parquet(_df(spark, [(2, "b", 2)]), tx, ["user_id"], "ts")
-    assert _snap(spark, tx) == {1: ("a", 1)}
+    assert not os.path.exists(os.path.join(plain, "_manifests"))
 
 
 def test_time_travel_and_vacuum(spark, tmp_path):

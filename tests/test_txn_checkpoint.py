@@ -306,7 +306,7 @@ def test_drop_partitions_and_warehouse_expiration(spark, tmp_path):
     """Partition-level retention: drop_partitions publishes a
     zero-data-work 'removed' commit — the tip loses the partitions,
     time travel still sees them, vacuum reclaims the leaves, a re-run
-    is a no-op — and export_warehouse(transactional=True) uses it to
+    is a no-op — and export_warehouse uses it to
     actually EXPIRE date partitions past retention (the reference's
     BigQuery partition_expiration_days analogue,
     sql/bigquery_schema.sql:18-26)."""
@@ -364,21 +364,20 @@ def test_drop_partitions_and_warehouse_expiration(spark, tmp_path):
         drop_partitions(flat, ["x"])
 
     # warehouse expiration: day far past retention is dropped on the
-    # next transactional export
+    # next export
     wh = str(tmp_path / "wh")
     old_day = spark.createDataFrame(
         [(1, 1.0, "2020-01-01 00:00:00")],
         "user_id bigint, score double, updated_at string",
     ).withColumn("updated_at", F.to_timestamp("updated_at"))
-    export_warehouse(old_day, wh, transactional=True)  # no ref_date: kept
+    export_warehouse(old_day, wh)  # no ref_date: kept
     new_day = spark.createDataFrame(
         [(1, 2.0, "2024-06-01 00:00:00")],
         "user_id bigint, score double, updated_at string",
     ).withColumn("updated_at", F.to_timestamp("updated_at"))
     assert (
         export_warehouse(
-            new_day, wh, transactional=True,
-            retention_days=730, ref_date="2024-06-02",
+            new_day, wh, retention_days=730, ref_date="2024-06-02",
         )
         == 1
     )

@@ -382,7 +382,7 @@ def test_layout_mixing_guards(spark, tmp_path):
 def test_transactional_warehouse_export_is_partition_scoped(
     spark, tmp_path
 ):
-    """export_warehouse(transactional=True): each day's export commits
+    """export_warehouse: each day's export commits
     only its own date partition — day 1's leaf files stay byte-
     identical after day 2 lands — and the return value is THIS RUN's
     rows, not the table total."""
@@ -393,7 +393,7 @@ def test_transactional_warehouse_export_is_partition_scoped(
         [(1, 10.0, "2024-06-01 00:00:00"), (2, 20.0, "2024-06-01 00:00:00")],
         "user_id bigint, score double, updated_at string",
     ).withColumn("updated_at", F.to_timestamp("updated_at"))
-    assert export_warehouse(d1, path, transactional=True) == 2
+    assert export_warehouse(d1, path) == 2
     leaf1 = txn.resolve_partitions(path, 1)["2024-06-01"]
     before = _dir_fingerprint(os.path.join(path, leaf1["dir"]))
 
@@ -401,23 +401,23 @@ def test_transactional_warehouse_export_is_partition_scoped(
         [(1, 11.0, "2024-06-02 00:00:00")],
         "user_id bigint, score double, updated_at string",
     ).withColumn("updated_at", F.to_timestamp("updated_at"))
-    assert export_warehouse(d2, path, transactional=True) == 1  # run rows
+    assert export_warehouse(d2, path) == 1  # run rows
     assert txn.resolve_partitions(path, 2)["2024-06-01"] == leaf1
     assert _dir_fingerprint(os.path.join(path, leaf1["dir"])) == before
     df, _ = read_table(spark, path)
     assert df.count() == 3  # history accretes across dates
     # re-running day 2 is idempotent (LWW tie -> update wins)
-    assert export_warehouse(d2, path, transactional=True) == 1
+    assert export_warehouse(d2, path) == 1
     df, _ = read_table(spark, path)
     assert df.count() == 3
 
 
 def test_transactional_export_keeps_multirow_per_key(spark, tmp_path):
-    """ADVICE r5: transactional=True used to run latest_per_key on
+    """ADVICE r5: the manifest export used to run latest_per_key on
     [cluster_col, partition_date], silently collapsing multi-row-per-
-    key-per-date exports to one row while the plain mode wrote every
-    row. Both modes must now write IDENTICAL row sets (key_cols=None
-    passthrough)."""
+    key-per-date exports to one row. Every input row must land
+    (key_cols=None passthrough), as in a dynamic partition
+    overwrite."""
     from feature_store_spark.pipelines.sinks import export_warehouse
 
     rows = [
@@ -431,12 +431,9 @@ def test_transactional_export_keeps_multirow_per_key(spark, tmp_path):
             rows, "user_id bigint, score double, updated_at string"
         ).withColumn("updated_at", F.to_timestamp("updated_at"))
 
-    plain, txn_path = str(tmp_path / "plain"), str(tmp_path / "txn")
-    assert export_warehouse(frame(), plain, transactional=False) == 3
-    assert export_warehouse(frame(), txn_path, transactional=True) == 3
-    want = sorted(
-        map(tuple, spark.read.parquet(plain).drop("partition_date").collect())
-    )
+    txn_path = str(tmp_path / "txn")
+    assert export_warehouse(frame(), txn_path) == 3
+    want = sorted(map(tuple, frame().collect()))
     got_df, _ = read_table(spark, txn_path)
     got = sorted(map(tuple, got_df.drop("partition_date").collect()))
     assert got == want and len(got) == 3
@@ -630,20 +627,17 @@ def test_compact_manifest_typed_partition_rekey(spark, tmp_path):
 
 
 def test_migrate_to_manifest_both_layouts(spark, tmp_path):
-    """The migration path the toggle guards point at: a plain store
-    becomes version 1 of a fresh manifest table (flat or partition-
-    scoped), source untouched, non-empty destinations refused."""
-    from feature_store_spark.pipelines.sinks import (
-        upsert_parquet,
-        upsert_parquet_partitioned,
-    )
+    """The migration path the foreign-store guard points at: a plain
+    store becomes version 1 of a fresh manifest table (flat or
+    partition-scoped), source untouched, non-empty destinations
+    refused."""
     from feature_store_spark.pipelines.txn import migrate_to_manifest
 
     flat_src = str(tmp_path / "flat_src")
     rows = spark.createDataFrame(
         [(1, "a", 1), (2, "b", 2)], "user_id bigint, v string, ts bigint"
     )
-    upsert_parquet(rows, flat_src, ["user_id"], "ts")
+    rows.write.parquet(flat_src)
     dest = str(tmp_path / "flat_dest")
     assert migrate_to_manifest(spark, flat_src, dest, ["user_id"], "ts") == 2
     df, v = read_table(spark, dest)
@@ -653,13 +647,9 @@ def test_migrate_to_manifest_both_layouts(spark, tmp_path):
         migrate_to_manifest(spark, flat_src, dest, ["user_id"], "ts")
 
     part_src = str(tmp_path / "part_src")
-    upsert_parquet_partitioned(
-        _df(spark, [(1, "a", 1, "d1"), (2, "b", 1, "d2")]),
-        part_src,
-        ["user_id"],
-        "ts",
-        "p",
-    )
+    _df(spark, [(1, "a", 1, "d1"), (2, "b", 1, "d2")]).write.partitionBy(
+        "p"
+    ).parquet(part_src)
     part_dest = str(tmp_path / "part_dest")
     n = migrate_to_manifest(
         spark, part_src, part_dest, ["user_id"], "ts", partition_col="p"
@@ -671,23 +661,55 @@ def test_migrate_to_manifest_both_layouts(spark, tmp_path):
     assert _snap(spark, part_dest)[(2, "d2")] == ("b2", 2)
 
 
-def test_local_fs_path_is_not_fooled_by_url_chars(tmp_path):
-    """The toggle guards must fire on plain paths containing '#', '?'
-    or a first-segment ':' — urlparse would strip them into
-    fragment/query/scheme and silently skip the check."""
-    from feature_store_spark.pipelines.sinks import _local_fs_path
+def test_migrate_to_manifest_keeps_partition_values(spark, tmp_path):
+    """Hive partition values migrate verbatim: zero-padded strings
+    stay strings (Spark's partition-type inference alone would read
+    snap=00123 as the int 123), while the export layout's ISO dates
+    still migrate as dates."""
+    from feature_store_spark.pipelines.txn import migrate_to_manifest
 
-    assert _local_fs_path("/data/wh#v2") == "/data/wh#v2"
-    assert _local_fs_path("/data/wh?x=1") == "/data/wh?x=1"
-    assert _local_fs_path("runs:2024/wh") == "runs:2024/wh"
-    assert _local_fs_path("file:///data/wh") == "/data/wh"
-    assert _local_fs_path("s3://bucket/wh") is None
+    padded = str(tmp_path / "padded")
+    spark.createDataFrame(
+        [(1, 10.0, 1, "00123"), (2, 20.0, 1, "00456")],
+        "user_id bigint, score double, ts bigint, snap string",
+    ).write.partitionBy("snap").parquet(padded)
+    for part_col, dest in ((None, "flat"), ("snap", "part")):
+        root = str(tmp_path / dest)
+        assert migrate_to_manifest(
+            spark, padded, root, ["user_id"], "ts", partition_col=part_col
+        ) == 2
+        df, _ = read_table(spark, root)
+        assert dict(df.dtypes)["snap"] == "string"
+        assert {r["snap"] for r in df.collect()} == {"00123", "00456"}
+    assert set(txn.resolve_partitions(str(tmp_path / "part"), 1)) == {
+        "00123", "00456",
+    }
+    # Spark's inference setting is restored after the call
+    assert spark.read.parquet(padded).schema["snap"].dataType.typeName() == (
+        "integer"
+    )
+
+    dated = str(tmp_path / "dated")
+    spark.createDataFrame(
+        [(1, 1.0, "2024-01-02 08:00:00"), (2, 2.0, "2024-01-03 09:00:00")],
+        "user_id bigint, score double, updated_at string",
+    ).withColumn("updated_at", F.to_timestamp("updated_at")).withColumn(
+        "partition_date", F.to_date("updated_at")
+    ).write.partitionBy("partition_date").parquet(dated)
+    wh = str(tmp_path / "wh")
+    assert migrate_to_manifest(
+        spark, dated, wh, ["user_id"], "updated_at",
+        partition_col="partition_date",
+    ) == 2
+    df, _ = read_table(spark, wh)
+    assert dict(df.dtypes)["partition_date"] == "date"
+    assert set(txn.resolve_partitions(wh, 1)) == {"2024-01-02", "2024-01-03"}
 
 
 def test_warehouse_rerun_with_dropped_key_removes_it(spark, tmp_path):
-    """export_warehouse(transactional=True) re-run for the same date
-    with a key removed upstream must drop that key — identical
-    semantics to the non-transactional dynamic overwrite."""
+    """export_warehouse re-run for the same date with a key removed
+    upstream must drop that key — dynamic partition overwrite
+    semantics."""
     from feature_store_spark.pipelines.sinks import export_warehouse
 
     path = str(tmp_path / "wh")
@@ -697,19 +719,11 @@ def test_warehouse_rerun_with_dropped_key_removes_it(spark, tmp_path):
     export_warehouse(
         mk([(1, 10.0, "2024-06-01 00:00:00"), (2, 20.0, "2024-06-01 00:00:00")]),
         path,
-        transactional=True,
     )
-    export_warehouse(
-        mk([(1, 11.0, "2024-06-01 00:00:00")]), path, transactional=True
-    )
+    export_warehouse(mk([(1, 11.0, "2024-06-01 00:00:00")]), path)
     df, _ = read_table(spark, path)
     got = {r["user_id"]: r["score"] for r in df.collect()}
     assert got == {1: 11.0}  # user 2's stale row is GONE
-    # and the toggle raises instead of forking the root
-    with pytest.raises(ValueError, match="transactional"):
-        export_warehouse(
-            mk([(3, 1.0, "2024-06-02 00:00:00")]), path, transactional=False
-        )
 
 
 def test_nullability_only_difference_is_not_a_schema_change(spark, tmp_path):

@@ -445,7 +445,7 @@ def test_bloom_range_ops_ignore_bloom(spark, tmp_path):
 def test_transactional_warehouse_export_records_skipping_stats(
     spark, tmp_path
 ):
-    """export_warehouse(transactional=True) auto-records cluster-column
+    """export_warehouse auto-records cluster-column
     stats + bloom, so warehouse point lookups skip non-matching date
     leaves — the BigQuery-clustering block-pruning analogue."""
     import datetime
@@ -460,7 +460,7 @@ def test_transactional_warehouse_export_records_skipping_stats(
     df = spark.createDataFrame(
         rows, "user_id bigint, updated_at timestamp, score double"
     )
-    n = export_warehouse(df, path, transactional=True, ref_date="2024-01-05")
+    n = export_warehouse(df, path, ref_date="2024-01-05")
     assert n == 200
     got, _ = read_table(spark, path, where=[("user_id", "=", 150)])
     assert [r["user_id"] for r in got.collect()] == [150]
