@@ -11,6 +11,7 @@ in any computation path (SURVEY §7.1 determinism rule).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,7 @@ from feature_store_spark.pipelines.features import (
 )
 from feature_store_spark.pipelines import txn
 from feature_store_spark.pipelines.sinks import export_warehouse
+from feature_store_spark.session import run_concurrently
 from feature_store_spark.tables import EVENTS_NOW, REF_DATE, load_table
 
 
@@ -54,10 +56,18 @@ def run_daily_pipeline(
     commits, safe when two schedulers race a repair run against the
     daily run), export the serving join to the warehouse layout.
 
-    The three derivations share the orders/lineitem scans only through
-    the parquet cache — at 100 TB each stage is an independent job and
-    the offline store is the hand-off point (materialized view role,
-    SURVEY §4).
+    The three feature groups are independent: each derives, caches,
+    counts and commits to its own table on its own driver thread
+    (``session.run_concurrently``), so their per-job launch and
+    collect floors overlap instead of adding up. The derivations
+    share the orders/lineitem scans only through the parquet cache —
+    at 100 TB each group is an independent job and the offline store
+    is the hand-off point (materialized view role, SURVEY §4). Each
+    table commit is still atomic on its own; a failing group raises
+    only after the other groups have settled, so a group that
+    succeeded stays committed and the export never runs. A re-run
+    converges: its upserts are last-writer-wins under the same
+    ``updated_at`` stamp, and the export replaces its date.
 
     Semantics pinned by round-3 review: ``counts`` are THIS RUN'S
     derived row counts (a zero-row derivation day is a visible
@@ -82,49 +92,56 @@ def run_daily_pipeline(
             "plain parquet store over with txn.migrate_to_manifest"
         )
 
-    def _merge(df, path):
-        return txn.upsert_manifest(df, path, ["user_id"], "updated_at")
-
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     events = load_table(spark, sf_dir, "events")
 
     stamp = F.to_timestamp(F.lit(f"{ref_date} 00:00:00"))
-    counts: dict[str, int] = {}
-    store_counts: dict[str, int] = {}
-    uf = derive_user_features(
-        customer, orders, ref_date=ref_date
-    ).withColumn("updated_at", stamp).cache()
-    counts["user_features"] = uf.count()
-    store_counts["user_features"] = _merge(uf, f"{out_dir}/user_features")
-    tf = derive_transaction_features(
-        orders, lineitem, ref_date=ref_date
-    ).withColumn("updated_at", stamp).cache()
-    counts["transaction_features"] = tf.count()
-    store_counts["transaction_features"] = _merge(
-        tf, f"{out_dir}/transaction_features"
-    )
-    rf = derive_risk_features(
-        customer, orders, lineitem, events, ref_date=ref_date
-    ).withColumn("updated_at", stamp).cache()
-    counts["risk_features"] = rf.count()
-    store_counts["risk_features"] = _merge(rf, f"{out_dir}/risk_features")
+    groups = {
+        "user_features": lambda: derive_user_features(
+            customer, orders, ref_date=ref_date
+        ),
+        "transaction_features": lambda: derive_transaction_features(
+            orders, lineitem, ref_date=ref_date
+        ),
+        "risk_features": lambda: derive_risk_features(
+            customer, orders, lineitem, events, ref_date=ref_date
+        ),
+    }
 
-    serving = uf.join(
-        tf.drop("updated_at"), "user_id", "left"
-    ).join(rf.drop("updated_at"), "user_id", "left")
-    # the warehouse history gets the PARTITION-SCOPED commit: each
-    # daily run touches one date, untouched history carries forward
-    counts["warehouse_rows"] = export_warehouse(
-        serving,
-        f"{out_dir}/warehouse/serving_features",
-        date_col="updated_at",
-        cluster_col="user_id",
-        ref_date=ref_date,
-    )
-    for frame in (uf, tf, rf):
-        frame.unpersist()
+    cached: list[DataFrame] = []
+
+    def land(kind, derive):
+        df = derive().withColumn("updated_at", stamp).cache()
+        cached.append(df)
+        n = df.count()
+        stored = txn.upsert_manifest(
+            df, f"{out_dir}/{kind}", ["user_id"], "updated_at"
+        )
+        return df, n, stored
+
+    try:
+        (uf, tf, rf), n_rows, n_stored = zip(*run_concurrently(
+            *(partial(land, kind, derive) for kind, derive in groups.items())
+        ))
+        counts = dict(zip(groups, n_rows))
+        store_counts = dict(zip(groups, n_stored))
+        serving = uf.join(
+            tf.drop("updated_at"), "user_id", "left"
+        ).join(rf.drop("updated_at"), "user_id", "left")
+        # the warehouse history gets the PARTITION-SCOPED commit: each
+        # daily run touches one date, untouched history carries forward
+        counts["warehouse_rows"] = export_warehouse(
+            serving,
+            f"{out_dir}/warehouse/serving_features",
+            date_col="updated_at",
+            cluster_col="user_id",
+            ref_date=ref_date,
+        )
+    finally:
+        for frame in cached:
+            frame.unpersist()
     if vacuum_keep_last is not None:
         # retention: a daily run accretes one version per table per
         # day forever without it; keep_last versions stay
@@ -181,17 +198,23 @@ def run_quality_report(
 ) -> dict[str, Any]:
     """Data-quality sweep (reference `src/pipelines/data_quality.py`):
     freshness (events vs injected now), completeness per column,
-    3σ anomaly profile, and threshold alerts — each one aggregate job,
-    results assembled driver-side (scalar outputs only)."""
+    3σ anomaly profile, and threshold alerts — the three scans are
+    independent, so they collect concurrently
+    (``session.run_concurrently``); results are assembled driver-side
+    (scalar outputs only)."""
     events = load_table(spark, sf_dir, "events")
     docs = load_table(spark, sf_dir, "documents")
     orders = load_table(spark, sf_dir, "orders")
 
-    fresh = freshness_report(events, "ts", now, FRESHNESS_MAX_HOURS).collect()[0]
-    comp_rows = completeness_report(
-        docs, ["text", "lang", "source", "n_chars"], "documents"
-    ).collect()
-    stats = stats_with_outliers(orders, "o_totalprice").collect()[0]
+    fresh, comp_rows, stats = run_concurrently(
+        lambda: freshness_report(
+            events, "ts", now, FRESHNESS_MAX_HOURS
+        ).collect()[0],
+        lambda: completeness_report(
+            docs, ["text", "lang", "source", "n_chars"], "documents"
+        ).collect(),
+        lambda: stats_with_outliers(orders, "o_totalprice").collect()[0],
+    )
 
     completeness = {
         r["column_name"]: r["completeness_ratio"] for r in comp_rows

@@ -57,38 +57,45 @@ def export_warehouse(
     are filtered out, and after the commit the date partitions past
     retention are DROPPED atomically via ``txn.drop_partitions`` —
     real expiration, like BigQuery's ``partition_expiration_days``.
+    A row whose date is NULL or unparseable raises ``ValueError``, and
+    nothing is committed.
     """
     out = df.withColumn("partition_date", F.to_date(F.col(date_col)))
-    # a NULL (or unparseable) date has no partition to land in: it
-    # would either vanish through the retention filter or be refused
-    # by the partitioned commit after the scan — refuse it up front
-    # with the column named
-    if out.filter(F.col("partition_date").isNull()).limit(1).count() > 0:
-        raise ValueError(
-            f"export_warehouse: rows with NULL/unparseable {date_col!r} "
-            "cannot be partitioned safely — fill or drop them first"
-        )
+    date = F.col("partition_date")
     if retention_days is not None and ref_date is not None:
+        # NULL dates pass the retention filter, so they reach the
+        # commit's refusal below instead of vanishing silently
         out = out.filter(
-            F.col("partition_date")
-            >= F.date_sub(F.to_date(F.lit(ref_date)), retention_days)
+            date.isNull()
+            | (date >= F.date_sub(F.to_date(F.lit(ref_date)), retention_days))
         )
     cluster_type = out.schema[cluster_col].dataType.typeName()
     obs = Observation()
-    txn.upsert_manifest_partitioned(
-        out.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .repartition(F.col(cluster_col))
-        .sortWithinPartitions(cluster_col),
-        path,
-        key_cols=None,  # passthrough: every input row lands
-        order_col=date_col,
-        partition_col="partition_date",
-        mode="replace",
-        stats_cols=[cluster_col],
-        bloom_cols=(
-            [cluster_col] if cluster_type in txn._BLOOM_TYPES else None
-        ),
-    )
+    try:
+        txn.upsert_manifest_partitioned(
+            out.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .repartition(F.col(cluster_col))
+            .sortWithinPartitions(cluster_col),
+            path,
+            key_cols=None,  # passthrough: every input row lands
+            order_col=date_col,
+            partition_col="partition_date",
+            mode="replace",
+            stats_cols=[cluster_col],
+            bloom_cols=(
+                [cluster_col] if cluster_type in txn._BLOOM_TYPES else None
+            ),
+        )
+    except ValueError as e:
+        # a NULL (or unparseable) date has no partition to land in;
+        # the commit refuses it from its partition collect, before
+        # writing anything — name the source column
+        if "NULL 'partition_date'" not in str(e):
+            raise
+        raise ValueError(
+            f"export_warehouse: rows with NULL/unparseable {date_col!r} "
+            "cannot be partitioned safely — fill or drop them first"
+        ) from e
     if retention_days is not None and ref_date is not None:
         # a zero-data-work commit removes date partitions past
         # retention (leaves reclaimed by the next vacuum; time travel

@@ -12,7 +12,9 @@ less critical.
 
 Small driver-side frames (lookup keys, partition-token maps, metadata
 tables) are built with :func:`local_frame`, never with
-``createDataFrame(<list>)``.
+``createDataFrame(<list>)``. Independent actions on one driver are
+submitted together through :func:`run_concurrently`, the package's one
+thread-pool site.
 """
 
 from __future__ import annotations
@@ -97,3 +99,34 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def run_concurrently(*calls):
+    """Run the zero-argument ``calls`` on one driver thread each and
+    return their results in call order.
+
+    Each job on a local cluster pays a fixed floor (collect round trip
+    plus job launch) that is mostly driver wait, not executor work;
+    independent actions submitted from concurrent threads overlap
+    those floors. Every call is wrapped with
+    ``inheritable_thread_target`` here, on the calling thread, so the
+    jobs it runs carry the caller's job group, description and
+    scheduler pool (``cancelJobGroup`` and per-group accounting still
+    see them). Every call settles before this returns: a failure is
+    re-raised, the first in call order, only after the other calls
+    have finished, so no commit is left running behind the caller.
+
+    No call run through here may change session conf: a conf is
+    session-wide, so it would leak into its siblings' plans
+    (``txn.migrate_to_manifest`` does, and stays off these paths)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(call))
+            for call in calls
+        ]
+    return [f.result() for f in futures]

@@ -3,6 +3,8 @@ migration validation)."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,6 +84,77 @@ def test_daily_pipeline_forwards_ref_date(spark, sf_dir, tmp_path):
         load_table(spark, sf_dir, "orders"),
     )
     assert not default.exceptAll(direct).isEmpty()
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _job_ids(spark, group):
+    # the status tracker is fed by the listener bus; drain it first
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_daily_jobs_carry_the_callers_job_group(spark, sf_dir, tmp_path):
+    """The feature groups and quality scans run on worker threads; their
+    jobs must still carry the caller's job group (``cancelJobGroup``
+    and per-group accounting rely on it), so no job of these calls
+    lands outside the group."""
+    sc = spark.sparkContext
+    ungrouped, grouped = _job_ids(spark, None), _job_ids(spark, "daily-test")
+    sc.setJobGroup("daily-test", "job group inheritance")
+    try:
+        run_daily_pipeline(spark, sf_dir, str(tmp_path / "store"))
+        run_quality_report(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _job_ids(spark, None) == ungrouped
+    # at least one job per upsert: three groups and the export
+    assert len(_job_ids(spark, "daily-test") - grouped) >= 4
+
+
+def test_daily_pipeline_failing_group_settles_then_raises(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One failing feature group: the run raises that group's own
+    exception after the other groups have settled, leaves no worker
+    thread behind and no half-written table, and a clean re-run lands
+    exactly what a fresh run does."""
+    from feature_store_spark.pipelines import drivers
+
+    boom = RuntimeError("transaction derivation failed")
+
+    def fail(*args, **kwargs):
+        raise boom
+
+    monkeypatch.setattr(drivers, "derive_transaction_features", fail)
+    out, fresh = str(tmp_path / "store"), str(tmp_path / "fresh")
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError) as info:
+        run_daily_pipeline(spark, sf_dir, out)
+    assert info.value is boom
+    assert set(threading.enumerate()) <= threads
+    roots = (
+        "user_features",
+        "transaction_features",
+        "risk_features",
+        "warehouse/serving_features",
+    )
+    for kind in roots:
+        if latest_version(f"{out}/{kind}"):
+            assert read_table(spark, f"{out}/{kind}")[0].count() > 0
+    assert latest_version(f"{out}/transaction_features") == 0
+    assert latest_version(f"{out}/warehouse/serving_features") == 0
+
+    monkeypatch.undo()
+    assert run_daily_pipeline(spark, sf_dir, out).status == "SUCCESS"
+    run_daily_pipeline(spark, sf_dir, fresh)
+    for kind in roots:
+        assert _rows(read_table(spark, f"{out}/{kind}")[0]) == _rows(
+            read_table(spark, f"{fresh}/{kind}")[0]
+        ), kind
 
 
 def test_quality_report(spark, sf_dir):

@@ -915,3 +915,48 @@ def test_driver_side_frames_go_through_local_frame():
                         f"{path.relative_to(pkg)}:{node.lineno}"
                     )
     assert not offenders, offenders
+
+
+def test_driver_threads_go_through_run_concurrently():
+    """Concurrent driver threads are started in one place,
+    ``session.run_concurrently``, which hands each worker the caller's
+    job group. No other code in the package may use a thread pool,
+    ``threading.Thread``, ``InheritableThread`` or
+    ``concurrent.futures``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "feature_store_spark"
+    banned = {"ThreadPoolExecutor", "Thread", "InheritableThread"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "session.py" and path.parent == pkg:
+            for node in tree.body:
+                if (
+                    isinstance(node, ast.FunctionDef)
+                    and node.name == "run_concurrently"
+                ):
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if id(node) in allowed:
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                mods = [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom):
+                    mods.append(node.module or "")
+                hit = any(
+                    m.split(".")[0] in ("threading", "concurrent")
+                    or m in banned
+                    for m in mods
+                )
+            elif isinstance(node, ast.Attribute):
+                hit = node.attr in banned
+            elif isinstance(node, ast.Name):
+                hit = node.id in banned
+            else:
+                hit = False
+            if hit:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, offenders

@@ -451,6 +451,29 @@ def test_export_warehouse_refuses_null_dates(spark, tmp_path):
         export_warehouse(df, str(tmp_path / "wh"))
 
 
+def test_export_warehouse_refuses_null_dates_under_retention(spark, tmp_path):
+    """With ``ref_date`` set, the retention filter keeps NULL-date rows
+    so the commit refuses them, rather than dropping them silently;
+    nothing lands, on a fresh root or on an existing one."""
+    from feature_store_spark.pipelines.sinks import export_warehouse
+    from feature_store_spark.pipelines.txn import latest_version
+
+    wh = str(tmp_path / "wh")
+    good = spark.createDataFrame(
+        [(1, "2024-01-02")], "user_id long, updated_at string"
+    )
+    bad = spark.createDataFrame(
+        [(1, "2024-01-02"), (2, None)], "user_id long, updated_at string"
+    )
+    with pytest.raises(ValueError, match="NULL/unparseable 'updated_at'"):
+        export_warehouse(bad, wh, ref_date="2024-01-02")
+    assert latest_version(wh) == 0
+    assert export_warehouse(good, wh, ref_date="2024-01-02") == 1
+    with pytest.raises(ValueError, match="NULL/unparseable 'updated_at'"):
+        export_warehouse(bad, wh, ref_date="2024-01-02")
+    assert latest_version(wh) == 1
+
+
 def test_synthetic_users_layout_independent(spark):
     """Seeded synthetic data must be identical under different
     partition layouts (F.rand would differ: it seeds per partition
