@@ -810,6 +810,101 @@ def read_table(
     return df, v
 
 
+def read_rows(
+    root: str,
+    version: int,
+    key_col: str,
+    keys: Sequence | None,
+    max_bytes: int | None = None,
+) -> list | None:
+    """The live rows of committed ``version`` whose ``key_col`` is in
+    ``keys`` (every row when ``keys`` is None), read on the driver with
+    pyarrow straight from the snapshot's parquet leaves: no Spark job.
+    The rows equal ``read_table(...)`` filtered on the keys and
+    collected, as a multiset.
+
+    It reads what ``read_table`` reads: the same ``_leaves``, pruned by
+    ``_entry_may_match`` on ``key_col in keys`` (stats and Bloom
+    filters), each leaf's base and appended dirs, minus the positions
+    its deletion vector names, under the pinned schema (physical names
+    renamed to logical, missing columns null-filled, narrower types
+    widened). INT96 timestamps, Spark's default encoding, are read at
+    microsecond unit, since nanoseconds overflow outside 1677-2262.
+
+    Returns None, having read no data, when the pruned leaves' files
+    hold more than ``max_bytes``: the caller reads through Spark
+    instead."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if keys is not None and len(keys) == 0:
+        return []
+    m = read_manifest(root, version)
+    schema = StructType.fromJson(m["schema"])
+    phys = _phys_map(m)
+    preds = [] if keys is None else _validate_where(
+        [(key_col, "in", list(keys))], schema
+    )
+    leaves = [
+        e for pk, e in _leaves(root, version, m).items()
+        if _entry_may_match(e, pk, preds, _pcol(m))
+    ]
+    leaf_files = [
+        (e, [
+            os.path.join(d, n)
+            for d in _entry_dirs(root, e)
+            for n in sorted(os.listdir(d))
+            if not n.startswith((".", "_"))  # Spark's hidden-file rule
+        ])
+        for e in leaves
+    ]
+    if max_bytes is not None and sum(
+        os.path.getsize(p) for _, paths in leaf_files for p in paths
+    ) > max_bytes:
+        return None
+    # one dataset schema, in logical order under physical names: the
+    # scan null-fills absent columns and casts narrower ones to it
+    arrow = pa.schema([
+        pa.field(phys.get(f.name, f.name), af.type)
+        for f, af in zip(schema.fields, to_arrow_schema(schema))
+    ])
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+
+    def scan(paths, **kw):
+        return ds.dataset(paths, schema=arrow, format=fmt).to_table(**kw)
+
+    cond = None
+    if preds:
+        kphys = phys.get(key_col, key_col)
+        cond = ds.field(kphys).isin(
+            pa.array(preds[0][2], type=arrow.field(kphys).type)
+        )
+    plain = [p for e, paths in leaf_files if not e.get("dv") for p in paths]
+    tables = [scan(plain, filter=cond)] if plain else []
+    for e, paths in leaf_files:
+        if not e.get("dv"):
+            continue
+        dv = ds.dataset(os.path.join(root, e["dv"]["dir"])).to_table()
+        for p in paths:
+            # a DV names row positions within one file, so read the
+            # file whole and in order, then drop them before filtering
+            t = scan(p, use_threads=False)
+            gone = dv.filter(ds.field("__dv_file") == os.path.basename(p))
+            live = ~ds.field("__dv_pos").isin(
+                gone["__dv_pos"].combine_chunks()
+            )
+            t = t.append_column(
+                "__dv_pos", pa.array(range(t.num_rows), pa.int64())
+            ).filter(live if cond is None else live & cond)
+            tables.append(t.drop_columns("__dv_pos"))
+    table = pa.concat_tables(tables) if tables else arrow.empty_table()
+    return ArrowTableToRowsConversion.convert(table, schema)
+
+
 def _error_is(e: Exception, *conditions: str) -> bool:
     """Whether a Spark error carries one of the error ``conditions``
     (e.g. ``PATH_NOT_FOUND``). Matches the structured condition, not

@@ -3,18 +3,27 @@
 
 The reference serves features from Redis (hot) falling back to
 PostgreSQL (cold). In the Spark engine the cold store is the computed
-feature DataFrames (or their parquet materialization); the hot path is
-a driver-side TTL dict — the documented stand-in (SURVEY §7.4:
-sub-40 ms point lookups are not a Spark strength; serving here is
-correct-and-batched).
+feature DataFrames (or their manifest tables); the hot path is a
+driver-side TTL dict — the documented stand-in (SURVEY §7.4: sub-40 ms
+point lookups are not a Spark strength).
 
-Batch lookups use a broadcast semi-join fetch (S3): one Spark job per
-miss-set, never one per key — the reference's chunked
-``WHERE user_id = ANY($1)`` collapses into a single keys-DataFrame
-join. The keys frame is a ``session.local_frame`` (a ``LocalRelation``),
-so neither the broadcast nor the join forks a Python worker. CDC
-invalidation collects the changed keys and dedupes them driver-side,
-with no shuffle.
+Cold reads of a PINNED type run no Spark job.
+``refresh_serving_from_changes`` pins a type to one committed table
+snapshot; while ``feature_dfs[t]`` is still that pinned frame, point
+misses, batch misses and ``preload`` read the matching rows on the
+driver with ``txn.read_rows``, straight from the snapshot's parquet
+leaves (leaf pruning, deletion vectors and column mapping as
+``read_table`` applies them). The driver read is taken only while the
+pruned leaves' files fit under ``spark.sql.autoBroadcastJoinThreshold``:
+data small enough to broadcast is small enough to read on the driver.
+Above it, and for any frame a caller puts in ``feature_dfs``, reads go
+through Spark: a point miss is one keyed filter, and a batch miss is
+one broadcast semi-join per miss-set, never one job per key (the
+reference's chunked ``WHERE user_id = ANY($1)``). The keys frame is a
+``session.local_frame`` (a ``LocalRelation``), so neither the
+broadcast nor the join forks a Python worker. CDC invalidation
+collects the changed keys and dedupes them driver-side, with no
+shuffle.
 """
 
 from __future__ import annotations
@@ -27,6 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feature_store_spark.pipelines.txn import read_rows
 from feature_store_spark.session import local_frame
 
 FEATURE_TYPES = ("user", "transaction", "risk")
@@ -56,12 +66,17 @@ class FeatureStore:
     ``feature_dfs`` maps feature type → DataFrame keyed by ``user_id``.
     TTL semantics follow the reference (3600 s default, checked at
     read; `src/config/settings.py:64`, `src/feature_store/cache.py`).
+    ``_pinned`` maps a type to the (frame, root, version) that
+    :func:`refresh_serving_from_changes` last put in ``feature_dfs``.
     """
 
     feature_dfs: dict[str, DataFrame]
     ttl_seconds: float = 3600.0
     clock: Any = time.monotonic  # injectable for deterministic tests
     _cache: dict[tuple[str, int], _CacheEntry] = field(default_factory=dict)
+    _pinned: dict[str, tuple[DataFrame, str, int]] = field(
+        default_factory=dict
+    )
     hits: int = 0
     misses: int = 0
 
@@ -105,8 +120,9 @@ class FeatureStore:
     ) -> FeatureResponse:
         """Read-through point lookup: cache probe per requested type;
         a hit requires ALL requested types cached (reference
-        `store.py:49`); misses fetch via a keyed filter and fill the
-        cache."""
+        `store.py:49`); a miss reads the one row of a pinned type on the
+        driver (no Spark job), or else runs a keyed filter, and fills
+        the cache."""
         t0 = time.perf_counter()
         ftypes = self._validate_types(feature_types)
         cached = {t: self._cache_get(t, user_id) for t in ftypes}
@@ -119,8 +135,12 @@ class FeatureStore:
             if cached[t] is not None:
                 features[t] = cached[t]
                 continue
-            df = self.feature_dfs[t]
-            rows = df.filter(F.col("user_id") == user_id).limit(1).collect()
+            rows = self._pinned_rows(t, [user_id])
+            if rows is None:
+                df = self.feature_dfs[t]
+                rows = (
+                    df.filter(F.col("user_id") == user_id).limit(1).collect()
+                )
             value = rows[0].asDict() if rows else None
             if value is not None:
                 self._cache_put(t, user_id, value)
@@ -132,7 +152,8 @@ class FeatureStore:
     ) -> list[FeatureResponse]:
         """Batch lookup ≤100 keys (validated like the reference,
         `models.py:80-89`): split cache hits from misses, fetch ALL
-        misses per feature type with ONE broadcast semi-join, assemble
+        misses per feature type with ONE driver read of a pinned type
+        (no Spark job) or else ONE broadcast semi-join, assemble
         per-user responses."""
         if not user_ids:
             return []
@@ -148,12 +169,9 @@ class FeatureStore:
             cache_state[t] = {u: self._cache_get(t, u) for u in user_ids}
             missing = [u for u, v in cache_state[t].items() if v is None]
             if missing:
-                df = self.feature_dfs[t]
-                spark = df.sparkSession
-                keys = local_frame(
-                    spark, [(int(u),) for u in missing], "user_id long"
-                )
-                rows = df.join(F.broadcast(keys), "user_id").collect()
+                rows = self._pinned_rows(t, missing)
+                if rows is None:
+                    rows = self._semi_join(t, missing).collect()
                 fetched[t] = {r["user_id"]: r.asDict() for r in rows}
                 for u, v in fetched[t].items():
                     self._cache_put(t, u, v)
@@ -183,8 +201,9 @@ class FeatureStore:
         user_ids: Sequence[int] | None = None,
         feature_types: Sequence[str] | None = None,
     ) -> int:
-        """Warm-load the hot path: ONE Spark job per feature type fills
-        the TTL cache for every requested key (or the whole store when
+        """Warm-load the hot path: per feature type, ONE driver read of
+        a pinned type (no Spark job), or else ONE Spark job, fills the
+        TTL cache for every requested key (or the whole store when
         ``user_ids`` is None), after which point lookups are pure dict
         probes — zero Spark jobs until TTL expiry. This is the
         reference's Redis-warm semantics (its pipeline writes features
@@ -201,14 +220,14 @@ class FeatureStore:
         ftypes = self._validate_types(feature_types)
         written: set[tuple[str, int]] = set()
         for t in ftypes:
-            df = self.feature_dfs[t]
-            if user_ids is not None:
-                spark = df.sparkSession
-                keys = local_frame(
-                    spark, [(int(u),) for u in user_ids], "user_id long"
+            rows = self._pinned_rows(t, user_ids)
+            if rows is None:
+                rows = (
+                    self.feature_dfs[t].collect()
+                    if user_ids is None
+                    else self._semi_join(t, user_ids).collect()
                 )
-                df = df.join(F.broadcast(keys), "user_id")
-            for r in df.collect():
+            for r in rows:
                 self._cache_put(t, r["user_id"], r.asDict())
                 written.add((t, r["user_id"]))
         # distinct entries, not rows: a duplicated user_id upstream
@@ -242,6 +261,31 @@ class FeatureStore:
         return out
 
     # -- internals --------------------------------------------------------
+
+    def _pinned_rows(self, ftype: str, user_ids: Sequence[int] | None):
+        """The rows of ``ftype`` for ``user_ids`` (every row when None)
+        read on the driver from the pinned snapshot, with no Spark job;
+        None when ``feature_dfs[ftype]`` is not the pinned frame or the
+        leaves that may hold the keys exceed the broadcast threshold."""
+        pin = self._pinned.get(ftype)
+        if pin is None or pin[0] is not self.feature_dfs[ftype]:
+            return None
+        df, root, version = pin
+        # the session's SQLConf resolves the byte string ("10MB", -1)
+        limit = df.sparkSession._jsparkSession.sessionState().conf()
+        return read_rows(
+            root, version, "user_id", user_ids,
+            max_bytes=max(limit.autoBroadcastJoinThreshold(), 0),
+        )
+
+    def _semi_join(self, ftype: str, user_ids: Sequence[int]) -> DataFrame:
+        """``feature_dfs[ftype]`` restricted to ``user_ids`` by one
+        broadcast semi-join."""
+        df = self.feature_dfs[ftype]
+        keys = local_frame(
+            df.sparkSession, [(int(u),) for u in user_ids], "user_id long"
+        )
+        return df.join(F.broadcast(keys), "user_id")
 
     def _validate_types(self, feature_types: Sequence[str] | None) -> list[str]:
         # None means "all types"; an EXPLICIT empty list is a caller
@@ -306,12 +350,13 @@ def refresh_serving_from_changes(
     log): drain the manifest table's change feed
     (`txn.read_changes_stream`) and, per commit batch, evict exactly
     the changed users' cache entries and re-pin the served DataFrame
-    to the new snapshot. Unchanged users keep their warm entries —
-    the point of row-level CDC over the blunt flush-everything
-    alternative. The version cursor lives in ``checkpoint_dir``, so a
-    re-run after a crash re-invalidates (idempotent) rather than
-    misses. Returns read_changes_stream's {batches, from_version,
-    to_version}."""
+    to the new snapshot, recording its root and version so that cold
+    reads of the type run on the driver (``FeatureStore._pinned_rows``).
+    Unchanged users keep their warm entries — the point of row-level
+    CDC over the blunt flush-everything alternative. The version
+    cursor lives in ``checkpoint_dir``, so a re-run after a crash
+    re-invalidates (idempotent) rather than misses. Returns
+    read_changes_stream's {batches, from_version, to_version}."""
     from feature_store_spark.pipelines.txn import (
         read_changes_stream,
         read_table,
@@ -323,8 +368,9 @@ def refresh_serving_from_changes(
     def apply(changes, version):
         for u in {r[0] for r in changes.select(key_col).collect()}:
             store.invalidate(u)
-        df, _v = read_table(spark, root)
+        df, v = read_table(spark, root)
         store.feature_dfs[feature_type] = df
+        store._pinned[feature_type] = (df, root, v)
 
     return read_changes_stream(
         spark, root, checkpoint_dir, apply, key_cols=[key_col]

@@ -75,6 +75,34 @@ ROUTES = {
 }
 
 
+def _ts_is_nanos(events_dir: str) -> bool:
+    """Whether the landed events store ``ts`` as INT64
+    TIMESTAMP(NANOS), read from ONE visible file's parquet footer
+    (names starting with ``.`` or ``_`` are hidden, as for Spark's file
+    source). INT96 and micro/millisecond timestamps are not nanos; an
+    empty or absent directory (producer not started) is not either."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    for dirpath, dirs, files in os.walk(events_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        visible = sorted(f for f in files if not f.startswith((".", "_")))
+        if visible:
+            schema = pq.read_metadata(os.path.join(dirpath, visible[0])).schema
+            if "ts" not in schema.names:
+                return False
+            col = schema.column(schema.names.index("ts"))
+            return (
+                col.physical_type == "INT64"
+                and col.logical_type.type == "TIMESTAMP"
+                and json.loads(col.logical_type.to_json())["timeUnit"]
+                == "nanoseconds"
+            )
+    return False
+
+
 def read_event_stream(
     spark: SparkSession,
     events_dir: str,
@@ -86,28 +114,12 @@ def read_event_stream(
     ``False`` → plain TIMESTAMP fixtures stream as-is; ``True`` →
     TIMESTAMP(NANOS) fixtures (long under nanosAsLong) are truncated
     to microseconds exactly like tables.load_table. Default ``None``
-    sniffs the physical type with a zero-row batch read, falling back
-    to plain TIMESTAMP when the directory has no files yet (the
-    producer-not-started deployment order) — pass the flag explicitly
-    when starting ahead of a nanos-typed producer."""
+    reads the physical type from one landed file's footer (no Spark
+    job), falling back to plain TIMESTAMP when the directory has no
+    files yet (the producer-not-started deployment order) — pass the
+    flag explicitly when starting ahead of a nanos-typed producer."""
     if ts_is_nanos is None:
-        try:
-            ts_is_nanos = isinstance(
-                spark.read.parquet(events_dir).schema["ts"].dataType,
-                LongType,
-            )
-        except AnalysisException as e:
-            # ONLY the schema-unknowable cases mean "assume plain
-            # timestamps" (empty/absent dir — producer not started);
-            # any other analysis failure (e.g. an unreadable nanos
-            # fixture on a session missing the nanosAsLong conf) must
-            # surface HERE, not as a confusing mid-stream parquet
-            # conversion error later.
-            from feature_store_spark.pipelines.txn import _error_is
-
-            if not _error_is(e, "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
-            ts_is_nanos = False
+        ts_is_nanos = _ts_is_nanos(events_dir)
     reader = spark.readStream
     if max_files_per_trigger is not None:
         # bounds per-micro-batch work (and, with availableNow, splits
@@ -449,28 +461,22 @@ def _drain_valid_events(
 
 
 def _latest_purchase_scores(batch_df: DataFrame, with_date: bool) -> DataFrame:
-    """Per-batch reduction shared by the streaming upsert sinks: one
-    row per user (ST4) or per (user, event-date) (ST13), carrying
-    ``__seq = struct(ts, event_id)`` — a UNIQUE total order, so ties
-    resolve identically whether two equal-ts purchases land in one
-    micro-batch or are split across batches/replays (order-by-ts alone
-    would let cross-batch ties fall to arrival order, diverging from
-    the batch twin)."""
-    keys = ["user_id", "event_date"] if with_date else ["user_id"]
-    scores = batch_df.filter(F.col("event_type") == "purchase").select(
+    """The purchase rows of a micro-batch projected for the streaming
+    upsert sinks, keyed by user (ST4) or by (user, event-date) (ST13),
+    carrying ``__seq = struct(ts, event_id)`` — a UNIQUE total order,
+    so ties resolve identically whether two equal-ts purchases land in
+    one micro-batch or are split across batches/replays (order-by-ts
+    alone would let cross-batch ties fall to arrival order, diverging
+    from the batch twin). No per-batch dedupe: the sinks' keyed merge
+    (``txn._merge_rows``) already keeps the newest ``__seq`` per key
+    over the stored rows and the batch together."""
+    return batch_df.filter(F.col("event_type") == "purchase").select(
         "user_id",
         "ts",
-        "event_id",
         F.col("value").alias("risk_score"),
         *([F.to_date("ts").alias("event_date")] if with_date else []),
+        F.struct("ts", "event_id").alias("__seq"),
     )
-    from feature_store_spark.operators.windows import latest_per_key
-
-    return latest_per_key(
-        scores.withColumn("__seq", F.struct("ts", "event_id")),
-        keys,
-        "__seq",
-    ).drop("event_id")
 
 
 def run_streaming_upsert_manifest(
@@ -482,10 +488,11 @@ def run_streaming_upsert_manifest(
     """ST4 end-to-end streaming job, drained deterministically with
     ``availableNow``: read → dispatch → per-user latest risk score
     upserted into the manifest table at ``table_root``. The
-    foreachBatch body reduces each micro-batch to one row per user
-    BEFORE touching the table (merge cost scales with the batch's key
-    set, the Delta-MERGE shape), then lands it via
-    ``txn.upsert_manifest`` — an atomic manifest commit per batch, so
+    foreachBatch body projects each micro-batch's purchases and lands
+    them via ``txn.upsert_manifest``, whose keyed merge keeps the
+    newest ``__seq`` per user over the stored rows and the batch in
+    one shuffle (a separate per-batch reduction first would cost a
+    second) — an atomic manifest commit per batch, so
     a concurrent batch writer (or a second stream against the same
     table) cannot lose updates, readers are snapshot-isolated while
     batches land, and a crash mid-batch leaves the previous commit
@@ -526,8 +533,10 @@ def run_streaming_warehouse_append(
     checkpoint_dir: str,
 ) -> dict[str, int]:
     """ST13: streaming appends into a DATE-PARTITIONED transactional
-    table — each micro-batch's per-(user, event-date) latest purchase
-    lands via ``txn.upsert_manifest_partitioned``, so a batch's commit
+    table — each micro-batch's purchases land via
+    ``txn.upsert_manifest_partitioned``, whose merge keeps the latest
+    purchase per (user, event-date) over the touched dates' stored rows
+    and the batch together, so a batch's commit
     touches only the dates it carries (O(batch) commit cost — the
     partition-scoped posture the daily warehouse uses), is atomic
     against concurrent batch/backfill writers, and leaves readers

@@ -90,19 +90,15 @@ def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-def _job_ids(spark, group):
-    # the status tracker is fed by the listener bus; drain it first
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
-def test_daily_jobs_carry_the_callers_job_group(spark, sf_dir, tmp_path):
+def test_daily_jobs_carry_the_callers_job_group(
+    spark, sf_dir, tmp_path, job_ids
+):
     """The feature groups and quality scans run on worker threads; their
     jobs must still carry the caller's job group (``cancelJobGroup``
     and per-group accounting rely on it), so no job of these calls
     lands outside the group."""
     sc = spark.sparkContext
-    ungrouped, grouped = _job_ids(spark, None), _job_ids(spark, "daily-test")
+    ungrouped, grouped = job_ids(None), job_ids("daily-test")
     sc.setJobGroup("daily-test", "job group inheritance")
     try:
         run_daily_pipeline(spark, sf_dir, str(tmp_path / "store"))
@@ -110,9 +106,9 @@ def test_daily_jobs_carry_the_callers_job_group(spark, sf_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert _job_ids(spark, None) == ungrouped
+    assert job_ids(None) == ungrouped
     # at least one job per upsert: three groups and the export
-    assert len(_job_ids(spark, "daily-test") - grouped) >= 4
+    assert len(job_ids("daily-test") - grouped) >= 4
 
 
 def test_daily_pipeline_failing_group_settles_then_raises(

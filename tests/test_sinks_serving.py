@@ -635,3 +635,119 @@ def test_cdc_driven_cache_invalidation(spark, tmp_path):
     res = refresh_serving_from_changes(spark, store, root, ckpt, "user")
     assert res["batches"] == 0
     assert store.get_features(1, ["user"]).cache_hit
+
+
+def test_cdc_driven_cache_invalidation_through_deletion_vectors(
+    spark, tmp_path, job_budget
+):
+    """The merge-on-read twin of the test above: the update lands as a
+    deletion vector over the old row plus an appended dir holding the
+    new image, and the pinned miss reads through both on the driver,
+    with no Spark job."""
+    from feature_store_spark.pipelines.txn import (
+        merge_into,
+        read_manifest,
+        upsert_manifest,
+    )
+    from feature_store_spark.serving.store import (
+        FeatureStore,
+        refresh_serving_from_changes,
+    )
+
+    root = str(tmp_path / "feat")
+    ckpt = str(tmp_path / "ckpt")
+    upsert_manifest(
+        spark.createDataFrame(
+            [(1, 10.0, 1), (2, 20.0, 1)],
+            "user_id bigint, score double, ts bigint",
+        ),
+        root, ["user_id"], "ts",
+    )
+    store = FeatureStore({"user": spark.createDataFrame(
+        [], "user_id bigint, score double, ts bigint")})
+    res = refresh_serving_from_changes(spark, store, root, ckpt, "user")
+    assert res["batches"] == 1
+    assert store.get_features(1, ["user"]).features["user"]["score"] == 10.0
+    assert store.get_features(2, ["user"]).features["user"]["score"] == 20.0
+    assert store.get_features(1, ["user"]).cache_hit
+
+    merge_into(
+        spark, root,
+        spark.createDataFrame([(1, 99.0)], "user_id bigint, score double"),
+        ["user_id"],
+        when_matched=[(None, {"score": "s.score"})],
+        mode="dv",
+    )
+    m = read_manifest(root, 2)
+    assert m.get("dv") and m.get("extra_dirs")
+    res = refresh_serving_from_changes(spark, store, root, ckpt, "user")
+    assert res["batches"] == 1
+    r1, jobs = job_budget(lambda: store.get_features(1, ["user"]))
+    assert not r1.cache_hit and r1.features["user"]["score"] == 99.0
+    assert jobs == 0
+    r2 = store.get_features(2, ["user"])
+    assert r2.cache_hit and r2.features["user"]["score"] == 20.0
+
+    res = refresh_serving_from_changes(spark, store, root, ckpt, "user")
+    assert res["batches"] == 0
+    assert store.get_features(1, ["user"]).cache_hit
+
+
+def test_serving_job_budgets(spark, tmp_path, job_budget):
+    """Cold reads of a pinned type run no Spark job (point miss, batch
+    miss, preload); a frame the caller put in ``feature_dfs`` is read
+    through Spark in one job; one refresh batch runs at most three.
+    With broadcasting off (threshold -1) the pinned type is read
+    through Spark too, with the same answers."""
+    from feature_store_spark.pipelines.txn import read_table, upsert_manifest
+    from feature_store_spark.serving.store import (
+        FeatureStore,
+        refresh_serving_from_changes,
+    )
+
+    root, ckpt = str(tmp_path / "feat"), str(tmp_path / "ckpt")
+    ddl = "user_id bigint, score double, ts bigint"
+    upsert_manifest(
+        spark.createDataFrame([(u, u * 1.5, 1) for u in range(1, 9)], ddl),
+        root, ["user_id"], "ts",
+    )
+    store = FeatureStore({"user": spark.createDataFrame([], ddl)})
+    refresh_serving_from_changes(spark, store, root, ckpt, "user")
+
+    r, jobs = job_budget(lambda: store.get_features(1, ["user"]))
+    assert (jobs, r.features["user"]["score"]) == (0, 1.5)
+    rs, jobs = job_budget(
+        lambda: store.get_batch_features([2, 3, 99], ["user"])
+    )
+    assert jobs == 0
+    assert [b.features.get("user", {}).get("score") for b in rs] == [
+        3.0, 4.5, None]
+    n, jobs = job_budget(lambda: store.preload(user_ids=[4, 5]))
+    assert (n, jobs) == (2, 0)
+    n, jobs = job_budget(store.preload)
+    assert (n, jobs) == (8, 0)
+
+    store._cache.clear()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        r, jobs = job_budget(lambda: store.get_features(6, ["user"]))
+        assert jobs >= 1 and r.features["user"]["score"] == 9.0
+    finally:
+        spark.conf.set(key, prev)
+
+    # a caller-supplied frame is always read through Spark
+    store.feature_dfs["user"] = read_table(spark, root)[0]
+    r, jobs = job_budget(lambda: store.get_features(7, ["user"]))
+    assert r.features["user"]["score"] == 10.5 and jobs <= 1
+
+    upsert_manifest(
+        spark.createDataFrame([(8, 0.5, 2)], ddl), root, ["user_id"], "ts"
+    )
+    res, jobs = job_budget(
+        lambda: refresh_serving_from_changes(spark, store, root, ckpt, "user")
+    )
+    assert res["batches"] == 1 and jobs <= 3
+    r, jobs = job_budget(lambda: store.get_features(8, ["user"]))
+    assert (jobs, r.features["user"]["score"]) == (0, 0.5)

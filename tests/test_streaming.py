@@ -603,3 +603,40 @@ def test_streaming_manifest_counts_track_dv_deletes(
         assert again["versions"] == first["versions"] + 1
         after, _ = read_table(spark, root)
         assert again[key] == after.count() == first[key] - res["rows_deleted"]
+
+
+def test_ts_sniff_reads_one_visible_footer(spark, tmp_path):
+    """The stream's ts type comes from one visible file's footer:
+    INT64 TIMESTAMP(NANOS) is nanos; µs and Spark's default INT96 are
+    not; hidden names (``.``/``_``) are skipped like Spark's file source
+    skips them; an empty or absent directory is not nanos."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feature_store_spark.streaming.pipeline import _ts_is_nanos
+
+    def land(d, unit, name="part-0.parquet"):
+        d.mkdir(exist_ok=True)
+        ts = pa.array([datetime.datetime(2024, 1, 2)], pa.timestamp(unit))
+        pq.write_table(pa.table({"ts": ts, "user_id": [1]}), d / name)
+        return str(d)
+
+    assert _ts_is_nanos(land(tmp_path / "ns", "ns"))
+    us = land(tmp_path / "us", "us")
+    land(tmp_path / "us", "ns", ".part-1.parquet")  # in flight, hidden
+    (tmp_path / "us" / "_SUCCESS").write_text("")
+    assert not _ts_is_nanos(us)
+    int96 = str(tmp_path / "int96")
+    spark.createDataFrame(
+        [(datetime.datetime(2024, 1, 2), 1)], "ts timestamp, user_id long"
+    ).write.parquet(int96)
+    assert pq.read_metadata(
+        next(p for p in (tmp_path / "int96").iterdir()
+             if p.name.startswith("part-"))
+    ).schema.column(0).physical_type == "INT96"
+    assert not _ts_is_nanos(int96)
+    (tmp_path / "empty").mkdir()
+    assert not _ts_is_nanos(str(tmp_path / "empty"))
+    assert not _ts_is_nanos(str(tmp_path / "absent"))
