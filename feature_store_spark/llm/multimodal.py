@@ -1,24 +1,18 @@
 """Multimodal column plumbing (SURVEY.md §2.12): image/audio/video as
-opaque ``binary`` payloads with typed metadata, processed by
-Arrow-batched ``mapInPandas`` stages.
+opaque ``binary`` payloads with typed metadata.
 
-The container has no image/audio codecs, so the decode kernel is a
-clearly-marked STUB (``real_decode=True`` raises NotImplementedError;
-the default produces deterministic fake metadata derived from the
-payload bytes). Everything around the kernel — the binary schema, the
-Arrow batch shape, the partition-parallel execution, the output
-StructType — is real and tested; swapping in PIL/ffmpeg later touches
-only ``_decode_batch``.
-
-Execution modes: the stub metadata is pure arithmetic over
-``length(payload)``, so the DEFAULT path (``kernel="native"``) computes
-it as JVM column expressions — no Python worker, no payload bytes
-crossing the Arrow boundary for a metadata-only query (this was the
-single worst bench ratio in round 2: 24.7x vs the oracle, all of it
-Arrow transfer of bytes the query never used). ``kernel="arrow"`` runs
-the SAME stub inside the ``mapInPandas`` kernel — the plumbing a real
-PIL/ffmpeg codec drops into — and is pinned value-identical to the
-native path in tests. ``real_decode=True`` implies the Arrow path.
+Execution: one Spark path per stage. The decode, resize and
+feature-extraction stages are deterministic STUBS — metadata,
+dimensions and feature vectors are pure arithmetic over
+``length(payload)`` — so each is a plan of JVM column expressions: no
+Python worker, and no payload bytes crossing an Arrow boundary for a
+metadata-only query (an Arrow stub was the single worst bench ratio in
+round 2: 24.7x vs the oracle, all of it transfer of bytes the query
+never used). The one Arrow stage is ``decode_media(real_decode=True)``:
+a ``mapInPandas`` kernel that runs the real codecs — PIL for images
+when installed, the stdlib ``wave`` module for WAV audio — and raises a
+targeted NotImplementedError for containers that need ffmpeg. Swapping
+in more codecs touches only ``_real_decode_batch``.
 
 Scale posture: payloads never pass through the driver; ``mapInPandas``
 streams Arrow batches executor-side, and metadata-only downstream
@@ -26,8 +20,6 @@ queries prune the binary column at the parquet scan.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -81,20 +73,11 @@ def attach_payload(documents: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _fake_metadata(n_bytes: int, media_type: str) -> tuple[int, int, str]:
-    """Deterministic stand-in for a real decoder: dimensions derived
-    from payload length. Replace with PIL/ffmpeg probing in production."""
-    width = 16 + n_bytes % 624
-    height = 16 + (n_bytes * 7) % 464
-    fmt = {"image": "RGB", "audio": "PCM16", "video": "H264"}[media_type]
-    return width, height, fmt
-
-
 def _stub_dims(n):
-    """Column twins of ``_fake_metadata``'s width/height arithmetic —
-    the single place the native paths derive stub dimensions from, so
-    a formula change cannot desynchronize decode and resize (the Arrow
-    kernels share ``_fake_metadata`` the same way)."""
+    """The stub decoder's width/height arithmetic over the payload
+    length ``n`` — the single place decode and resize derive stub
+    dimensions from, so a formula change cannot desynchronize them.
+    Replace with real probing in production."""
     return (
         (F.lit(16) + n % 624).cast("int"),
         (F.lit(16) + (n * 7) % 464).cast("int"),
@@ -104,7 +87,7 @@ def _stub_dims(n):
 def _format_by_type():
     # built lazily: a module-level Column would be constructed at import
     # time inside Python WORKERS too (no SparkContext there) when this
-    # module is imported to unpickle an Arrow kernel closure
+    # module is imported to unpickle the real-decode kernel closure
     return (
         F.when(F.col("media_type") == "image", "RGB")
         .when(F.col("media_type") == "audio", "PCM16")
@@ -112,20 +95,20 @@ def _format_by_type():
     )
 
 
-def decode_media(
-    media: DataFrame, real_decode: bool = False, kernel: str = "native"
-) -> DataFrame:
+def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
     """Decode/probe stage over the media table. The binary column is
     consumed executor-side and does not appear in the output schema,
     so downstream plans never carry payload bytes.
 
-    ``kernel="native"`` (default, stub only): metadata as JVM column
-    expressions — whole-stage codegen, zero Python workers, and
-    Catalyst can prune ``payload`` down to ``length()`` at the scan.
-    ``kernel="arrow"`` or ``real_decode=True``: the ``mapInPandas``
-    path a real codec plugs into (Arrow batches in, metadata out)."""
-    if real_decode or kernel == "arrow":
-        return _decode_media_arrow(media, real_decode)
+    Default (the stub): metadata as JVM column expressions —
+    whole-stage codegen, zero Python workers, and Catalyst can prune
+    ``payload`` down to ``length()`` at the scan. ``real_decode=True``:
+    the ``mapInPandas`` path the real codecs run on (Arrow batches in,
+    metadata out; see :func:`_real_decode_batch`)."""
+    if real_decode:
+        return media.mapInPandas(
+            lambda batches: map(_real_decode_batch, batches), DECODED_SCHEMA
+        )
     n = F.length("payload").cast("long")
     w, h = _stub_dims(n)
     return media.select(
@@ -225,48 +208,10 @@ def _real_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def _decode_media_arrow(media: DataFrame, real_decode: bool) -> DataFrame:
-    def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real_decode:
-            for pdf in batches:
-                yield _real_decode_batch(pdf)
-            return
-        for pdf in batches:
-            # NULL payload (NULL source text) -> NULL metadata, like
-            # the oracle's octet_length(NULL); format still derives
-            # from media_type
-            n_bytes = pdf["payload"].map(
-                lambda v: None if v is None else len(v)
-            )
-            meta = [
-                (None, None, _fake_metadata(0, t)[2])
-                if n is None
-                else _fake_metadata(n, t)
-                for n, t in zip(n_bytes, pdf["media_type"])
-            ]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": n_bytes.astype("Int64"),
-                    "width": pd.array(
-                        [m[0] for m in meta], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m[1] for m in meta], dtype="Int32"
-                    ),
-                    "format": [m[2] for m in meta],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(_decode_batch, DECODED_SCHEMA)
-
-
 def decode_media_oracle_sql(table: str = "documents") -> str:
-    """The stub decoder is deterministic, so even the mapInPandas path
-    is oracle-checkable: DuckDB recomputes the same metadata from
-    octet_length of the UTF-8 text."""
+    """The stub decoder is deterministic, so it is oracle-checkable:
+    DuckDB recomputes the same metadata from octet_length of the UTF-8
+    text."""
     return f"""
     SELECT doc_id,
            CASE WHEN doc_id % 3 = 0 THEN 'image'
@@ -299,19 +244,13 @@ def resize_media(
     media: DataFrame,
     target_w: int = 256,
     target_h: int = 256,
-    kernel: str = "native",
 ) -> DataFrame:
     """Resize stage over the media table: fit each item inside
     (target_w, target_h) preserving aspect ratio, never upscaling.
     The pixel kernel is the STUB (dimensions come from the
     deterministic fake decoder; ``payload_md5`` stands in for the
-    resized bytes), so the default path is pure JVM expressions —
-    ``length``/``least``/``md5`` — with no Python worker.
-    ``kernel="arrow"`` runs the same stub through ``mapInPandas``: the
-    Arrow batch shape, executor-side binary consumption, and output
-    schema a PIL-backed kernel would drop into."""
-    if kernel == "arrow":
-        return _resize_media_arrow(media, target_w, target_h)
+    resized bytes), so the stage is pure JVM expressions —
+    ``length``/``least``/``md5`` — with no Python worker."""
     n = F.length("payload").cast("long")
     w, h = _stub_dims(n)
     # Spark least/greatest SKIP NULL args (DuckDB too) — a NULL
@@ -335,40 +274,6 @@ def resize_media(
         F.round(sc, 6).alias("scale"),
         F.md5("payload").alias("payload_md5"),
     )
-
-
-def _resize_media_arrow(
-    media: DataFrame, target_w: int, target_h: int
-) -> DataFrame:
-    def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = []
-            for doc_id, mt, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                if payload is None:
-                    rows.append((doc_id, mt, None, None, None, None))
-                    continue
-                n = len(payload)
-                w, h, _ = _fake_metadata(n, mt)
-                scale = min(target_w / w, target_h / h, 1.0)
-                rows.append(
-                    (
-                        doc_id,
-                        mt,
-                        max(1, int(w * scale)),
-                        max(1, int(h * scale)),
-                        round(scale, 6),
-                        hashlib.md5(bytes(payload)).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(_resize_batch, RESIZED_SCHEMA)
 
 
 def resize_media_oracle_sql(
@@ -416,21 +321,16 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def extract_features(media: DataFrame, kernel: str = "native") -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature-extraction stage (the "embed every image" step of a
     training-data pipeline). The model inference is the STUB — an
     ``FEATURE_DIM``-dim vector derived arithmetically from the payload
-    length — so the default path builds the array with
-    ``transform(sequence(...))`` JVM-side. ``kernel="arrow"`` runs the
-    stub through ``mapInPandas`` (Arrow batches, numpy vectorization
-    inside the kernel, array<double> output feeding the
-    similarity/dedup operators) — the shape a real model server or
-    ONNX kernel drops into."""
-    if kernel == "arrow":
-        return _extract_features_arrow(media)
-    # long, like the sibling native paths: a multi-GB payload times d
-    # would overflow 32-bit int arithmetic (ANSI mode raises) while the
-    # int64 numpy kernel and the BIGINT oracle would not
+    length — so the array is built with ``transform(sequence(...))``
+    JVM-side; its array<double> output feeds the similarity/dedup
+    operators."""
+    # long, like the sibling stages: a multi-GB payload times d would
+    # overflow 32-bit int arithmetic (ANSI mode raises) while the
+    # BIGINT oracle would not
     n = F.length("payload").cast("long")
     feats = F.transform(
         F.sequence(F.lit(1), F.lit(FEATURE_DIM)),
@@ -441,31 +341,6 @@ def extract_features(media: DataFrame, kernel: str = "native") -> DataFrame:
         "media_type",
         F.when(n.isNotNull(), feats).alias("features"),
     )
-
-
-def _extract_features_arrow(media: DataFrame) -> DataFrame:
-    def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            # NULL payload -> NULL feature vector (oracle: CASE guard)
-            n = pdf["payload"].map(
-                lambda v: -1 if v is None else len(v)
-            ).to_numpy(dtype="int64")
-            # (len * d) % 1000 / 1000 for d in 1..DIM — stand-in logits
-            mat = (n[:, None] * np.arange(1, FEATURE_DIM + 1)) % 1000 / 1000.0
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "features": [
-                        None if ni < 0 else np.round(r, 6).tolist()
-                        for ni, r in zip(n, mat)
-                    ],
-                }
-            )
-
-    return media.mapInPandas(_extract_batch, FEATURES_SCHEMA)
 
 
 def extract_features_oracle_sql(table: str = "documents") -> str:

@@ -1,18 +1,31 @@
 """Similarity search over an embedding column (SURVEY.md §2.12).
 
-Two paths, same output schema:
+One Spark kernel per operator; a second path stays only where a
+test-backed contract needs it:
 
-- :func:`cosine_topk` — exact brute-force top-k: broadcast the (small)
-  query set against the corpus, rank by rounded cosine. At 100 TB the
-  corpus side stays partitioned and the query side is broadcast — the
-  scan is embarrassingly parallel, and the final top-k per query is a
-  per-partition top-k + single merge (TakeOrderedAndProject shape via
-  row_number over a per-query window on pre-reduced candidates).
+- :func:`cosine_topk` — exact brute-force top-k: the (small) query set
+  is shipped to every corpus partition, each corpus batch is scored
+  with one BLAS matmul in an Arrow kernel, and the final top-k per
+  query is a per-batch top-k + one merge window. At 100 TB the corpus
+  side stays partitioned — the scan is embarrassingly parallel.
+  ``kernel="jvm"`` is its one second path: a lazy pure-JVM fold with
+  defined NULL semantics, the exact baseline ANN recall is measured
+  against.
 - :func:`lsh_ann_topk` — approximate: random-hyperplane LSH (8-bit /
   256-bucket signature from md5-derived ±1 hyperplanes), candidates = same
   bucket, exact rerank inside the bucket. Recall trades off with
   bucket width; the hyperplanes are deterministic (seeded by md5), so
   the result is reproducible and oracle-checkable.
+- :func:`knn_graph` — the corpus-wide LSH kNN graph, scored per bucket
+  tile with one BLAS matmul in an Arrow kernel;
+  :func:`knn_graph_multiprobe` adds OR-amplified recall as a pure-JVM
+  plan, and at ``n_tables=1`` is the NULL-tolerant twin of
+  :func:`knn_graph`.
+- :func:`cosine_topk_int8` — exact top-k over int8 codes, one Arrow
+  integer-matmul kernel.
+
+The Arrow kernels require non-null vectors of one dimension and fail
+loudly otherwise (:func:`_reshape_vectors`).
 
 Ranking determinism: scores are rounded to 6 digits BEFORE ranking and
 ties break on corpus id ascending — both engines pick the same top-k
@@ -24,13 +37,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_store_spark.session import local_frame
+
 # 8 hyperplanes → 256 buckets: sized so a ~500-vector fixture still
 # produces bucket collisions (recall demo); at corpus scale raise it
 # (more planes = finer buckets = higher precision, lower recall) or
 # use multi-probe / multiple tables.
 N_PLANES = 8
 
-# Default hot-bucket tile bound for knn_graph_vectorized: raising
+# Default hot-bucket tile bound for knn_graph: raising
 # N_PLANES shrinks the EXPECTED bucket, but a duplicate-dense corpus
 # slice still collapses into one m² matmul task (measured: one
 # 14k²-pair task owned the whole 200k race, SCALE.md §14.2). 4096
@@ -86,7 +101,7 @@ def _norm(v):
 
 def _cosine(a_vec, b_vec, a_norm, b_norm):
     """Rounded cosine with a zero-norm guard: a zero-norm side yields
-    NULL (ranking last under desc), matching the vectorized kernels.
+    NULL (ranking last under desc), matching the Arrow kernels.
     The CASE guard is required, not cosmetic — under ANSI mode
     (Spark 4 default) a bare x/0 RAISES DIVIDE_BY_ZERO."""
     denom = a_norm * b_norm
@@ -121,94 +136,69 @@ def cosine_topk(
     """Exact top-k nearest corpus vectors per query vector by cosine.
 
     ``queries`` must have (query_id_col, vec_col). The query side is
-    broadcast (small by contract); self-matches (same id) are excluded.
-    Output: (query_id, vec_id, cosine, rank), rank 1..k.
+    small by contract; self-matches (same id) are excluded. Output:
+    (query_id, vec_id, cosine, rank), rank 1..k.
 
-    ``kernel="auto"`` (default) routes to the Arrow-batched
-    :func:`cosine_topk_vectorized` scoring kernel — zero-copy corpus
-    batches, one BLAS dgemm per batch, exact per-batch top-k selection
-    so only candidates cross Arrow back; measured ~4× faster than the
-    JVM fold at sf≈1 (0.37 s vs DuckDB 0.25 s — 1.5×) and widening
-    with corpus size and dimension, with the SAME rounded-cosine
-    values and tie-break order (pinned identical in tests).
+    ``kernel="auto"`` (default) scores in numpy — the dense-embedding
+    scale path. The queries are collected to the driver and ship to
+    executors inside the kernel closure; each Arrow batch of corpus
+    vectors (a zero-copy reshape of the list column's one contiguous
+    buffer) is scored against the whole query matrix with ONE float64
+    matmul (BLAS dgemm), and only each batch's exact top-k candidates
+    cross Arrow back. The interpreted ``zip_with`` dot costs ~64 boxed
+    multiplies per pair (higher-order lambdas are outside codegen);
+    measured ~4× faster at sf≈1 (0.37 s vs DuckDB 0.25 s). Built-ins
+    cannot express a batched matmul, hence the Arrow kernel.
+
+    Precision contract: float64 BLAS accumulation approximates the
+    true cosine to ~1e-14, five orders below the 6-digit rounding
+    grain, so it rounds like the JVM's sequential fold everywhere
+    except knife-edge rounding boundaries. Those are handled by a
+    COMPENSATED PASS: any score within 1e-12 of a 6th-digit rounding
+    boundary (≈2e-6 of all pairs) is recomputed in extended-precision
+    longdouble, so both kernels give bit-identical output (pinned in
+    tests/test_ann_quality.py). Zero-norm vectors get a NULL cosine and
+    rank last (desc NULLS LAST), not first as a raw NaN would.
+    Vectors must be non-null and of one dimension (see
+    :func:`_reshape_vectors`).
+
     ``kernel="jvm"`` keeps the pure-JVM ``zip_with`` fold: no Python
-    workers and a fully lazy plan (the vectorized path collects the
-    query side eagerly at plan-build time), the correctness baseline
-    the ANN variants rerank against.
+    workers, a fully lazy plan, and defined NULL semantics (a NULL
+    vector scores NULL) — the exact baseline the ANN variants are
+    recall-checked against.
     """
-    if kernel not in ("auto", "vectorized", "jvm"):
+    if kernel not in ("auto", "jvm"):
         raise ValueError(
             f"cosine_topk: unknown kernel {kernel!r} "
-            "(expected 'auto', 'vectorized', or 'jvm')"
+            "(expected 'auto' or 'jvm')"
         )
-    if kernel != "jvm":
-        return cosine_topk_vectorized(
-            corpus, queries, k, id_col, vec_col, query_id_col
-        )
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
+    q_rows = (
+        queries.select(query_id_col, vec_col).collect()
+        if kernel == "auto"
+        else None
     )
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-    )
-    cos = _cosine(
-        F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, cos.alias("cosine"))
-    )
-    return _rank_topk(scored, query_id_col, "cosine", id_col, k)
-
-
-def cosine_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """:func:`cosine_topk` with the scoring kernel in numpy — the
-    dense-embedding scale path. The interpreted ``zip_with`` dot costs
-    ~64 boxed multiplies per pair inside the JVM expression
-    interpreter (higher-order lambdas are outside codegen); here each
-    Arrow batch of corpus vectors is scored against the whole
-    broadcast query matrix with ONE float64 matmul, which numpy
-    dispatches to BLAS dgemm — batch-vectorized SIMD C over boxed
-    per-element JVM eval. This is the sanctioned Pandas-path
-    exception: built-ins cannot express a batched matmul.
-
-    Precision contract (same oracle as :func:`cosine_topk`): float64
-    BLAS accumulation approximates the true cosine to ~1e-14 — five
-    orders below the 6-digit rounding grain — so it rounds identically
-    to the JVM's sequential fold everywhere except knife-edge rounding
-    boundaries. Those are handled by a COMPENSATED PASS: any score
-    within 1e-12 of a 6th-digit rounding boundary (≈2e-6 of all pairs,
-    flagged with one vectorized comparison) is recomputed in
-    extended-precision longdouble, the same arithmetic the pre-BLAS
-    kernel used for every pair. Boundary candidates are O(ppm), so the
-    compensation is free and the kernel keeps bit-identical output.
-    Zero-norm vectors get a NULL cosine exactly like the exact op's
-    x/0 → NULL, and rank last (desc NULLS LAST), not first as a raw
-    NaN would.
-
-    The queries are collected to the driver (small by the same
-    contract that lets :func:`cosine_topk` broadcast them) and ship to
-    executors inside the serialized kernel closure; the corpus never
-    moves. Output: (query_id, vec_id, cosine, rank), rank 1..k.
-    """
-    q_rows = queries.select(query_id_col, vec_col).collect()
     if not q_rows:
-        # kernel="jvm" avoids recursing back into this function
-        return cosine_topk(
-            corpus, queries, k, id_col, vec_col, query_id_col, kernel="jvm"
-        ).limit(0)
+        # kernel="jvm", or no queries: nothing for the Arrow kernel to
+        # score, and the lazy plan keeps the input id types
+        c = corpus.select(
+            F.col(id_col),
+            F.col(vec_col).alias("__cv"),
+            _norm(F.col(vec_col)).alias("__cn"),
+        )
+        q = queries.select(
+            F.col(query_id_col),
+            F.col(vec_col).alias("__qv"),
+            _norm(F.col(vec_col)).alias("__qn"),
+        )
+        cos = _cosine(
+            F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
+        )
+        scored = (
+            c.crossJoin(F.broadcast(q))
+            .filter(F.col(id_col) != F.col(query_id_col))
+            .select(query_id_col, id_col, cos.alias("cosine"))
+        )
+        return _rank_topk(scored, query_id_col, "cosine", id_col, k)
 
     import numpy as _np
 
@@ -221,9 +211,8 @@ def cosine_topk_vectorized(
     q_norm64 = q_norm.astype(_np.float64)
 
     # id types follow the INPUT schemas (the generic id_col API allows
-    # e.g. string ids, which the JVM kernel and the empty-queries
-    # fallback both preserve — a hardcoded `long` here would die in
-    # Arrow conversion and desynchronize the two kernels' schemas)
+    # e.g. string ids, which the jvm kernel preserves — a hardcoded
+    # `long` here would die in Arrow conversion)
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     cid_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = (
@@ -525,8 +514,9 @@ def _reshape_vectors(flat, n_rows, arrow_col, expect_dim=None):
     column. ``flatten()`` silently DROPS null/empty lists, so a ragged
     input would reshape into garbage rows scored against the wrong
     ids — fail loudly instead (the Arrow kernels' vector contract:
-    non-null, fixed dimension; route nullable inputs through
-    kernel=\"jvm\", whose NULL → NULL-cosine semantics are defined).
+    non-null, fixed dimension; nullable inputs go through
+    ``cosine_topk(kernel="jvm")`` or ``knn_graph_multiprobe(n_tables=1)``,
+    whose NULL → NULL-cosine semantics are defined).
     ``expect_dim`` additionally pins the dimension to the query side's
     — a one-row batch is internally consistent at ANY length, so
     cross-batch raggedness is only catchable against that anchor."""
@@ -548,7 +538,7 @@ def _reshape_vectors(flat, n_rows, arrow_col, expect_dim=None):
         or (expect_dim is not None and dim != expect_dim)
     ):
         raise ValueError(
-            "vectorized kernel requires non-null fixed-dimension "
+            "Arrow kernel requires non-null fixed-dimension "
             f"vectors: {n_rows} rows flattened to {len(flat)} values "
             f"({arrow_col.null_count} null rows"
             f"{', ragged lengths' if ragged else ''}"
@@ -557,7 +547,8 @@ def _reshape_vectors(flat, n_rows, arrow_col, expect_dim=None):
                 if expect_dim is not None and dim != expect_dim
                 else ""
             )
-            + "); use kernel='jvm' for nullable/ragged embeddings"
+            + "); for nullable/ragged embeddings use "
+            "cosine_topk(kernel='jvm') or knn_graph_multiprobe(n_tables=1)"
         )
     return flat.reshape(n_rows, dim)
 
@@ -668,71 +659,6 @@ def bucket_pairs(
     ).select(*bucket_cols, "a", F.explode("__bm").alias("b"))
 
 
-def knn_graph(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Corpus-wide approximate k-nearest-neighbor graph: for EVERY
-    vector, its top-k cosine neighbors among vectors sharing its LSH
-    bucket — the candidate structure behind embedding-space near-dup
-    clustering, diversity sampling, and semantic dedup at corpus
-    scale; the corpus-to-corpus sibling of :func:`lsh_ann_topk`'s
-    query-to-corpus probe.
-
-    Plan: ONE signature pass, then in-bucket pairing via collect_list
-    + double explode (the SimHash pairing shape — a bucket self-join
-    would evaluate the signature subtree twice), then per-vector
-    round-before-rank top-k. Work is in-bucket-quadratic: with b
-    buckets and n vectors, ~n²/b pairs. 8 planes suit the fixture;
-    at corpus scale raise N_PLANES (buckets must grow with n to keep
-    pairs candidate-proportional) and union multiple hyperplane
-    tables for recall (multi-probe). Vectors alone in their bucket
-    emit no rows — the standard ANN recall trade, same as
-    lsh_ann_topk returning < k.
-
-    ``max_bucket_size`` bounds the HOT-bucket task: raising N_PLANES
-    shrinks the EXPECTED bucket, but a duplicate-dense corpus slice
-    (near-identical crawl pages share a direction, hence a bucket)
-    still collapses into one m² task. Setting the bound tiles
-    oversized buckets into exact (i, j) sub-tasks of
-    ≲max_bucket_size² pairs each — identical output, no recall loss
-    (:func:`bucket_pairs`; planted-hot-bucket pin in
-    tests/test_hot_bucket.py), at the cost of a narrow counts pass
-    and 2s−1 shuffle copies for tiled rows only.
-
-    Maintenance note: :func:`knn_graph_multiprobe` restates this
-    pairing block with an (table, bucket) key and adds a per-pair
-    max-dedup; it is kept separate ON PURPOSE — the single-table path
-    skips the dedup exchange and the posexplode (this op is a bench
-    headline), and ``test_knn_multiprobe_amplifies_recall`` pins
-    ``multiprobe(n_tables=1) == knn_graph`` bit-for-bit, so a
-    semantics change to either body trips the equivalence test rather
-    than drifting silently."""
-    sig = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
-        lsh_bucket(F.col(vec_col)).alias("__bucket"),
-    )
-    pairs = bucket_pairs(
-        sig, ["__bucket"], [id_col, "__v", "__n"], id_col, max_bucket_size
-    ).filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-    cos = _cosine(
-        F.col("a.__v"), F.col("b.__v"), F.col("a.__n"), F.col("b.__n")
-    )
-    scored = pairs.select(
-        F.col(f"a.{id_col}").alias(id_col),
-        F.col(f"b.{id_col}").alias("neighbor_id"),
-        cos.alias("cosine"),
-    )
-    return _rank_topk(scored, id_col, "cosine", "neighbor_id", k).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
-
-
 def _arrow_lsh_bucket_batches(
     vec_col: str,
     planes: int = N_PLANES,
@@ -745,14 +671,16 @@ def _arrow_lsh_bucket_batches(
     accumulation (``acc += v[:, d] * sign``), the same IEEE-double
     left fold the JVM ``aggregate`` lambda performs, so knife-edge
     sums land on the same side and every bucket id is bit-identical
-    to the expression path (pinned against the expression kernel in
-    tests/test_hot_bucket.py on planted near-zero folds). Spark
+    to :func:`lsh_bucket` (pinned through ``knn_graph ==
+    knn_graph_multiprobe(n_tables=1)``, whose buckets are the
+    expression's, in tests/test_hot_bucket.py on planted near-zero
+    folds). Spark
     treats NaN as larger than any double, so a NaN sum takes bit 1,
     matching ``s >= 0`` JVM semantics. The JVM expression path costs
     ~0.27 ms/row in interpreted higher-order lambdas (54 s for a
     200k-row signature projection — measured round 10); this kernel
     is ~100× cheaper and the Arrow boundary it pays is one the
-    vectorized kNN kernel crosses anyway."""
+    :func:`knn_graph` kernel crosses anyway."""
     import numpy as _np
 
     signs = _np.array(
@@ -791,69 +719,95 @@ def _arrow_lsh_bucket_batches(
     return fn
 
 
-def knn_graph_vectorized(
+def knn_graph(
     df: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket_size: int | None = KNN_MAX_BUCKET_SIZE,
+    max_bucket_size: int = KNN_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    """:func:`knn_graph` with the in-bucket scoring as one BLAS
-    float64 matmul per task (``applyInArrow`` — the bucket's vectors
-    arrive as ONE contiguous Arrow buffer, zero-copy reshape, no
-    per-row boxing), a dgemm with the same compensated-longdouble
-    boundary pass as :func:`cosine_topk_vectorized` (so the exact
-    op's oracle applies unchanged), and the per-row top-k as a
-    vectorized stable argsort — no Python-level row loop. Zero-norm
-    vectors rank last with NULL cosine (matching the exact op's
-    x/0 → NULL under desc NULLS LAST) — a raw NaN would sort first in
-    Spark and arbitrarily in Python.
+    """Corpus-wide approximate k-nearest-neighbor graph: for EVERY
+    vector, its top-k cosine neighbors among vectors sharing its LSH
+    bucket — the candidate structure behind embedding-space near-dup
+    clustering, diversity sampling, and semantic dedup at corpus
+    scale; the corpus-to-corpus sibling of :func:`lsh_ann_topk`'s
+    query-to-corpus probe. Output: (id, neighbor_id, cosine, rank),
+    both ids of the input id type. Work is in-bucket-quadratic: with b
+    buckets and n vectors, ~n²/b pairs. 8 planes suit the fixture; at
+    corpus scale raise N_PLANES and union hyperplane tables for recall
+    (:func:`knn_graph_multiprobe`). Vectors alone in their bucket emit
+    no rows — the standard ANN recall trade.
 
-    ``max_bucket_size`` (DEFAULT ON at :data:`KNN_MAX_BUCKET_SIZE`)
-    bounds the hot-bucket straggler: a duplicate-dense corpus slice
-    collapses into one m² matmul task otherwise (measured at 200k×64:
-    one 14k²-pair task owned the whole wall time — SCALE.md §14.2).
-    Buckets over the bound are split into s = ⌈m/max⌉ hash-assigned
-    tiles and every (i, j) tile pair becomes one RECTANGULAR matmul
-    task of ≲max² pairs; per-task top-k candidates are then merged by
-    a global (cosine desc NULLS LAST, id asc) rank — exact, no recall
-    loss, identical output (pinned in tests/test_hot_bucket.py).
-    Sizing is HOT-ONLY: per-bucket counts over the bound are
-    broadcast (≤ n/max rows by construction — the full counts frame
-    would be key-cardinality-sized), so rows of ordinary buckets
-    shuffle exactly once with ti=tj=0 and only hot rows fan out into
-    2s−1 copies. The cost vs the unbounded shape is one narrow
-    counts pass over the signature subtree plus the small final merge
-    window (n·k·s candidate rows). ``max_bucket_size=None`` opts back
-    into the single-task-per-bucket shape (no counts pass, rank
-    computed in-kernel). The bound also caps kernel memory: the cos
+    Plan: the LSH bucket comes from a numpy ``mapInArrow`` pass
+    (:func:`_arrow_lsh_bucket_batches`, bit-identical to
+    :func:`lsh_bucket`), then each bucket tile is scored with one BLAS
+    float64 matmul per task (``applyInArrow`` — the tile's vectors
+    arrive as ONE contiguous Arrow buffer, zero-copy reshape), with the
+    same compensated-longdouble boundary pass as :func:`cosine_topk`
+    (so the exact op's oracle applies unchanged), and the per-row
+    top-k as a vectorized stable argsort. Zero-norm vectors rank last
+    with NULL cosine (x/0 → NULL under desc NULLS LAST) — a raw NaN
+    would sort first in Spark. Measured at 200k×64: 66 s, where the
+    pure-JVM pairing with an interpreted per-pair cosine ran >600 s
+    (SCALE.md §14.2).
+
+    ``max_bucket_size`` (default :data:`KNN_MAX_BUCKET_SIZE`) bounds
+    the hot-bucket straggler: a duplicate-dense corpus slice collapses
+    into one m² matmul task otherwise (measured at 200k×64: one
+    14k²-pair task owned the whole wall time). Buckets over the bound
+    are split into s = ⌈m/max⌉ hash-assigned tiles and every (i, j)
+    tile pair becomes one RECTANGULAR matmul task of ≲max² pairs;
+    per-task top-k candidates are merged by a global (cosine desc
+    NULLS LAST, id asc) rank — exact, no recall loss (pinned in
+    tests/test_hot_bucket.py). Sizing is HOT-ONLY: per-bucket counts
+    over the bound are broadcast (≤ n/max rows by construction), so
+    rows of ordinary buckets shuffle exactly once with ti=tj=0 and
+    only hot rows fan out into 2s−1 copies. The cost is one narrow
+    counts pass over the vector column plus the small merge window
+    (n·k·s candidate rows). The bound also caps kernel memory: the cos
     matrix is max² float64 (134 MB at 4096) instead of m²."""
+    if max_bucket_size is None or max_bucket_size < 1:
+        raise ValueError("max_bucket_size must be >= 1")
     import numpy as _np
-
-    out_schema = (
-        f"{id_col} long, neighbor_id long, cosine double, rank int"
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StructField,
+        StructType,
     )
 
-    def _square_topk(ids, v, m):
-        """Self-excluding in-tile top-k arrays — the ONE scoring +
-        selection body shared by the unbounded kernel and the tiled
-        diagonal kernel (bit-identity between the two paths is
-        structural, not re-proven per change). Returns (src_ids,
-        neighbor_ids, cosines, ranks)."""
-        nrm = _np.sqrt((v * v).sum(axis=1))
+    id_t = df.schema[id_col].dataType
+    cand_schema = StructType(
+        [
+            StructField(id_col, id_t),
+            StructField("neighbor_id", id_t),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+
+    def _rounded_cos(va, vb):
+        """The (|a| × |b|) cosine matrix as one dgemm, knife-edge
+        scores recomputed in longdouble, rounded to 6 digits."""
+        an = _np.sqrt((va * va).sum(axis=1))
+        bn = _np.sqrt((vb * vb).sum(axis=1))
         with _np.errstate(divide="ignore", invalid="ignore"):
-            cos = (v @ v.T) / _np.outer(nrm, nrm)
+            cos = (va @ vb.T) / _np.outer(an, bn)
             near = _near_rounding_boundary(cos * 1e6)
         if near.any():
             ai, bi = _np.nonzero(near)
-            al = v[ai].astype(_np.longdouble)
-            bl = v[bi].astype(_np.longdouble)
+            al = va[ai].astype(_np.longdouble)
+            bl = vb[bi].astype(_np.longdouble)
             dots = (al * bl).sum(axis=1)
-            an = _np.sqrt((al * al).sum(axis=1))
-            bn = _np.sqrt((bl * bl).sum(axis=1))
+            anl = _np.sqrt((al * al).sum(axis=1))
+            bnl = _np.sqrt((bl * bl).sum(axis=1))
             with _np.errstate(divide="ignore", invalid="ignore"):
-                cos[ai, bi] = (dots / (an * bn)).astype(_np.float64)
-        cos = _np.round(cos, 6)
+                cos[ai, bi] = (dots / (anl * bnl)).astype(_np.float64)
+        return _np.round(cos, 6)
+
+    def _square_topk(ids, v, m):
+        """Self-excluding in-tile top-k arrays of a diagonal task.
+        Returns (src_ids, neighbor_ids, cosines)."""
+        cos = _rounded_cos(v, v)
         # self-pairs compete as NaN (sorted last) and are dropped by
         # the cumulative-keep mask below — NOT merely sliced off, so
         # a bucket of exact ties never lets 'self' steal a slot
@@ -871,76 +825,29 @@ def knn_graph_vectorized(
         keep = order != inv[:, None]  # drop the self column per row
         sel = keep & (_np.cumsum(keep, axis=1) <= kk)
         ri, ci = _np.nonzero(sel)  # row-major: rank order preserved
-        vals = cosp[ri, order[ri, ci]]
-        ranks = _np.cumsum(sel, axis=1)[ri, ci].astype(_np.int32)
-        return ids[ri], idp[order[ri, ci]], vals, ranks
-
-    def _bucket_topk(table):
-        import pyarrow as _pa
-
-        ids = table.column(id_col).to_numpy(zero_copy_only=False)
-        m = len(ids)
-        if m < 2:
-            return _pa.table(
-                {
-                    id_col: _pa.array([], type=_pa.int64()),
-                    "neighbor_id": _pa.array([], type=_pa.int64()),
-                    "cosine": _pa.array([], type=_pa.float64()),
-                    "rank": _pa.array([], type=_pa.int32()),
-                }
-            )
-        col = table.column(vec_col).combine_chunks()
-        flat = _np.asarray(col.flatten(), dtype=_np.float64)
-        v = _reshape_vectors(flat, m, col)
-        src, nbr, vals, ranks = _square_topk(ids, v, m)
-        return _pa.table(
-            {
-                id_col: _pa.array(src, type=_pa.int64()),
-                "neighbor_id": _pa.array(nbr, type=_pa.int64()),
-                "cosine": _pa.array(vals, mask=_np.isnan(vals)),
-                "rank": _pa.array(ranks),
-            }
-        )
-
-    # the LSH bucket is computed in a mapInArrow pre-pass, not the
-    # JVM expression: the interpreted higher-order fold costs
-    # ~0.27 ms/row (54 s for a bare 200k signature projection) while
-    # the numpy kernel — bit-identical fold order — is ~100× cheaper,
-    # and this path crosses the Arrow boundary for scoring anyway
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    base = df.select(F.col(id_col), F.col(vec_col))
-    sig_schema = StructType(
-        list(base.schema.fields) + [StructField("__bucket", IntegerType())]
-    )
-    sig = base.mapInArrow(
-        _arrow_lsh_bucket_batches(vec_col), sig_schema
-    )
-    if max_bucket_size is None:
-        return sig.groupBy("__bucket").applyInArrow(
-            _bucket_topk, schema=out_schema
-        )
-    if max_bucket_size < 1:
-        raise ValueError("max_bucket_size must be >= 1")
-
-    cand_schema = f"{id_col} long, neighbor_id long, cosine double"
+        return ids[ri], idp[order[ri, ci]], cosp[ri, order[ri, ci]]
 
     def _tile_topk(table):
         import pyarrow as _pa
 
-        empty = _pa.table(
-            {
-                id_col: _pa.array([], type=_pa.int64()),
-                "neighbor_id": _pa.array([], type=_pa.int64()),
-                "cosine": _pa.array([], type=_pa.float64()),
-            }
-        )
-        n_rows = table.num_rows
-        if n_rows == 0:
+        arrow_id_t = table.schema.field(id_col).type
+
+        def _out(src, nbr, vals):
+            return _pa.table(
+                {
+                    id_col: _pa.array(src, type=arrow_id_t),
+                    "neighbor_id": _pa.array(nbr, type=arrow_id_t),
+                    "cosine": _pa.array(
+                        vals, type=_pa.float64(), mask=_np.isnan(vals)
+                    ),
+                }
+            )
+
+        empty = _out([], [], _np.array([], dtype=_np.float64))
+        if table.num_rows == 0:
             return empty
         # diagonal task (ti == tj): only side-a rows are emitted and
-        # the tile is scored against itself with self-exclusion —
-        # the exact unbounded body over the tile's members
+        # the tile is scored against itself with self-exclusion
         if (
             table.column("__ti")[0].as_py()
             == table.column("__tj")[0].as_py()
@@ -952,14 +859,7 @@ def knn_graph_vectorized(
             col = table.column(vec_col).combine_chunks()
             flat = _np.asarray(col.flatten(), dtype=_np.float64)
             v = _reshape_vectors(flat, m, col)
-            src, nbr, vals, _ranks = _square_topk(ids, v, m)
-            return _pa.table(
-                {
-                    id_col: _pa.array(src, type=_pa.int64()),
-                    "neighbor_id": _pa.array(nbr, type=_pa.int64()),
-                    "cosine": _pa.array(vals, mask=_np.isnan(vals)),
-                }
-            )
+            return _out(*_square_topk(ids, v, m))
         # off-diagonal: queries = tile ti (side 1), candidates =
         # tile tj (side 0); disjoint hash tiles → no self-pairs
         sd = table.column("__sd").to_numpy(zero_copy_only=False)
@@ -982,21 +882,7 @@ def knn_graph_vectorized(
             bcol,
             expect_dim=va.shape[1],
         )
-        an = _np.sqrt((va * va).sum(axis=1))
-        bn = _np.sqrt((vb * vb).sum(axis=1))
-        with _np.errstate(divide="ignore", invalid="ignore"):
-            cos = (va @ vb.T) / _np.outer(an, bn)
-            near = _near_rounding_boundary(cos * 1e6)
-        if near.any():
-            ai, bi = _np.nonzero(near)
-            al = va[ai].astype(_np.longdouble)
-            bl = vb[bi].astype(_np.longdouble)
-            dots = (al * bl).sum(axis=1)
-            anl = _np.sqrt((al * al).sum(axis=1))
-            bnl = _np.sqrt((bl * bl).sum(axis=1))
-            with _np.errstate(divide="ignore", invalid="ignore"):
-                cos[ai, bi] = (dots / (anl * bnl)).astype(_np.float64)
-        cos = _np.round(cos, 6)
+        cos = _rounded_cos(va, vb)
         perm = _np.argsort(b_ids, kind="stable")
         cosp = cos[:, perm]
         idp = b_ids[perm]
@@ -1004,15 +890,21 @@ def knn_graph_vectorized(
         order = _np.argsort(-cosp, axis=1, kind="stable")[:, :w]
         ri = _np.repeat(_np.arange(n_a), w)
         ci = order.ravel()
-        vals = cosp[ri, ci]
-        return _pa.table(
-            {
-                id_col: _pa.array(a_ids[ri], type=_pa.int64()),
-                "neighbor_id": _pa.array(idp[ci], type=_pa.int64()),
-                "cosine": _pa.array(vals, mask=_np.isnan(vals)),
-            }
-        )
+        return _out(a_ids[ri], idp[ci], cosp[ri, ci])
 
+    # the LSH bucket is computed in a mapInArrow pre-pass, not the
+    # JVM expression: the interpreted higher-order fold costs
+    # ~0.27 ms/row (54 s for a bare 200k signature projection) while
+    # the numpy kernel — bit-identical fold order — is ~100× cheaper,
+    # and this path crosses the Arrow boundary for scoring anyway
+    base = df.select(F.col(id_col), F.col(vec_col))
+    sig = base.mapInArrow(
+        _arrow_lsh_bucket_batches(vec_col),
+        StructType(
+            list(base.schema.fields)
+            + [StructField("__bucket", IntegerType())]
+        ),
+    )
     # hot-only sizing: only buckets OVER the bound are broadcast
     # (≤ n/max_bucket_size rows by construction); ordinary buckets
     # resolve to s=1 through the left join's NULL → 1. The counts
@@ -1132,6 +1024,16 @@ def knn_graph_multiprobe(
     ANY table — the standard LSH recall amplification (Indyk & Motwani
     1998; the same OR-construction MLlib's MinHashLSH hash tables
     use). ``n_tables=1`` is exactly :func:`knn_graph`.
+
+    Unlike :func:`knn_graph` this is a pure-JVM plan (``lsh_bucket``
+    expressions, collect_list + double explode pairing, ``zip_with``
+    cosine), so it keeps defined NULL semantics: a NULL vector lands in
+    bucket 0 and scores NULL against any bucket mate, where the Arrow
+    kernel raises. ``n_tables=1`` is therefore the NULL-tolerant form
+    of :func:`knn_graph`; ``test_knn_multiprobe_amplifies_recall``
+    pins the two equal bit-for-bit, so a semantics change to either
+    body trips that test rather than drifting silently. The interpreted per-pair cosine
+    makes it a fixture-scale path (>600 s at 200k×64, SCALE.md §14.2).
 
     Plan: ONE signature pass computes all tables' buckets as an array,
     exploded to (table, bucket) postings — n_tables·n narrow rows, the
@@ -1300,9 +1202,8 @@ def ivf_append(
     Returns (id, vec, cell) in ``ivf_encode``'s assignment schema;
     feed the accumulated union back via ``ivf_ann_topk(index=...)``.
     """
-    spark = batch.sparkSession
-    cents = spark.createDataFrame(
-        centroids, "cell int, centroid array<double>"
+    cents = local_frame(
+        batch.sparkSession, centroids, "cell int, centroid array<double>"
     )
     d2 = F.aggregate(
         F.zip_with(
@@ -1380,9 +1281,8 @@ def ivf_ann_topk(
     )
 
     # n_probe nearest centroids per query, via a broadcast centroid table.
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
+    cents = local_frame(
+        corpus.sparkSession, cent_rows, "cell int, centroid array<double>"
     )
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv"))
     d2 = F.aggregate(
@@ -1675,8 +1575,8 @@ def pq_ann_topk(
         for sub in range(m)
         for code in range(n_codes)
     ]
-    cb = spark.createDataFrame(
-        cb_rows, "sub int, code int, centroid array<double>"
+    cb = local_frame(
+        spark, cb_rows, "sub int, code int, centroid array<double>"
     )
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv"))
     sub_dot = F.aggregate(
@@ -1808,13 +1708,12 @@ def cosine_topk_int8(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    kernel: str = "auto",
     index: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`cosine_topk` over int8-quantized vectors. Cosine is
     scale-invariant, so the per-vector quantization scales cancel and
     the score is ``dot(codes_a, codes_b) / sqrt(|a|²·|b|²)`` — an
-    EXACT bigint dot product (|code| ≤ 127 → products ≤ 16129, sums
+    EXACT integer dot product (|code| ≤ 127 → products ≤ 16129, sums
     far below 2^53) followed by one double sqrt+divide, identical on
     both engines. Zero vectors score NULL and rank last, like the
     float kernels. Recall vs the float top-k is pinned in
@@ -1827,115 +1726,40 @@ def cosine_topk_int8(
     4-8× smaller codes table, never the float vectors. Queries are
     always quantized inline (small by the broadcast contract).
 
-    ``kernel="auto"`` scores through an Arrow-batched integer matmul
-    (the :func:`cosine_topk_vectorized` pattern, ~4× at sf≈1): dots
-    stay EXACT int64 in numpy, the raw double ``dot/sqrt(den²)`` is
-    bit-identical to the JVM's (exact int→double conversions + IEEE
+    Scoring is an Arrow-batched integer matmul (the :func:`cosine_topk`
+    pattern, ~4× over a JVM fold at sf≈1). Quantization stays
+    JVM-side, so codes match the oracle's round-half-up bit-for-bit;
+    numpy widens the codes to int64 and derives both n² norms itself
+    (exact int64 sums). The raw double ``dot/sqrt(den²)`` is
+    bit-identical to the oracle's (exact int→double conversions + IEEE
     sqrt/divide), and the kernel never rounds — it emits every
     candidate within 1.5e-6 of its batch's k-th raw score (rounding
     can move a value by at most 0.5e-6, so the final rounded top-k is
     provably inside that band) and Spark's own ``round`` + window do
     the ranking, keeping engine rounding semantics out of Python
-    entirely. ``kernel="jvm"`` is the fully-lazy in-plan fold — the
-    correctness/oracle shape, bit-equal to auto (pinned in
-    tests/test_ann_quality.py).
-
-    Cost profile: at true scale the win of int8 is the 4-8x smaller
-    MATERIALIZED codes table (quantize once, write, scan codes not
-    vectors); both kernels score from codes alone.
+    entirely. A NULL corpus vector fails with the Arrow kernels'
+    contract error (:func:`_reshape_vectors`).
     """
-    if kernel not in ("auto", "arrow", "jvm"):
-        raise ValueError(
-            f"cosine_topk_int8: unknown kernel {kernel!r} "
-            "(expected 'auto', 'arrow', or 'jvm')"
-        )
+    import numpy as _np
 
-    def codes_only(df, out_id, as_bigint=True, prebuilt=None):
+    def quantized(df, out_id, prebuilt=None):
         qz = (
-            prebuilt.select(F.col(out_id), F.col("codes"))
+            prebuilt
             if prebuilt is not None
             else quantize_embeddings_int8(df, id_col=out_id, vec_col=vec_col)
         )
-        if not as_bigint:
-            # the arrow kernel widens tinyint codes to int64 in numpy —
-            # skipping the per-element JVM cast transform (1 lambda
-            # eval per element, interpreted) entirely
-            return qz.select(out_id, F.col("codes").alias("c"))
-        codes = F.transform(F.col("codes"), lambda c: c.cast("bigint"))
-        return qz.select(out_id, codes.alias("c"))
+        return qz.select(F.col(out_id), F.col("codes").alias("__cc"))
 
-    def q(df, out_id, prebuilt=None):
-        staged = codes_only(df, out_id, prebuilt=prebuilt)
-        n2 = F.aggregate(
-            F.col("c"), F.lit(0).cast("bigint"), lambda acc, c: acc + c * c
-        )
-        return staged.select(out_id, "c", n2.alias("n2"))
-
-    if kernel != "jvm":
-        # the arrow kernel derives both norms itself (exact int64
-        # numpy sums) — quantization stays JVM-side so codes match
-        # the oracle's round-half-up bit-for-bit, but the interpreted
-        # per-element n² fold never runs
-        return _cosine_topk_int8_arrow(
-            codes_only(
-                corpus, id_col, as_bigint=False, prebuilt=index
-            ).withColumnRenamed("c", "__cc"),
-            codes_only(
-                queries.select(
-                    F.col(query_id_col).alias(query_id_col), vec_col
-                ),
-                query_id_col,
-                as_bigint=False,
-            ).withColumnRenamed("c", "__qc"),
-            k,
-            id_col,
-            query_id_col,
-        )
-
-    c = q(corpus, id_col, prebuilt=index).withColumnRenamed(
-        "c", "__cc"
-    ).withColumnRenamed("n2", "__cn2")
-    qs = q(
+    c = quantized(corpus, id_col, prebuilt=index)
+    qs = quantized(
         queries.select(F.col(query_id_col).alias(query_id_col), vec_col),
         query_id_col,
-    ).withColumnRenamed("c", "__qc").withColumnRenamed("n2", "__qn2")
-
-    dot = F.aggregate(
-        F.zip_with(F.col("__qc"), F.col("__cc"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
     )
-    denom2 = (F.col("__qn2") * F.col("__cn2")).cast("double")
-    cos = F.when(
-        denom2 > 0, F.round(dot.cast("double") / F.sqrt(denom2), 6)
-    )
-    scored = (
-        c.crossJoin(F.broadcast(qs))
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, cos.alias("cosine_q"))
-    )
-    return _rank_topk(scored, query_id_col, "cosine_q", id_col, k)
-
-
-def _cosine_topk_int8_arrow(
-    c: DataFrame,
-    qs: DataFrame,
-    k: int,
-    id_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Arrow scoring kernel for :func:`cosine_topk_int8` — see its
-    docstring for the exactness argument. Inputs are the quantized
-    (id, __cc codes) / (qid, __qc) frames; both n² norms are derived
-    in-kernel (exact int64)."""
-    import numpy as _np
-
     q_rows = qs.collect()
     if not q_rows:
         # preserve the INPUT query-id type (string ids etc.), exactly
-        # like the non-empty path and the jvm kernel — a hardcoded
-        # bigint here would desynchronize the kernels' schemas on the
-        # empty-input case only
+        # like the non-empty path — a hardcoded bigint here would
+        # change the schema on the empty-input case only
         return _rank_topk(
             c.select(
                 F.lit(None)
@@ -1950,7 +1774,7 @@ def _cosine_topk_int8_arrow(
             k,
         )
     q_ids = _np.array([r[0] for r in q_rows])
-    q_mat = _np.array([r["__qc"] for r in q_rows], dtype=_np.int64)
+    q_mat = _np.array([r[1] for r in q_rows], dtype=_np.int64)
     q_n2 = (q_mat * q_mat).sum(axis=1)
 
     qid_t = qs.schema[query_id_col].dataType.simpleString()
@@ -2021,8 +1845,7 @@ def _cosine_topk_int8_arrow(
             )
 
     scored = (
-        c.select(id_col, "__cc")
-        .mapInArrow(_score, schema=out_schema)
+        c.mapInArrow(_score, schema=out_schema)
         .select(
             query_id_col,
             id_col,
@@ -2299,8 +2122,8 @@ def ndcg_at_k(
     cost ∝ queries × k, never the corpus), one groupBy(query)."""
     spark = ranking.sparkSession
     disc = _ndcg_discounts(k)
-    dtab = spark.createDataFrame(
-        [(r + 1, disc[r]) for r in range(k)], "rank int, d string"
+    dtab = local_frame(
+        spark, [(r + 1, disc[r]) for r in range(k)], "rank int, d string"
     ).select("rank", F.col("d").cast("decimal(20,12)").alias("d"))
     # cumulative ideal DCG per possible relevant-count 1..k
     import decimal as _dec
@@ -2310,8 +2133,8 @@ def ndcg_at_k(
     for s in disc:
         acc += _dec.Decimal(s)
         cum.append(str(acc))
-    ctab = spark.createDataFrame(
-        [(i + 1, cum[i]) for i in range(k)], "n int, idcg string"
+    ctab = local_frame(
+        spark, [(i + 1, cum[i]) for i in range(k)], "n int, idcg string"
     ).select("n", F.col("idcg").cast("decimal(24,12)").alias("idcg"))
     rel = relevance.select(
         F.col(query_col).alias("__q"), F.col(id_col).alias("__d")

@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_store_spark.session import local_frame
+
 # One token regex shared by the Spark expressions and the generated
 # DuckDB oracle SQL (both engines: lowercase alnum runs).
 TOKEN_RE = "[a-z0-9]+"
@@ -802,7 +804,7 @@ def bm25_topk(
     if not terms:
         raise ValueError("bm25_topk: queries must carry >= 1 term")
     spark = df.sparkSession
-    qdf = spark.createDataFrame(terms, "query_id string, tok string")
+    qdf = local_frame(spark, terms, "query_id string, tok string")
 
     tf = postings
     if tf is None:
@@ -1137,7 +1139,7 @@ def learn_phrase_merges(
         corpus = corpus.withColumn("__tokens", fold).localCheckpoint(
             eager=True
         )
-    merges_df = spark.createDataFrame(
-        merges, "round int, w1 string, w2 string, pair_count bigint"
+    merges_df = local_frame(
+        spark, merges, "round int, w1 string, w2 string, pair_count bigint"
     )
     return merges_df, corpus

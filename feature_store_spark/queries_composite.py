@@ -127,9 +127,7 @@ PART_META = {
     'd_embedding_near_dup': {'keys': ['id_a', 'id_b'], 'nums': ['cosine'], 'tss': []},
     'd_semantic_dedup': {'keys': ['bucket', 'dup_of', 'keep', 'vec_id'], 'nums': [], 'tss': []},
     'sim_cosine_topk': {'keys': ['query_id', 'rank', 'vec_id'], 'nums': ['cosine'], 'tss': []},
-    'sim_cosine_topk_vectorized': {'keys': ['query_id', 'rank', 'vec_id'], 'nums': ['cosine'], 'tss': []},
     'sim_knn_graph': {'keys': ['neighbor_id', 'rank', 'vec_id'], 'nums': ['cosine'], 'tss': []},
-    'sim_knn_graph_expr': {'keys': ['neighbor_id', 'rank', 'vec_id'], 'nums': ['cosine'], 'tss': []},
     'sim_knn_graph_multiprobe': {'keys': ['neighbor_id', 'rank', 'vec_id'], 'nums': ['cosine'], 'tss': []},
     'g1_pagerank_knn': {'keys': ['node', 'rank_q'], 'nums': ['rank'], 'tss': []},
     'mm_decode_media': {'keys': ['doc_id', 'format', 'height', 'media_type', 'n_bytes', 'width'], 'nums': [], 'tss': []},
@@ -226,12 +224,10 @@ COMPOSITES = {
         "d_semantic_dedup", "d_containment_pairs", "d_chunk_dedup",
     ],
     "suite_cosine_topk": [
-        "sim_cosine_topk", "sim_cosine_topk_vectorized",
-        "sim_cosine_topk_int8", "sim_ndcg_cosine",
+        "sim_cosine_topk", "sim_cosine_topk_int8", "sim_ndcg_cosine",
     ],
     "suite_knn_graph": [
-        "sim_knn_graph", "sim_knn_graph_expr",
-        "sim_knn_graph_multiprobe", "g1_pagerank_knn",
+        "sim_knn_graph", "sim_knn_graph_multiprobe", "g1_pagerank_knn",
     ],
     "suite_multimodal": [
         "mm_decode_media", "mm_frame_sample", "mm_resize_media",

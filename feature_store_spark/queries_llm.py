@@ -241,10 +241,9 @@ def q_cosine_topk(spark, sf_dir):
     BLAS-batched numpy matmul with the compensated boundary pass) —
     what a user gets calling ``cosine_topk`` with no kernel argument,
     so this is the entry the bench races. The pure-JVM scalar kernel
-    (kernel="jvm") stays the lazily-planned correctness baseline the
-    ANN variants rerank against (equivalence pinned in
-    tests/test_ann_quality.py); sim_cosine_topk_vectorized pins this
-    same plan under its round-3 name for cross-round comparability."""
+    (kernel="jvm") stays the lazily-planned exact baseline the ANN
+    recall bands are measured against (equivalence pinned in
+    tests/test_ann_quality.py)."""
     return S.cosine_topk(
         _t(spark, sf_dir, "embeddings"),
         _query_vecs(spark, sf_dir),
@@ -819,11 +818,10 @@ def q_knn_graph(spark, sf_dir):
     hot-bucket tiling ON BY DEFAULT (KNN_MAX_BUCKET_SIZE=4096): those
     66 s were one 14k²-pair straggler task; oversized buckets now
     tile into bounded rectangular matmul tasks with an exact global
-    merge — identical output (tests/test_hot_bucket.py). Same
-    contract, same oracle; the expression kernel stays available as
-    sim_knn_graph_expr and bit-equal via the multiprobe(n_tables=1)
-    equivalence pin."""
-    return S.knn_graph_vectorized(_t(spark, sf_dir, "embeddings"), k=5)
+    merge — identical output (tests/test_hot_bucket.py). The pure-JVM
+    pairing remains as knn_graph_multiprobe(n_tables=1), pinned
+    bit-equal to this op."""
+    return S.knn_graph(_t(spark, sf_dir, "embeddings"), k=5)
 
 
 @spec(
@@ -838,37 +836,6 @@ def q_knn_graph_multiprobe(spark, sf_dir):
     return S.knn_graph_multiprobe(
         _t(spark, sf_dir, "embeddings"), k=5, n_tables=2
     )
-
-
-@spec(
-    "sim_cosine_topk_vectorized",
-    S.cosine_topk_oracle_sql(n_queries=N_QUERY_VECS, k=10),
-    ("ext", "similarity", "vectorized"),
-)
-def q_cosine_topk_vectorized(spark, sf_dir):
-    """Same contract (and oracle) as sim_cosine_topk — since round 4
-    the base entry routes to this same kernel (zero-copy Arrow batches,
-    BLAS dgemm, per-batch exact top-k), so this name exists for
-    cross-round bench comparability; the headline slot it held now
-    races sim_cosine_topk_int8 instead."""
-    return S.cosine_topk_vectorized(
-        _t(spark, sf_dir, "embeddings"), _query_vecs(spark, sf_dir), k=10
-    )
-
-
-@spec(
-    "sim_knn_graph_expr",
-    S.knn_graph_oracle_sql(k=5),
-    ("ext", "similarity", "graph"),
-)
-def q_knn_graph_expr(spark, sf_dir):
-    """Same contract (and oracle) as sim_knn_graph via the pure-JVM
-    expression kernel (collect_list + double explode + zip_with
-    cosine) — kept oracle-checked because it is the no-Python-worker
-    fallback, but it is the FIXTURE-scale path: per-pair interpreted
-    cosine makes it degenerate at 200k×64 (SCALE.md §14.2), which is
-    why the headline name routes to the Arrow/BLAS kernel."""
-    return S.knn_graph(_t(spark, sf_dir, "embeddings"), k=5)
 
 
 @spec(

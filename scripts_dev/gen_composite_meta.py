@@ -55,8 +55,7 @@ PARTS = [
     "d_simhash_signatures", "d_simhash_near_dup",
     "d_ngram_jaccard_pairs", "d_embedding_near_dup", "d_containment_pairs",
     "d_chunk_dedup",
-    "sim_cosine_topk", "sim_cosine_topk_vectorized",
-    "sim_knn_graph", "sim_knn_graph_expr", "g1_pagerank_knn",
+    "sim_cosine_topk", "sim_knn_graph", "g1_pagerank_knn",
     "mm_decode_media", "mm_frame_sample", "mm_resize_media",
     "mm_extract_features",
     "pt_contamination", "pt_pii_scrub", "pt_chunk_documents",

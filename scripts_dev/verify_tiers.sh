@@ -6,13 +6,14 @@
 #   scripts_dev/verify_tiers.sh              # whole suite, both tiers
 #   scripts_dev/verify_tiers.sh tests/test_txn_*.py   # a subset
 #
-# Extra arguments are passed to both pytest runs (default: tests/).
+# Extra arguments are passed to both pytest runs (default: tests/ and
+# the benchmark harness's helper tests, perfbench/tests/).
 set -u
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 targets=("$@")
-[ ${#targets[@]} -eq 0 ] && targets=(tests/)
+[ ${#targets[@]} -eq 0 ] && targets=(tests/ perfbench/tests/)
 log_dir="$(mktemp -d)"
 trap 'rm -rf "$log_dir"' EXIT
 

@@ -112,8 +112,9 @@ def test_cosine_topk_rejects_unknown_kernel(spark):
         [(0, [1.0, 2.0])], "vec_id long, embedding array<double>"
     )
     q = df.select(F.col("vec_id").alias("query_id"), "embedding")
-    with pytest.raises(ValueError, match="unknown kernel"):
-        cosine_topk(df, q, kernel="native")
+    for kernel in ("native", "vectorized"):
+        with pytest.raises(ValueError, match="unknown kernel"):
+            cosine_topk(df, q, kernel=kernel)
 
 
 def test_chunk_documents_preserves_null_text_docs(spark):
@@ -324,11 +325,17 @@ def test_int8_empty_queries_preserve_query_id_type(spark):
 def test_arrow_kernels_reject_null_vectors_loudly(spark):
     """Arrow's flatten() silently drops NULL lists, so a nullable
     embedding column would reshape into garbage scored against the
-    wrong ids — the kernels must fail with the targeted contract
-    error instead (the JVM kernels keep defined NULL semantics)."""
+    wrong ids — every Arrow kernel must fail with the targeted
+    contract error instead, naming the NULL-tolerant paths, which keep
+    defined NULL semantics."""
     from pyspark.sql import functions as F
 
-    from feature_store_spark.llm.similarity import cosine_topk
+    from feature_store_spark.llm.similarity import (
+        cosine_topk,
+        cosine_topk_int8,
+        knn_graph,
+        knn_graph_multiprobe,
+    )
 
     emb = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, None), (2, [3.0, 4.0])],
@@ -337,11 +344,20 @@ def test_arrow_kernels_reject_null_vectors_loudly(spark):
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    with pytest.raises(Exception, match="non-null fixed-dimension"):
-        cosine_topk(emb, q, k=2).collect()
-    # the documented fallback handles NULLs with defined semantics
+    for arrow_kernel in (
+        lambda: cosine_topk(emb, q, k=2),
+        lambda: cosine_topk_int8(emb, q, k=2),
+        lambda: knn_graph(emb, k=2),
+    ):
+        with pytest.raises(
+            Exception, match=r"non-null fixed-dimension(.|\n)*kernel='jvm'"
+        ):
+            arrow_kernel().collect()
+    # the documented fallbacks handle NULLs with defined semantics
     rows = cosine_topk(emb, q, k=2, kernel="jvm").collect()
     assert {r["vec_id"] for r in rows} == {1, 2}
+    edges = knn_graph_multiprobe(emb, k=2, n_tables=1).collect()
+    assert {(r["vec_id"], r["neighbor_id"]) for r in edges} == {(0, 2), (2, 0)}
 
 
 @pytest.mark.slow
@@ -895,25 +911,24 @@ def test_benchmark_calls_bind_to_engine_signatures():
 def test_driver_side_frames_go_through_local_frame():
     """``createDataFrame(<list>)`` plans as a Python RDD (every scan
     forks Python workers); the engine builds its driver-side frames
-    with ``session.local_frame`` instead. No
-    module on the table, serving, operator or streaming paths may call
+    with ``session.local_frame`` instead. No module of the package
+    but ``session.py`` (which defines ``local_frame``) may call
     ``createDataFrame`` itself."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "feature_store_spark"
     offenders = []
-    for sub in ("pipelines", "serving", "operators", "streaming"):
-        for path in sorted((pkg / sub).rglob("*.py")):
-            for node in ast.walk(ast.parse(path.read_text())):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "createDataFrame"
-                ):
-                    offenders.append(
-                        f"{path.relative_to(pkg)}:{node.lineno}"
-                    )
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not offenders, offenders
 
 

@@ -15,7 +15,7 @@ from feature_store_spark.llm.similarity import (
     _tiled_tasks,
     bucket_pairs,
     knn_graph,
-    knn_graph_vectorized,
+    knn_graph_multiprobe,
 )
 
 
@@ -48,26 +48,41 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.slow
-def test_knn_graph_hot_bucket_tiling_is_exact(spark):
-    df = _planted_vectors(spark)
-    base = _rows(knn_graph(df, k=3))
-    tiled = _rows(knn_graph(df, k=3, max_bucket_size=10))
-    assert tiled == base and len(base) > 0
-
-
 def test_knn_graph_vectorized_tiling_is_exact(spark):
-    """The Arrow/BLAS headline kernel's hot-bucket tiling (DEFAULT ON
-    since round 10) must be bit-identical to the single-task-per-
-    bucket shape AND to the expression kernel — forcing the planted
-    hot bucket through s ≥ 6 tiles (rect off-diagonal matmuls + the
-    global merge rank) on the way."""
+    """The Arrow/BLAS kNN kernel's hot-bucket tiling must be
+    bit-identical to the untiled shape (the default bound leaves the
+    planted bucket in one task) AND to the pure-JVM pairing of
+    knn_graph_multiprobe(n_tables=1) — forcing the planted hot bucket
+    through s ≥ 6 tiles (rect off-diagonal matmuls + the global merge
+    rank) on the way. The numpy bucket pass is pinned to the
+    lsh_bucket expression by the same equality."""
     df = _planted_vectors(spark)
-    base = _rows(knn_graph_vectorized(df, k=3, max_bucket_size=None))
-    tiled = _rows(knn_graph_vectorized(df, k=3, max_bucket_size=10))
-    expr = _rows(knn_graph(df, k=3))
-    assert tiled == base and len(base) > 0
-    assert tiled == expr
+    tiled = _rows(knn_graph(df, k=3, max_bucket_size=10))
+    base = _rows(knn_graph(df, k=3))
+    expr = _rows(knn_graph_multiprobe(df, k=3, n_tables=1))
+    assert tiled == base == expr and len(base) > 0
+
+
+def test_knn_graph_keeps_int_and_string_id_types(spark):
+    """knn_graph's id and neighbor_id columns take the input id type,
+    like cosine_topk's: int ids stay int and string ids work, equal
+    to the pure-JVM knn_graph_multiprobe(n_tables=1), column types
+    included (Arrow kernel outputs are always nullable, so nullability
+    is not compared) — through tiled (max_bucket_size=10) and untiled
+    tasks alike."""
+    base = _planted_vectors(spark)
+    for id_type, as_id in (
+        ("int", F.col("vec_id").cast("int")),
+        ("string", F.format_string("v%03d", F.col("vec_id"))),
+    ):
+        df = base.select(as_id.alias("vec_id"), "embedding")
+        expr = knn_graph_multiprobe(df, k=3, n_tables=1)
+        for got in (knn_graph(df, k=3), knn_graph(df, k=3, max_bucket_size=10)):
+            assert [(f.name, f.dataType) for f in got.schema] == [
+                (f.name, f.dataType) for f in expr.schema
+            ]
+            assert got.schema["neighbor_id"].dataType.simpleString() == id_type
+            assert _rows(got) == _rows(expr) and _rows(got)
 
 
 @pytest.mark.slow
