@@ -205,7 +205,7 @@ def cosine_topk(
     q_ids = _np.array([r[0] for r in q_rows])
     # float64 input vectors convert to longdouble exactly, so the
     # compensated pass sees the same operands the BLAS pass did
-    q_mat = _np.array([r[1] for r in q_rows], dtype=_np.longdouble)
+    q_mat = _query_matrix(q_rows, _np.float64).astype(_np.longdouble)
     q_norm = _np.sqrt((q_mat * q_mat).sum(axis=1))
     q_mat64 = q_mat.astype(_np.float64)
     q_norm64 = q_norm.astype(_np.float64)
@@ -551,6 +551,20 @@ def _reshape_vectors(flat, n_rows, arrow_col, expect_dim=None):
             "cosine_topk(kernel='jvm') or knn_graph_multiprobe(n_tables=1)"
         )
     return flat.reshape(n_rows, dim)
+
+
+def _query_matrix(q_rows, dtype):
+    """The collected (id, vector) query rows' vectors as an (n × dim)
+    ``dtype`` matrix, held to the same contract as every corpus batch
+    (:func:`_reshape_vectors`)."""
+    import numpy as _np
+    import pyarrow as _pa
+
+    col = _pa.array(
+        [r[1] for r in q_rows], type=_pa.list_(_pa.from_numpy_dtype(dtype))
+    )
+    flat = _np.asarray(col.flatten(), dtype=dtype)
+    return _reshape_vectors(flat, len(q_rows), col)
 
 
 def _tiled_tasks(
@@ -1774,7 +1788,7 @@ def cosine_topk_int8(
             k,
         )
     q_ids = _np.array([r[0] for r in q_rows])
-    q_mat = _np.array([r[1] for r in q_rows], dtype=_np.int64)
+    q_mat = _query_matrix(q_rows, _np.int64)
     q_n2 = (q_mat * q_mat).sum(axis=1)
 
     qid_t = qs.schema[query_id_col].dataType.simpleString()

@@ -36,8 +36,15 @@ reclaims data directories referenced only by pruned manifests, plus
 — behind an explicit grace window — crash-orphaned dirs no manifest
 ever referenced.
 
-Two private pieces carry every committing verb:
+Three private pieces carry every committing verb:
 
+- **The leaf writer** (``_land``) is the only code that writes data
+  leaves. Given rows, the partition column (None: the flat table's one
+  leaf ``""``) and the leaf keys, it re-keys rows to their leaf dirs,
+  writes them in one job, refuses a leaf that produced no dir, counts
+  each leaf (the write's Observation, or one read-back aggregate that
+  also records stats and Bloom bits), runs CHECK constraints on the
+  written bytes and compares the counts with what the verb expected.
 - **The leaf-map codec** (``_leaves`` / ``_encode``) is the only code
   that knows the three manifest formats (FORMAT.md §3). ``_leaves``
   decodes any version into ``{pkey: entry}``; an unpartitioned table
@@ -1152,22 +1159,136 @@ def _merge_rows(base, updates, keys, order_col: str, evolve: bool):
     ).drop("__src")
 
 
-def _write_leaves(root, phys, pcol, rows, pks, written) -> dict:
-    """Write ``rows`` (logical columns + ``__ptok``) to ONE fresh dir,
-    one ``__ptok`` subdir per partition (the unpartitioned leaf is the
-    dir itself), and return {pk: leaf dir}."""
+def _write_leaves(root, phys, pcol, rows, pks, written):
+    """Write ``rows`` (logical columns, plus ``__ptok`` when ``pcol`` is
+    set) to ONE fresh dir, one ``__ptok`` subdir per partition (the
+    unpartitioned leaf is the dir itself). Returns ({pk: leaf dir}, an
+    Observation whose ``rows`` counts the rows the write received)."""
     rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
     written.append(rel)
-    w = _write_physical(rows if pcol else rows.drop("__ptok"), phys).write
+    obs = Observation()
+    w = _write_physical(
+        rows.observe(obs, F.count(F.lit(1)).alias("rows")), phys
+    ).write
     if pcol:
         w = w.partitionBy("__ptok")
     w.parquet(os.path.join(root, rel))
-    return {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
+    dirs = {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
+    return dirs, obs
 
 
-def _leaf_entries(readback, col: str, dirs: dict, stats_fields, bloom_fields):
+def _partition_keys(rows: DataFrame, pcol: str, verb: str) -> dict:
+    """{pkey: typed value} of the ``pcol`` values in ``rows``, sorted by
+    key — one distinct collect. A NULL value has no leaf to land in and
+    is refused; the message names it ``NULL '<col>'``, which
+    ``export_warehouse`` matches on."""
+    vals = [r[0] for r in rows.select(pcol).distinct().collect()]
+    if any(x is None for x in vals):
+        raise ValueError(
+            f"{verb}: NULL {pcol!r} values cannot key partitions — fill "
+            "or drop them first"
+        )
+    return dict(sorted((_pkey(x), x) for x in vals))
+
+
+def _land(
+    root: str,
+    verb: str,
+    phys: dict,
+    rows: DataFrame,
+    pcol: str | None,
+    written: list,
+    keys: dict | None = None,
+    key_field: StructField | None = None,
+    expected: dict | int | None = None,
+    stats=(),
+    bloom=(),
+    checks=(),
+) -> dict:
+    """Write ``rows`` (logical columns) as fresh leaves and return their
+    ``{pkey: entry}`` — the one leaf writer every committing verb uses.
+
+    ``pcol`` None is the flat table, the one leaf ``""``. Otherwise the
+    leaf ``keys`` ({pkey: typed value}, typed as ``key_field``, default
+    the rows' own ``pcol`` field) are given or collected from ``rows``
+    (``_partition_keys``); with per-leaf ``expected`` counts, collected
+    keys outside them mean a corrupt manifest and refuse. Then, in
+    order:
+
+    1. each row joins its leaf's ``__ptok`` (``_ptok_mapping``);
+    2. one write (``_write_leaves``);
+    3. every leaf that should hold rows must have produced its dir;
+    4. per-leaf accounting: an Observation on the write when its count
+       is all that is needed — one leaf, or leaves whose counts the
+       caller already knows, and no ``stats``/``bloom`` columns —
+       otherwise one read-back aggregate (``_leaf_entries``);
+    5. the CHECK ``constraints`` on the written bytes, then the
+       ``expected`` count, per leaf (a dict) or in total (an int). A
+       mismatch raises ``_StaleRead``: the tip moved between the
+       caller's accounting and the write."""
+    spark = rows.sparkSession
+    schema = rows.schema
+    known = isinstance(expected, dict)
+    if pcol is None:
+        keys = {"": ""}
+    else:
+        if keys is None:
+            keys = _partition_keys(rows, pcol, verb)
+            stray = sorted(set(keys) - set(expected)) if known else []
+            if stray:
+                raise RuntimeError(
+                    f"{verb}: leaves of {sorted(expected)!r} contain rows "
+                    f"of foreign partitions {stray!r} — the manifest at "
+                    f"{root!r} is corrupt; not committing"
+                )
+        tok_map = _ptok_mapping(spark, key_field or schema[pcol], keys)
+        rows = rows.join(F.broadcast(tok_map), pcol)
+    dirs, obs = _write_leaves(
+        root, phys, pcol, rows, expected if known else keys, written
+    )
+    missing = sorted(
+        pk for pk, d in dirs.items()
+        if (not known or expected[pk])
+        and not os.path.isdir(os.path.join(root, d))
+    )
+    if missing:
+        raise RuntimeError(
+            f"{verb}: partitions {missing!r} produced no leaf — rows would "
+            "be lost (a partition value that does not compare equal to "
+            "itself, such as a NaN, keys no leaf); not committing"
+        )
+    paths = [os.path.join(root, d) for d in dirs.values()]
+    want = expected
+    if not (stats or bloom) and (len(keys) == 1 or known):
+        # one count: the one leaf's, or the total of the caller's split
+        got = int(obs.get["rows"])
+        entries = {
+            pk: {"dir": d, "rows": expected[pk] if known else got}
+            for pk, d in dirs.items()
+        }
+        if known:
+            want = sum(expected.values())
+    else:
+        entries = _leaf_entries(
+            _read_data(spark, schema, phys, paths), pcol, dirs, stats, bloom
+        )
+        got = {pk: e["rows"] for pk, e in entries.items()}
+        if not known:
+            got = sum(got.values())
+    if checks:
+        _check_constraints(_read_data(spark, schema, phys, paths), checks)
+    if expected is not None and got != want:
+        raise _StaleRead(
+            f"{verb}: written row counts disagree with the accounting "
+            f"(expected {expected!r}, wrote {got})"
+        )
+    return entries
+
+
+def _leaf_entries(readback, col, dirs: dict, stats_fields, bloom_fields):
     """{pk: entry} for freshly written leaf ``dirs`` off ONE aggregate
-    of the columnar ``readback`` grouped by ``col``: live row counts,
+    of the columnar ``readback`` grouped by ``col`` (None: the flat
+    leaf ``""``): live row counts,
     min/max/null-count per ``stats_fields`` column and a Bloom bitmap
     per ``bloom_fields`` column — the union of one ``collect_set`` per
     probe position, each bounded by the bitmap size, so the collect is
@@ -1190,7 +1311,9 @@ def _leaf_entries(readback, col: str, dirs: dict, stats_fields, bloom_fields):
             for j, p in enumerate(_bloom_pos_exprs(f))
         ]
     got = {}
-    for r in readback.groupBy(col).agg(*aggs).collect():
+    for r in readback.groupBy(F.lit("") if col is None else col).agg(
+        *aggs
+    ).collect():
         stats, bloom = {}, {}
         for i, f in enumerate(stats_fields):
             mn = _stat_encode(r[f"__mn{i}"])
@@ -1383,7 +1506,9 @@ def upsert_manifest(
     concurrent upserts cannot lose each other's keys — the loser of a
     version race re-merges against the winner's snapshot and commits
     on top (pytest: two interleaved writers, no lost update; crash
-    mid-write leaves the old snapshot readable).
+    mid-write leaves the old snapshot readable). This is the flat case
+    of the body both upserts share (``_upsert``): the table is one
+    leaf, rewritten whole by every batch, an empty batch included.
     Returns the committed snapshot's row count.
 
     ``allow_schema_evolution=True`` is the Delta ``mergeSchema``
@@ -1400,58 +1525,10 @@ def upsert_manifest(
     the manifest, and a later call with the same app_id and a version
     at or below it is skipped (returns the tip's row count unchanged)
     — the exactly-once contract for at-least-once replay sources."""
-    spark = updates.sparkSession
-    txn_w = _txn_validate(txn)
-    if latest_version(root) == 0:
-        _guard_foreign_store(root)
-
-    def attempt(v, tip, leaves, written):
-        if tip is not None and _is_partitioned(tip):
-            raise ValueError(
-                f"{root!r} is a PARTITION-SCOPED manifest table; a "
-                "full-snapshot commit on top would collapse its layout "
-                "— use upsert_manifest_partitioned"
-            )
-        phys = _phys_map(tip)
-        base = None if tip is None else _read_entries(
-            spark, StructType.fromJson(tip["schema"]), phys, root,
-            leaves.values(),
-        )
-        merged = _merge_rows(
-            base, updates, list(key_cols), order_col, allow_schema_evolution
-        )
-        _validate_mapping(merged.schema, phys, _retired_physical(tip))
-        obs = Observation()
-        dirs = _write_leaves(
-            root, phys, None,
-            merged.observe(obs, F.count(F.lit(1)).alias("rows")), [""],
-            written,
-        )
-        n = int(obs.get["rows"])
-        checks = _effective_constraints(tip, constraints)
-        if checks:
-            # validate the WRITTEN snapshot (columnar re-scan, no
-            # recomputation of the merge) against table-level +
-            # per-call constraints; a violation aborts before the
-            # manifest ever publishes — write-audit-publish
-            _check_constraints(
-                _read_data(
-                    spark, merged.schema, phys,
-                    [os.path.join(root, dirs[""])],
-                ),
-                checks,
-            )
-        return _Commit(
-            {"op": "upsert", "schema": merged.schema.jsonValue()},
-            None, {"": {"dir": dirs[""], "rows": n}}, None,
-            lambda _v, rows: rows,
-        )
-
-    # an idempotent replay of an applied (app_id, version) returns the
-    # tip's row count unchanged
-    return _commit(
-        root, "upsert_manifest", attempt, max_retries, backend, txn_w,
-        lambda _v, tip: int(tip.get("rows") or 0), empty_ok=True,
+    return _upsert(
+        "upsert_manifest", updates, root, key_cols, order_col, None,
+        max_retries, allow_schema_evolution, backend,
+        constraints=constraints, txn=txn,
     )
 
 
@@ -1850,7 +1927,7 @@ def _bloom_may_contain(encoded: str, key: str) -> bool:
 def _resolve_bloom_fields(schema: StructType, bloom_cols, partition_col):
     fields = {f.name: f for f in schema.fields}
     out = []
-    for c in bloom_cols:
+    for c in bloom_cols or ():
         if c not in fields:
             raise ValueError(
                 f"bloom_cols column {c!r} is not in the table schema"
@@ -1875,7 +1952,7 @@ def _resolve_bloom_fields(schema: StructType, bloom_cols, partition_col):
 def _resolve_stats_fields(schema: StructType, stats_cols, partition_col):
     fields = {f.name: f for f in schema.fields}
     out = []
-    for c in stats_cols:
+    for c in stats_cols or ():
         if c not in fields:
             raise ValueError(
                 f"stats_cols column {c!r} is not in the table schema"
@@ -1909,63 +1986,32 @@ def upsert_manifest_partitioned(
     bloom_cols: Sequence[str] | None = None,
     constraints: Sequence[tuple[str, str]] | None = None,
 ) -> int:
-    """Partition-scoped transactional upsert: ``upsert_manifest``'s
-    semantics and multi-writer safety at O(touched partitions) cost.
-    A commit READS and WRITES only the partitions the updates touch —
-    the manifest maps partition → immutable leaf directory, and a new
-    version's map carries every untouched partition's entry forward
-    verbatim (its files are never re-read, re-written, or moved). The
-    commit cost is O(updated partitions), matching the reference's
-    per-row ``INSERT … ON CONFLICT`` merge footprint
-    (`src/pipelines/batch_pipeline.py:221-310`) instead of the
-    O(table) full-snapshot rewrite of the unpartitioned form.
+    """``upsert_manifest`` scoped to the partitions the updates touch,
+    at O(touched partitions) cost — the reference's per-row
+    ``INSERT … ON CONFLICT`` footprint instead of the flat form's
+    O(table) rewrite. A commit reads and writes only the touched
+    partitions' leaves (``data/<uuid>/__ptok=<token>/``, one Spark job;
+    ``__ptok`` hashes the partition key for the layout only, the real
+    column stays in the files); untouched entries carry forward
+    verbatim. Concurrency is ``upsert_manifest``'s race plus Delta-style
+    conflict resolution: a loser whose partitions the winner did not
+    touch re-publishes its written leaves on the new tip with no Spark
+    work, else it re-merges. A zero-row batch is a no-op with no
+    commit. Returns the committed table's total row count.
 
-    Layout: each commit writes its touched partitions in ONE Spark job
-    to ``data/<uuid>/__ptok=<token>/`` (``__ptok`` is a synthetic
-    hash of the partition key used purely for file layout — the real
-    partition column stays inside the data files, so readers just
-    union leaf dirs with the pinned schema, no Hive-path parsing).
+    ``mode="merge"`` (default) merges rows into each touched partition;
+    ``"replace"`` replaces each touched partition's contents with the
+    updates' rows (dynamic partition overwrite under the same atomic
+    commit; base rows are never read, the schema is still reconciled).
+    ``key_cols=None`` (replace only) skips the per-key dedupe so every
+    update row lands verbatim (``export_warehouse`` relies on it).
 
-    Concurrency: the same optimistic manifest race as
-    ``upsert_manifest``, plus Delta-style conflict resolution — a
-    writer that loses the version race checks whether the winner
-    touched any of ITS partitions; if not (disjoint writers), it
-    re-publishes the SAME already-written data dirs on top of the new
-    tip with zero additional Spark work, else it re-merges only the
-    touched partitions against the new tip. Returns the committed
-    table's total row count.
-
-    ``mode``: ``"merge"`` (default) last-writer-wins rows INTO each
-    touched partition (keys absent from the updates survive);
-    ``"replace"`` REPLACES each touched partition's contents with the
-    updates' rows — dynamic-partition-overwrite semantics under the
-    same atomic commit (a repair re-run that dropped keys actually
-    drops them). Replace never reads base partition data, so its
-    commit is cheaper still; the table schema is still reconciled.
-
-    ``key_cols=None`` (replace mode only) skips the per-key
-    last-writer-wins dedupe entirely: every update row lands verbatim,
-    matching a plain dynamic partition overwrite row-for-row — the
-    passthrough a multi-row-per-key-per-partition export needs
-    (``export_warehouse`` uses it, so an export keeps every row a
-    dynamic partition overwrite would).
-
-    ``stats_cols`` records per-leaf min/max/null-count for the named
-    (orderable, non-partition) columns in the manifest entry — the
-    data-skipping statistics ``read_table(where=...)`` prunes leaf
-    directories with. Computed on the SAME columnar read-back that
-    produces the commit's row counts (no extra job); untouched
-    partitions carry their previously recorded stats forward with
-    their leaves. Columns added later by schema evolution simply have
-    no stats on older leaves — those leaves stay unprunable for that
-    column, never wrong.
-
-    ``bloom_cols`` additionally records a per-leaf Bloom filter for
-    the named equality-canonical columns (see the bloom section above)
-    — the point-lookup complement to min/max: an ``=`` predicate in
-    ``read_table(where=...)`` skips leaves whose filter proves the key
-    absent. Its bit positions ride on the same read-back aggregate
-    (one ``collect_set`` per probe position, opt-in)."""
+    ``stats_cols`` records per-leaf min/max/null-count of the named
+    non-partition columns and ``bloom_cols`` a per-leaf Bloom filter
+    (see the bloom section above), both off the commit's one read-back
+    aggregate — the data-skipping metadata ``read_table(where=...)``
+    prunes leaves with. Leaves written before a column existed carry
+    no stats for it and stay unprunable on it, never wrong."""
     if mode not in ("merge", "replace"):
         raise ValueError(f"mode must be 'merge' or 'replace', got {mode!r}")
     if key_cols is None and mode != "replace":
@@ -1973,72 +2019,89 @@ def upsert_manifest_partitioned(
             "key_cols=None (no-dedupe passthrough) requires "
             "mode='replace'; merge needs keys to merge on"
         )
+    return _upsert(
+        "upsert_manifest_partitioned", updates, root, key_cols, order_col,
+        partition_col, max_retries, allow_schema_evolution, backend, mode,
+        stats_cols, bloom_cols, constraints,
+    )
+
+
+def _layout(pcol: str | None) -> str:
+    if pcol is None:
+        return "UNPARTITIONED"
+    return f"PARTITION-SCOPED (partitioned by {pcol!r})"
+
+
+def _upsert(
+    verb: str,
+    updates: DataFrame,
+    root: str,
+    key_cols: Sequence[str] | None,
+    order_col: str,
+    pcol: str | None,
+    max_retries: int,
+    evolve: bool,
+    backend: LocalLinkBackend | None,
+    mode: str = "merge",
+    stats_cols: Sequence[str] | None = None,
+    bloom_cols: Sequence[str] | None = None,
+    constraints: Sequence[tuple[str, str]] | None = None,
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """The attempt body of both upserts; ``pcol`` None is the flat
+    table, whose one leaf ``""`` every batch (even an empty one)
+    touches. Each attempt merges the touched leaves of the tip with the
+    updates and lands the result (``_land``). The written commit is
+    kept across lost races while the winner left the touched leaves
+    (merge mode), the schema and the constraints as they were."""
     if "__ptok" in updates.columns:
         raise ValueError(
             "'__ptok' is reserved for the partition-leaf layout; "
             "rename the column"
         )
     spark = updates.sparkSession
+    txn_w = _txn_validate(txn)
     if latest_version(root) == 0:
         _guard_foreign_store(root)
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return 0  # a zero-row batch is a harmless no-op, no commit
-    if any(t is None for t in touched):
-        raise ValueError(
-            f"updates contain NULL {partition_col!r} values; NULL "
-            "partitions cannot be merged safely — fill or drop them "
-            "before upserting"
-        )
-    keys = {_pkey(t): t for t in touched}
-    tok_map = _ptok_mapping(spark, updates.schema[partition_col], keys)
+    keys = {"": ""} if pcol is None else _partition_keys(updates, pcol, verb)
+    if not keys:
+        return 0  # a zero-row partitioned batch is a no-op, no commit
+    merge_on = None if key_cols is None else [*key_cols, *filter(None, [pcol])]
     prepared: dict = {}  # the written commit, reusable across lost races
 
     def attempt(v, tip, leaves, written):
-        if tip is not None:
-            if not _is_partitioned(tip):
-                raise ValueError(
-                    f"{root!r} is an UNPARTITIONED manifest table; "
-                    "mixing layouts would orphan its snapshot — keep "
-                    "using upsert_manifest, or migrate to a fresh root"
-                )
-            if tip["partition_col"] != partition_col:
-                raise ValueError(
-                    f"table is partitioned by {tip['partition_col']!r}, "
-                    f"not {partition_col!r}"
-                )
-        tip_touched = {
-            pk: (leaves[pk]["dir"] if pk in leaves else None) for pk in keys
-        }
-        tip_schema_json = tip["schema"] if tip else None
-        if prepared and (
-            # the loop discarded the dirs (a vacuum race or an error)
-            not written
+        if tip is not None and _pcol(tip) != pcol:
+            raise ValueError(
+                f"{root!r} is laid out {_layout(_pcol(tip))}, not "
+                f"{_layout(pcol)} — mixing layouts would orphan its "
+                "snapshot; switch layouts with repartition_table"
+            )
+        base = {
             # replace-mode output is independent of base partition
             # CONTENTS, so a winner touching the same partitions does
-            # not stale the prepared commit — only a schema change
-            # does; merge-mode output depends on both
-            or (mode == "merge" and prepared["base_touched"] != tip_touched)
-            # a schema CHANGE by the race winner also invalidates the
-            # prepared commit: re-publishing our pre-evolution schema
-            # would silently drop the winner's new/widened columns
-            # from the table schema
-            or prepared["base_schema"] != tip_schema_json
-        ):
+            # not stale the prepared commit; merge-mode output does. A
+            # schema change by the winner stales it (re-publishing our
+            # schema would drop the winner's columns), and so do
+            # constraints the written rows were never checked against.
+            # Whole entries compare, so a deletion vector or appended
+            # dir the winner added to a touched leaf stales it as well
+            "touched": {pk: leaves.get(pk) for pk in keys}
+            if mode == "merge" else None,
+            "schema": tip["schema"] if tip else None,
+            "checks": _effective_constraints(tip, constraints),
+        }
+        # the loop discarded the dirs (a vacuum race or an error), or
+        # the winner staled them
+        if prepared and (not written or prepared["base"] != base):
             _discard(root, written)
             prepared.clear()
         if not prepared:
             phys = _phys_map(tip)
             existing = None
             if tip is not None:
-                # reconcile against the TABLE schema even when every
-                # touched partition is new (or mode="replace" never
-                # reads base rows): the committed manifest's schema
-                # covers the untouched partitions too, so an updates
-                # frame with missing/narrower columns must widen (or
-                # fail) exactly as if rows overlapped
+                # reconcile against the TABLE schema even when no base
+                # rows are read (new partitions, replace mode): the
+                # manifest's schema covers the untouched leaves too
                 tip_schema = StructType.fromJson(tip["schema"])
                 base_entries = [leaves[pk] for pk in keys if pk in leaves]
                 existing = (
@@ -2046,86 +2109,36 @@ def upsert_manifest_partitioned(
                     if base_entries and mode == "merge"
                     else local_frame(spark, [], tip_schema)
                 )
-            merged = _merge_rows(
-                existing,
-                updates,
-                None if key_cols is None else [*key_cols, partition_col],
-                order_col,
-                allow_schema_evolution,
-            )
-            stats_fields = (
-                _resolve_stats_fields(merged.schema, stats_cols, partition_col)
-                if stats_cols
-                else []
-            )
-            bloom_fields = (
-                _resolve_bloom_fields(merged.schema, bloom_cols, partition_col)
-                if bloom_cols
-                else []
-            )
+            merged = _merge_rows(existing, updates, merge_on, order_col, evolve)
             _validate_mapping(merged.schema, phys, _retired_physical(tip))
-            leaf = _write_leaves(
-                root, phys, partition_col,
-                merged.join(F.broadcast(tok_map), partition_col), keys,
-                written,
-            )
-            missing = [
-                pk
-                for pk, d in leaf.items()
-                if not os.path.isdir(os.path.join(root, d))
-            ]
-            if missing:
-                # a partition value that fails lit()-equality round-trip
-                # (e.g. a NaN in a float partition column) routes its
-                # rows into the null-token leaf instead of its own —
-                # surface it as the modeling error it is rather than a
-                # bare PATH_NOT_FOUND from the counts read-back
-                raise ValueError(
-                    f"partition values {sorted(missing)!r} produced no "
-                    f"leaf directory — {partition_col!r} values must "
-                    "compare equal to themselves (floats with NaN and "
-                    "other non-reflexive values cannot key partitions)"
-                )
-            # per-partition row counts off the freshly written leaves
-            # (columnar scan of ONE column; merged itself is not
-            # recomputed) — they make every version's total composable
-            # from its map without touching untouched partitions
-            readback = _read_data(
-                spark,
-                merged.schema,
-                phys,
-                [os.path.join(root, d) for d in leaf.values()],
-            )
-            checks = _effective_constraints(tip, constraints)
-            if checks:
-                # CHECK constraints (table-level + per-call) over the
-                # touched partitions' final rows (untouched partitions
-                # were validated by their own commits); violation
-                # aborts pre-publish
-                _check_constraints(readback, checks)
             prepared.update(
-                base_touched=tip_touched,
-                base_schema=tip_schema_json,
+                base=base,
                 schema=merged.schema.jsonValue(),
-                entries=_leaf_entries(
-                    readback, partition_col, leaf, stats_fields, bloom_fields
+                entries=_land(
+                    root, verb, phys, merged, pcol, written, keys=keys,
+                    key_field=updates.schema[pcol] if pcol else None,
+                    stats=_resolve_stats_fields(
+                        merged.schema, stats_cols, pcol
+                    ),
+                    bloom=_resolve_bloom_fields(
+                        merged.schema, bloom_cols, pcol
+                    ),
+                    checks=base["checks"],
                 ),
             )
-        # format 3: the manifest carries only the TOUCHED entries —
-        # commit payload is O(updated partitions), flat in table
-        # partition count; readers resolve through the checkpoint
-        # chain. A lost race keeps the written leaves for the next
-        # attempt, which re-publishes them with zero Spark work unless
-        # the winner staled them (above).
+        # partitioned: a format-3 delta of the touched entries only —
+        # the payload is flat in the table's partition count
         return _Commit(
-            {"op": mode, "schema": prepared["schema"]},  # merge / replace
-            partition_col, prepared["entries"], [],
+            {"op": mode if pcol else "upsert", "schema": prepared["schema"]},
+            pcol, prepared["entries"], [],
             lambda _v, rows: rows, reuse=True,
         )
 
+    # an idempotent replay of an applied (app_id, version) returns the
+    # tip's row count unchanged
     return _commit(
-        root, "upsert_manifest_partitioned", attempt, max_retries, backend,
-        empty_ok=True,
+        root, verb, attempt, max_retries, backend, txn_w,
+        lambda _v, tip: int(tip.get("rows") or 0), empty_ok=True,
     )
 
 
@@ -2267,24 +2280,6 @@ def compact_manifest(
         df = _read_entries(
             spark, schema, phys, root, [leaves[pk] for pk in selected]
         )
-        if pcol is not None:
-            # re-key each row to its leaf token via the shared typed
-            # mapping (`_ptok_mapping` — the upsert uses the same one).
-            # The typed values come from the leaves themselves (one
-            # distinct per selected partition, the same O(selected)
-            # collect the upsert pays for `touched`).
-            vals = [r[0] for r in df.select(pcol).distinct().collect()]
-            val_keys = {_pkey(x): x for x in vals}
-            stray = sorted(set(val_keys) - set(selected))
-            if stray:
-                raise RuntimeError(
-                    f"compact_manifest: leaves of {sorted(selected)!r} "
-                    f"contain rows of foreign partitions {stray!r} — "
-                    f"the manifest at {root!r} is corrupt; not committing"
-                )
-            df = df.join(
-                F.broadcast(_ptok_mapping(spark, schema[pcol], val_keys)), pcol
-            )
         if zorder_cols:
             df = zorder_key(
                 df, list(zorder_cols), bits=zorder_bits or DEFAULT_BITS,
@@ -2306,53 +2301,22 @@ def compact_manifest(
             df = df.sortWithinPartitions(
                 *[F.col(c) for c in (pcol,) if c], F.col("__zkey")
             ).drop("__zkey")
-        dirs = _write_leaves(root, phys, pcol, df, selected, written)
-        # guard before publishing: every selected partition that holds
-        # rows must have produced its leaf, and the rewritten leaves
-        # must carry exactly the row counts the manifest records — a
-        # mapping bug (or a non-reflexive partition value) must surface
-        # here as an error, never as a silently thinner tip. Costs one
-        # columnar scan of the freshly written partition leaves.
-        live = [pk for pk in selected if leaves[pk]["rows"] > 0]
-        missing = [
-            pk for pk in live
-            if not os.path.isdir(os.path.join(root, dirs[pk]))
-        ]
-        if missing:
-            raise RuntimeError(
-                f"compact_manifest: partitions {sorted(missing)!r} "
-                "produced no leaf directory — rows would be lost; "
-                "not committing"
+        # the rewritten leaves must hold exactly the rows the manifest
+        # records: a mapping bug (or a non-reflexive partition value)
+        # surfaces here as an error, never as a silently thinner tip
+        try:
+            landed = _land(
+                root, "compact_manifest", phys, df, pcol, written,
+                expected={pk: leaves[pk]["rows"] for pk in selected},
             )
-        if pcol is not None and live:
-            recounts = {
-                _pkey(r[0]): r[1]
-                for r in _read_data(
-                    spark, schema, phys,
-                    [os.path.join(root, dirs[pk]) for pk in live],
-                )
-                .groupBy(pcol)
-                .count()
-                .collect()
-            }
-            short = {
-                pk: (leaves[pk]["rows"], recounts.get(pk, 0))
-                for pk in live
-                if recounts.get(pk, 0) != leaves[pk]["rows"]
-            }
-            if short:
-                raise RuntimeError(
-                    "compact_manifest: rewritten row counts disagree "
-                    f"with the manifest (partition: (expected, got)) "
-                    f"{short!r} — not committing"
-                )
+        except _StaleRead as e:
+            raise RuntimeError(f"{e} — not committing") from None
         # compaction re-lays the SAME rows, so recorded data-skipping
         # stats and Bloom filters stay exact — carry them forward;
         # untouched entries carry forward through resolution
         updates = {
             pk: {
-                "dir": dirs[pk],
-                "rows": leaves[pk]["rows"],
+                **landed[pk],
                 **{k: leaves[pk][k] for k in ("stats", "bloom")
                    if k in leaves[pk]},
             }
@@ -2364,8 +2328,8 @@ def compact_manifest(
                 "version": nv,
                 "files_before": before,
                 "files_after": sum(
-                    _leaf_file_count(os.path.join(root, d))
-                    for d in dirs.values()
+                    _leaf_file_count(os.path.join(root, e["dir"]))
+                    for e in landed.values()
                 ),
                 "rows": tip["rows"],
                 "committed": True,
@@ -2431,18 +2395,6 @@ def _read_leaves(spark, schema, phys, root, leaves: dict, with_pos: bool):
             "__dv_pos": F.lit(None).cast("bigint"),
         })
     return out
-
-
-def _require_dirs(verb: str, root: str, dirs: dict) -> None:
-    missing = sorted(
-        pk for pk, d in dirs.items()
-        if not os.path.isdir(os.path.join(root, d))
-    )
-    if missing:
-        raise RuntimeError(
-            f"{verb}: partitions {missing!r} produced no leaf — rows "
-            "would be lost; not committing"
-        )
 
 
 def _change_rows(
@@ -2561,16 +2513,9 @@ def _change_rows(
             _effective_constraints(tip, None)
             if total["upd"] or total["ins"] else []
         )
-        leaf_type = plan.schema[pcol].dataType if pcol else StringType()
-        cs = cs.join(
-            F.broadcast(_ptok_mapping(
-                spark, StructField("__leaf", leaf_type), typed
-            )),
-            "__leaf",
-        )
         publish = _publish_dv if dv else _publish_rewrite
         updates, removed = publish(
-            spark, root, verb, phys, pcol, plan, leaves, counts, cs,
+            spark, root, verb, phys, pcol, plan, leaves, counts, typed, cs,
             checks, written,
         )
         meta = {"op": verb.split("_")[0]}
@@ -2596,7 +2541,7 @@ def _change_rows(
 
 
 def _publish_rewrite(
-    spark, root, verb, phys, pcol, plan, leaves, counts, cs, checks,
+    spark, root, verb, phys, pcol, plan, leaves, counts, typed, cs, checks,
     written,
 ):
     """Copy-on-write publish step of :func:`_change_rows`; returns the
@@ -2612,41 +2557,28 @@ def _publish_rewrite(
     removed = sorted(pk for pk in counts if pk not in live and pk in leaves)
     if not live:
         return {}, removed
-    dirs = _write_leaves(
-        root, phys, pcol,
-        cs.filter(F.col("__cls") != "del").select(*names, "__ptok"),
-        live, written,
-    )
-    _require_dirs(verb, root, dirs)
-    readback = _read_data(
-        spark, plan.schema, phys, [os.path.join(root, d) for d in dirs.values()]
-    ).withColumn("__leaf", F.col(pcol) if pcol else F.lit(""))
-    if checks:
-        _check_constraints(readback, checks)
 
     def recorded(k):
         # the stats/bloom columns any of the table's entries carry
         cols = {c for e in leaves.values() for c in e.get(k) or {}}
         return [plan.schema[c] for c in sorted(cols & set(names))]
 
-    updates = _leaf_entries(
-        readback, "__leaf", dirs, recorded("stats"), recorded("bloom")
-    )
-    if any(e["rows"] != expected[pk] for pk, e in updates.items()):
-        raise _StaleRead()
-    return updates, removed
+    return _land(
+        root, verb, phys,
+        cs.filter(F.col("__cls") != "del").select(*names), pcol, written,
+        keys={pk: typed[pk] for pk in live},
+        expected={pk: expected[pk] for pk in live},
+        stats=recorded("stats"), bloom=recorded("bloom"), checks=checks,
+    ), removed
 
 
 def _publish_dv(
-    spark, root, verb, phys, pcol, plan, leaves, counts, cs, checks,
+    spark, root, verb, phys, pcol, plan, leaves, counts, typed, cs, checks,
     written,
 ):
     """Merge-on-read publish step of :func:`_change_rows`; returns the
     (updates, removed) leaf delta."""
     names = [f.name for f in plan.schema.fields]
-    images = cs.filter(F.col("__cls").isin("upd", "ins"))
-    if checks:
-        _check_constraints(images.select(*names), checks)
     removed = sorted(
         pk for pk, c in counts.items()
         if pcol and pk in leaves and c["del"] == leaves[pk]["rows"]
@@ -2656,19 +2588,18 @@ def _publish_dv(
         pk: c["upd"] + c["ins"] for pk, c in counts.items()
         if c["upd"] or c["ins"]
     }
-    app_dirs: dict = {}
-    if appended:
-        obs = Observation()
-        app_dirs = _write_leaves(
-            root, phys, pcol,
-            images.select(*names, "__ptok").observe(
-                obs, F.count(F.lit(1)).alias("rows")
-            ),
-            appended, written,
+    app = _land(
+        root, verb, phys,
+        cs.filter(F.col("__cls").isin("upd", "ins")).select(*names), pcol,
+        written, keys={pk: typed[pk] for pk in appended}, expected=appended,
+        checks=checks,
+    ) if appended else {}
+    hits = cs.filter(F.col("__cls").isin("del", "upd"))
+    if pcol:
+        # the sidecars' leaf tokens, by the same typed join the leaves use
+        hits = hits.join(
+            F.broadcast(_ptok_mapping(spark, plan.schema[pcol], typed)), pcol
         )
-        if int(obs.get["rows"]) != sum(appended.values()):
-            raise _StaleRead()
-        _require_dirs(verb, root, app_dirs)
     updates = {}
     for pk, c in sorted(counts.items()):
         old = leaves.get(pk)
@@ -2676,25 +2607,22 @@ def _publish_dv(
             continue
         if old is None:
             # brand-new partition: its append dir IS the base leaf
-            updates[pk] = {"dir": app_dirs[pk], "rows": c["ins"]}
+            updates[pk] = app[pk]
             continue
         ne = dict(old)
         ne["rows"] = old["rows"] - c["del"] + c["ins"]
-        hits = c["del"] + c["upd"]
-        if hits:
+        if c["del"] + c["upd"]:
             dv_rel = _write_leaf_dv(
                 spark, root, old,
-                cs.filter(
-                    F.col("__cls").isin("del", "upd")
-                    & (F.col("__ptok") == _ptoken(pk))
-                ).select("__dv_file", "__dv_pos"),
+                (hits.filter(F.col("__ptok") == _ptoken(pk)) if pcol else hits)
+                .select("__dv_file", "__dv_pos"),
             )
             written.append(dv_rel)
             prior = (old.get("dv") or {}).get("deleted", 0)
-            ne["dv"] = {"dir": dv_rel, "deleted": prior + hits}
-        if pk in app_dirs:
+            ne["dv"] = {"dir": dv_rel, "deleted": prior + c["del"] + c["upd"]}
+        if pk in app:
             ne["extra_dirs"] = list(old.get("extra_dirs") or []) + [
-                app_dirs[pk]
+                app[pk]["dir"]
             ]
             # an insert can land anywhere; an update moves only the
             # SET columns — a stale window would mis-prune the images
@@ -4230,52 +4158,17 @@ def repartition_table(
                 "is not in the table schema"
             )
         phys = _phys_map(tip)
-        df = _read_entries(spark, schema, phys, root, leaves.values())
-        if partition_col is None:
-            # → flat snapshot (format 1)
-            obs = Observation()
-            dirs = _write_leaves(
-                root, phys, None,
-                df.observe(obs, F.count(F.lit(1)).alias("rows")), [""],
-                written,
-            )
-            new_leaves = {"": {"dir": dirs[""], "rows": int(obs.get["rows"])}}
-        else:
-            stats_fields = (
-                _resolve_stats_fields(schema, stats_cols, partition_col)
-                if stats_cols
-                else []
-            )
-            bloom_fields = (
-                _resolve_bloom_fields(schema, bloom_cols, partition_col)
-                if bloom_cols
-                else []
-            )
-            vals = [
-                r[0]
-                for r in df.select(partition_col).distinct().collect()
-            ]
-            if any(x is None for x in vals):
-                raise ValueError(
-                    f"repartition_table: NULL {partition_col!r} values "
-                    "cannot key partitions — fill or drop them first"
-                )
-            val_keys = {_pkey(x): x for x in vals}
-            tok_map = _ptok_mapping(spark, schema[partition_col], val_keys)
-            dirs = _write_leaves(
-                root, phys, partition_col,
-                df.join(F.broadcast(tok_map), partition_col),
-                sorted(val_keys), written,
-            )
-            readback = _read_data(
-                spark, schema, phys,
-                [os.path.join(root, d) for d in dirs.values()],
-            )
-            new_leaves = _leaf_entries(
-                readback, partition_col, dirs, stats_fields, bloom_fields
-            )
-        if sum(e["rows"] for e in new_leaves.values()) != tip["rows"]:
-            raise _StaleRead()  # tip moved between the two passes
+        # the rows cannot change between the read and the write; a
+        # total that disagrees with the tip's means the tip moved
+        new_leaves = _land(
+            root, "repartition_table", phys,
+            _read_entries(spark, schema, phys, root, leaves.values()),
+            partition_col, written, expected=tip["rows"],
+            stats=_resolve_stats_fields(schema, stats_cols, partition_col)
+            if partition_col else (),
+            bloom=_resolve_bloom_fields(schema, bloom_cols, partition_col)
+            if partition_col else (),
+        )
         return _Commit(
             {"op": "repartition"}, partition_col, new_leaves, None,
             lambda nv, rows: {

@@ -428,36 +428,36 @@ def running_user_profile(events: DataFrame) -> DataFrame:
     )
 
 
-def _drain_valid_events(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    merge_batch,
-) -> int:
-    """Shared scaffold of the ST4/ST13 sinks: read → dispatch →
-    filter(valid) → foreachBatch(merge_batch) → availableNow drain.
-    Returns the executed-batch count, tallied in the foreachBatch body
-    — ``len(q.recentProgress)`` is capped by
+def _drain(stream: DataFrame, checkpoint_dir: str, body) -> int:
+    """The one availableNow scaffold: drain ``stream`` through
+    ``foreachBatch(body)`` under the checkpoint at ``checkpoint_dir``
+    and stop. Returns the executed-batch count, tallied in the
+    foreachBatch wrapper — ``len(q.recentProgress)`` is capped by
     spark.sql.streaming.numRecentProgressUpdates (100) and would
     under-report a long backlog; a retry re-counts, which matches the
-    merge actually re-running (informational counter, the merges are
-    replay-convergent)."""
+    body actually re-running (an informational counter; every body
+    here is replay-convergent)."""
     executed: list[int] = []
 
     def _body(batch_df: DataFrame, batch_id: int) -> None:
         executed.append(batch_id)
-        merge_batch(batch_df, batch_id)
+        body(batch_df, batch_id)
 
-    stream = dispatch_events(read_event_stream(spark, events_dir))
-    q = (
-        stream.filter(F.col("valid"))
-        .writeStream.foreachBatch(_body)
+    (
+        stream.writeStream.foreachBatch(_body)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
     return len(executed)
+
+
+def _valid_events(spark: SparkSession, events_dir: str) -> DataFrame:
+    """The ST4/ST13 sinks' stream: read → dispatch → filter(valid)."""
+    return dispatch_events(read_event_stream(spark, events_dir)).filter(
+        F.col("valid")
+    )
 
 
 def _latest_purchase_scores(batch_df: DataFrame, with_date: bool) -> DataFrame:
@@ -514,8 +514,8 @@ def run_streaming_upsert_manifest(
         latest = _latest_purchase_scores(batch_df, with_date=False)
         upsert_manifest(latest, table_root, ["user_id"], "__seq")
 
-    batches = _drain_valid_events(
-        spark, events_dir, checkpoint_dir, _merge_batch
+    batches = _drain(
+        _valid_events(spark, events_dir), checkpoint_dir, _merge_batch
     )
     # the tip manifest records its live row count: no count job
     v = latest_version(table_root)
@@ -566,8 +566,8 @@ def run_streaming_warehouse_append(
             bloom_cols=["user_id"],
         )
 
-    batches = _drain_valid_events(
-        spark, events_dir, checkpoint_dir, _merge_batch
+    batches = _drain(
+        _valid_events(spark, events_dir), checkpoint_dir, _merge_batch
     )
     v = latest_version(table_root)
     return {
@@ -634,16 +634,13 @@ def run_drift_monitor(
             .parquet(report_dir)
         )
 
-    q = (
+    _drain(
         read_event_stream(
             spark, events_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .writeStream.foreachBatch(_check_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
+        _check_batch,
     )
-    q.awaitTermination()
     from feature_store_spark.pipelines.txn import _error_is
 
     # a missing report means zero micro-batches fired -> "no drift
@@ -702,15 +699,7 @@ def run_streaming_cdc(
     from feature_store_spark.operators.cdc import latest_changes
     from feature_store_spark.pipelines.txn import read_table, upsert_manifest
 
-    # driver-side batch tally: len(q.recentProgress) is capped by
-    # spark.sql.streaming.numRecentProgressUpdates (100) and would
-    # under-report a long backlog drained at maxFilesPerTrigger=1; a
-    # foreachBatch retry re-counts, which matches the merge actually
-    # re-running (informational counter, merge itself is idempotent)
-    executed: list[int] = []
-
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        executed.append(batch_id)
         latest = latest_changes(batch_df, key_cols, seq_col, op_col)
         rows = latest.select(
             *[c for c in latest.columns if c != "__op"],
@@ -721,20 +710,12 @@ def run_streaming_cdc(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(changes_dir)
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    batches = _drain(reader.parquet(changes_dir), checkpoint_dir, _merge_batch)
     store, _ = read_table(spark, state_dir)
     if store is None:
-        return {"batches": len(executed), "live_keys": 0,
-                "tombstones": 0}
+        return {"batches": batches, "live_keys": 0, "tombstones": 0}
     return {
-        "batches": len(executed),
+        "batches": batches,
         "live_keys": int(store.filter(~F.col("__deleted")).count()),
         "tombstones": int(store.filter(F.col("__deleted")).count()),
     }

@@ -13,8 +13,9 @@ A regression test re-derives the Spark side and compares.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from feature_store_spark.oracle import duckdb_connection
 from feature_store_spark.queries import SPECS, all_queries
@@ -23,47 +24,39 @@ from feature_store_spark.session import get_spark
 SF = "/root/testdata/sf0.001"
 
 PARTS = [
-    "s2_point_lookup", "s3_keyset_probe",
-    "p6_night_window_events", "p8_validation_rules", "p7_parameterized_filter",
-    "u4_except_keys", "u5_intersect_keys", "o5_existence_probe",
-    "j9_asof_join", "j10_band_join",
-    "j5_sample_validation", "j7_risk_summary_view",
-    "a6_having_duplicate_keys", "a12_json_feature_blob",
-    "a4_mode_per_key", "a7_stats_outliers",
-    "a8_completeness", "a9_freshness", "a10_table_counts", "alert_rules",
-    "a27_ab_test_report",
+    "s2_point_lookup", "s3_keyset_probe", "p6_night_window_events",
+    "p8_validation_rules", "p7_parameterized_filter", "u4_except_keys",
+    "u5_intersect_keys", "o5_existence_probe", "j9_asof_join", "j10_band_join",
+    "j12_supplier_geo_rollup", "j5_sample_validation", "j7_risk_summary_view",
+    "a6_having_duplicate_keys", "a12_json_feature_blob", "a4_mode_per_key",
+    "a7_stats_outliers", "a8_completeness", "a9_freshness", "a10_table_counts",
+    "alert_rules", "a27_ab_test_report", "a24_skew_report",
     "a14_rollup_counts", "a15_cube_counts", "a17_grouping_sets",
-    "a28_pivot_event_matrix", "a29_exact_percentiles",
-    "a18_algebraic_rollup",
-    "a11_approx_aggregates", "a16_hll_sketch_rollup",
-    "a19_quantile_sketch_rollup",
+    "a18_algebraic_rollup", "a23_incremental_rollup", "a28_pivot_event_matrix",
+    "a29_exact_percentiles", "a11_approx_aggregates", "a16_hll_sketch_rollup",
+    "a19_quantile_sketch_rollup", "a25_heavy_hitter_rollup",
     "a20_decayed_features", "a21_value_drift", "a22_feature_scaling",
     "w3_lag_lead_gaps", "w4_topk_orders_per_customer", "w6_ntile_buckets",
-    "w7_rolling_spend", "w10_funnel_conversion", "w11_funnel_windowed",
-    "w12_cohort_retention", "w13_gap_fill", "w14_event_transitions",
-    "a30_behavior_entropy",
-    "w1_latest_event_per_user", "w2_topk_customers", "s12b_merge_replay",
-    "s12d_dv_delete", "s12e_dv_update",
-    "o3_deterministic_sample", "o6_stratified_sample", "o7_priority_sample",
-    "s9_ordered_export",
-    "f11_iso_roundtrip", "f13_json_extract", "f14_freshness_minutes",
-    "st5_velocity_features", "st7_session_features",
-    "t_text_stats", "t_token_report", "t_language_id", "t_quality_score",
-    "t_fingerprint",
-    "t_ngram_lm_score", "t_tfidf_topk", "t_vocab_coverage",
-    "t_pmi_collocations", "t_hybrid_rrf", "sim_ndcg_cosine",
-    "d_simhash_signatures", "d_simhash_near_dup",
-    "d_ngram_jaccard_pairs", "d_embedding_near_dup", "d_containment_pairs",
-    "d_chunk_dedup",
-    "sim_cosine_topk", "sim_knn_graph", "g1_pagerank_knn",
-    "mm_decode_media", "mm_frame_sample", "mm_resize_media",
-    "mm_extract_features",
+    "w7_rolling_spend", "w9_event_sequences", "w1_latest_event_per_user",
+    "w10_funnel_conversion", "w11_funnel_windowed", "w12_cohort_retention",
+    "w13_gap_fill", "w14_event_transitions", "a30_behavior_entropy",
+    "s12_cdc_apply", "s12b_merge_replay", "s12d_dv_delete", "s12e_dv_update",
+    "w2_topk_customers", "o3_deterministic_sample", "o6_stratified_sample",
+    "o7_priority_sample", "s9_ordered_export", "f11_iso_roundtrip",
+    "f13_json_extract", "f14_freshness_minutes", "st5_velocity_features",
+    "st7_session_features", "t_text_stats", "t_token_report", "t_language_id",
+    "t_quality_score", "t_fingerprint", "t_ngram_lm_score", "t_tfidf_topk",
+    "t_bm25_topk", "t_pmi_collocations", "t_hybrid_rrf", "t_vocab_coverage",
+    "d_simhash_signatures", "d_simhash_near_dup", "d_ngram_jaccard_pairs",
+    "d_containment_pairs", "d_chunk_dedup", "d_embedding_near_dup",
+    "d_semantic_dedup", "sim_cosine_topk", "sim_knn_graph",
+    "sim_knn_graph_multiprobe", "g1_pagerank_knn", "mm_decode_media",
+    "mm_frame_sample", "mm_resize_media", "mm_extract_features",
     "pt_contamination", "pt_pii_scrub", "pt_chunk_documents",
     "pt_repetition_stats", "pt_temperature_mixture", "pt_pack_token_budget",
-    "pt_dup_span_stats",
-    "emb_label_centroids", "emb_quantize_int8", "sim_cosine_topk_int8",
-    "emb_kmeans_clusters", "o10_cluster_sample",
-    "o8_dataset_split",
+    "pt_dup_span_stats", "emb_label_centroids", "emb_quantize_int8",
+    "emb_kmeans_clusters", "o10_cluster_sample", "sim_cosine_topk_int8",
+    "sim_ndcg_cosine", "o8_dataset_split", "o9_negative_samples",
 ]
 
 SPARK_KEY = {"tinyint", "smallint", "int", "bigint", "string", "date",

@@ -353,6 +353,19 @@ def test_arrow_kernels_reject_null_vectors_loudly(spark):
             Exception, match=r"non-null fixed-dimension(.|\n)*kernel='jvm'"
         ):
             arrow_kernel().collect()
+    # a NULL QUERY vector breaks the same contract, checked on the
+    # driver before any scoring
+    null_q = emb.filter(F.col("vec_id") == 1).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    for arrow_kernel in (
+        lambda: cosine_topk(emb.filter("vec_id != 1"), null_q, k=2),
+        lambda: cosine_topk_int8(emb.filter("vec_id != 1"), null_q, k=2),
+    ):
+        with pytest.raises(
+            ValueError, match=r"non-null fixed-dimension(.|\n)*kernel='jvm'"
+        ):
+            arrow_kernel()
     # the documented fallbacks handle NULLs with defined semantics
     rows = cosine_topk(emb, q, k=2, kernel="jvm").collect()
     assert {r["vec_id"] for r in rows} == {1, 2}
@@ -975,3 +988,25 @@ def test_driver_threads_go_through_run_concurrently():
             if hit:
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_gen_composite_meta_parts_match_part_meta():
+    """``scripts_dev/gen_composite_meta.py`` regenerates PART_META from
+    its PARTS list, so that list must name every composite member, in
+    PART_META's order, or a regeneration silently drops rows."""
+    import ast
+    import pathlib
+
+    from feature_store_spark.queries_composite import PART_META
+
+    script = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "scripts_dev" / "gen_composite_meta.py"
+    )
+    (parts,) = [
+        ast.literal_eval(node.value)
+        for node in ast.parse(script.read_text()).body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "PARTS" for t in node.targets)
+    ]
+    assert parts == list(PART_META)

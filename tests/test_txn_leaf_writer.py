@@ -1,0 +1,260 @@
+"""The one leaf writer (``txn._land``) and the one upsert body
+(``txn._upsert``): every committing verb's Spark job budget, the
+refusal of a write that lost rows, and when a lost race stales an
+upsert's written leaves."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from feature_store_spark.pipelines import txn
+
+DDL = "k bigint, v string, ts bigint, p string"
+SEED = [(k, f"v{k}", 1, f"d{k % 3}") for k in range(12)]
+
+
+def _table(spark, root, partitioned: bool):
+    rows = spark.createDataFrame(SEED, DDL)
+    if partitioned:
+        txn.upsert_manifest_partitioned(rows, root, ["k"], "ts", "p")
+    else:
+        txn.upsert_manifest(rows, root, ["k"], "ts")
+    return root
+
+
+# Upper bounds on the Spark jobs one call runs, on ``_table``'s tables
+# with the test session (8 shuffle partitions), as measured. None is
+# above the count the verb ran before all verbs shared one leaf writer
+# (in brackets where it was higher): a write's Observation now stands
+# in for a read-back aggregate wherever no stats/Bloom column needs one.
+BUDGETS = {
+    "flat.upsert": 2,
+    "part.upsert.merge": 5,  # (7)
+    "part.upsert.merge.stats_bloom": 7,
+    "part.upsert.replace": 5,  # (7)
+    "part.upsert.replace.stats_bloom": 7,
+    "flat.compact": 2,
+    "flat.compact.min_files_noop": 0,
+    "part.compact": 5,  # (7)
+    "part.compact.min_files_noop": 0,
+    "flat.repartition.to_part": 8,
+    "part.repartition.to_flat": 3,
+    "flat.delete.rewrite": 3,  # (6)
+    "flat.update.rewrite": 3,  # (6)
+    "flat.merge.rewrite": 10,  # (13)
+    "flat.delete.dv": 3,  # (4)
+    "flat.update.dv": 5,  # (7)
+    "flat.merge.dv": 10,  # (12)
+    "part.delete.rewrite": 6,
+    "part.update.rewrite": 6,
+    "part.merge.rewrite": 13,
+    "part.delete.dv": 4,
+    "part.update.dv": 6,
+    "part.merge.dv": 11,
+}
+
+
+def test_every_routed_verb_stays_in_its_job_budget(spark, tmp_path, job_budget):
+    """Each verb that writes leaves runs at most its pinned number of
+    Spark jobs per call, on both layouts."""
+    up, upp = txn.upsert_manifest, txn.upsert_manifest_partitioned
+
+    def frame(rows):
+        return spark.createDataFrame(rows, DDL)
+
+    got = {}
+
+    def run(name, call):
+        _, got[name] = job_budget(call)
+
+    for layout in ("flat", "part"):
+        root = _table(spark, str(tmp_path / layout), layout == "part")
+        if layout == "flat":
+            run("flat.upsert", lambda: up(
+                frame([(1, "x", 2, "d1"), (40, "n", 2, "d1")]),
+                root, ["k"], "ts"))
+        else:
+            # replace mode lands in fresh partitions, leaving the seed's
+            # rows for the verbs below
+            for mode, p1, p2 in (("merge", "d1", "d2"), ("replace", "d7", "d8")):
+                run(f"part.upsert.{mode}", lambda: upp(
+                    frame([(1, "x", 2, p1)]), root, ["k"], "ts", "p",
+                    mode=mode))
+                run(f"part.upsert.{mode}.stats_bloom", lambda: upp(
+                    frame([(2, "y", 3, p2), (3, "z", 3, "d0")]), root,
+                    ["k"], "ts", "p", mode=mode, stats_cols=["ts"],
+                    bloom_cols=["k"]))
+        run(f"{layout}.compact.min_files_noop",
+            lambda: txn.compact_manifest(spark, root, min_files=100))
+        run(f"{layout}.compact", lambda: txn.compact_manifest(spark, root))
+        # each mode changes its own seed rows: k 4/5/6 and 7/8/9
+        for mode, k in (("rewrite", 4), ("dv", 7)):
+            run(f"{layout}.delete.{mode}", lambda: txn.delete_where(
+                spark, root, [("k", "=", k)], mode=mode))
+            run(f"{layout}.update.{mode}", lambda: txn.update_where(
+                spark, root, [("k", "=", k + 1)], {"v": mode}, mode=mode))
+            run(f"{layout}.merge.{mode}", lambda: txn.merge_into(
+                spark, root,
+                frame([(k + 2, mode, 9, f"d{(k + 2) % 3}"),
+                       (60 + k, "i", 9, "d0")]),
+                ["k", "p"], when_matched=[(None, {"v": "s.v"})],
+                when_not_matched=(None, None), mode=mode))
+        target = "part" if layout == "flat" else None
+        run(f"{layout}.repartition.to_{target or 'flat'}",
+            lambda: txn.repartition_table(spark, root, target and "p"))
+    assert got.keys() == BUDGETS.keys()
+    over = {k: (n, BUDGETS[k]) for k, n in got.items() if n > BUDGETS[k]}
+    assert not over, f"(jobs, budget) over budget: {over}; all: {got}"
+
+
+def _drop_key(monkeypatch, key: int):
+    """Make the leaf writer lose the rows with ``k == key`` — a short
+    write of the one leaf that holds them."""
+    write = txn._write_leaves
+
+    def short(root, phys, pcol, rows, pks, written, *args, **kw):
+        return write(
+            root, phys, pcol, rows.filter(F.col("k") != key), pks, written,
+            *args, **kw,
+        )
+
+    monkeypatch.setattr(txn, "_write_leaves", short)
+
+
+# (case, partitioned, key the writer drops, the call, what it raises).
+# Compaction has no concurrent writer to blame and refuses at once; the
+# DML and repartition verbs treat a count mismatch as a stale read and
+# retry until they give up; an upsert has no expected count, so only a
+# leaf that vanished entirely can be caught.
+NOT_COMMITTING = r"produced no leaf|disagree.*not committing"
+GAVE_UP = r"gave up after 2 version races"
+SHORT_WRITES = [
+    ("flat.compact", False, 0,
+     lambda s, r: txn.compact_manifest(s, r, max_retries=2), NOT_COMMITTING),
+    ("part.compact", True, 0,
+     lambda s, r: txn.compact_manifest(s, r, max_retries=2), NOT_COMMITTING),
+    ("flat.repartition", False, 0,
+     lambda s, r: txn.repartition_table(s, r, "p", max_retries=2), GAVE_UP),
+    ("part.repartition", True, 0,
+     lambda s, r: txn.repartition_table(s, r, None, max_retries=2), GAVE_UP),
+    ("flat.delete.rewrite", False, 0,
+     lambda s, r: txn.delete_where(s, r, [("k", "=", 3)], max_retries=2),
+     GAVE_UP),
+    ("part.delete.rewrite", True, 0,
+     lambda s, r: txn.delete_where(s, r, [("k", "=", 3)], max_retries=2),
+     GAVE_UP),
+    ("flat.update.rewrite", False, 4,
+     lambda s, r: txn.update_where(
+         s, r, [("k", "=", 1)], {"v": "u"}, max_retries=2), GAVE_UP),
+    ("part.update.rewrite", True, 4,
+     lambda s, r: txn.update_where(
+         s, r, [("k", "=", 1)], {"v": "u"}, max_retries=2), GAVE_UP),
+    ("flat.update.dv", False, 1,
+     lambda s, r: txn.update_where(
+         s, r, [("k", "in", [1, 4])], {"v": "u"}, max_retries=2, mode="dv"),
+     GAVE_UP),
+    ("part.update.dv", True, 1,
+     lambda s, r: txn.update_where(
+         s, r, [("k", "in", [1, 4])], {"v": "u"}, max_retries=2, mode="dv"),
+     GAVE_UP),
+    ("flat.merge.rewrite", False, 2,
+     lambda s, r: _merge(s, r, "rewrite"), GAVE_UP),
+    ("part.merge.rewrite", True, 2,
+     lambda s, r: _merge(s, r, "rewrite"), GAVE_UP),
+    ("flat.merge.dv", False, 2, lambda s, r: _merge(s, r, "dv"), GAVE_UP),
+    ("part.merge.dv", True, 2, lambda s, r: _merge(s, r, "dv"), GAVE_UP),
+    ("part.upsert", True, 100,
+     lambda s, r: txn.upsert_manifest_partitioned(
+         s.createDataFrame([(1, "x", 2, "d1"), (100, "y", 2, "d9")], DDL),
+         r, ["k"], "ts", "p", max_retries=2),
+     r"\['d9'\] produced no leaf"),
+]
+
+
+def _merge(spark, root, mode):
+    return txn.merge_into(
+        spark, root,
+        spark.createDataFrame([(2, "m", 9, "d2"), (50, "i", 9, "d2")], DDL),
+        ["k", "p"], when_matched=[(None, {"v": "s.v"})],
+        when_not_matched=(None, None), max_retries=2, mode=mode,
+    )
+
+
+@pytest.mark.parametrize(
+    "case,partitioned,key,call,raises", SHORT_WRITES,
+    ids=[c[0] for c in SHORT_WRITES],
+)
+def test_short_write_is_refused(
+    spark, tmp_path, monkeypatch, case, partitioned, key, call, raises
+):
+    """A leaf write that lost rows never lands: the verb raises (or
+    retries until it gives up), no version is published and no data
+    dir is left behind."""
+    root = _table(spark, str(tmp_path / "t"), partitioned)
+    version = txn.latest_version(root)
+    dirs = set(os.listdir(os.path.join(root, txn.DATA_DIR)))
+    _drop_key(monkeypatch, key)
+    with pytest.raises(RuntimeError, match=raises):
+        call(spark, root)
+    assert txn.latest_version(root) == version
+    assert set(os.listdir(os.path.join(root, txn.DATA_DIR))) == dirs
+
+
+class _LoseFirstPut(txn.LocalLinkBackend):
+    """Runs a competing commit between an upsert's write and its
+    conditional put, and loses that put: a deterministic version
+    race."""
+
+    def __init__(self, compete):
+        self.compete, self.puts = compete, 0
+
+    def put_if_absent(self, target, payload):
+        self.puts += 1
+        if self.puts == 1:
+            self.compete()
+            return False
+        return super().put_if_absent(target, payload)
+
+
+def _upsert(spark, root, partitioned, rows, backend):
+    frame = spark.createDataFrame(rows, DDL)
+    if partitioned:
+        return txn.upsert_manifest_partitioned(
+            frame, root, ["k"], "ts", "p", backend=backend
+        )
+    return txn.upsert_manifest(frame, root, ["k"], "ts", backend=backend)
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "part"])
+def test_upsert_race_loser_keeps_the_winners_dv_delete(
+    spark, tmp_path, partitioned
+):
+    """A race winner that deletes a row of the loser's touched leaf
+    through a deletion vector leaves that leaf's dir as it was; the
+    loser must still re-merge, or republishing its written leaf would
+    bring the deleted row back."""
+    root = _table(spark, str(tmp_path / "t"), partitioned)
+    _upsert(spark, root, partitioned, [(1, "x", 2, "d1")], _LoseFirstPut(
+        lambda: txn.delete_where(spark, root, [("k", "=", 4)], mode="dv")
+    ))
+    got = {r["k"]: r["v"] for r in txn.read_table(spark, root)[0].collect()}
+    assert 4 not in got and got[1] == "x" and len(got) == 11
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "part"])
+def test_upsert_race_loser_obeys_the_winners_new_constraint(
+    spark, tmp_path, partitioned
+):
+    """A race winner that adds a CHECK constraint stales the loser's
+    written leaf, which was never checked against it: the loser
+    re-merges, and its violating row aborts the commit."""
+    root = _table(spark, str(tmp_path / "t"), partitioned)
+    version = txn.latest_version(root)
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        _upsert(spark, root, partitioned, [(1, None, 2, "d1")], _LoseFirstPut(
+            lambda: txn.add_constraint(spark, root, "v_set", "v IS NOT NULL")
+        ))
+    assert txn.latest_version(root) == version + 1  # the constraint only
