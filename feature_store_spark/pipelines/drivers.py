@@ -374,8 +374,9 @@ def sync_rollup_from_changes(
     feed: keep a per-``group_col`` rollup (row count + exact integral
     sum of ``value_col``) of the manifest table at ``src_root``
     synchronized through the streaming CDC source
-    (`txn.read_changes_stream` with pre/post images) and MERGE INTO —
-    the composition the round's table-format verbs exist for.
+    (`txn.read_changes_stream`, whose batches carry pre/post images)
+    and MERGE INTO — the composition the round's table-format verbs
+    exist for.
 
     Each commit batch folds to per-group DELTAS driver-free:
     added rows contribute (+1, +value_new), removed rows
@@ -518,5 +519,4 @@ def sync_rollup_from_changes(
         apply_batch,
         key_cols=[key_col],
         compare_cols=[group_col, value_col],
-        include_values=True,
     )

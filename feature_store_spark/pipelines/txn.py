@@ -1211,9 +1211,7 @@ def _land(
     ``pcol`` None is the flat table, the one leaf ``""``. Otherwise the
     leaf ``keys`` ({pkey: typed value}, typed as ``key_field``, default
     the rows' own ``pcol`` field) are given or collected from ``rows``
-    (``_partition_keys``); with per-leaf ``expected`` counts, collected
-    keys outside them mean a corrupt manifest and refuse. Then, in
-    order:
+    (``_partition_keys``). Then, in order:
 
     1. each row joins its leaf's ``__ptok`` (``_ptok_mapping``);
     2. one write (``_write_leaves``);
@@ -1234,13 +1232,6 @@ def _land(
     else:
         if keys is None:
             keys = _partition_keys(rows, pcol, verb)
-            stray = sorted(set(keys) - set(expected)) if known else []
-            if stray:
-                raise RuntimeError(
-                    f"{verb}: leaves of {sorted(expected)!r} contain rows "
-                    f"of foreign partitions {stray!r} — the manifest at "
-                    f"{root!r} is corrupt; not committing"
-                )
         tok_map = _ptok_mapping(spark, key_field or schema[pcol], keys)
         rows = rows.join(F.broadcast(tok_map), pcol)
     dirs, obs = _write_leaves(
@@ -2307,6 +2298,12 @@ def compact_manifest(
         try:
             landed = _land(
                 root, "compact_manifest", phys, df, pcol, written,
+                # the manifest's keys, typed: rows of any other leaf
+                # drop at the join and fail the count check below
+                keys={
+                    pk: _stat_decode(pk, names[pcol].dataType)
+                    for pk in selected
+                } if pcol else None,
                 expected={pk: leaves[pk]["rows"] for pk in selected},
             )
         except _StaleRead as e:
@@ -2972,7 +2969,6 @@ def merge_into(
     when_not_matched_by_source: Sequence = (),
     max_retries: int = 20,
     backend: LocalLinkBackend | None = None,
-    materialize_source: bool = True,
     txn: tuple[str, int] | None = None,
     allow_schema_evolution: bool = False,
     mode: str = "rewrite",
@@ -3061,18 +3057,15 @@ def merge_into(
         not_matched = None
     if not (matched or nbs or not_matched):
         raise ValueError("merge_into: no clauses — nothing to do")
-    if materialize_source:
-        # Pin the source plan ONCE: the merge evaluates it several
-        # times (dup-key guard, accounting aggregate, rewrite) — a
-        # nondeterministic source (sample, limit, shuffle-order-
-        # dependent expr) could pass the guard on one evaluation and
-        # diverge on another, burning every retry on the accounting
-        # mismatch. Delta materializes merge sources for the same
-        # reason. Lazy localCheckpoint: first action computes and
-        # stores the rows; every later evaluation replays the stored
-        # blocks. Opt out only for large sources whose plans are
-        # provably deterministic.
-        source = source.localCheckpoint(eager=False)
+    # Pin the source plan ONCE: the merge evaluates it several times
+    # (dup-key guard, accounting aggregate, rewrite) — a
+    # nondeterministic source (sample, limit, shuffle-order-dependent
+    # expr) could pass the guard on one evaluation and diverge on
+    # another, burning every retry on the accounting mismatch. Delta
+    # materializes merge sources for the same reason. Lazy
+    # localCheckpoint: first action computes and stores the rows;
+    # every later evaluation replays the stored blocks.
+    source = source.localCheckpoint(eager=False)
     assigned = frozenset(
         c for _, a in matched + nbs if isinstance(a, dict) for c in a
     )
@@ -3545,7 +3538,6 @@ def add_column(
     root: str,
     name: str,
     dtype,
-    nullable: bool = True,
     max_retries: int = 20,
     backend: LocalLinkBackend | None = None,
 ) -> dict:
@@ -3565,7 +3557,7 @@ def add_column(
                 f"add_column: {name!r} already exists in {root!r}"
             )
         new_schema = StructType(
-            [*schema.fields, StructField(name, dtype, nullable)]
+            [*schema.fields, StructField(name, dtype, True)]
         )
         _validate_mapping(
             new_schema, _phys_map(tip), _retired_physical(tip)
@@ -3790,125 +3782,94 @@ def table_changes(
     to_version: int | None = None,
     key_cols: Sequence[str] = ("user_id",),
     compare_cols: Sequence[str] | None = None,
-    skip_unchanged_partitions: bool = False,
-    include_values: bool = False,
 ) -> DataFrame:
     """Row-level change feed between two committed versions — the CDC
     read every lake format exposes (Delta ``table_changes`` / Iceberg
-    ``changelog``), derived here from the retained manifests:
-    :func:`operators.diff.snapshot_diff` of the two pinned snapshots,
-    emitting (keys, status ∈ added/removed/changed/unchanged,
-    changed_cols). Consumers feed downstream incrementally (cache
-    invalidation, warehouse sync) without replaying full snapshots.
-    ``compare_cols`` defaults to every non-key column of the newer
-    snapshot. Scale shape inherits snapshot_diff's: one shuffle per
-    side, zero when the snapshots are key-bucketed.
+    ``changelog``), derived from the retained manifests. Version 0 is
+    the empty table, so ``table_changes(0, k)`` is version ``k`` as
+    ``added`` rows. ``to_version`` defaults to the tip.
 
-    ``skip_unchanged_partitions=True`` (partitioned tables only) uses
-    the manifests' immutable-leaf identity to read ONLY partitions
-    whose leaf dir changed between the two versions — dir equality ⇒
-    byte-identity (the vacuum invariant), so a skipped partition's
-    rows are provably all 'unchanged' and are OMITTED from the output
-    instead of scanned. After a daily commit this reads one partition
-    instead of 730; after a compact_manifest it reads only the
-    compacted leaves. Requires the partition column in ``key_cols``
-    (keys that recur across partitions would otherwise pair across
-    the skip boundary and change statuses)."""
+    Emits one row per key that changed: the keys, ``status`` ∈
+    added/removed/changed, ``changed_cols`` (the sorted, comma-joined
+    names of the differing columns of a changed row) and the pre/post
+    images ``<col>_old``/``<col>_new`` of every compare column (Delta's
+    preimage/postimage). ``compare_cols`` defaults to every non-key
+    column of the newer version; a column the older version lacks
+    reads as NULL there, typed from the newer schema, and the older
+    side's columns pair with the newer ones by physical name, so a
+    ``rename_column`` reads as no change.
+
+    Only leaves whose (dir, deletion vector, appended dirs) triple is
+    not in both versions are read. Dirs are immutable, so a shared
+    triple holds the same rows at both versions (unless a restore
+    re-binds bytes the older version's ``drop_column`` retired — then
+    every leaf is read): after a one-leaf commit the diff reads that
+    leaf's two versions, after a metadata-only commit nothing (an
+    empty frame that runs no Spark job), after ``repartition_table``
+    every leaf. The result equals :func:`operators.diff.snapshot_diff`
+    of the two snapshots without its ``unchanged`` rows whenever
+    ``key_cols`` identify a row within each version."""
     from feature_store_spark.operators.diff import snapshot_diff
 
-    try:
-        if skip_unchanged_partitions:
-            v_new = (
-                latest_version(root) if to_version is None else to_version
-            )
-            v_old = from_version
-            m_new = read_manifest(root, v_new) if v_new else None
-            m_old = read_manifest(root, v_old) if v_old else None
-            if (
-                m_old is None
-                or m_new is None
-                or not _is_partitioned(m_old)
-                or not _is_partitioned(m_new)
-            ):
-                raise ValueError(
-                    "table_changes: skip_unchanged_partitions needs a "
-                    "partition-scoped manifest table at both versions"
-                )
-            pcol = m_new["partition_col"]
-            if pcol != m_old["partition_col"] or pcol not in set(key_cols):
-                raise ValueError(
-                    "table_changes: skip_unchanged_partitions requires "
-                    f"the partition column {pcol!r} in key_cols — keys "
-                    "recurring across partitions would pair across the "
-                    "skip boundary and corrupt statuses"
-                )
-            po = resolve_partitions(root, v_old)
-            pn = resolve_partitions(root, v_new)
-            # leaf identity = (dir, deletion vector, extra dirs): a DV
-            # or a merge-on-read appended dir changes a leaf's LIVE
-            # rows without changing its base bytes — skipping on dir
-            # equality alone would drop those deletes/updates from
-            # the feed
-            def _ident(e):
-                return (
-                    (e or {}).get("dir"),
-                    (e or {}).get("dv"),
-                    tuple((e or {}).get("extra_dirs") or ()),
-                )
-
-            diff_pks = [
-                pk
-                for pk in set(po) | set(pn)
-                if _ident(po.get(pk)) != _ident(pn.get(pk))
-            ]
-
-            def side(m, pmap):
-                schema = StructType.fromJson(m["schema"])
-                entries = [pmap[pk] for pk in diff_pks if pk in pmap]
-                if not entries:
-                    return local_frame(spark, [], schema)
-                return _read_entries(
-                    spark, schema, _phys_map(m), root, entries
-                )
-
-            old, new = (
-                _align_logical(side(m_old, po), m_old, m_new),
-                side(m_new, pn),
-            )
-        else:
-            new, v_new = read_table(spark, root, to_version)
-            old, v_old = read_table(spark, root, from_version)
-            if old is not None and new is not None:
-                old = _align_logical(
-                    old,
-                    read_manifest(root, v_old),
-                    read_manifest(root, v_new),
-                )
-    except FileNotFoundError as e:
+    v_new = latest_version(root) if to_version is None else to_version
+    if from_version >= v_new:
         raise ValueError(
-            f"table_changes: version range {from_version}.."
-            f"{to_version or 'latest'} not readable at {root!r} "
-            "(manifest missing — vacuumed or never committed)"
-        ) from e
-    if old is None or new is None:
-        raise ValueError(
-            f"table_changes: versions {from_version}..{v_new or to_version}"
-            f" not readable at {root!r} (table empty at one endpoint)"
-        )
-    if v_old >= v_new:
-        raise ValueError(
-            f"table_changes: from_version {v_old} must precede "
+            f"table_changes: from_version {from_version} must precede "
             f"to_version {v_new}"
         )
+    try:
+        m_new = read_manifest(root, v_new)
+        m_old = read_manifest(root, from_version) if from_version else None
+        new_leaves = _leaves(root, v_new, m_new).values()
+        old_leaves = _leaves(root, from_version, m_old).values()
+    except FileNotFoundError as e:
+        raise ValueError(
+            f"table_changes: version range {from_version}..{v_new} not "
+            f"readable at {root!r} (manifest missing — vacuumed or never "
+            "committed; a change stream starts from a retained version: "
+            "pass it as read_changes_stream's starting_version, "
+            "table_history lists them)"
+        ) from e
+    schema = StructType.fromJson(m_new["schema"])
     if compare_cols is None:
-        compare_cols = [c for c in new.columns if c not in set(key_cols)]
-    return snapshot_diff(
-        old,
-        new,
-        list(key_cols),
-        list(compare_cols),
-        include_values=include_values,
+        compare_cols = [
+            f.name for f in schema.fields if f.name not in key_cols
+        ]
+    retired = set(_retired_physical(m_old))
+    pn = _phys_map(m_new)
+
+    def ident(e):
+        return (
+            e["dir"], (e.get("dv") or {}).get("dir"),
+            tuple(e.get("extra_dirs") or ()),
+        )
+
+    # a restore past a drop_column re-binds bytes the older version
+    # retired, so a leaf both share reads differently: read them all
+    shared = (
+        set()
+        if any(pn.get(c, c) in retired for c in [*key_cols, *compare_cols])
+        else {ident(e) for e in old_leaves} & {ident(e) for e in new_leaves}
     )
+
+    def side(m, leaves):
+        return _read_entries(
+            spark, StructType.fromJson(m["schema"]), _phys_map(m), root,
+            [e for e in leaves if ident(e) not in shared],
+        )
+
+    new = side(m_new, new_leaves)
+    old = _align_logical(
+        side(m_old or m_new, old_leaves), m_old or m_new, m_new
+    )
+    old = old.withColumns({
+        f.name: F.lit(None).cast(f.dataType)
+        for f in schema.fields
+        if f.name in compare_cols and f.name not in old.columns
+    })
+    return snapshot_diff(
+        old, new, list(key_cols), list(compare_cols), include_values=True
+    ).filter(F.col("status") != "unchanged")
 
 
 def read_changes_stream(
@@ -3919,33 +3880,27 @@ def read_changes_stream(
     key_cols: Sequence[str] = ("user_id",),
     compare_cols: Sequence[str] | None = None,
     starting_version: int = 0,
-    skip_unchanged_partitions: bool = False,
     max_batches: int | None = None,
-    include_values: bool = False,
 ) -> dict:
     """Streaming CDC *source* over a manifest table — the Delta
     ``readChangeFeed`` analogue: incremental, checkpointed consumption
     of :func:`table_changes`, one micro-batch per commit.
 
-    Each trigger drains the version cursor up to the current tip:
-    for every newly committed version ``k`` it builds that commit's
-    change frame (``table_changes(k-1, k)`` plus a ``_commit_version``
-    literal; for ``k == starting_version + 1`` with no predecessor the
-    whole snapshot arrives as status ``added`` — Delta's
-    ``startingVersion`` initial-snapshot semantics), calls
-    ``process(changes_df, k)``, and only THEN advances the cursor
-    (atomic tmp+rename). Crash between process and advance re-delivers
-    exactly that commit on restart — at-least-once with the version
-    number as the idempotency key, the same contract as
-    ``foreachBatch(batch_id)``. A fully drained stream replays ZERO
-    batches from its checkpoint.
+    Each trigger drains the version cursor up to the current tip: for
+    every newly committed version ``k`` it calls
+    ``process(table_changes(k-1, k) + _commit_version, k)`` and only
+    THEN advances the cursor (atomic tmp+rename). A fresh cursor at
+    ``starting_version`` 0 therefore delivers version 1 as ``added``
+    rows (Delta's initial-snapshot semantics). Crash between process
+    and advance re-delivers exactly that commit on restart —
+    at-least-once with the version number as the idempotency key, the
+    same contract as ``foreachBatch(batch_id)``. A fully drained stream
+    replays ZERO batches from its checkpoint; a metadata-only commit
+    delivers an empty batch.
 
-    The per-commit frames are lazy Spark plans over the two pinned
-    snapshots (partition-pruned via ``skip_unchanged_partitions`` on
-    partitioned tables — after a daily commit each batch reads one
-    partition, not the table), so the work distributes; only the
-    cursor lives on the driver. Returns {batches, from_version,
-    to_version}."""
+    The per-commit frames are lazy Spark plans over the leaves the
+    commit changed, so the work distributes; only the cursor lives on
+    the driver. Returns {batches, from_version, to_version}."""
     if process is None or not callable(process):
         raise ValueError("read_changes_stream: process callback required")
     os.makedirs(checkpoint_dir, exist_ok=True)
@@ -3975,50 +3930,7 @@ def read_changes_stream(
     n = 0
     while cursor < tip and (max_batches is None or n < max_batches):
         k = cursor + 1
-        if cursor == 0:
-            # no predecessor: the whole v1 snapshot arrives as 'added'
-            # (Delta startingVersion initial-snapshot semantics), in
-            # snapshot_diff's exact shape (changed_cols NULL)
-            try:
-                snap, _v = read_table(spark, root, k)
-            except FileNotFoundError as e:
-                raise ValueError(
-                    f"read_changes_stream: initial-snapshot version {k} "
-                    f"of {root!r} has been vacuumed — pass "
-                    "starting_version >= the oldest retained version "
-                    "(see table_history)"
-                ) from e
-            cmp_cols = sorted(
-                compare_cols
-                if compare_cols is not None
-                else [c for c in snap.columns if c not in set(key_cols)]
-            )
-            values = (
-                [
-                    c2
-                    for c in cmp_cols
-                    for c2 in (
-                        F.lit(None)
-                        .cast(snap.schema[c].dataType)
-                        .alias(f"{c}_old"),
-                        F.col(c).alias(f"{c}_new"),
-                    )
-                ]
-                if include_values
-                else []
-            )
-            ch = snap.select(
-                *key_cols,
-                F.lit("added").alias("status"),
-                F.lit(None).cast("string").alias("changed_cols"),
-                *values,
-            )
-        else:
-            ch = table_changes(
-                spark, root, cursor, k, key_cols, compare_cols,
-                skip_unchanged_partitions=skip_unchanged_partitions,
-                include_values=include_values,
-            ).filter(F.col("status") != "unchanged")
+        ch = table_changes(spark, root, cursor, k, key_cols, compare_cols)
         process(ch.withColumn("_commit_version", F.lit(k)), k)
         _advance(k)
         cursor = k

@@ -10,7 +10,12 @@ column named ``__ptok``), compaction
 ``repartition_table`` both ways and the layout-mixing refusals. After
 each step it records the return value (or the error's type and text),
 the tip manifest with data-dir uuids and commit timestamps normalised,
-the sorted ``read_table`` rows and the Spark jobs the call ran.
+the sorted ``read_table`` rows, the Spark jobs the call ran and the
+change feed of each version it committed (``table_changes(k-1, k)``
+on the key (k, v), which identifies a row at every step; a checkout
+whose ``table_changes`` still takes ``include_values`` runs it with
+pre/post images and without ``unchanged`` rows, as the current one
+returns them).
 
     PYTHONPATH=<checkout> python scripts_dev/verb_snapshot.py OUT.json
 
@@ -21,6 +26,7 @@ are listed separately, as budgets rather than behaviour).
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -62,8 +68,27 @@ def run(out_path: str) -> None:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return set(sc.statusTracker().getJobIdsForGroup(group))
 
+    images = (
+        {"include_values": True}
+        if "include_values" in inspect.signature(txn.table_changes).parameters
+        else {}
+    )
+
+    def feed(root, k):
+        try:
+            df = txn.table_changes(
+                spark, root, k - 1, k, ["k", "v"], **images
+            ).filter(F.col("status") != "unchanged")
+            return sorted(
+                json.dumps(r.asDict(), sort_keys=True, default=str)
+                for r in df.collect()
+            )
+        except Exception as e:  # recorded, not raised, as in step()
+            return {"error": type(e).__name__, "text": str(e).split("\n")[0]}
+
     def step(name, root, call):
         group = f"snap-{uuid.uuid4().hex}"
+        before = txn.latest_version(root)
         loose = jobs_of(None)
         sc.setJobGroup(group, name)
         try:
@@ -90,6 +115,10 @@ def run(out_path: str) -> None:
             "manifest": _normalise(manifest, names),
             "rows": rows,
             "jobs": jobs,
+            # version 1 has no predecessor the older feed could read
+            "changes": {
+                k: feed(root, k) for k in range(max(before, 1) + 1, v + 1)
+            },
         })
 
     def frame(rows):
@@ -236,7 +265,7 @@ def diff(a_path: str, b_path: str) -> int:
         bad += 1
         print(f"steps differ: {sorted(a.keys() ^ b.keys())}")
     for name in a.keys() & b.keys():
-        for k in ("ret", "version", "manifest", "rows"):
+        for k in ("ret", "version", "manifest", "rows", "changes"):
             if a[name][k] != b[name][k]:
                 bad += 1
                 print(f"{name}.{k}:\n  A {a[name][k]}\n  B {b[name][k]}")

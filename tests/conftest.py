@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 
@@ -44,26 +43,27 @@ def job_ids(spark):
     return lambda group: _job_ids(spark, group)
 
 
+def _last_job_id(spark) -> int:
+    """Id of the newest job the session has started (-1 before any).
+    Job ids count up from 0 across the session, whatever thread or job
+    group starts the job."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
 @pytest.fixture
 def job_budget(spark):
-    """``job_budget(call)`` runs ``call()`` under a fresh job group and
-    returns (its result, the number of Spark jobs it ran). Jobs it runs
-    outside that group count too, so none escape the budget."""
-    sc = spark.sparkContext
-    props = ("spark.jobGroup.id", "spark.job.description",
-             "spark.job.interruptOnCancel")
+    """``job_budget(call)`` runs ``call()`` and returns (its result, the
+    number of Spark jobs started while it ran). Counting by job id
+    lets no job escape the budget: neither one a call starts on
+    another thread nor one under its own job group (a streaming
+    query's micro-batches)."""
 
     def run(call):
-        group = f"job-budget-{uuid.uuid4().hex}"
-        saved = {k: sc.getLocalProperty(k) for k in props}
-        ungrouped = _job_ids(spark, None)
-        sc.setJobGroup(group, "job budget")
-        try:
-            out = call()
-        finally:
-            for k, v in saved.items():
-                sc.setLocalProperty(k, v)
-        jobs = _job_ids(spark, group) | (_job_ids(spark, None) - ungrouped)
-        return out, len(jobs)
+        before = _last_job_id(spark)
+        out = call()
+        return out, _last_job_id(spark) - before
 
     return run

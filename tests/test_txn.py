@@ -220,8 +220,8 @@ def test_daily_pipeline_transactional_matches_parquet(spark, sf_dir, tmp_path):
 
 def test_table_changes_between_versions(spark, tmp_path):
     """CDC read off the manifest history: the diff of two pinned
-    versions classifies adds/changes/unchanged rows and refuses
-    reversed or unreadable ranges."""
+    versions reports the added and changed rows (an unchanged row is
+    not a change) and refuses reversed or unreadable ranges."""
     from feature_store_spark.pipelines.txn import table_changes
 
     root = str(tmp_path / "t")
@@ -236,7 +236,6 @@ def test_table_changes_between_versions(spark, tmp_path):
         for r in table_changes(spark, root, 1, 2).collect()
     }
     assert got == {
-        1: ("unchanged", None),
         2: ("changed", "ts,v"),
         3: ("added", None),
     }

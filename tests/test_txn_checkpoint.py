@@ -220,11 +220,11 @@ def test_vacuum_checkpoints_oldest_kept_version(
 
 
 def test_table_changes_skips_byte_identical_partitions(spark, tmp_path):
-    """VERDICT r5 item 5: CDC over a partitioned table can use leaf-
-    dir identity (dir equality ⇒ byte-identity, the vacuum invariant)
-    to read ONLY partitions whose dirs differ. Proof is physical: the
-    unchanged partition's leaf is renamed away while the pruned diff
-    runs — a skipped read cannot crash."""
+    """CDC over a partitioned table uses leaf-dir identity (dir
+    equality ⇒ byte-identity, the vacuum invariant) to read ONLY
+    partitions whose dirs differ. Proof is physical: the unchanged
+    partition's leaf is renamed away while the diff runs — a skipped
+    read cannot crash."""
     from feature_store_spark.pipelines.txn import (
         compact_manifest,
         table_changes,
@@ -249,10 +249,7 @@ def test_table_changes_skips_byte_identical_partitions(spark, tmp_path):
 
     got = {
         (r["user_id"], r["p"]): r["status"]
-        for r in table_changes(
-            spark, root, 1, 2, key_cols=keys,
-            skip_unchanged_partitions=True,
-        ).collect()
+        for r in table_changes(spark, root, 1, 2, key_cols=keys).collect()
     }
     # d1's two rows are OMITTED (provably unchanged), d2's reported
     assert got == {(3, "d2"): "changed"}
@@ -263,27 +260,11 @@ def test_table_changes_skips_byte_identical_partitions(spark, tmp_path):
     hidden = d2_dir + ".hidden"
     os.rename(d2_dir, hidden)
     try:
-        rows = table_changes(
-            spark, root, 2, 3, key_cols=keys,
-            skip_unchanged_partitions=True,
-        ).collect()
+        rows = table_changes(spark, root, 2, 3, key_cols=keys).collect()
     finally:
         os.rename(hidden, d2_dir)
     # the compacted partition's rows are all unchanged; d2 never read
-    assert {r["status"] for r in rows} == {"unchanged"}
-    assert {(r["user_id"], r["p"]) for r in rows} == {
-        (1, "d1"),
-        (2, "d1"),
-    }
-    # the exact diff (no skip) still reconciles to the full key set
-    full = table_changes(spark, root, 2, 3, key_cols=keys).collect()
-    assert len(full) == 3
-
-    with pytest.raises(ValueError, match="partition column"):
-        table_changes(
-            spark, root, 2, 3, key_cols=["user_id"],
-            skip_unchanged_partitions=True,
-        )
+    assert rows == []
 
 
 def test_vacuum_prunes_stale_rollups(tmp_path):
@@ -564,8 +545,8 @@ def test_min_files_auto_compaction_and_maintenance(spark, tmp_path):
 
 def test_table_changes_across_drop_partitions(spark, tmp_path):
     """CDC across a retention drop: the dropped partition's rows
-    report status='removed' — both in the exact diff and the pruned
-    diff (the dropped partition's dir differs: present -> absent)."""
+    report status='removed' (its leaf differs: present -> absent) and
+    the kept partition reports nothing."""
     from feature_store_spark.pipelines.txn import (
         drop_partitions,
         table_changes,
@@ -584,16 +565,8 @@ def test_table_changes_across_drop_partitions(spark, tmp_path):
     )
     assert drop_partitions(root, ["d2"]) == 1
     keys = ["user_id", "p"]
-    exact = {
+    got = {
         (r["user_id"], r["p"]): r["status"]
         for r in table_changes(spark, root, 1, 2, key_cols=keys).collect()
     }
-    assert exact == {(1, "d1"): "unchanged", (2, "d2"): "removed"}
-    pruned = {
-        (r["user_id"], r["p"]): r["status"]
-        for r in table_changes(
-            spark, root, 1, 2, key_cols=keys,
-            skip_unchanged_partitions=True,
-        ).collect()
-    }
-    assert pruned == {(2, "d2"): "removed"}
+    assert got == {(2, "d2"): "removed"}

@@ -180,8 +180,7 @@ def test_dv_cdc_sees_deletes_even_with_partition_skip(spark, tmp_path):
     delete_where(spark, root, [("user_id", "=", 2)], mode="dv")
     ch = table_changes(
         spark, root, 1, 2, key_cols=["user_id", "p"],
-        skip_unchanged_partitions=True,
-    ).filter("status <> 'unchanged'").collect()
+    ).collect()
     assert {(r["user_id"], r["status"]) for r in ch} == {(2, "removed")}
 
 
@@ -607,16 +606,13 @@ def test_dv_update_purge_and_rewriting_verbs_fold_extras(spark, tmp_path):
 
 def test_dv_update_cdc_vacuum_clone_restore_matrix(spark, tmp_path):
     """The DV-update invariants matrix: CDC pairs the update as
-    'changed' (even with partition skip), vacuum keeps referenced
+    'changed' (reading only the changed leaf), vacuum keeps referenced
     extras and prunes superseded ones, clones carry the merged view,
     restore re-points extras."""
     root = str(tmp_path / "t")
     _part(spark, root)
     txn.update_where(spark, root, [("user_id", "=", 0)], {"score": 50.0}, mode="dv")
-    ch = table_changes(
-        spark, root, 1, 2, key_cols=("user_id", "p"),
-        skip_unchanged_partitions=True,
-    )
+    ch = table_changes(spark, root, 1, 2, key_cols=("user_id", "p"))
     st = {r["user_id"]: r["status"] for r in ch.collect()}
     assert st[0] == "changed" and 100 not in st  # cold partition skipped
     # clone both ways; read back the merged view

@@ -1,14 +1,29 @@
 """The one leaf writer (``txn._land``) and the one upsert body
 (``txn._upsert``): every committing verb's Spark job budget, the
-refusal of a write that lost rows, and when a lost race stales an
-upsert's written leaves."""
+refusal of a write that lost rows or of a leaf holding another
+partition's rows, the typed partition values compaction decodes from
+the manifest's keys, and when a lost race stales an upsert's written
+leaves."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
+from hypothesis import given
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    TimestampType,
+)
 
 from feature_store_spark.pipelines import txn
 
@@ -38,7 +53,7 @@ BUDGETS = {
     "part.upsert.replace.stats_bloom": 7,
     "flat.compact": 2,
     "flat.compact.min_files_noop": 0,
-    "part.compact": 5,  # (7)
+    "part.compact": 4,  # (7)
     "part.compact.min_files_noop": 0,
     "flat.repartition.to_part": 8,
     "part.repartition.to_flat": 3,
@@ -258,3 +273,61 @@ def test_upsert_race_loser_obeys_the_winners_new_constraint(
             lambda: txn.add_constraint(spark, root, "v_set", "v IS NOT NULL")
         ))
     assert txn.latest_version(root) == version + 1  # the constraint only
+
+
+# (type, value) of every partition column type the tests use, NaN,
+# infinities and timestamps with microseconds included
+_PARTITION_VALUES = st.one_of(
+    st.tuples(st.just(StringType()), st.text()),
+    st.tuples(st.just(IntegerType()), st.integers(-(2**31), 2**31 - 1)),
+    st.tuples(st.just(LongType()), st.integers(-(2**63), 2**63 - 1)),
+    st.tuples(st.just(BooleanType()), st.booleans()),
+    st.tuples(st.just(DoubleType()), st.floats()),
+    st.tuples(st.just(DecimalType(12, 2)), st.decimals(
+        min_value=-(10**9), max_value=10**9, places=2,
+        allow_nan=False, allow_infinity=False)),
+    st.tuples(st.just(DateType()), st.dates()),
+    st.tuples(st.just(TimestampType()), st.datetimes()),
+)
+
+
+@given(_PARTITION_VALUES)
+def test_partition_keys_decode_to_their_values(type_and_value):
+    """Compaction rebuilds each leaf's typed partition value from its
+    manifest key: ``_stat_decode`` inverts ``_pkey``."""
+    dtype, v = type_and_value
+    got = txn._stat_decode(txn._pkey(v), dtype)
+    assert type(got) is type(v)
+    assert got == v or (v != v and got != got)  # NaN is not equal to NaN
+
+
+@pytest.mark.parametrize(
+    "foreign,selected", [("d9", None), ("d2", ["d1"])],
+    ids=["unknown_partition", "unselected_partition"],
+)
+def test_compaction_refuses_a_leaf_holding_foreign_rows(
+    spark, tmp_path, foreign, selected
+):
+    """A leaf whose files hold a row of a partition the compaction does
+    not rewrite (its manifest count unchanged) is refused: the row
+    drops at the leaf join, the written count falls short, and no
+    version lands."""
+    root = _table(spark, str(tmp_path / "t"), True)
+    version = txn.latest_version(root)
+    leaf = os.path.join(
+        root, txn.resolve_partitions(root, version)["d1"]["dir"]
+    )
+    rows = spark.read.parquet(leaf).collect()
+    doctored = str(tmp_path / "doctored")
+    spark.createDataFrame(
+        [(r.k, r.v, r.ts, foreign if i == 0 else r.p)
+         for i, r in enumerate(rows)],
+        DDL,
+    ).coalesce(1).write.parquet(doctored)
+    shutil.rmtree(leaf)
+    shutil.move(doctored, leaf)
+    with pytest.raises(RuntimeError, match="disagree.*not committing"):
+        txn.compact_manifest(
+            spark, root, partition_values=selected, max_retries=2
+        )
+    assert txn.latest_version(root) == version

@@ -865,4 +865,4 @@ def test_partitioned_cdc_and_date_partitions(spark, tmp_path):
         r["user_id"]: r["status"]
         for r in table_changes(spark, root, 1, 2).collect()
     }
-    assert got == {1: "unchanged", 2: "changed", 3: "added"}
+    assert got == {2: "changed", 3: "added"}

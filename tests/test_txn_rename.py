@@ -129,10 +129,8 @@ def test_cdc_pairs_keys_across_rename(spark, tmp_path):
     # v1 -> v3 spans the rename: keys pair by physical identity
     ch = table_changes(spark, root, 1, 3, ["uid"]).collect()
     got = {(r["uid"], r["status"]) for r in ch}
-    assert (0, "changed") in got
-    assert all(s == "unchanged" for u, s in got if u != 0)
     # no row reads as removed+added (the drop+add failure mode)
-    assert not any(s in ("added", "removed") for _, s in got)
+    assert got == {(0, "changed")}
 
 
 def test_schema_changes_reports_rename_not_drop_add(spark, tmp_path):
