@@ -14,7 +14,7 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from feature_store_spark.operators.aggregates import (
@@ -56,10 +56,12 @@ def run_daily_pipeline(
     commits, safe when two schedulers race a repair run against the
     daily run), export the serving join to the warehouse layout.
 
-    The three feature groups are independent: each derives, caches,
-    counts and commits to its own table on its own driver thread
+    The three feature groups are independent: each derives, caches
+    and commits to its own table on its own driver thread
     (``session.run_concurrently``), so their per-job launch and
-    collect floors overlap instead of adding up. The derivations
+    collect floors overlap instead of adding up. The commit's one
+    write fills the cache and counts the derived rows on an
+    Observation — no separate count pass. The derivations
     share the orders/lineitem scans only through the parquet cache —
     at 100 TB each group is an independent job and the offline store
     is the hand-off point (materialized view role, SURVEY §4). Each
@@ -115,11 +117,14 @@ def run_daily_pipeline(
     def land(kind, derive):
         df = derive().withColumn("updated_at", stamp).cache()
         cached.append(df)
-        n = df.count()
+        # read after the commit: Observation.get blocks until a plan
+        # carrying it has run
+        derived = Observation()
         stored = txn.upsert_manifest(
-            df, f"{out_dir}/{kind}", ["user_id"], "updated_at"
+            df.observe(derived, F.count(F.lit(1)).alias("rows")),
+            f"{out_dir}/{kind}", ["user_id"], "updated_at",
         )
-        return df, n, stored
+        return df, int(derived.get["rows"]), stored
 
     try:
         (uf, tf, rf), n_rows, n_stored = zip(*run_concurrently(

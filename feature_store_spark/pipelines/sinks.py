@@ -42,7 +42,11 @@ def export_warehouse(
     multi-row-per-key-per-date export keeps all its rows; a repair
     re-run that dropped keys actually drops them; untouched history
     partitions carry forward untouched) — multi-writer safe when a
-    backfill races the daily run. Readers use ``txn.read_table``.
+    backfill races the daily run. Readers use ``txn.read_table``. The
+    commit runs no pass before its write: the dates it replaces are
+    learnt from the read-back aggregate that also counts each date's
+    rows and records the stats below, so an export is one write plus
+    one aggregate over what it wrote.
 
     The commit records DATA-SKIPPING stats for ``cluster_col``
     (per-leaf min/max — tight ranges precisely BECAUSE the rows are
@@ -88,8 +92,8 @@ def export_warehouse(
         )
     except ValueError as e:
         # a NULL (or unparseable) date has no partition to land in;
-        # the commit refuses it from its partition collect, before
-        # writing anything — name the source column
+        # the commit refuses it from its read-back and discards what
+        # it wrote — name the source column
         if "NULL 'partition_date'" not in str(e):
             raise
         raise ValueError(

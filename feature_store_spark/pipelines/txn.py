@@ -40,10 +40,11 @@ Three private pieces carry every committing verb:
 
 - **The leaf writer** (``_land``) is the only code that writes data
   leaves. Given rows, the partition column (None: the flat table's one
-  leaf ``""``) and the leaf keys, it re-keys rows to their leaf dirs,
-  writes them in one job, refuses a leaf that produced no dir, counts
-  each leaf (the write's Observation, or one read-back aggregate that
-  also records stats and Bloom bits), runs CHECK constraints on the
+  leaf ``""``) and the leaf keys (or none: the write learns them), it
+  re-keys rows to their leaf dirs, writes them in one job, refuses a
+  leaf that produced no dir, counts each leaf (the write's
+  Observation, or one read-back aggregate that also records stats and
+  Bloom bits and yields learnt keys), runs CHECK constraints on the
   written bytes and compares the counts with what the verb expected.
 - **The leaf-map codec** (``_leaves`` / ``_encode``) is the only code
   that knows the three manifest formats (FORMAT.md §3). ``_leaves``
@@ -690,44 +691,69 @@ def _scan_leaf_with_pos(
     return df
 
 
+def _dir_id(path: str) -> str:
+    """A data dir's last two path segments (``<uuid>/__ptok=<token>``,
+    or ``data/<uuid>``): unique per leaf dir, and free of characters a
+    file URI would escape."""
+    return "/".join(path.rstrip("/").split("/")[-2:])
+
+
+def _homed(df: DataFrame, home_of: dict) -> DataFrame:
+    """``df``, a plain scan, plus ``__home``: ``home_of`` at the dir id
+    of each row's file. An empty ``home_of`` adds no column."""
+    if not home_of:
+        return df
+    file_dir = F.regexp_extract(
+        F.col("_metadata.file_path"), r"([^/]+/[^/]+)/[^/]*$", 1
+    )
+    return df.withColumn("__home", F.try_element_at(
+        F.create_map(*[F.lit(x) for kv in home_of.items() for x in kv]),
+        file_dir,
+    ))
+
+
 def _read_entries(
     spark: SparkSession,
     schema: StructType,
     phys: dict,
     root: str,
     entries,
+    homes: Sequence[str] | None = None,
 ) -> DataFrame:
     """DV-aware union read of manifest leaf entries (dicts with
     ``dir`` and optional ``dv``). Falls back to the single plain
     columnar read when no entry carries a deletion vector — the
-    pre-DV fast path, plan-identical."""
+    pre-DV fast path, plan-identical. ``homes`` (a leaf token per
+    entry) adds a ``__home`` column: the token of the entry each row
+    was read from, known from its file's dir (see ``_land``)."""
     entries = list(entries)
-    plain = []
-    for e in entries:
+    plain, home_of = [], {}
+    for i, e in enumerate(entries):
         if not e.get("dv"):
             # extra dirs without a DV are just more files of the leaf
-            plain.extend(
-                os.path.join(root, d)
-                for d in [e["dir"]] + list(e.get("extra_dirs") or [])
-            )
-    dvd = [e for e in entries if e.get("dv")]
+            for d in [e["dir"]] + list(e.get("extra_dirs") or []):
+                plain.append(os.path.join(root, d))
+                if homes is not None:
+                    home_of[_dir_id(d)] = homes[i]
+    dvd = [(i, e) for i, e in enumerate(entries) if e.get("dv")]
     if not dvd:
         if not plain:
             return local_frame(spark, [], schema)
-        return _read_data(spark, schema, phys, plain)
+        return _homed(_read_data(spark, schema, phys, plain), home_of)
     parts = []
     if plain:
-        parts.append(_read_data(spark, schema, phys, plain))
-    for e in dvd:
-        parts.append(
-            _scan_leaf_with_pos(
-                spark,
-                schema,
-                phys,
-                _entry_dirs(root, e),
-                os.path.join(root, e["dv"]["dir"]),
-            ).drop("__dv_file", "__dv_pos")
-        )
+        parts.append(_homed(_read_data(spark, schema, phys, plain), home_of))
+    for i, e in dvd:
+        scan = _scan_leaf_with_pos(
+            spark,
+            schema,
+            phys,
+            _entry_dirs(root, e),
+            os.path.join(root, e["dv"]["dir"]),
+        ).drop("__dv_file", "__dv_pos")
+        if homes is not None:
+            scan = scan.withColumn("__home", F.lit(homes[i]))
+        parts.append(scan)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1159,11 +1185,12 @@ def _merge_rows(base, updates, keys, order_col: str, evolve: bool):
     ).drop("__src")
 
 
-def _write_leaves(root, phys, pcol, rows, pks, written):
+def _write_leaves(root, phys, pcol, rows, written):
     """Write ``rows`` (logical columns, plus ``__ptok`` when ``pcol`` is
-    set) to ONE fresh dir, one ``__ptok`` subdir per partition (the
-    unpartitioned leaf is the dir itself). Returns ({pk: leaf dir}, an
-    Observation whose ``rows`` counts the rows the write received)."""
+    set) to ONE fresh dir, one ``__ptok=<token>`` subdir per partition
+    (the unpartitioned leaf is the dir itself). Returns (the dir,
+    relative to ``root``; an Observation whose ``rows`` counts the rows
+    the write received)."""
     rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
     written.append(rel)
     obs = Observation()
@@ -1173,21 +1200,27 @@ def _write_leaves(root, phys, pcol, rows, pks, written):
     if pcol:
         w = w.partitionBy("__ptok")
     w.parquet(os.path.join(root, rel))
-    dirs = {pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel for pk in pks}
-    return dirs, obs
+    return rel, obs
+
+
+def _null_key_error(verb: str, pcol: str) -> ValueError:
+    """The refusal of a NULL partition value, which has no leaf to land
+    in; ``export_warehouse`` matches on its ``NULL '<col>'``."""
+    return ValueError(
+        f"{verb}: NULL {pcol!r} values cannot key partitions — fill or "
+        "drop them first"
+    )
 
 
 def _partition_keys(rows: DataFrame, pcol: str, verb: str) -> dict:
     """{pkey: typed value} of the ``pcol`` values in ``rows``, sorted by
-    key — one distinct collect. A NULL value has no leaf to land in and
-    is refused; the message names it ``NULL '<col>'``, which
-    ``export_warehouse`` matches on."""
+    key — one distinct collect. Only a merge-mode upsert needs the keys
+    before it writes (it reads the touched base leaves); every other
+    write learns them from its own read-back (``_land``). A NULL value
+    is refused (``_null_key_error``)."""
     vals = [r[0] for r in rows.select(pcol).distinct().collect()]
     if any(x is None for x in vals):
-        raise ValueError(
-            f"{verb}: NULL {pcol!r} values cannot key partitions — fill "
-            "or drop them first"
-        )
+        raise _null_key_error(verb, pcol)
     return dict(sorted((_pkey(x), x) for x in vals))
 
 
@@ -1209,34 +1242,71 @@ def _land(
     ``{pkey: entry}`` — the one leaf writer every committing verb uses.
 
     ``pcol`` None is the flat table, the one leaf ``""``. Otherwise the
-    leaf ``keys`` ({pkey: typed value}, typed as ``key_field``, default
-    the rows' own ``pcol`` field) are given or collected from ``rows``
-    (``_partition_keys``). Then, in order:
+    caller passes the leaf ``keys`` ({pkey: typed value}, typed as
+    ``key_field``, default the rows' own ``pcol`` field), or none: the
+    keys are then LEARNT from the write, with no pass before it. Then,
+    in order:
 
-    1. each row joins its leaf's ``__ptok`` (``_ptok_mapping``);
+    1. each row gets its leaf's ``__ptok``: given keys by a typed join
+       (``_ptok_mapping``), learnt ones by an in-plan token of the
+       row's own value (``_ptok_expr``);
     2. one write (``_write_leaves``);
-    3. every leaf that should hold rows must have produced its dir;
-    4. per-leaf accounting: an Observation on the write when its count
-       is all that is needed — one leaf, or leaves whose counts the
-       caller already knows, and no ``stats``/``bloom`` columns —
-       otherwise one read-back aggregate (``_leaf_entries``);
-    5. the CHECK ``constraints`` on the written bytes, then the
+    3. every given leaf that should hold rows must have produced its
+       dir;
+    4. a ``__home`` column, when ``rows`` carries one, names the token
+       of the leaf each row must land in (compaction: the leaf it was
+       read from); a row keyed to any other leaf is refused, counted
+       by an Observation of the write's input;
+    5. per-leaf accounting: an Observation on the write when its count
+       is all that is needed — one given leaf, or given leaves whose
+       counts the caller already knows, and no ``stats``/``bloom``
+       columns — otherwise one read-back aggregate (``_leaf_entries``)
+       that also yields each leaf's value and the dir it was read
+       from. Learnt keys come from it; a NULL key is refused
+       (``_null_key_error``), and leaf dirs and values must match one
+       to one (a given key, in its own dir);
+    6. the CHECK ``constraints`` on the written bytes, then the
        ``expected`` count, per leaf (a dict) or in total (an int). A
        mismatch raises ``_StaleRead``: the tip moved between the
-       caller's accounting and the write."""
+       caller's accounting and the write. With learnt keys the
+       read-back total must also equal the rows the write's input saw.
+
+    A zero-row write with learnt keys returns no leaf."""
     spark = rows.sparkSession
-    schema = rows.schema
     known = isinstance(expected, dict)
+    learnt = pcol is not None and keys is None
+    homed = "__home" in rows.columns
+    schema = rows.drop("__home").schema
     if pcol is None:
         keys = {"": ""}
+    elif learnt:
+        rows = rows.withColumn("__ptok", _ptok_expr(schema[pcol]))
     else:
-        if keys is None:
-            keys = _partition_keys(rows, pcol, verb)
         tok_map = _ptok_mapping(spark, key_field or schema[pcol], keys)
         rows = rows.join(F.broadcast(tok_map), pcol)
-    dirs, obs = _write_leaves(
-        root, phys, pcol, rows, expected if known else keys, written
-    )
+    seen = Observation()  # the write's input, when something reads it
+    if learnt or homed:
+        foreign = F.count_if(
+            ~F.coalesce(F.col("__home") == F.col("__ptok"), F.lit(False))
+        )
+        rows = rows.observe(
+            seen, F.count(F.lit(1)).alias("rows"),
+            *([foreign.alias("foreign")] if homed else []),
+        ).drop("__home")
+    rel, obs = _write_leaves(root, phys, pcol, rows, written)
+    if learnt:
+        dirs = {}
+        paths = [
+            os.path.join(root, rel, d)
+            for d in sorted(os.listdir(os.path.join(root, rel)))
+            if d.startswith("__ptok=")
+        ]
+    else:
+        dirs = {
+            pk: f"{rel}/__ptok={_ptoken(pk)}" if pcol else rel
+            for pk in (expected if known else keys)
+        }
+        paths = [os.path.join(root, d) for d in dirs.values()]
     missing = sorted(
         pk for pk, d in dirs.items()
         if (not known or expected[pk])
@@ -1248,9 +1318,14 @@ def _land(
             "be lost (a partition value that does not compare equal to "
             "itself, such as a NaN, keys no leaf); not committing"
         )
-    paths = [os.path.join(root, d) for d in dirs.values()]
+    if homed and seen.get["foreign"]:
+        raise RuntimeError(
+            f"{verb}: {seen.get['foreign']} rows key a leaf other than the "
+            f"one they were read from (a {pcol!r} value that is not its "
+            "leaf's key); not committing"
+        )
     want = expected
-    if not (stats or bloom) and (len(keys) == 1 or known):
+    if not (stats or bloom or learnt) and (len(keys) == 1 or known):
         # one count: the one leaf's, or the total of the caller's split
         got = int(obs.get["rows"])
         entries = {
@@ -1260,31 +1335,55 @@ def _land(
         if known:
             want = sum(expected.values())
     else:
-        entries = _leaf_entries(
-            _read_data(spark, schema, phys, paths), pcol, dirs, stats, bloom
-        )
+        read = _leaf_entries(
+            _read_data(spark, schema, phys, paths), pcol, rel, stats, bloom
+        ) if paths else []
+        if any(pk is None for pk, _ in read):
+            raise _null_key_error(verb, pcol)
+        entries = dict(sorted(read, key=lambda g: g[0]))
+        leaf_dirs = {e["dir"] for _, e in read}
+        if not len(read) == len(entries) == len(leaf_dirs) or any(
+            dirs.get(pk, e["dir"]) != e["dir"] for pk, e in read
+        ):
+            raise RuntimeError(
+                f"{verb}: leaf dirs and partition values do not match one "
+                f"to one ({sorted((e['dir'], pk) for pk, e in read)!r}); "
+                "not committing"
+            )
+        for pk, d in dirs.items():  # a given leaf left without rows
+            entries.setdefault(pk, {
+                "dir": d, "rows": 0, **({"stats": {}} if stats else {}),
+                **({"bloom": {}} if bloom else {}),
+            })
         got = {pk: e["rows"] for pk, e in entries.items()}
         if not known:
             got = sum(got.values())
-    if checks:
+    if checks and paths:
         _check_constraints(_read_data(spark, schema, phys, paths), checks)
     if expected is not None and got != want:
         raise _StaleRead(
             f"{verb}: written row counts disagree with the accounting "
             f"(expected {expected!r}, wrote {got})"
         )
+    if learnt and got != seen.get["rows"]:
+        raise RuntimeError(
+            f"{verb}: written row counts disagree with the input (read "
+            f"{seen.get['rows']}, wrote {got}); not committing"
+        )
     return entries
 
 
-def _leaf_entries(readback, col, dirs: dict, stats_fields, bloom_fields):
-    """{pk: entry} for freshly written leaf ``dirs`` off ONE aggregate
-    of the columnar ``readback`` grouped by ``col`` (None: the flat
-    leaf ``""``): live row counts,
-    min/max/null-count per ``stats_fields`` column and a Bloom bitmap
-    per ``bloom_fields`` column — the union of one ``collect_set`` per
-    probe position, each bounded by the bitmap size, so the collect is
-    O(leaves × m) metadata, never row data. A leaf whose bloom column
-    is all NULL records no bitmap for it."""
+def _leaf_entries(readback, col, rel: str, stats_fields, bloom_fields):
+    """(pkey, entry) per leaf written under ``rel``, off ONE aggregate of
+    the columnar ``readback`` grouped by its ``col`` value (None: the
+    flat leaf ``""``; a NULL value keys as None) and by the leaf dir
+    each row was read from (``rel/__ptok=<token>``; ``rel`` itself
+    when flat): live row counts, min/max/null-count per
+    ``stats_fields`` column and a Bloom bitmap per ``bloom_fields``
+    column — the union of one ``collect_set`` per probe position, each
+    bounded by the bitmap size, so the collect is O(leaves × m)
+    metadata, never row data. A leaf whose bloom column is all NULL
+    records no bitmap for it."""
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for i, f in enumerate(stats_fields):
         aggs += [
@@ -1301,10 +1400,13 @@ def _leaf_entries(readback, col, dirs: dict, stats_fields, bloom_fields):
             )
             for j, p in enumerate(_bloom_pos_exprs(f))
         ]
-    got = {}
-    for r in readback.groupBy(F.lit("") if col is None else col).agg(
-        *aggs
-    ).collect():
+    tok = F.regexp_extract(
+        F.col("_metadata.file_path"), r"__ptok=([^/]*)/[^/]*$", 1
+    )
+    out = []
+    for r in readback.groupBy(
+        F.lit("") if col is None else col, tok.alias("__tok")
+    ).agg(*aggs).collect():
         stats, bloom = {}, {}
         for i, f in enumerate(stats_fields):
             mn = _stat_encode(r[f"__mn{i}"])
@@ -1316,16 +1418,15 @@ def _leaf_entries(readback, col, dirs: dict, stats_fields, bloom_fields):
             pos = set().union(*(r[f"__bl{i}_{j}"] for j in range(BLOOM_K)))
             if pos:
                 bloom[f.name] = _bloom_encode(pos)
-        got[_pkey(r[0])] = (int(r["__rows"]), stats, bloom)
-    out = {}
-    for pk, d in dirs.items():
-        rows, stats, bloom = got.get(pk, (0, {}, {}))
-        e: dict = {"dir": d, "rows": rows}
+        e: dict = {
+            "dir": f"{rel}/__ptok={r['__tok']}" if r["__tok"] else rel,
+            "rows": int(r["__rows"]),
+        }
         if stats_fields:
             e["stats"] = stats
         if bloom_fields:
             e["bloom"] = bloom
-        out[pk] = e
+        out.append((None if r[0] is None else _pkey(r[0]), e))
     return out
 
 
@@ -1565,6 +1666,26 @@ def _ptok_mapping(spark: SparkSession, pcol_field, pk_to_val: dict):
             [pcol_field, StructField("__ptok", StringType(), False)]
         ),
     )
+
+
+def _ptok_expr(field: StructField):
+    """In-plan leaf token of each row's ``field`` value, for a write
+    whose keys are learnt (``_land``): a hash of an unambiguous string
+    form of the typed value, equal exactly where Spark's grouping
+    calls values equal — a timestamp as its epoch microseconds (never
+    a session-time-zone string), a float with -0.0 folded into 0.0
+    (every NaN casts to 'NaN'). A NULL value hashes to NULL, which the
+    write puts in Spark's default-partition dir for the read-back to
+    refuse. It need not equal ``_ptoken(_pkey(value))``: the manifest
+    maps each key to its dir, and no reader derives one from the
+    other."""
+    c = F.col(field.name)
+    t = field.dataType.typeName()
+    if t == "timestamp":
+        c = F.unix_micros(c)
+    elif t in ("float", "double"):
+        c = F.when(c == 0, F.lit(0.0)).otherwise(c)
+    return F.substring(F.sha1(c.cast("string")), 1, 16)
 
 
 # --- file-skipping statistics (Delta/Iceberg data-skipping analogue) ---
@@ -1982,7 +2103,7 @@ def upsert_manifest_partitioned(
     ``INSERT … ON CONFLICT`` footprint instead of the flat form's
     O(table) rewrite. A commit reads and writes only the touched
     partitions' leaves (``data/<uuid>/__ptok=<token>/``, one Spark job;
-    ``__ptok`` hashes the partition key for the layout only, the real
+    ``__ptok`` hashes the partition value for the layout only, the real
     column stays in the files); untouched entries carry forward
     verbatim. Concurrency is ``upsert_manifest``'s race plus Delta-style
     conflict resolution: a loser whose partitions the winner did not
@@ -1990,10 +2111,15 @@ def upsert_manifest_partitioned(
     work, else it re-merges. A zero-row batch is a no-op with no
     commit. Returns the committed table's total row count.
 
-    ``mode="merge"`` (default) merges rows into each touched partition;
-    ``"replace"`` replaces each touched partition's contents with the
-    updates' rows (dynamic partition overwrite under the same atomic
-    commit; base rows are never read, the schema is still reconciled).
+    ``mode="merge"`` (default) merges rows into each touched partition:
+    it collects the touched partitions first, since it reads their
+    base leaves. ``"replace"`` replaces each touched partition's
+    contents with the updates' rows (dynamic partition overwrite under
+    the same atomic commit; base rows are never read, the schema is
+    still reconciled) and runs no pass before its write: the touched
+    partitions are learnt from the commit's read-back aggregate
+    (``_land``), and a NULL partition value is refused from it, with
+    what was written discarded.
     ``key_cols=None`` (replace only) skips the per-key dedupe so every
     update row lands verbatim (``export_warehouse`` relies on it).
 
@@ -2054,9 +2180,15 @@ def _upsert(
     txn_w = _txn_validate(txn)
     if latest_version(root) == 0:
         _guard_foreign_store(root)
-    keys = {"": ""} if pcol is None else _partition_keys(updates, pcol, verb)
-    if not keys:
-        return 0  # a zero-row partitioned batch is a no-op, no commit
+    # only a merge reads base leaves before it writes; every other
+    # partitioned write learns its keys from the write (``_land``)
+    keys = None
+    if pcol is None:
+        keys = {"": ""}
+    elif mode == "merge":
+        keys = _partition_keys(updates, pcol, verb)
+        if not keys:
+            return 0  # a zero-row partitioned batch is a no-op, no commit
     merge_on = None if key_cols is None else [*key_cols, *filter(None, [pcol])]
     prepared: dict = {}  # the written commit, reusable across lost races
 
@@ -2094,10 +2226,12 @@ def _upsert(
                 # rows are read (new partitions, replace mode): the
                 # manifest's schema covers the untouched leaves too
                 tip_schema = StructType.fromJson(tip["schema"])
-                base_entries = [leaves[pk] for pk in keys if pk in leaves]
+                base_entries = [
+                    leaves[pk] for pk in keys or () if pk in leaves
+                ]
                 existing = (
                     _read_entries(spark, tip_schema, phys, root, base_entries)
-                    if base_entries and mode == "merge"
+                    if base_entries
                     else local_frame(spark, [], tip_schema)
                 )
             merged = _merge_rows(existing, updates, merge_on, order_col, evolve)
@@ -2117,6 +2251,11 @@ def _upsert(
                     checks=base["checks"],
                 ),
             )
+        if not prepared["entries"]:
+            # a zero-row replace batch: no leaf, no commit
+            _discard(root, written)
+            prepared.clear()
+            return 0
         # partitioned: a format-3 delta of the touched entries only —
         # the payload is flat in the table's partition count
         return _Commit(
@@ -2268,8 +2407,12 @@ def compact_manifest(
             max(len(selected), -(-total_bytes // target_file_bytes))
         )
         phys = _phys_map(tip)
+        # each row carries the token of the leaf it was read from, so
+        # a row whose value keys another selected leaf is refused
+        # instead of moving there under the old per-leaf counts
         df = _read_entries(
-            spark, schema, phys, root, [leaves[pk] for pk in selected]
+            spark, schema, phys, root, [leaves[pk] for pk in selected],
+            homes=[_ptoken(pk) for pk in selected] if pcol else None,
         )
         if zorder_cols:
             df = zorder_key(
@@ -2298,8 +2441,8 @@ def compact_manifest(
         try:
             landed = _land(
                 root, "compact_manifest", phys, df, pcol, written,
-                # the manifest's keys, typed: rows of any other leaf
-                # drop at the join and fail the count check below
+                # the manifest's keys, typed: rows of an unselected
+                # leaf drop at the join and fail the count check below
                 keys={
                     pk: _stat_decode(pk, names[pcol].dataType)
                     for pk in selected

@@ -9,7 +9,8 @@ column named ``__ptok``), compaction
 ``delete_where`` / ``update_where`` / ``merge_into`` in both modes,
 ``repartition_table`` both ways and the layout-mixing refusals. After
 each step it records the return value (or the error's type and text),
-the tip manifest with data-dir uuids and commit timestamps normalised,
+the tip manifest with data-dir uuids, leaf-dir tokens and commit
+timestamps normalised,
 the sorted ``read_table`` rows, the Spark jobs the call ran and the
 change feed of each version it committed (``table_changes(k-1, k)``
 on the key (k, v), which identifies a row at every step; a checkout
@@ -35,15 +36,24 @@ import sys
 import tempfile
 import uuid
 
-_HEX = re.compile(r"data/[0-9a-f]{32}")
+_HEX = re.compile(r"data/[0-9a-f]{32}|__ptok=[0-9a-f]{16}")
 
 
 def _normalise(obj, names: dict):
-    """Replace each data-dir uuid by its order of first appearance and
-    drop commit timestamps, so two runs of the scenario compare."""
+    """Replace each data-dir uuid and leaf-dir token by its order of
+    first appearance and drop commit timestamps, so two runs of the
+    scenario compare. Tokens are normalised because a write whose leaf
+    keys are learnt hashes each value's Spark string form (a timestamp
+    as epoch microseconds, a boolean as ``true``), not its manifest
+    key, so the same leaf may carry another token across checkouts."""
     text = json.dumps(obj, sort_keys=True, default=str)
     text = _HEX.sub(
-        lambda m: names.setdefault(m.group(0), f"data/D{len(names)}"), text
+        lambda m: names.setdefault(
+            m.group(0),
+            f"data/D{len(names)}" if m.group(0).startswith("data/")
+            else f"__ptok=T{len(names)}",
+        ),
+        text,
     )
     out = json.loads(text)
     if isinstance(out, dict):

@@ -1,8 +1,9 @@
-"""Spark-job budgets of the change feed, the streaming sink, vacuum and
-the quality report: upper bounds on the jobs one call runs on a small
-table with the test session, as measured (see also the committing
-verbs' budgets in ``test_txn_leaf_writer.py`` and the serving budgets
-in ``test_sinks_serving.py``)."""
+"""Spark-job budgets of the change feed, the streaming sink, vacuum,
+the quality report, the warehouse export and the daily pipeline: upper
+bounds on the jobs one call runs on a small table (or the sf fixture)
+with the test session, as measured (see also the committing verbs'
+budgets in ``test_txn_leaf_writer.py`` and the serving budgets in
+``test_sinks_serving.py``)."""
 
 from __future__ import annotations
 
@@ -99,3 +100,38 @@ def test_drain_vacuum_and_quality_report_job_budgets(
     run_quality_report(spark, sf_dir)  # warm: first-use setup jobs
     report, jobs = job_budget(lambda: run_quality_report(spark, sf_dir))
     assert report["completeness"] and jobs <= 8
+
+
+def test_export_and_daily_pipeline_job_budgets(
+    spark, sf_dir, tmp_path, job_budget
+):
+    """On the sf fixture, a warm ``run_daily_pipeline`` (its tables
+    already exist) runs at most 30 jobs and a warm ``export_warehouse``
+    of the user features at most 7. Before the export learnt its dates
+    from its read-back and the groups counted their rows on their own
+    commits, they ran 42 and 11."""
+    from pyspark.sql import functions as F
+
+    from feature_store_spark.pipelines.drivers import run_daily_pipeline
+    from feature_store_spark.pipelines.features import derive_user_features
+    from feature_store_spark.pipelines.sinks import export_warehouse
+    from feature_store_spark.tables import REF_DATE, load_table
+
+    out = str(tmp_path / "out")
+    run_daily_pipeline(spark, sf_dir, out)  # warm: creates the tables
+    res, jobs = job_budget(lambda: run_daily_pipeline(spark, sf_dir, out))
+    assert res.status == "SUCCESS" and jobs <= 30
+
+    users = derive_user_features(
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "orders"),
+        ref_date=REF_DATE,
+    ).withColumn("updated_at", F.to_timestamp(F.lit(f"{REF_DATE} 00:00:00")))
+    wh = str(tmp_path / "wh")
+
+    def export():
+        return export_warehouse(users, wh, ref_date=REF_DATE)
+
+    export()  # warm: creates the table
+    n, jobs = job_budget(export)
+    assert n == res.counts["user_features"] and jobs <= 7

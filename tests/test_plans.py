@@ -653,9 +653,9 @@ def test_driver_side_frames_scan_local_tables(spark, tmp_path, monkeypatch):
     write_leaves = txn._write_leaves
     written = []
 
-    def spy_write(root, phys, pcol, rows, pks, out):
+    def spy_write(root, phys, pcol, rows, out):
         written.append(executed(rows))
-        return write_leaves(root, phys, pcol, rows, pks, out)
+        return write_leaves(root, phys, pcol, rows, out)
 
     monkeypatch.setattr(txn, "_write_leaves", spy_write)
     d = datetime.date(2024, 1, 1)

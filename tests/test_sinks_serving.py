@@ -4,6 +4,8 @@ determinism and the serving layer (SV1-SV5)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -21,6 +23,12 @@ from feature_store_spark.pipelines.txn import (
 )
 from feature_store_spark.serving import FeatureStore
 from feature_store_spark.tables import load_table
+
+
+def _data_dirs(path: str) -> set:
+    """The data dirs under a manifest table's root."""
+    data = os.path.join(path, "data")
+    return set(os.listdir(data)) if os.path.isdir(data) else set()
 
 
 # ---------------------------------------------------------------------------
@@ -347,10 +355,15 @@ def test_partitioned_upsert_rejects_null_partition(spark, tmp_path):
         [(2, 20.0, "t2", None)],
         "user_id long, score double, v string, snap_date string",
     )
-    with pytest.raises(ValueError, match="NULL"):
-        upsert_manifest_partitioned(v2, path, ["user_id"], "v", "snap_date")
+    dirs = _data_dirs(path)
+    for mode in ("merge", "replace"):
+        with pytest.raises(ValueError, match="NULL 'snap_date'"):
+            upsert_manifest_partitioned(
+                v2, path, ["user_id"], "v", "snap_date", mode=mode
+            )
     assert set(resolve_partitions(path, 1)) == {"2024-01-01"}
     assert read_table(spark, path)[1] == 1
+    assert _data_dirs(path) == dirs
 
 
 def test_stats_with_outliers_empty_input_counts_zero(spark):
@@ -433,12 +446,15 @@ def test_partitioned_upsert_empty_updates_is_noop(spark, tmp_path):
         "user_id long, score double, updated_at string, snap string",
     )
     upsert_manifest_partitioned(v1, path, ["user_id"], "updated_at", "snap")
+    dirs = _data_dirs(path)
     empty = v1.limit(0)
-    assert upsert_manifest_partitioned(
-        empty, path, ["user_id"], "updated_at", "snap"
-    ) == 0
+    for mode in ("merge", "replace"):
+        assert upsert_manifest_partitioned(
+            empty, path, ["user_id"], "updated_at", "snap", mode=mode
+        ) == 0
     df, v = read_table(spark, path)
     assert v == 1 and df.count() == 1  # no commit for the empty batch
+    assert _data_dirs(path) == dirs
 
 
 def test_export_warehouse_refuses_null_dates(spark, tmp_path):
@@ -449,6 +465,7 @@ def test_export_warehouse_refuses_null_dates(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL/unparseable"):
         export_warehouse(df, str(tmp_path / "wh"))
+    assert _data_dirs(str(tmp_path / "wh")) == set()
 
 
 def test_export_warehouse_refuses_null_dates_under_retention(spark, tmp_path):
@@ -467,11 +484,12 @@ def test_export_warehouse_refuses_null_dates_under_retention(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL/unparseable 'updated_at'"):
         export_warehouse(bad, wh, ref_date="2024-01-02")
-    assert latest_version(wh) == 0
+    assert latest_version(wh) == 0 and _data_dirs(wh) == set()
     assert export_warehouse(good, wh, ref_date="2024-01-02") == 1
+    dirs = _data_dirs(wh)
     with pytest.raises(ValueError, match="NULL/unparseable 'updated_at'"):
         export_warehouse(bad, wh, ref_date="2024-01-02")
-    assert latest_version(wh) == 1
+    assert latest_version(wh) == 1 and _data_dirs(wh) == dirs
 
 
 def test_synthetic_users_layout_independent(spark):

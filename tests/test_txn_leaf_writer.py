@@ -1,17 +1,20 @@
 """The one leaf writer (``txn._land``) and the one upsert body
 (``txn._upsert``): every committing verb's Spark job budget, the
-refusal of a write that lost rows or of a leaf holding another
-partition's rows, the typed partition values compaction decodes from
-the manifest's keys, and when a lost race stales an upsert's written
-leaves."""
+refusal of a write that lost rows, of a leaf holding another
+partition's rows and of learnt leaves that do not pair one to one with
+their values, learnt leaf keys against given ones, the typed partition
+values compaction decodes from the manifest's keys, and when a lost
+race stales an upsert's written leaves."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
+import tempfile
 
 import pytest
-from hypothesis import given
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -22,6 +25,8 @@ from pyspark.sql.types import (
     IntegerType,
     LongType,
     StringType,
+    StructField,
+    StructType,
     TimestampType,
 )
 
@@ -44,18 +49,20 @@ def _table(spark, root, partitioned: bool):
 # with the test session (8 shuffle partitions), as measured. None is
 # above the count the verb ran before all verbs shared one leaf writer
 # (in brackets where it was higher): a write's Observation now stands
-# in for a read-back aggregate wherever no stats/Bloom column needs one.
+# in for a read-back aggregate wherever no stats/Bloom column needs one,
+# and a write whose leaf keys are not given learns them from its
+# read-back instead of a distinct collect before it.
 BUDGETS = {
     "flat.upsert": 2,
     "part.upsert.merge": 5,  # (7)
     "part.upsert.merge.stats_bloom": 7,
-    "part.upsert.replace": 5,  # (7)
-    "part.upsert.replace.stats_bloom": 7,
+    "part.upsert.replace": 4,  # (7)
+    "part.upsert.replace.stats_bloom": 4,  # (7)
     "flat.compact": 2,
     "flat.compact.min_files_noop": 0,
     "part.compact": 4,  # (7)
     "part.compact.min_files_noop": 0,
-    "flat.repartition.to_part": 8,
+    "flat.repartition.to_part": 4,  # (8)
     "part.repartition.to_flat": 3,
     "flat.delete.rewrite": 3,  # (6)
     "flat.update.rewrite": 3,  # (6)
@@ -130,9 +137,9 @@ def _drop_key(monkeypatch, key: int):
     write of the one leaf that holds them."""
     write = txn._write_leaves
 
-    def short(root, phys, pcol, rows, pks, written, *args, **kw):
+    def short(root, phys, pcol, rows, written, *args, **kw):
         return write(
-            root, phys, pcol, rows.filter(F.col("k") != key), pks, written,
+            root, phys, pcol, rows.filter(F.col("k") != key), written,
             *args, **kw,
         )
 
@@ -142,8 +149,10 @@ def _drop_key(monkeypatch, key: int):
 # (case, partitioned, key the writer drops, the call, what it raises).
 # Compaction has no concurrent writer to blame and refuses at once; the
 # DML and repartition verbs treat a count mismatch as a stale read and
-# retry until they give up; an upsert has no expected count, so only a
-# leaf that vanished entirely can be caught.
+# retry until they give up. A merge-mode upsert has no expected count,
+# so only a leaf that vanished entirely can be caught; a replace-mode
+# upsert learns its leaves from the write, and its read-back total must
+# equal the rows its input saw.
 NOT_COMMITTING = r"produced no leaf|disagree.*not committing"
 GAVE_UP = r"gave up after 2 version races"
 SHORT_WRITES = [
@@ -186,6 +195,11 @@ SHORT_WRITES = [
          s.createDataFrame([(1, "x", 2, "d1"), (100, "y", 2, "d9")], DDL),
          r, ["k"], "ts", "p", max_retries=2),
      r"\['d9'\] produced no leaf"),
+    ("part.upsert.replace", True, 100,
+     lambda s, r: txn.upsert_manifest_partitioned(
+         s.createDataFrame([(1, "x", 2, "d1"), (100, "y", 2, "d9")], DDL),
+         r, ["k"], "ts", "p", max_retries=2, mode="replace"),
+     r"read 2, wrote 1.*not committing"),
 ]
 
 
@@ -214,6 +228,36 @@ def test_short_write_is_refused(
     _drop_key(monkeypatch, key)
     with pytest.raises(RuntimeError, match=raises):
         call(spark, root)
+    assert txn.latest_version(root) == version
+    assert set(os.listdir(os.path.join(root, txn.DATA_DIR))) == dirs
+
+
+# leaf tokens that break the pairing of learnt leaf dirs and partition
+# values: every value in one dir, or one value spread over two dirs
+BAD_TOKENS = {
+    "two_values_one_dir": lambda field: F.lit("0" * 16),
+    "one_value_two_dirs": lambda field: F.sha1(F.col("k").cast("string")),
+}
+
+
+@pytest.mark.parametrize("token", BAD_TOKENS.values(), ids=BAD_TOKENS.keys())
+def test_learnt_leaves_must_match_their_values_one_to_one(
+    spark, tmp_path, monkeypatch, token
+):
+    """A write whose learnt leaf dirs and partition values do not pair
+    one to one is refused: no version lands and no data dir is left
+    behind."""
+    root = _table(spark, str(tmp_path / "t"), True)
+    version = txn.latest_version(root)
+    dirs = set(os.listdir(os.path.join(root, txn.DATA_DIR)))
+    monkeypatch.setattr(txn, "_ptok_expr", token)
+    with pytest.raises(RuntimeError, match="do not match one to one"):
+        txn.upsert_manifest_partitioned(
+            spark.createDataFrame(
+                [(1, "x", 2, "d1"), (2, "y", 2, "d1"), (3, "z", 2, "d2")], DDL
+            ),
+            root, ["k"], "ts", "p", mode="replace",
+        )
     assert txn.latest_version(root) == version
     assert set(os.listdir(os.path.join(root, txn.DATA_DIR))) == dirs
 
@@ -301,19 +345,31 @@ def test_partition_keys_decode_to_their_values(type_and_value):
     assert got == v or (v != v and got != got)  # NaN is not equal to NaN
 
 
+FOREIGN_ROWS = [
+    # a partition the compaction does not rewrite: the row drops at the
+    # leaf join and the written count falls short
+    ("d9", None, "disagree.*not committing"),
+    ("d2", ["d1"], "disagree.*not committing"),
+    # another rewritten partition: the row would move into d2's new
+    # leaf under the old counts (d1 4 / d2 4 recorded, 3 / 5 held)
+    ("d2", None, "1 rows key a leaf other than the one they were read "
+     "from.*not committing"),
+]
+
+
 @pytest.mark.parametrize(
-    "foreign,selected", [("d9", None), ("d2", ["d1"])],
-    ids=["unknown_partition", "unselected_partition"],
+    "foreign,selected,raises", FOREIGN_ROWS,
+    ids=["unknown_partition", "unselected_partition", "selected_partition"],
 )
 def test_compaction_refuses_a_leaf_holding_foreign_rows(
-    spark, tmp_path, foreign, selected
+    spark, tmp_path, foreign, selected, raises
 ):
-    """A leaf whose files hold a row of a partition the compaction does
-    not rewrite (its manifest count unchanged) is refused: the row
-    drops at the leaf join, the written count falls short, and no
-    version lands."""
+    """A leaf whose files hold a row of another partition is refused,
+    whether or not the compaction rewrites that partition too: no
+    version lands and no data dir is left behind."""
     root = _table(spark, str(tmp_path / "t"), True)
     version = txn.latest_version(root)
+    dirs = set(os.listdir(os.path.join(root, txn.DATA_DIR)))
     leaf = os.path.join(
         root, txn.resolve_partitions(root, version)["d1"]["dir"]
     )
@@ -326,8 +382,76 @@ def test_compaction_refuses_a_leaf_holding_foreign_rows(
     ).coalesce(1).write.parquet(doctored)
     shutil.rmtree(leaf)
     shutil.move(doctored, leaf)
-    with pytest.raises(RuntimeError, match="disagree.*not committing"):
+    with pytest.raises(RuntimeError, match=raises):
         txn.compact_manifest(
             spark, root, partition_values=selected, max_retries=2
         )
     assert txn.latest_version(root) == version
+    assert set(os.listdir(os.path.join(root, txn.DATA_DIR))) == dirs
+
+
+# (type, values) of a partition column: each frame draws its partition
+# values from the pool, so leaves hold several rows and values repeat
+_FLOATS = [0.0, -0.0, float("nan"), float("inf"), float("-inf"), 1.5]
+_POOLS = st.one_of(
+    st.tuples(st.just(StringType()), st.lists(
+        st.text(st.characters(blacklist_categories=("Cs",)), max_size=4),
+        min_size=1, max_size=4)),
+    st.tuples(st.just(IntegerType()), st.lists(
+        st.integers(-(2**31), 2**31 - 1), min_size=1, max_size=4)),
+    st.tuples(st.just(LongType()), st.lists(
+        st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=4)),
+    st.tuples(st.just(BooleanType()), st.lists(
+        st.booleans(), min_size=1, max_size=2)),
+    st.tuples(st.just(DateType()), st.lists(
+        st.dates(datetime.date(1900, 1, 1), datetime.date(2200, 1, 1)),
+        min_size=1, max_size=4)),
+    st.tuples(st.just(TimestampType()), st.lists(
+        st.datetimes(datetime.datetime(1900, 1, 1),
+                     datetime.datetime(2200, 1, 1)),
+        min_size=1, max_size=4)),
+    st.tuples(st.just(DecimalType(12, 2)), st.lists(st.decimals(
+        min_value=-(10**9), max_value=10**9, places=2,
+        allow_nan=False, allow_infinity=False), min_size=1, max_size=4)),
+    st.tuples(st.just(DoubleType()), st.lists(
+        st.sampled_from(_FLOATS) | st.floats(), min_size=1, max_size=4)),
+)
+
+
+@settings(max_examples=16, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_POOLS, st.lists(st.integers(0, 99), min_size=1, max_size=12),
+       st.randoms(use_true_random=False))
+def test_learnt_keys_land_as_given_keys(spark, pool, ks, rnd):
+    """A write whose leaf keys are learnt from its read-back lands the
+    same leaves as the same write given its keys by a distinct collect
+    first: the same keys, per-leaf row counts, stats and Bloom bits,
+    and the same rows in each leaf."""
+    dtype, values = pool
+    schema = StructType([
+        StructField("k", LongType()), StructField("p", dtype)
+    ])
+    rows = spark.createDataFrame(
+        [(k, rnd.choice(values)) for k in ks], schema
+    )
+    fields = [schema["k"]]
+
+    def land(root, keys):
+        entries = txn._land(
+            root, "test", {}, rows, "p", [], keys=keys, stats=fields,
+            bloom=fields,
+        )
+        got = {}
+        for pk, e in entries.items():
+            leaf = txn._read_entries(spark, schema, {}, root, [e])
+            got[pk] = (
+                {k: x for k, x in e.items() if k != "dir"},
+                sorted(r["k"] for r in leaf.collect()),
+            )
+        return got
+
+    with tempfile.TemporaryDirectory() as root:
+        learnt = land(root, None)
+        given_ = land(root, txn._partition_keys(rows, "p", "test"))
+    assert learnt == given_
+    assert sum(e["rows"] for e, _ in learnt.values()) == len(ks)
